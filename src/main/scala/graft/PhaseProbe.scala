@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev tool (r16 optimization round): split a registry row's wall time
   * into build (DataFrame construction + analysis), plan (optimization +
@@ -7,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * exec (toRdd.count — the Bench-timed action minus the planning that
   * toRdd would otherwise fold in). At sf0.1 the corpus is 17 MB, so the
   * driver bench prices fixed per-query costs as much as operator work —
-  * this probe says which fixed cost a slow row is paying.
+  * this probe says which fixed cost a slow row is paying. Each rep also
+  * prints the generated classes it compiled and their compile time
+  * (JVM-wide, so executor-side compiles count too): a warm rep that
+  * still compiles means the row's classes missed the codegen cache.
   *
   * `runMain graft.PhaseProbe <sfDir> [-reps N] q1 q2 ...`
   */
@@ -96,6 +101,8 @@ object PhaseProbe {
     qs.foreach { q =>
       (1 to reps).foreach { rep =>
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val df = q.fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -108,7 +115,9 @@ object PhaseProbe {
         def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.3f"
         println(f"[phase] ${q.name}%-30s rep=$rep rows=$n%-8d " +
           s"build=${s(t0, t1)} plan=${s(t1, t2)} exec=${s(t2, t3)} total=${s(t0, t3)} " +
-          s"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} taskSec=${taskMs.get / 1000.0}")
+          s"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} taskSec=${taskMs.get / 1000.0} " +
+          s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
+          f"compileMs=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.0f")
         System.gc(); Thread.sleep(100)
       }
     }

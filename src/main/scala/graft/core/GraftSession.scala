@@ -12,6 +12,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    parquet loads as Long nanos (`nanosAsLong`), µs-precision loads as
   *    TIMESTAMP / TIMESTAMP_NTZ. [[Tables.events]] detects the loaded type
   *    and derives canonical `ts_sec`/`ts_micro` Longs from either.
+  *
+  * Generated-code reuse: a session that reruns a pipeline (train and
+  * detect every period, restart a streaming query) should compile
+  * Spark's generated classes once per JVM, not once per pass. Spark
+  * caches compiled classes keyed by (task class loader, source text);
+  * three defaults defeat that, and [[configure]] overrides them
+  * (counts measured on the benchmark's workloads, local[4]):
+  *  - `spark.sql.codegen.cache.maxEntries` (default 100) is below the
+  *    working set of one pass: 227 distinct classes for the IIoT
+  *    train-and-detect pass, 254 for the corpus dedup pass. The LRU
+  *    cache evicted every class before its reuse, so each warm pass
+  *    recompiled them all (226 / 249). 1000 is ~4× the largest set.
+  *  - `spark.sql.artifact.isolation.enabled` (default true) gives each
+  *    session, and each clone a streaming query or
+  *    `graftbridge.onClonedSession` runs in, its own task class loader,
+  *    hence its own cache key: every streaming query start recompiled
+  *    its 37 classes. The engine adds no session artifacts (jars,
+  *    files), so isolation buys nothing and is off.
+  *  - `spark.sql.codegen.useIdInClassName` (default true) puts the
+  *    whole-stage codegen stage id into the class name, so into the
+  *    source text. Under AQE the ids follow the order in which query
+  *    stages are planned, which varies from run to run, so identical
+  *    stages missed the cache (0–14 recompiles per warm pass of a small
+  *    train-and-detect pipeline). Without the id, identical stages share
+  *    one class: the working sets fall to 205 / 228 classes.
+  * With all three, warm passes compile 0 (batch), 0 (corpus) and 2
+  * (stream) classes. Plans, jobs, tasks and shuffle bytes are unchanged.
+  * `maxEntries` is a STATIC conf, read once when the first query in the
+  * JVM compiles: the first session fixes the cache size for the JVM's
+  * lifetime, so every session must be built through [[configure]].
   */
 object GraftSession {
 
@@ -31,6 +61,13 @@ object GraftSession {
     // thrash the storage pool (warm 6 s → 200 s by rep 3). 5 min bounds
     // the leak window for long-lived pipeline sessions.
     .config("spark.cleaner.periodicGC.interval", "5min")
+    // Generated-code reuse across passes and sessions (scaladoc above):
+    // a pass compiles up to 254 distinct classes, past the default 100.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
+    // one task class loader, so one cache key, for every session and clone
+    .config("spark.sql.artifact.isolation.enabled", "false")
+    // stage ids follow AQE's planning order, which varies between runs
+    .config("spark.sql.codegen.useIdInClassName", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(

@@ -39,7 +39,8 @@ object Dedup {
     * anti join is a plain hash join that AQE can broadcast while the
     * new batch is small relative to history.
     *
-    * Output: the surviving rows of `batch` plus their `content_hash`.
+    * Output: the surviving rows of `batch`, then their `content_hash`
+    * as the last column.
     */
   def exactIncremental(batch: DataFrame, idCol: String, textCol: String,
                        seenHashes: DataFrame): DataFrame = {
@@ -116,15 +117,18 @@ object Dedup {
   }
 
   /** Lowest-id winner per batch-internal duplicate group — the second
-    * stage both incremental paths share.
+    * stage both incremental paths share. Output: the input columns
+    * other than `content_hash`, then `content_hash`.
     */
   private def firstPerHash(unseen: DataFrame, idCol: String): DataFrame = {
-    val firstInBatch = unseen.groupBy("content_hash")
+    // the aggregate's key gets its own name: a join of a frame to an
+    // aggregate of itself on `content_hash == content_hash` compares one
+    // attribute with itself and is right only through an analyzer rewrite
+    val firstInBatch = unseen.groupBy(col("content_hash").as("_first_hash"))
       .agg(min(col(idCol)).as("_keep"))
     unseen.join(firstInBatch,
-        unseen("content_hash") === firstInBatch("content_hash") &&
-          col(idCol) === col("_keep"))
-      .drop("_keep").drop(firstInBatch("content_hash"))
+        col("content_hash") === col("_first_hash") && col(idCol) === col("_keep"))
+      .select(unseen.columns.filter(_ != "content_hash").map(col) :+ col("content_hash"): _*)
   }
 
   /** Snapshot diff between two corpus VERSIONS by distinct content:

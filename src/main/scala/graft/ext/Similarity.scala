@@ -219,9 +219,8 @@ object Similarity {
                        minCos: Double, bands: Int = 16, bitsPerBand: Int = 5,
                        sigRows: Option[DataFrame] = None): DataFrame = {
     val vecD = col(vecCol).cast("array<double>")
-    val parts = 4 * df.sparkSession.sparkContext.defaultParallelism
     val sigs = sigRows.getOrElse(
-      bandedSignatureRows(df.repartition(parts, col(idCol)), idCol, vecCol,
+      bandedSignatureRows(pinFanout(df, col(idCol)), idCol, vecCol,
         dim, bands, bitsPerBand))
     val vecs = df.select(col(idCol).as("_vid"), vecD.as("_v"))
     val sv = sigs.join(vecs, col("_sid") === col("_vid"))
@@ -232,12 +231,12 @@ object Similarity {
     // exchange to ~1 partition at bench scale and the whole candidate
     // enumeration runs on one core (measured: 8 single-task jobs, 26 s
     // single-threaded at ×10 data). Pin the join partitioning to the
-    // cluster's parallelism instead (REPARTITION_BY_NUM is exempt from
-    // AQE coalescing): candidate work is spread over bands·2^bits
-    // buckets with mild skew (measured max bucket 2582 of 1.5e9 slots at
-    // ×100), so hash(band, sig) balances without salting. Both join
-    // sides share the one exchange (same canonical subplan).
-    val svP = sv.repartition(parts, col("_band"), col("_sig"))
+    // cluster's parallelism instead ([[pinFanout]]; REPARTITION_BY_NUM is
+    // exempt from AQE coalescing): candidate work is spread over
+    // bands·2^bits buckets with mild skew (measured max bucket 2582 of
+    // 1.5e9 slots at ×100), so hash(band, sig) balances without salting.
+    // Both join sides share the one exchange (same canonical subplan).
+    val svP = pinFanout(sv, col("_band"), col("_sig"))
     svP.as("a")
       .join(svP.as("b"),
         col("a._band") === col("b._band") && col("a._sig") === col("b._sig") &&

@@ -719,10 +719,24 @@ class EvalFunctionsSpec extends SparkSpec {
       (12L, "fresh one"),         // batch-internal dup -> dropped
       (13L, "fresh two")          // kept
     ).toDF("doc_id", "text")
-    val got = graft.ext.Dedup.exactIncremental(batch, "doc_id", "text", seen)
-      .select("doc_id", "text").orderBy("doc_id")
+    val deduped = graft.ext.Dedup.exactIncremental(batch, "doc_id", "text", seen)
+    val got = deduped.select("doc_id", "text").orderBy("doc_id")
       .as[(Long, String)].collect().toSeq
     assert(got == Seq((11L, "fresh one"), (13L, "fresh two")))
+    // the first-per-hash self-join compares two different attributes,
+    // not `content_hash` with itself (which only an analyzer rewrite
+    // of a trivially true predicate would make right)
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val hashEqs = deduped.queryExecution.analyzed.collect {
+      case j: Join if j.joinType == Inner => j.condition.toSeq.flatMap(_.collect {
+        case EqualTo(a: Attribute, b: Attribute) if a.name == "content_hash" ||
+          b.name == "content_hash" => (a, b)
+      })
+    }.flatten
+    assert(hashEqs.size == 1 && hashEqs.forall { case (a, b) =>
+      a.exprId != b.exprId && a.name != b.name }, s"hash join predicates: $hashEqs")
   }
 
   test("ext: chunkDedup — first occurrence wins, docs reassemble in order") {

@@ -184,6 +184,33 @@ class SimilaritySpec extends SparkSpec {
       s"all-pairs join in composed plan:\n${plan.take(800)}")
   }
 
+  test("cosineNearDupLsh pins both exchanges through Fanout: default ×4, " +
+    "multiplier 0 unpinned, maxPartitions caps") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import graft.core.Fanout
+    // Fanout.pin reads its confs when the frame is built
+    def lsh(confs: (String, String)*) = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try Similarity.cosineNearDupLsh(fixture, "vec_id", "embedding", dim = dim, minCos = 0.9)
+        .queryExecution
+      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    def pins(qe: org.apache.spark.sql.execution.QueryExecution) = qe.analyzed.collect {
+      case r: RepartitionByExpression =>
+        (r.partitionExpressions.flatMap(_.references.map(_.name)), r.optNumPartitions)
+    }.toSet
+    val n = 4 * spark.sparkContext.defaultParallelism
+    // default confs: the shape the hard-coded 4 × defaultParallelism had
+    val default = lsh()
+    assert(pins(default) == Set((Seq("vec_id"), Some(n)), (Seq("_band", "_sig"), Some(n))))
+    assert(default.executedPlan.toString.contains("REPARTITION_BY_NUM"))
+    assert(pins(lsh(Fanout.MaxPartitionsConf -> "3")) ==
+      Set((Seq("vec_id"), Some(3)), (Seq("_band", "_sig"), Some(3))))
+    val unpinned = lsh(Fanout.MultiplierConf -> "0")
+    assert(pins(unpinned).isEmpty)
+    assert(!unpinned.executedPlan.toString.contains("REPARTITION_BY_NUM"))
+  }
+
   test("bandedSignatureRows (fused one-pass) matches the inline banded signatures") {
     val inline = fixture.select(col("vec_id"),
         posexplode(Similarity.bandedSignatures(col("embedding"), dim, 16, 5))
