@@ -342,9 +342,9 @@ object Similarity {
     // cap; the cap is a heuristic, not a contract). Below the cap the
     // train set IS the fit input — bit-identical centroids to the
     // pre-cap form, which is what keeps the gate-sf registry rows green.
-    // `knownCount` threads an already-paid count through (the auto entry
-    // points count for autoNlist first — r15 advice: two full corpus
-    // scans per build where one suffices).
+    // `knownCount` threads an already-paid count through (callers that
+    // size nlist with autoNlist count first; two full corpus scans per
+    // build where one suffices).
     val n = if (knownCount >= 0L) knownCount else df.count()
     // localCheckpoint, not persist (availability trade-off + cluster-mode
     // mitigations: DESIGN.md "localCheckpoint availability trade-off"):
@@ -387,103 +387,123 @@ object Similarity {
       idCol, vecCol, query, k)
   }
 
-  /** IVF kNN SELF-JOIN — the all-rows form of [[ivfTopK]] (which serves
-    * one query vector at a time): every row probes its `nprobe` nearest
-    * cells and takes its `k` best cosine neighbors among the rows
-    * ASSIGNED to those cells. The coarse quantizer is the
-    * [[ivfIndex]] spherical KMeans, so cells ADAPT to the corpus's
-    * cluster structure — the complementary scale path to the sign-bucket
-    * lanes, whose fixed hyperplanes the r12 ×100 probe showed piling
-    * clustered corpora into hot cells (the adaptive sub-split remedies
-    * that geometrically; IVF dissolves it by construction when nlist is
-    * sized to the cluster count).
+  /** IVF kNN SELF-JOIN — the all-rows form of [[ivfTopK]]: every row
+    * probes its `nprobe` nearest cells of `quantizer` and takes its `k`
+    * best cosine neighbors among the rows ASSIGNED to those cells.
+    * Output: (idCol, neighbor_id, cos, rank), rank 1..k per id by (cos
+    * desc, neighbor id); `cos` is always the exact cosine of the
+    * original vectors. Null and zero-norm vectors are dropped (no
+    * direction, hence no cell), and so are rows whose length differs
+    * from the quantizer's.
     *
-    * Scale shape: one MatVecProduct per row against the broadcast
-    * centroid matrix, an IN-ROW sort of the nlist scores to pick the
-    * probe list (no explode, no shuffle — n rows stay n rows until the
-    * join), then a cell EQUI-join — candidate work is
+    * Lifecycle: build the [[graft.functions.IvfQuantizer]] once (fit,
+    * model, pinned anchors or a stored table), then join any number of
+    * times. Each call with a quantizer VALUE broadcasts it once,
+    * released by the ContextCleaner when the returned plan is GC'd; a
+    * session issuing many joins against one quantizer can instead pass
+    * its own `sc.broadcast(quantizer)` handle to every join and
+    * `destroy()` it after the last job.
+    *
+    * Scale shape: one [[graft.functions.IvfProbesBroadcast]] call per
+    * row picks the probe list IN the row (no explode-then-rank, no
+    * n·nlist shuffle), then a cell EQUI-join — candidate work is
     * Σ_cells probes(cell)·members(cell), never all-pairs. Membership is
-    * argmax-only, probing is top-nprobe — the standard IVF asymmetry —
-    * so a (query, neighbor) candidate appears at most once. Probe
-    * ranking reproduces the KMeans euclidean rule on the normalized
-    * space exactly: argmin ‖v̂−c‖² = argmax (v̂·c − ‖c‖²/2), ties to the
-    * lower cell index.
+    * argmax-only and probing top-nprobe, the standard IVF asymmetry, so
+    * a (query, neighbor) candidate appears at most once. The kernel is a
+    * single expression on purpose: a composed norm + matvec + sort gave
+    * CollapseProject and join-side filter inference an interpreted tree
+    * to inline and duplicate into both join inputs (117 s of a 126 s row
+    * at the ×10 sweep).
     *
-    * `nlist` is the scale dial, and it has TWO quadratics to dodge, not
-    * one: candidate verification is n·nprobe·(n/nlist) (explodes when
-    * nlist is pinned), but assignment + probe ranking is n·nlist rows
-    * (explodes when nlist chases a fixed cell size, n/targetCell — that
-    * rule just moves the quadratic one stage earlier). The product of
-    * the two terms is n²·nprobe regardless, so their SUM is minimized
-    * where they balance: nlist = √(n·nprobe) — total work ∝ n^1.5, the
-    * standard IVF sizing (FAISS's nlist ≈ √n guidance). That is what
-    * [[ivfKnnJoinAuto]] (and the nlist-free overload of this method)
-    * derives via [[autoNlist]]; prefer those unless a stored oracle
-    * pins the geometry. The registry row pins nlist = 8 for
-    * restatability at the gate sf — a verification fixture choice, not
-    * production guidance.
+    * Sizing: candidate verification costs n·nprobe·(n/nlist) and probe
+    * ranking n·nlist, so their sum is least at nlist = √(n·nprobe) —
+    * total work ∝ n^1.5. Size the quantizer with [[autoNlist]] on the
+    * caller's `count()`; a fixed nlist is a fixture choice.
     *
-    * KMeans centroids are engine-specific (seeded MLlib init), so this
-    * form is rows-only checkable; [[ivfKnnJoinPinned]] is its
-    * fully-restatable oracle twin. Output: (idCol, neighbor_id, cos,
-    * rank), rank 1..k per id — null vectors dropped (the IVF convention).
-    */
-  def ivfKnnJoin(df: DataFrame, idCol: String, vecCol: String, nlist: Int,
-                 nprobe: Int, k: Int, seed: Long = 42L): DataFrame =
-    ivfKnnJoinFromModel(df, idCol, vecCol, ivfIndex(df, vecCol, nlist, seed)._2,
-      nprobe, k)
-
-  /** The nlist-free form IS the default ([[knnJoin]]'s planes-free
-    * precedent): `nlist` follows the corpus size via [[autoNlist]], so
-    * the reachable API cannot ship the pinned-geometry quadratic the
-    * r13 sweep caught on every fixed-dial ANN lane. Delegates to
-    * [[ivfKnnJoinAuto]].
+    * `pq` set is IVF-PQ-lite: the cell join ships only packed uint8 codes
+    * ([[graft.functions.QuantizeUint8]] under `pq.bounds`, 8× less
+    * shuffle than raw doubles), candidates rank by reconstruction cosine
+    * ([[graft.functions.QuantCosine]]; NaN reconstructions are dropped,
+    * since NaN sorts above every score), and only the top `pq.kPrime`
+    * survivors per query re-join their raw vectors for the exact re-rank.
+    * Recall is (cell recall) × (survivor recall); a `kPrime` at or above
+    * the per-query candidate count makes the survivor stage pass-through
+    * and the result equals the exact join.
     */
   def ivfKnnJoin(df: DataFrame, idCol: String, vecCol: String,
-                 nprobe: Int, k: Int): DataFrame =
-    ivfKnnJoinAuto(df, idCol, vecCol, nprobe, k)
+                 quantizer: graft.functions.IvfQuantizer, nprobe: Int, k: Int,
+                 pq: Option[graft.functions.IvfPq] = None): DataFrame =
+    ivfKnnJoin(df, idCol, vecCol,
+      df.sparkSession.sparkContext.broadcast(quantizer), nprobe, k, pq)
 
-  /** [[ivfKnnJoin]] with `nlist` derived from the corpus by the
-    * balance rule (one cheap `count()`, the [[knnJoinAuto]] pattern):
-    * the smallest integer ≥ `minList` with nlist² ≥ n·nprobe — the
-    * point where the two stage costs cross (assignment/probe ranking
-    * n·nlist vs candidate verification n·nprobe·(n/nlist)), so total
-    * work grows as n^1.5 instead of n² whichever stage a fixed dial
-    * would have pinned. See the [[ivfKnnJoin]] scaladoc for the
-    * derivation; [[autoNlist]] keeps the arithmetic integer-exact so
-    * an external engine (the `x_ivf_knn_join_auto_pinned` oracle)
-    * re-derives the same nlist from `count(*)` alone.
-    */
-  def ivfKnnJoinAuto(df: DataFrame, idCol: String, vecCol: String,
-                     nprobe: Int, k: Int, minList: Int = 8,
-                     seed: Long = 42L): DataFrame = {
-    // one count serves the nlist rule AND the fit cap (r15 advice)
-    val n = df.count()
-    val nlist = autoNlist(n, nprobe, minList)
-    ivfKnnJoinFromModel(df, idCol, vecCol,
-      ivfIndexWithCap(df, vecCol, nlist, seed, ivfFitCap(nlist), n)._2,
-      nprobe, k)
+  def ivfKnnJoin(df: DataFrame, idCol: String, vecCol: String,
+                 quantizer: org.apache.spark.broadcast.Broadcast[graft.functions.IvfQuantizer],
+                 nprobe: Int, k: Int,
+                 pq: Option[graft.functions.IvfPq]): DataFrame = {
+    require(nprobe >= 1 && k >= 1, s"need nprobe/k >= 1, got $nprobe/$k")
+    pq.foreach(p => require(p.kPrime >= k, s"need kPrime >= k, got ${p.kPrime} < $k"))
+    val vecD = col(vecCol).cast("array<double>")
+    val rows = df.filter(col(vecCol).isNotNull)
+    val probes = graft.functions.GraftFunctions.ivf_probes_bc(vecD, quantizer, nprobe)
+      .as("_probes")
+    // the cell join carries the raw vector ("_v"), or under PQ only its
+    // codes, so column pruning keeps the raw vector out of that shuffle
+    val (v, probed) = pq match {
+      case None =>
+        ("v", rows.select(col(idCol), vecD.as("_v"), probes)
+          .filter(col("_probes").isNotNull))
+      case Some(p) =>
+        ("codes", rows.select(col(idCol), probes, graft.functions.GraftFunctions
+            .quantize_uint8(vecD, p.bounds.lo, p.bounds.hi).as("_codes"))
+          .filter(col("_probes").isNotNull && col("_codes").isNotNull))
+    }
+    val members = probed
+      .select(element_at(col("_probes"), 1).as("_mcell"),
+        col(idCol).as("neighbor_id"), col(s"_$v").as(s"_n$v"))
+    val queries = probed
+      .select(col(idCol).as("_qid"), col(s"_$v").as(s"_q$v"),
+        explode(col("_probes")).as("_ci"))
+    // The exact join pins its parallelism ([[pinFanout]]): its output is
+    // the candidate stream (≈ n·nprobe·n/nlist rows), orders of magnitude
+    // above its input, so AQE's input-sized coalescing would park it on
+    // 1–2 tasks. The PQ cell join is not pinned.
+    def pin(d: DataFrame, key: String) = if (pq.isEmpty) pinFanout(d, col(key)) else d
+    val candidates = pin(queries, "_ci")
+      .join(pin(members, "_mcell"), col("_ci") === col("_mcell"))
+      .filter(col("_qid") =!= col("neighbor_id"))
+    val verified = pq.fold(candidates) { p =>
+      val wq = org.apache.spark.sql.expressions.Window
+        .partitionBy("_qid").orderBy(col("_qcos").desc, col("neighbor_id"))
+      val survivors = candidates
+        .withColumn("_qcos", graft.functions.GraftFunctions.quant_cosine(
+          col("_qcodes"), col("_ncodes"), p.bounds.lo, p.bounds.hi))
+        .filter(!isnan(col("_qcos")))
+        .withColumn("_qrk", row_number().over(wq))
+        .filter(col("_qrk") <= p.kPrime)
+        .select("_qid", "neighbor_id")
+      // raw vectors re-enter only for the n·kPrime survivor rows
+      val base = rows.select(col(idCol), vecD.as("_v"))
+      survivors
+        .join(base.select(col(idCol).as("_qid"), col("_v").as("_qv")), "_qid")
+        .join(base.select(col(idCol).as("neighbor_id"), col("_v").as("_nv")), "neighbor_id")
+    }
+    val wk = org.apache.spark.sql.expressions.Window
+      .partitionBy("_qid").orderBy(col("cos").desc, col("neighbor_id"))
+    verified
+      .withColumn("cos", cosine(col("_qv"), col("_nv")))
+      .withColumn("rank", row_number().over(wk).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("_qid").as(idCol), col("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** [[ivfKnnJoinPinned]] with the [[autoNlist]] count-derived anchor
-    * count — the gate twin of [[ivfKnnJoinAuto]]: same deterministic
-    * smallest-id anchors, but `nlist` follows `count(*)` by the same
-    * integer rule the production form applies, so the oracle restates
-    * BOTH the join algebra and the scale dial (the rule is exercised,
-    * not hard-coded, at every corpus size the gate runs).
-    */
-  def ivfKnnJoinPinnedAuto(df: DataFrame, idCol: String, vecCol: String,
-                           nprobe: Int, k: Int, minList: Int = 8): DataFrame =
-    ivfKnnJoinPinned(df, idCol, vecCol, autoNlist(df.count(), nprobe, minList),
-      nprobe, k)
-
-  /** The [[ivfKnnJoinAuto]] nlist rule — pure so the boundary
-    * arithmetic is unit-testable: smallest `nlist >= minList` with
-    * `nlist² >= n·nprobe` (integer-exact — a floating `ceil(sqrt(…))`
+  /** The IVF nlist balance rule — smallest `nlist >= minList` with
+    * `nlist² >= n·nprobe` (see [[ivfKnnJoin]]), integer-exact so an
+    * external engine (the `x_ivf_knn_join_auto_pinned` oracle) re-derives
+    * the same nlist from `count(*)` alone: a floating `ceil(sqrt(…))`
     * can land on either side of a perfect square across engines, the
-    * [[autoPlanes]] precedent).
+    * [[autoPlanes]] precedent.
     */
-  private[graft] def autoNlist(n: Long, nprobe: Int, minList: Int): Int = {
+  def autoNlist(n: Long, nprobe: Int, minList: Int): Int = {
     require(n >= 0 && nprobe >= 1 && minList >= 1,
       s"need n >= 0, nprobe/minList >= 1, got $n/$nprobe/$minList")
     val target = n * nprobe
@@ -493,563 +513,15 @@ object Similarity {
     math.min(m, Int.MaxValue.toLong).toInt
   }
 
-  /** [[ivfKnnJoin]] against an ALREADY-FITTED quantizer — the
-    * build-once/join-many lifecycle (the [[ivfIndex]] fit is the
-    * expensive half; an ingest pipeline fits per corpus version and
-    * joins per run, and the registry row reuses the session-memoized
-    * model the same way).
-    */
-  def ivfKnnJoinFromModel(df: DataFrame, idCol: String, vecCol: String,
-                          km: org.apache.spark.ml.clustering.KMeansModel,
-                          nprobe: Int, k: Int): DataFrame = {
-    val centers = km.clusterCenters.map(_.toArray)
-    val offsets = centers.map(c => c.map(x => x * x).sum / 2)
-    ivfKnnJoinCore(df, idCol, vecCol, centers, offsets, nprobe, k)
-  }
-
-  /** [[ivfKnnJoin]] with PINNED anchor centroids — the gate twin: the
-    * `nlist` smallest-id vectors of the corpus itself, L2-normalized,
-    * serve as the coarse quantizer (deterministic and fully
-    * DuckDB-restatable: `ORDER BY id LIMIT nlist` + the same
-    * dot/rank/join/top-k algebra — no RNG, no engine-specific
-    * clustering). With unit centroids the probe rule degenerates to
-    * plain cosine ranking (equal offsets cancel), which is what the
-    * oracle restates. Anchor quality is corpus-luck rather than KMeans
-    * — a verification fixture, not the production quantizer; the shared
-    * [[ivfKnnJoinCore]] is the code under test.
-    */
-  def ivfKnnJoinPinned(df: DataFrame, idCol: String, vecCol: String,
-                       nlist: Int, nprobe: Int, k: Int): DataFrame = {
-    val unit = pinnedUnitAnchors(df, idCol, vecCol, nlist)
-    ivfKnnJoinCore(df, idCol, vecCol, unit, unit.map(_ => 0.0), nprobe, k)
-  }
-
-  /** The deterministic anchor rule shared by [[ivfKnnJoinPinned]] and
-    * [[ivfPinnedQuantizerRows]]: the `nlist` smallest-id vectors,
-    * L2-normalized, as a driver-side matrix (nlist rows — the bounded
-    * collect class). Zero-norm rows can't anchor a cell (no direction) —
-    * same exclusion the core applies to query/member rows, mirrored in
-    * the oracle.
-    */
-  private[graft] def pinnedUnitAnchors(df: DataFrame, idCol: String, vecCol: String,
-                                       nlist: Int): Array[Array[Double]] = {
-    val vecD = col(vecCol).cast("array<double>")
-    val anchors = df.filter(col(vecCol).isNotNull)
-      .filter(aggregate(zip_with(vecD, vecD, (a, b) => a * b),
-        lit(0.0), (acc, x) => acc + x) > 0)
-      .orderBy(col(idCol)).limit(nlist)
-      .select(vecD).collect()
-      .map(_.getSeq[Double](0).toArray)
-    anchors.map { c =>
-      val n = math.sqrt(c.map(x => x * x).sum)
-      c.map(_ / n)
-    }
-  }
-
-  /** The coarse quantizer as a PERSISTABLE frame — `(ivf_cell INT,
-    * centroid ARRAY<DOUBLE>, offset DOUBLE)`, one row per cell, cell ids
-    * dense 0..nlist−1 in probe-rank tie order. This is the write side of
-    * the build-once/join-many lifecycle ACROSS SESSIONS (the
-    * session-memoized [[ivfIndex]] model covers within-session reuse;
-    * the `_stored` lanes' parquet tables are the cross-session form):
-    * fit per corpus version, write once, every later run joins via
-    * [[ivfKnnJoinFromStored]] without refitting. This overload stores
-    * the deterministic pinned anchors (offset 0 — unit centroids);
-    * KMeans callers persist their fitted model the same way via the
-    * (centroids, offsets) overload.
-    */
+  /** The pinned quantizer as a table: `IvfQuantizer.pinned(...).rows`. */
   def ivfPinnedQuantizerRows(df: DataFrame, idCol: String, vecCol: String,
                              nlist: Int): DataFrame =
-    ivfQuantizerRows(df.sparkSession,
-      pinnedUnitAnchors(df, idCol, vecCol, nlist))
+    graft.functions.IvfQuantizer.pinned(df, idCol, vecCol, nlist).rows(df.sparkSession)
 
-  /** [[ivfPinnedQuantizerRows]] for an arbitrary quantizer — e.g.
-    * `km.clusterCenters` with the KMeans offsets ‖c‖²/2 (defaulted).
-    */
-  def ivfQuantizerRows(spark: SparkSession, centroids: Array[Array[Double]],
-                       offsets: Array[Double] = null): DataFrame = {
-    val offs = if (offsets != null) offsets
-               else centroids.map(c => c.map(x => x * x).sum / 2)
-    require(offs.length == centroids.length,
-      s"need one offset per centroid, got ${offs.length}/${centroids.length}")
-    import spark.implicits._
-    centroids.zip(offs).zipWithIndex
-      .map { case ((c, o), i) => (i, c.toSeq, o) }.toSeq
-      .toDF("ivf_cell", "centroid", "offset")
-  }
-
-  /** [[ivfKnnJoin]] against a RELOADED quantizer table (the
-    * [[ivfQuantizerRows]] schema) — the read side of the cross-session
-    * lifecycle: the quantizer is nlist rows (collected — the bounded
-    * driver-artifact class, same as the pinned anchor fetch), the corpus
-    * never is. Storage round-tripping must not change a single output
-    * row versus the in-memory form — the `x_ivf_knn_join_stored`
-    * registry row pins that under the same DuckDB oracle as the inline
-    * auto-pinned leg (the `x_cosine_near_dup_lsh_stored` precedent).
-    */
+  /** [[ivfKnnJoin]] against a stored quantizer table. */
   def ivfKnnJoinFromStored(df: DataFrame, idCol: String, vecCol: String,
-                           quantizer: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val (centroids, offsets) = loadStoredQuantizer(quantizer)
-    ivfKnnJoinCore(df, idCol, vecCol, centroids, offsets, nprobe, k)
-  }
-
-  /** Collect + validate an [[ivfQuantizerRows]] table into driver-side
-    * (centroids, offsets) arrays — nlist rows, the bounded
-    * driver-artifact class. Shared by [[ivfKnnJoinFromStored]] and the
-    * streaming ingest twin
-    * ([[graft.streaming.StreamingOps.ivfCellCandidatePairs]]'s stored
-    * overload), so batch and stream reload a table through ONE
-    * validation path.
-    *
-    * Shape/value validation (r14 advice): a dimension mismatch with the
-    * corpus makes the probe kernel return null for EVERY row — a silent
-    * 0-row join instead of a loud failure — and ragged or NaN centroids
-    * can throw in executors / seat a NaN probe score. Fail here, with
-    * the cell id, while the quantizer is still a driver-side artifact.
-    */
-  private[graft] def loadStoredQuantizer(quantizer: DataFrame)
-      : (Array[Array[Double]], Array[Double]) = {
-    val rows = quantizer
-      .select(col("ivf_cell").cast("int"),
-        col("centroid").cast("array<double>"), col("offset").cast("double"))
-      .orderBy("ivf_cell").collect()
-    require(rows.nonEmpty, "stored quantizer is empty")
-    rows.iterator.zipWithIndex.foreach { case (r, i) =>
-      require(r.getInt(0) == i,
-        s"stored quantizer cells must be dense 0..n-1, found ${r.getInt(0)} at $i")
-    }
-    val centroids = rows.map(_.getSeq[Double](1).toArray)
-    val offsets = rows.map(_.getDouble(2))
-    val dim = centroids(0).length
-    centroids.iterator.zipWithIndex.foreach { case (c, i) =>
-      require(c.nonEmpty, s"stored quantizer cell $i has an empty centroid")
-      require(c.length == dim,
-        s"stored quantizer centroids must share one dimension: " +
-          s"cell $i has ${c.length}, cell 0 has $dim")
-      require(!c.exists(_.isNaN), s"stored quantizer cell $i contains NaN")
-    }
-    require(!offsets.exists(_.isNaN), "stored quantizer offsets contain NaN")
-    (centroids, offsets)
-  }
-
-  /** Shared probe/join/rank core of [[ivfKnnJoin]]/[[ivfKnnJoinPinned]]:
-    * rank cells per row by (v̂·c − offset_c) desc (ties → lower cell),
-    * rank 1 is the row's MEMBERSHIP cell, ranks 1..nprobe its probe
-    * list; candidates = probe-list × same-cell members (self excluded),
-    * verified with exact cosine on the ORIGINAL vectors, top-k per
-    * query by (cos desc, neighbor id).
-    */
-  private def ivfKnnJoinCore(df: DataFrame, idCol: String, vecCol: String,
-                             centroids: Array[Array[Double]],
-                             offsets: Array[Double], nprobe: Int,
-                             k: Int): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    // BROADCAST LIFETIME (r15 advice): one broadcast per join call,
-    // released by the ContextCleaner once the returned plan is GC'd —
-    // fine for fit-then-join pipelines, but a long-lived session
-    // issuing MANY joins against one quantizer accumulates 7–74 MB
-    // replicas (north-star geometry) until a driver GC. Build-once/
-    // join-many callers should hold ONE handle via
-    // [[ivfQuantizerBroadcast]], join through
-    // [[ivfKnnJoinFromBroadcast]]/[[ivfPqKnnJoinFromBroadcast]], and
-    // `destroy()` it when done.
-    ivfKnnJoinFromBroadcast(df, idCol, vecCol,
-      df.sparkSession.sparkContext.broadcast(
-        graft.functions.IvfQuantizer(centroids, offsets)),
-      nprobe, k)
-  }
-
-  /** One reusable broadcast of a stored quantizer table — the explicit
-    * handle of the build-once/join-many lifecycle (r15 advice: the
-    * per-call broadcasts inside [[ivfKnnJoinFromStored]] et al. live
-    * until GC, so a session issuing many joins accumulates them). The
-    * caller owns the handle: join via [[ivfKnnJoinFromBroadcast]] /
-    * [[ivfPqKnnJoinFromBroadcast]] any number of times, then
-    * `destroy()` exactly once, after the last job using it finished.
-    */
-  def ivfQuantizerBroadcast(quantizer: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[graft.functions.IvfQuantizer] = {
-    val (centroids, offsets) = loadStoredQuantizer(quantizer)
-    quantizer.sparkSession.sparkContext.broadcast(
-      graft.functions.IvfQuantizer(centroids, offsets))
-  }
-
-  /** [[ivfKnnJoin]] against a caller-owned quantizer broadcast (see
-    * [[ivfQuantizerBroadcast]]) — identical rows to the FromStored leg
-    * (pinned in SimilaritySpec), zero per-call shipping cost.
-    */
-  def ivfKnnJoinFromBroadcast(df: DataFrame, idCol: String, vecCol: String,
-                              bc: org.apache.spark.broadcast.Broadcast[graft.functions.IvfQuantizer],
-                              nprobe: Int, k: Int): DataFrame = {
-    require(nprobe >= 1 && k >= 1, s"need nprobe/k >= 1, got $nprobe/$k")
-    val vecD = col(vecCol).cast("array<double>")
-    // The ENTIRE per-row quantizer decision (norm → dots → top-nprobe) is
-    // one codegen'd kernel, [[graft.functions.IvfProbes]]. Composing it
-    // from a norm column + matvec + score lambda + array_sort was the r13
-    // shape's successor and still melted at the ×10 sweep — not on flops
-    // but on the PLAN: CollapseProject inlined the norm column into the
-    // per-centroid score lambda, and join-side filter inference then
-    // duplicated that interpreted tree into pushed Filters on BOTH join
-    // inputs (~4 boxed-lambda evaluations per row, 117 s of a 126 s row).
-    // A single expression gives Catalyst nothing to inline into and
-    // costs O(d·nlist) primitive work per (possibly duplicated) call.
-    // Zero-norm vectors come back null and are dropped alongside null
-    // vectors — no direction, hence no probe cell and no cosine; the
-    // pinned oracle filters the same rows, and [[ivfKnnJoinPinned]]
-    // excludes them as anchors. Probe selection stays IN the row (no
-    // explode-then-rank-window: that was an n·nlist-row shuffle — 126 M
-    // rows at the ×10 sweep — for a decision each row makes alone); only
-    // n·nprobe probe rows enter the cell equi-join.
-    //
-    // The quantizer rides a BROADCAST, not a plan-constant reference:
-    // this expression sits in BOTH join subplans (probe + member), so a
-    // plan-constant matrix would serialize with every stage's task
-    // binary — 7.2 MB at autoNlist for a 10⁸-row dim-64 corpus, 72 MB
-    // at 10¹⁰ (r14 task: measured sizes in IvfProbesBroadcast's doc /
-    // DESIGN.md). Broadcast moves it once per executor.
-    val probed = df.filter(col(vecCol).isNotNull)
-      .select(col(idCol), vecD.as("_v"),
-        graft.functions.GraftFunctions.ivf_probes_bc(
-          vecD, bc, nprobe).as("_probes"))
-      .filter(col("_probes").isNotNull)
-    val members = probed
-      .select(element_at(col("_probes"), 1).as("_mcell"),
-        col(idCol).as("neighbor_id"), col("_v").as("_nv"))
-    val probes = probed
-      .select(col(idCol).as("_qid"), col("_v").as("_qv"),
-        explode(col("_probes")).as("_ci"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy("_qid").orderBy(col("cos").desc, col("neighbor_id"))
-    // Pin the cell join's parallelism ([[pinFanout]]): its OUTPUT is the
-    // candidate stream (Σ_cells probes·members ≈ n·nprobe·n/nlist — 127M
-    // rows at the ×100 sweep sf), orders of magnitude above its INPUT
-    // (n + n·nprobe rows), so AQE's input-byte-sized coalescing parks
-    // the whole enumeration on 1–2 tasks (measured: 36 tasks / ~1 busy
-    // core for a 1000 s exec at sf10). Cell work is mildly skewed
-    // (hottest cell 263k of 127M slots), so hash(cell) balances.
-    pinFanout(probes, col("_ci"))
-      .join(pinFanout(members, col("_mcell")), col("_ci") === col("_mcell"))
-      .filter(col("_qid") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("_qv"), col("_nv")))
-      .withColumn("rank", row_number().over(wk).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(idCol), col("neighbor_id"), col("cos"), col("rank"))
-  }
-
-  /** Corpus-wide per-dimension (lo, hi) quantization stats, collected to
-    * the driver — `dim` rows, the bounded driver-artifact class (the
-    * nlist-row quantizer-fetch precedent). Same stats pass as
-    * [[quantizeInt8]] (posexplode + dim-keyed min/max, map-side
-    * combined), collected instead of broadcast-joined because the PQ
-    * kernels want plan-constant arrays.
-    *
-    * Stats are defined over NaN-FILTERED elements (r15 advice): one NaN
-    * element anywhere in the corpus used to poison that dimension's
-    * max (NaN sorts above every double), every reconstruction on the
-    * dim went NaN, and the whole PQ join silently returned 0 rows —
-    * the plain IVF lane only nulls the offending ROW. The result is
-    * additionally validated dense + NaN-free so a residual hole fails
-    * loudly on the driver instead of dim-mismatching every encode into
-    * null codes.
-    *
-    * `clip` > 0 is the OUTLIER-ROBUST form: bounds at the
-    * (clip, 1−clip) quantiles via `approx_percentile` (mergeable
-    * bounded-memory sketch — the scale path; an exact per-dim quantile
-    * would need a per-dim sort with only `dim` partitions). Global
-    * min/max (clip = 0, the default) lets ONE outlier value crush a
-    * dimension's int8 resolution corpus-wide — values outside the
-    * clipped range saturate to code 0/255 via the kernel's clamp,
-    * which is exactly the trade that keeps the other 255 codes usable.
-    * clip = 0 stays the default because it is integer-exact and
-    * DuckDB-restatable (the oracle-pinned fixture form); the
-    * `x_ivf_pq_outlier_recall` registry row prices the difference on
-    * an outlier-injected corpus under a full oracle (rank-clipped
-    * bounds, the deterministic twin of this quantile form).
-    */
-  private[graft] def ivfPqStats(df: DataFrame, vecCol: String,
-                                clip: Double = 0.0): (Array[Double], Array[Double]) = {
-    require(clip >= 0.0 && clip < 0.5, s"need 0 <= clip < 0.5, got $clip")
-    val v = col(vecCol).cast("array<double>")
-    val elems = df.select(posexplode(v).as(Seq("_dim", "_x")))
-      .filter(!isnan(col("_x")))
-    val agged = if (clip == 0.0)
-      elems.groupBy("_dim").agg(min(col("_x")).as("_lo"), max(col("_x")).as("_hi"))
-    else
-      elems.groupBy("_dim").agg(
-        percentile_approx(col("_x"), lit(clip), lit(10000)).as("_lo"),
-        percentile_approx(col("_x"), lit(1.0 - clip), lit(10000)).as("_hi"))
-    val rows = agged.orderBy("_dim").collect()
-    require(rows.nonEmpty, "quantization stats: corpus has no non-null vectors")
-    rows.iterator.zipWithIndex.foreach { case (r, i) =>
-      require(r.getInt(0) == i,
-        s"quantization stats: dimensions must be dense 0..d-1, found " +
-          s"${r.getInt(0)} at $i (a dimension with no non-NaN values?)")
-    }
-    val lo = rows.map(_.getDouble(1))
-    val hi = rows.map(_.getDouble(2))
-    require(!lo.exists(_.isNaN) && !hi.exists(_.isNaN),
-      "quantization stats contain NaN after element filtering")
-    (lo, hi)
-  }
-
-  /** RANK-clipped PQ stats — drop exactly `c` elements per side per
-    * dimension, then min/max of the remainder (lo = the (c+1)-th
-    * smallest element's value, hi = the (c+1)-th largest). The
-    * DETERMINISTIC, integer-exact twin of [[ivfPqStats]]' quantile
-    * `clip` form: ties at the drop boundary don't matter (whichever
-    * tied element is dropped, the remainder's min/max value is the
-    * same), so DuckDB restates it from `row_number` alone — which is
-    * what puts the outlier-robustness claim UNDER the oracle
-    * (`x_ivf_pq_outlier_recall`).
-    *
-    * Fixture-scale form: the two per-dim rank windows shuffle n·d
-    * elements into `d` partitions — fine on an audit slice, a skew
-    * bottleneck on a corpus (production uses the mergeable
-    * `approx_percentile` clip, whose sketch never concentrates work).
-    */
-  private[graft] def ivfPqStatsRankClipped(df: DataFrame, vecCol: String,
-                                           c: Int): (Array[Double], Array[Double]) = {
-    require(c >= 0, s"need c >= 0, got $c")
-    val v = col(vecCol).cast("array<double>")
-    val wA = org.apache.spark.sql.expressions.Window
-      .partitionBy("_dim").orderBy(col("_x").asc)
-    val wD = org.apache.spark.sql.expressions.Window
-      .partitionBy("_dim").orderBy(col("_x").desc)
-    val rows = df.select(posexplode(v).as(Seq("_dim", "_x")))
-      .filter(!isnan(col("_x")))
-      .withColumn("_ra", row_number().over(wA))
-      .withColumn("_rd", row_number().over(wD))
-      .filter(col("_ra") > c && col("_rd") > c)
-      .groupBy("_dim").agg(min(col("_x")).as("_lo"), max(col("_x")).as("_hi"))
-      .orderBy("_dim").collect()
-    require(rows.nonEmpty,
-      s"rank-clipped stats: no elements survive dropping $c per side")
-    rows.iterator.zipWithIndex.foreach { case (r, i) =>
-      require(r.getInt(0) == i,
-        s"rank-clipped stats: dimensions must be dense 0..d-1, found " +
-          s"${r.getInt(0)} at $i (a dimension with <= 2c values?)")
-    }
-    (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
-  }
-
-  /** [[ivfPqKnnJoinPinnedAuto]] with [[ivfPqStatsRankClipped]] bounds —
-    * the oracle-restatable clipped leg of the outlier audit: same
-    * pinned-auto anchors and join algebra, bounds that shrug off `c`
-    * extreme values per dimension per side.
-    */
-  def ivfPqKnnJoinPinnedAutoRankClipped(df: DataFrame, idCol: String, vecCol: String,
-                                        nprobe: Int, k: Int, kPrime: Int,
-                                        clipRank: Int, minList: Int = 8): DataFrame = {
-    val unit = pinnedUnitAnchors(df, idCol, vecCol,
-      autoNlist(df.count(), nprobe, minList))
-    val (lo, hi) = ivfPqStatsRankClipped(df, vecCol, clipRank)
-    ivfPqKnnJoinCore(df, idCol, vecCol, unit, unit.map(_ => 0.0), lo, hi,
-      nprobe, k, kPrime)
-  }
-
-  /** The PQ quantization stats as a PERSISTABLE frame — `(dim INT,
-    * lo DOUBLE, hi DOUBLE)`, one row per dimension ([[ivfQuantizerRows]]'
-    * sibling, closing the r15 verdict's lifecycle hole): codes must be a
-    * function of the STORED artifact, not of whichever corpus version a
-    * later join sees — recomputing bounds from the current corpus
-    * silently changes code semantics between sessions the moment anyone
-    * caches codes. Build once per corpus version with the quantizer,
-    * write both tables, and every later [[ivfPqKnnJoinFromStored]] run
-    * reads bounds instead of paying a full-corpus stats pass.
-    */
-  def ivfPqStatsRows(df: DataFrame, vecCol: String, clip: Double = 0.0): DataFrame = {
-    val (lo, hi) = ivfPqStats(df, vecCol, clip)
-    import df.sparkSession.implicits._
-    lo.indices.map(i => (i, lo(i), hi(i))).toDF("dim", "lo", "hi")
-  }
-
-  /** Collect + validate an [[ivfPqStatsRows]] table into driver-side
-    * (lo, hi) arrays — `dim` rows, the bounded driver-artifact class
-    * (the [[loadStoredQuantizer]] pattern, same loud-failure rationale:
-    * a ragged or NaN stats table would dim-mismatch every encode into
-    * null codes — a silent 0-row join).
-    */
-  private[graft] def loadStoredPqStats(stats: DataFrame): (Array[Double], Array[Double]) = {
-    val rows = stats
-      .select(col("dim").cast("int"), col("lo").cast("double"), col("hi").cast("double"))
-      .orderBy("dim").collect()
-    require(rows.nonEmpty, "stored PQ stats table is empty")
-    rows.iterator.zipWithIndex.foreach { case (r, i) =>
-      require(r.getInt(0) == i,
-        s"stored PQ stats dims must be dense 0..d-1, found ${r.getInt(0)} at $i")
-    }
-    val lo = rows.map(_.getDouble(1))
-    val hi = rows.map(_.getDouble(2))
-    require(!lo.exists(_.isNaN) && !hi.exists(_.isNaN), "stored PQ stats contain NaN")
-    lo.indices.foreach { i =>
-      require(lo(i) <= hi(i), s"stored PQ stats dim $i has lo ${lo(i)} > hi ${hi(i)}")
-    }
-    (lo, hi)
-  }
-
-  /** IVF-PQ-lite kNN self-join — [[ivfKnnJoin]] with the CANDIDATE
-    * stage running on COMPRESSED vectors: every row quantizes to packed
-    * uint8 binary codes (one byte per dimension —
-    * [[graft.functions.QuantizeUint8]], the [[quantizeInt8]] affine
-    * formula), the cell equi-join ships ONLY codes on both sides (8×
-    * less shuffle than raw `array<double>` — the memory-bounded ANN
-    * shape at 100 TB, where the candidate join is the dominant shuffle),
-    * candidates rank by the cosine of their affine RECONSTRUCTIONS
-    * ([[graft.functions.QuantCosine]]), and only the top-`kPrime`
-    * survivors per query re-join their RAW vectors (two id equi-joins of
-    * n·kPrime rows — linear) for the exact cosine top-`k` re-rank.
-    *
-    * Recall decomposes as (cell recall) × (survivor recall): the first
-    * is [[ivfKnnJoin]]'s nprobe trade unchanged; the second is the
-    * probability a true top-k neighbor ranks in the quantized top-kPrime
-    * — int8 reconstruction error is small (the `x_quantize_int8` mse
-    * column prices it per vector), so modest kPrime/k ratios (4–8×)
-    * recover it; `kPrime` ≥ the per-query candidate count makes the
-    * survivor stage pass-through and the result equals [[ivfKnnJoin]]
-    * exactly (pinned in SimilaritySpec).
-    *
-    * NaN reconstruction cosines (a vector whose reconstruction is
-    * all-zero — degenerate stats) are filtered before ranking: NaN
-    * orders ABOVE every real score in Spark's desc sort and would
-    * occupy survivor slots with garbage.
-    *
-    * Output: (idCol, neighbor_id, cos, rank), rank 1..k per id — `cos`
-    * is always the EXACT cosine (codes never appear in the output).
-    */
-  def ivfPqKnnJoin(df: DataFrame, idCol: String, vecCol: String,
-                   nprobe: Int, k: Int, kPrime: Int,
-                   minList: Int = 8, seed: Long = 42L,
-                   clip: Double = 0.0): DataFrame = {
-    // ONE count serves both the nlist rule and the fit cap (r15 advice:
-    // this entry point used to scan the corpus twice before any work)
-    val n = df.count()
-    val nlist = autoNlist(n, nprobe, minList)
-    val km = ivfIndexWithCap(df, vecCol, nlist, seed, ivfFitCap(nlist), n)._2
-    ivfPqKnnJoinFromModel(df, idCol, vecCol, km, nprobe, k, kPrime, clip)
-  }
-
-  /** [[ivfPqKnnJoin]] with the PINNED-AUTO quantizer — the oracle twin
-    * (the [[ivfKnnJoinPinnedAuto]] pattern): smallest-id unit anchors at
-    * the count-derived [[autoNlist]], so every stage — membership,
-    * probes, integer code values, reconstruction cosines, survivor
-    * ranks, exact top-k — is restatable by DuckDB from the formulas
-    * alone.
-    */
-  def ivfPqKnnJoinPinnedAuto(df: DataFrame, idCol: String, vecCol: String,
-                             nprobe: Int, k: Int, kPrime: Int,
-                             minList: Int = 8): DataFrame = {
-    val unit = pinnedUnitAnchors(df, idCol, vecCol,
-      autoNlist(df.count(), nprobe, minList))
-    val (lo, hi) = ivfPqStats(df, vecCol)
-    ivfPqKnnJoinCore(df, idCol, vecCol, unit, unit.map(_ => 0.0), lo, hi,
-      nprobe, k, kPrime)
-  }
-
-  /** [[ivfPqKnnJoin]] against an ALREADY-FITTED quantizer — the
-    * build-once/join-many lifecycle ([[ivfKnnJoinFromModel]]'s PQ
-    * sibling).
-    */
-  def ivfPqKnnJoinFromModel(df: DataFrame, idCol: String, vecCol: String,
-                            km: org.apache.spark.ml.clustering.KMeansModel,
-                            nprobe: Int, k: Int, kPrime: Int,
-                            clip: Double = 0.0): DataFrame = {
-    val centers = km.clusterCenters.map(_.toArray)
-    val offsets = centers.map(c => c.map(x => x * x).sum / 2)
-    val (lo, hi) = ivfPqStats(df, vecCol, clip)
-    ivfPqKnnJoinCore(df, idCol, vecCol, centers, offsets, lo, hi, nprobe, k, kPrime)
-  }
-
-  /** [[ivfPqKnnJoin]] against a RELOADED quantizer + stats table pair —
-    * the PQ leg of the cross-session lifecycle ([[ivfKnnJoinFromStored]]'s
-    * sibling, same [[loadStoredQuantizer]] validation). The quantization
-    * bounds come from the STORED [[ivfPqStatsRows]] table, NOT from the
-    * corpus the join sees (r15 verdict): recomputing them per run made
-    * codes a function of the current corpus version — same stored
-    * quantizer, silently different codes across sessions, which defeats
-    * build-once/join-many the moment anyone caches codes — and cost an
-    * extra full-corpus pass on the join-many side. A grown corpus +
-    * stored stats reproduces the build-time codes exactly (pinned in
-    * SimilaritySpec).
-    */
-  def ivfPqKnnJoinFromStored(df: DataFrame, idCol: String, vecCol: String,
-                             quantizer: DataFrame, stats: DataFrame,
-                             nprobe: Int, k: Int, kPrime: Int): DataFrame = {
-    val (centroids, offsets) = loadStoredQuantizer(quantizer)
-    val (lo, hi) = loadStoredPqStats(stats)
-    ivfPqKnnJoinCore(df, idCol, vecCol, centroids, offsets, lo, hi, nprobe, k, kPrime)
-  }
-
-  /** [[ivfPqKnnJoin]] against a caller-owned quantizer broadcast + a
-    * stored stats table — the PQ leg of the reusable-handle lifecycle
-    * (see [[ivfQuantizerBroadcast]] for ownership rules).
-    */
-  def ivfPqKnnJoinFromBroadcast(df: DataFrame, idCol: String, vecCol: String,
-                                bc: org.apache.spark.broadcast.Broadcast[graft.functions.IvfQuantizer],
-                                stats: DataFrame,
-                                nprobe: Int, k: Int, kPrime: Int): DataFrame = {
-    val (lo, hi) = loadStoredPqStats(stats)
-    ivfPqKnnJoinCoreBc(df, idCol, vecCol, bc, lo, hi, nprobe, k, kPrime)
-  }
-
-  /** Shared candidate/survivor/re-rank core of the PQ join — the
-    * [[ivfKnnJoinCore]] algebra with the exact-cosine verify split into
-    * quantized-rank + survivor-re-rank (see [[ivfPqKnnJoin]]). Same
-    * per-call broadcast lifetime note as [[ivfKnnJoinCore]].
-    */
-  private def ivfPqKnnJoinCore(df: DataFrame, idCol: String, vecCol: String,
-                               centroids: Array[Array[Double]],
-                               offsets: Array[Double],
-                               lo: Array[Double], hi: Array[Double],
-                               nprobe: Int, k: Int, kPrime: Int): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    ivfPqKnnJoinCoreBc(df, idCol, vecCol,
-      df.sparkSession.sparkContext.broadcast(
-        graft.functions.IvfQuantizer(centroids, offsets)),
-      lo, hi, nprobe, k, kPrime)
-  }
-
-  private def ivfPqKnnJoinCoreBc(df: DataFrame, idCol: String, vecCol: String,
-                                 bc: org.apache.spark.broadcast.Broadcast[graft.functions.IvfQuantizer],
-                                 lo: Array[Double], hi: Array[Double],
-                                 nprobe: Int, k: Int, kPrime: Int): DataFrame = {
-    require(nprobe >= 1 && k >= 1, s"need nprobe/k >= 1, got $nprobe/$k")
-    require(kPrime >= k, s"need kPrime >= k, got $kPrime < $k")
-    val vecD = col(vecCol).cast("array<double>")
-    // probes + codes in ONE narrow pass; the raw vector is NOT selected —
-    // column pruning keeps it out of the candidate shuffle entirely
-    val probed = df.filter(col(vecCol).isNotNull)
-      .select(col(idCol),
-        graft.functions.GraftFunctions.ivf_probes_bc(vecD, bc, nprobe).as("_probes"),
-        graft.functions.GraftFunctions.quantize_uint8(vecD, lo, hi).as("_codes"))
-      .filter(col("_probes").isNotNull && col("_codes").isNotNull)
-    val members = probed
-      .select(element_at(col("_probes"), 1).as("_mcell"),
-        col(idCol).as("neighbor_id"), col("_codes").as("_ncodes"))
-    val probes = probed
-      .select(col(idCol).as("_qid"), col("_codes").as("_qcodes"),
-        explode(col("_probes")).as("_ci"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("_qid").orderBy(col("_qcos").desc, col("neighbor_id"))
-    val survivors = probes.join(members, col("_ci") === col("_mcell"))
-      .filter(col("_qid") =!= col("neighbor_id"))
-      .withColumn("_qcos", graft.functions.GraftFunctions.quant_cosine(
-        col("_qcodes"), col("_ncodes"), lo, hi))
-      .filter(!isnan(col("_qcos")))
-      .withColumn("_qrk", row_number().over(wq))
-      .filter(col("_qrk") <= kPrime)
-      .select("_qid", "neighbor_id")
-    // raw vectors re-enter only for the n·kPrime survivor rows
-    val base = df.filter(col(vecCol).isNotNull).select(col(idCol), vecD.as("_v"))
-    val qv = base.select(col(idCol).as("_qid"), col("_v").as("_qv"))
-    val nv = base.select(col(idCol).as("neighbor_id"), col("_v").as("_nv"))
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy("_qid").orderBy(col("cos").desc, col("neighbor_id"))
-    survivors.join(qv, "_qid").join(nv, "neighbor_id")
-      .withColumn("cos", cosine(col("_qv"), col("_nv")))
-      .withColumn("rank", row_number().over(wk).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(idCol), col("neighbor_id"), col("cos"), col("rank"))
-  }
+                           quantizer: DataFrame, nprobe: Int, k: Int): DataFrame =
+    ivfKnnJoin(df, idCol, vecCol, graft.functions.IvfQuantizer.stored(quantizer), nprobe, k)
 
   /** Exact directed kNN self-join — the ALL-PAIRS truth baseline of the
     * kNN join family (the join-shaped sibling of [[bruteForceTopK]]):

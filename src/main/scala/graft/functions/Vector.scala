@@ -250,12 +250,6 @@ case class IvfProbes(child: Expression, centroids: Array[Array[Double]],
     copy(child = newChild)
 }
 
-/** The quantizer payload a broadcast probe kernel dereferences — one
-  * serializable pair so the executor-side fetch is a single
-  * `Broadcast.value` call.
-  */
-case class IvfQuantizer(centroids: Array[Array[Double]], offsets: Array[Double])
-
 /** [[IvfProbes]] with the quantizer behind a BROADCAST handle instead of
   * a plan-constant reference object. Identical arithmetic (both forms
   * call [[IvfKernel.probes]]); what changes is the SHIPPING: a
@@ -268,7 +262,7 @@ case class IvfQuantizer(centroids: Array[Array[Double]], offsets: Array[Double])
   * 10¹⁰ (measured java-serialized sizes track the raw nlist·dim·8
   * arithmetic within 1%) — real per-stage driver-serialization and
   * shipping weight at the north star, pure noise at bench scales.
-  * [[graft.ext.Similarity]]'s join core always uses this form; the
+  * [[graft.ext.Similarity.ivfKnnJoin]] always uses this form; the
   * plan-constant sibling stays for small fixed banks and kernel parity
   * tests.
   *
@@ -379,7 +373,7 @@ object IvfKernel {
 
 /** Scalar uint8 quantization of an `array<double>` vector to PACKED
   * BINARY codes — the compressed-vector leg of the IVF-PQ-lite join
-  * ([[graft.ext.Similarity.ivfPqKnnJoin]]): one byte per dimension, so
+  * ([[graft.ext.Similarity.ivfKnnJoin]] with `pq` set): one byte per dimension, so
   * the candidate cell join shuffles 8× less than raw doubles (and 4×
   * less than the `array<int>` codes of
   * [[graft.ext.Similarity.quantizeInt8]], whose affine formula this

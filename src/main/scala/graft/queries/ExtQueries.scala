@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.{Dedup, HtmlExtraction, Multimodal, Similarity, Sketches, TextAnalysis}
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, IvfPq, IvfQuantizer, PqBounds}
 import graft.window.Windows
 
 /** Training-data-pipeline extension operators: dedup, similarity search,
@@ -57,29 +57,27 @@ object ExtQueries {
       (cached, km)
     })
 
-  /** The auto-nlist quantizer memo (`x_ivf_knn_join_auto`): same
-    * build-once lifecycle as [[ivfFor]], but `nlist` follows
-    * `count(*)` by the [[graft.ext.Similarity.autoNlist]] balance rule
-    * — the production fit the nlist-free `ivfKnnJoin` overload runs.
+  /** The auto-nlist KMeans quantizer memo (`x_ivf_knn_join_auto`,
+    * `x_ivf_pq_knn_join`): same build-once lifecycle as [[ivfFor]], but
+    * `nlist` follows `count(*)` by the [[graft.ext.Similarity.autoNlist]]
+    * balance rule, and the one count also serves the fit cap. Only the
+    * quantizer is kept; the join assigns cells itself.
     */
   private val ivfAutoCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.ml.clustering.KMeansModel)]()
+    (org.apache.spark.sql.SparkSession, String), IvfQuantizer]()
 
-  private def ivfForAuto(s: org.apache.spark.sql.SparkSession, d: String) =
+  private def ivfQuantizerForAuto(s: org.apache.spark.sql.SparkSession, d: String) =
     ivfAutoCache.getOrElseUpdate((s, d), {
-      evictStale(ivfAutoCache)(_._1 ne s) { case (df, _) => df.unpersist() }
+      evictStale(ivfAutoCache)(_._1 ne s)(_ => ()) // plain arrays; no blocks
       val emb = Tables.embeddings(s, d)
-      val (assigned, km) = Similarity.ivfIndex(emb, "embedding",
-        Similarity.autoNlist(emb.count(), nprobe = 2, minList = 8))
-      val cached = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached.count()
-      (cached, km)
+      val n = emb.count()
+      IvfQuantizer.fit(emb, "embedding",
+        Similarity.autoNlist(n, nprobe = 2, minList = 8), knownCount = n)
     })
 
   /** Stored IVF quantizer table, written once per (session, sf dir) —
     * the CROSS-SESSION leg of the build-once/join-many lifecycle (the
-    * [[ivfFor]]/[[ivfForAuto]] memos cover within-session reuse):
+    * [[ivfFor]]/[[ivfQuantizerForAuto]] memos cover within-session reuse):
     * pinned-auto anchors ([[graft.ext.Similarity.ivfPinnedQuantizerRows]]
     * at the [[graft.ext.Similarity.autoNlist]] count) persisted as an
     * `(ivf_cell, centroid, offset)` parquet table that
@@ -103,7 +101,7 @@ object ExtQueries {
 
   /** Stored PQ quantization-stats table, written once per (session, sf
     * dir) alongside [[ivfQuantTableFor]]'s quantizer (r16 — VERDICT r15
-    * task 2): per-dim (lo, hi) as an [[graft.ext.Similarity.ivfPqStatsRows]]
+    * task 2): per-dim (lo, hi) as a [[graft.functions.PqBounds]]
     * parquet table, so `x_ivf_pq_knn_join_stored` reads BOTH halves of
     * the stored artifact — codes become a function of the artifact, not
     * of whichever corpus version the join sees. Returns the table name.
@@ -116,10 +114,17 @@ object ExtQueries {
     ivfPqStatsCache.getOrElseUpdate((s, d), {
       evictStale(ivfPqStatsCache)(_._1 ne s)(_ => ())
       val table = "graft_ivf_pq_stats_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      val stats = Similarity.ivfPqStatsRows(Tables.embeddings(s, d), "embedding")
+      val stats = PqBounds.stats(Tables.embeddings(s, d), "embedding").rows(s)
       graft.core.Layout.writeBucketed(stats, table, buckets = 1, "dim")
       table
     })
+
+  /** Pinned anchors at the count-derived nlist (nprobe 2, minList 8): the
+    * quantizer of every `_auto_pinned`-geometry IVF gate row.
+    */
+  private def pinnedAuto(df: org.apache.spark.sql.DataFrame): IvfQuantizer =
+    IvfQuantizer.pinned(df, "vec_id", "embedding",
+      Similarity.autoNlist(df.count(), nprobe = 2, minList = 8))
 
   /** Shared winnowing oracle prefix at the registry parameters
     * (k = 4, w = 5): restates `TextAnalysis.winnowFingerprints`'
@@ -332,15 +337,16 @@ object ExtQueries {
       "JOIN mem m ON p.ci = m.ci AND p.vec_id <> m.vec_id)" +
       ivfPqChainCtes(kPrimeExpr, "", PqMinMaxStatsSql)
 
-  /** The global min/max stats CTE body (the [[graft.ext.Similarity]]
-    * `ivfPqStats` clip = 0 default) — NaN-filtered like the engine.
+  /** The global min/max stats CTE body (the
+    * [[graft.functions.PqBounds.stats]] clip = 0 default) — NaN-filtered
+    * like the engine.
     */
   private val PqMinMaxStatsSql: String =
     "SELECT j, min(x) AS lo, max(x) AS hi FROM ve WHERE NOT isnan(x) GROUP BY j"
 
   /** RANK-clipped stats CTE body — drop exactly `c` elements per side
     * per dimension, min/max of the remainder
-    * ([[graft.ext.Similarity.ivfPqStatsRankClipped]]): tie order at the
+    * ([[graft.functions.PqBounds.rankClipped]]): tie order at the
     * drop boundary can't change the remainder's min/max VALUE, so plain
     * `row_number` restates it deterministically.
     */
@@ -3625,15 +3631,15 @@ object ExtQueries {
     // ROW and joins on the cell id. The production quantizer is the
     // ivfIndex spherical KMeans (engine-specific seeded centroids →
     // rows-only), with the ENTIRE probe/membership/join/top-k algebra
-    // under the gate via the pinned twin below (shared ivfKnnJoinCore —
-    // only the centroid source differs).
+    // under the gate via the pinned twin below (same ivfKnnJoin — only
+    // the quantizer differs).
     Q("x_ivf_knn_join",
       (s, d) => {
         // reuse the session-memoized quantizer (the build-once/join-many
         // lifecycle; the fit dominated this row's bench time at 3 reps)
         val (_, km) = ivfFor(s, d)
-        Similarity.ivfKnnJoinFromModel(Tables.embeddings(s, d), "vec_id",
-            "embedding", km, nprobe = 2, k = 3)
+        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id",
+            "embedding", IvfQuantizer.fromModel(km), nprobe = 2, k = 3)
           .select(col("vec_id"), col("neighbor_id"),
             round(col("cos"), 6).as("cos"), col("rank"))
           .orderBy("vec_id", "rank")
@@ -3649,11 +3655,14 @@ object ExtQueries {
     // near-equal dots/cosines — the documented knnJoinOracleSql class
     // (distinct values sit far above fp noise on this corpus).
     Q("x_ivf_knn_join_pinned",
-      (s, d) => Similarity.ivfKnnJoinPinned(Tables.embeddings(s, d), "vec_id",
-          "embedding", nlist = 8, nprobe = 2, k = 3)
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        Similarity.ivfKnnJoin(emb, "vec_id", "embedding",
+            IvfQuantizer.pinned(emb, "vec_id", "embedding", nlist = 8), nprobe = 2, k = 3)
+          .select(col("vec_id"), col("neighbor_id"),
+            round(col("cos"), 6).as("cos"), col("rank"))
+          .orderBy("vec_id", "rank")
+      },
       Some(IvfKnnJoinPinnedOracle)),
 
     // The PRODUCTION form of the IVF self-join (r14 — closing the r13
@@ -3661,15 +3670,13 @@ object ExtQueries {
     // balance rule (smallest nlist ≥ 8 with nlist² ≥ n·nprobe), the
     // point where assignment/probe-rank work (n·nlist) crosses
     // candidate verification (n·nprobe·n/nlist) — total n^1.5 where
-    // either fixed dial goes n². The nlist-free ivfKnnJoin overload
-    // dispatches here. KMeans centroids stay engine-seeded → rows-only;
+    // either fixed dial goes n². KMeans centroids stay engine-seeded → rows-only;
     // the _auto_pinned twin below puts the NLIST RULE itself under the
     // oracle.
     Q("x_ivf_knn_join_auto",
       (s, d) => {
-        val (_, km) = ivfForAuto(s, d)
-        Similarity.ivfKnnJoinFromModel(Tables.embeddings(s, d), "vec_id",
-            "embedding", km, nprobe = 2, k = 3)
+        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id",
+            "embedding", ivfQuantizerForAuto(s, d), nprobe = 2, k = 3)
           .select(col("vec_id"), col("neighbor_id"),
             round(col("cos"), 6).as("cos"), col("rank"))
           .orderBy("vec_id", "rank")
@@ -3683,11 +3690,14 @@ object ExtQueries {
     // oracle-checked at every corpus size the gate runs (nlist = 32 at
     // the sf0.01 gate, n = 500; 200 at the gapped sf1 sweep, n = 20000).
     Q("x_ivf_knn_join_auto_pinned",
-      (s, d) => Similarity.ivfKnnJoinPinnedAuto(Tables.embeddings(s, d), "vec_id",
-          "embedding", nprobe = 2, k = 3)
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        Similarity.ivfKnnJoin(emb, "vec_id", "embedding",
+            pinnedAuto(emb), nprobe = 2, k = 3)
+          .select(col("vec_id"), col("neighbor_id"),
+            round(col("cos"), 6).as("cos"), col("rank"))
+          .orderBy("vec_id", "rank")
+      },
       Some(IvfKnnJoinAutoPinnedOracle)),
 
     // IVF RECALL AUDIT (the x_cosine_lsh_recall convention, extended to
@@ -3717,8 +3727,8 @@ object ExtQueries {
         val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             round(col("cos"), 6).as("cos"))
-        val hit = Similarity.ivfKnnJoinPinnedAuto(slice, "vec_id", "embedding",
-            nprobe = 2, k = 3)
+        val hit = Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
+            pinnedAuto(slice), nprobe = 2, k = 3)
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             lit(true).as("_hit"))
         truth.join(hit, Seq("vec_id", "top1_id"), "left")
@@ -3740,8 +3750,8 @@ object ExtQueries {
     Q("x_ivf_knn_join_stored",
       (s, d) => {
         val table = ivfQuantTableFor(s, d)
-        Similarity.ivfKnnJoinFromStored(Tables.embeddings(s, d), "vec_id",
-            "embedding", s.table(table), nprobe = 2, k = 3)
+        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
+            IvfQuantizer.stored(s.table(table)), nprobe = 2, k = 3)
           .select(col("vec_id"), col("neighbor_id"),
             round(col("cos"), 6).as("cos"), col("rank"))
           .orderBy("vec_id", "rank")
@@ -3759,21 +3769,25 @@ object ExtQueries {
     // sweep's fixture cost is flat by construction. The full forms stay
     // in the registry for the driver gate sf.
     Q("x_ivf_knn_join_capped",
-      (s, d) => Similarity.ivfKnnJoin(
-          Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", nlist = 8, nprobe = 2, k = 3)
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
+      (s, d) => {
+        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 2000)
+        Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
+            IvfQuantizer.fit(slice, "embedding", nlist = 8), nprobe = 2, k = 3)
+          .select(col("vec_id"), col("neighbor_id"),
+            round(col("cos"), 6).as("cos"), col("rank"))
+          .orderBy("vec_id", "rank")
+      },
       None),
 
     Q("x_ivf_knn_join_pinned_capped",
-      (s, d) => Similarity.ivfKnnJoinPinned(
-          Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", nlist = 8, nprobe = 2, k = 3)
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
+      (s, d) => {
+        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 2000)
+        Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
+            IvfQuantizer.pinned(slice, "vec_id", "embedding", nlist = 8), nprobe = 2, k = 3)
+          .select(col("vec_id"), col("neighbor_id"),
+            round(col("cos"), 6).as("cos"), col("rank"))
+          .orderBy("vec_id", "rank")
+      },
       Some(IvfKnnJoinPinnedCappedOracle)),
 
     // r16: the same stand-in treatment for the three sign-bucket rows
@@ -3823,9 +3837,9 @@ object ExtQueries {
     // only); the _pinned twin puts EVERY stage under the oracle.
     Q("x_ivf_pq_knn_join",
       (s, d) => {
-        val (_, km) = ivfForAuto(s, d)
-        Similarity.ivfPqKnnJoinFromModel(Tables.embeddings(s, d), "vec_id",
-            "embedding", km, nprobe = 2, k = 3, kPrime = 8)
+        val emb = Tables.embeddings(s, d)
+        Similarity.ivfKnnJoin(emb, "vec_id", "embedding", ivfQuantizerForAuto(s, d),
+            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(emb, "embedding"), kPrime = 8)))
           .select(col("vec_id"), col("neighbor_id"),
             round(col("cos"), 6).as("cos"), col("rank"))
           .orderBy("vec_id", "rank")
@@ -3837,11 +3851,14 @@ object ExtQueries {
     // the reconstruction cosines in the kernel's dot-then-scale float
     // order, the kPrime survivor cut, and the exact re-rank.
     Q("x_ivf_pq_knn_join_pinned",
-      (s, d) => Similarity.ivfPqKnnJoinPinnedAuto(Tables.embeddings(s, d),
-          "vec_id", "embedding", nprobe = 2, k = 3, kPrime = 8)
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
+      (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        Similarity.ivfKnnJoin(emb, "vec_id", "embedding", pinnedAuto(emb),
+            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(emb, "embedding"), kPrime = 8)))
+          .select(col("vec_id"), col("neighbor_id"),
+            round(col("cos"), 6).as("cos"), col("rank"))
+          .orderBy("vec_id", "rank")
+      },
       Some(IvfPqKnnJoinPinnedOracle)),
 
     // The stored-quantizer leg of the PQ lifecycle: reloads the SAME
@@ -3859,9 +3876,9 @@ object ExtQueries {
       (s, d) => {
         val table = ivfQuantTableFor(s, d)
         val stats = ivfPqStatsTableFor(s, d)
-        Similarity.ivfPqKnnJoinFromStored(Tables.embeddings(s, d), "vec_id",
-            "embedding", s.table(table), s.table(stats),
-            nprobe = 2, k = 3, kPrime = 8)
+        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
+            IvfQuantizer.stored(s.table(table)), nprobe = 2, k = 3,
+            Some(IvfPq(PqBounds.stored(s.table(stats)), kPrime = 8)))
           .select(col("vec_id"), col("neighbor_id"),
             round(col("cos"), 6).as("cos"), col("rank"))
           .orderBy("vec_id", "rank")
@@ -3881,8 +3898,8 @@ object ExtQueries {
         val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             round(col("cos"), 6).as("cos"))
-        val hit = Similarity.ivfPqKnnJoinPinnedAuto(slice, "vec_id", "embedding",
-            nprobe = 2, k = 3, kPrime = 8)
+        val hit = Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice),
+            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(slice, "embedding"), kPrime = 8)))
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             lit(true).as("_hit"))
         truth.join(hit, Seq("vec_id", "top1_id"), "left")
@@ -3912,12 +3929,12 @@ object ExtQueries {
         val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             round(col("cos"), 6).as("cos"))
-        val mm = Similarity.ivfPqKnnJoinPinnedAuto(slice, "vec_id", "embedding",
-            nprobe = 2, k = 3, kPrime = 8)
+        val mm = Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice),
+            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(slice, "embedding"), kPrime = 8)))
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             lit(true).as("_hm"))
-        val cl = Similarity.ivfPqKnnJoinPinnedAutoRankClipped(slice, "vec_id",
-            "embedding", nprobe = 2, k = 3, kPrime = 8, clipRank = 1)
+        val cl = Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice),
+            nprobe = 2, k = 3, Some(IvfPq(PqBounds.rankClipped(slice, "embedding", 1), kPrime = 8)))
           .select(col("vec_id"), col("neighbor_id").as("top1_id"),
             lit(true).as("_hc"))
         truth.join(mm, Seq("vec_id", "top1_id"), "left")

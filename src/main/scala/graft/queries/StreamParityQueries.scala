@@ -396,11 +396,11 @@ object StreamParityQueries {
     Q("xs_stream_ivf_pairs",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val unit = graft.ext.Similarity.pinnedUnitAnchors(emb, "vec_id", "embedding",
+        val unit = graft.functions.IvfQuantizer.pinned(emb, "vec_id", "embedding",
           graft.ext.Similarity.autoNlist(emb.count(), nprobe = 2, minList = 8))
         drained(s, "xs_ivf_pairs",
             StreamingOps.ivfCellCandidatePairs(embStream(s, d), "ts_vec",
-              "vec_id", "embedding", unit, unit.map(_ => 0.0),
+              "vec_id", "embedding", unit,
               watermark = "3650 days", maxBucket = 1 << 16).toDF())
           .distinct()
           .orderBy("id1", "id2")

@@ -201,14 +201,13 @@ object StreamBench {
           (new Timestamp(t0 + i * 200L), i.toLong, v)
         }
         import spark.implicits._
-        val anchors = graft.ext.Similarity.pinnedUnitAnchors(
+        val anchors = graft.functions.IvfQuantizer.pinned(
           rows.map { case (_, id, v) => (id, v) }.toDF("vec_id", "embedding"),
           "vec_id", "embedding",
           graft.ext.Similarity.autoNlist(rows.size.toLong, 1, 8))
         val out = StreamingOps.ivfCellCandidatePairs(
           input.toDF().toDF("ts", "vec_id", "embedding"), "ts", "vec_id",
-          "embedding", anchors, anchors.map(_ => 0.0),
-          watermark = "2 minutes").toDF()
+          "embedding", anchors, watermark = "2 minutes").toDF()
         drain(spark, input, out, chunked(rows))
       }),
       // RocksDB twins of two stateful rows: at 100 TB-ingest state

@@ -353,8 +353,9 @@ object StreamingOps {
     * the ingest twin is the membership slice, which is exactly the
     * candidate set a keep-first streaming dedup consumes.
     *
-    * The quantizer is CALLER-PINNED (centroids + offsets, e.g. reloaded
-    * from an [[graft.ext.Similarity.ivfQuantizerRows]] table): a stream
+    * The quantizer is CALLER-PINNED (a [[graft.functions.IvfQuantizer]]
+    * value, typically `IvfQuantizer.stored` of the table the batch build
+    * wrote, collected and validated before the stream starts): a stream
     * cannot run the batch [[graft.ext.Similarity.autoNlist]] rule (it
     * keys on `count(*)`, which an unbounded ingest never has) — size
     * `nlist` from the expected corpus magnitude (nlist² ≈ n·nprobe) and
@@ -364,8 +365,8 @@ object StreamingOps {
     * [[minhashCandidatePairs]]'s.
     */
   def ivfCellCandidatePairs(stream: DataFrame, tsCol: String, idCol: String,
-                            vecCol: String, centroids: Array[Array[Double]],
-                            offsets: Array[Double], watermark: String,
+                            vecCol: String, quantizer: graft.functions.IvfQuantizer,
+                            watermark: String,
                             maxBucket: Int = 128): Dataset[CandidatePair] = {
     val spark = stream.sparkSession
     import spark.implicits._
@@ -373,34 +374,13 @@ object StreamingOps {
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("eventTs"),
         lit(0).as("band"),
-        graft.functions.GraftFunctions.ivf_probes(
-          col(vecCol).cast("array<double>"), centroids, offsets, 1).as("_p"))
+        graft.functions.GraftFunctions.ivf_probes(col(vecCol).cast("array<double>"),
+          quantizer.centroids, quantizer.offsets, 1).as("_p"))
       .filter(col("_p").isNotNull)
       .select(col("id"), col("eventTs"), col("band"),
         element_at(col("_p"), 1).cast("long").as("bucket"))
       .as[BandedDoc]
     bucketPairs(banded, watermark, maxBucket)
-  }
-
-  /** [[ivfCellCandidatePairs]] reloading the quantizer from a STORED
-    * [[graft.ext.Similarity.ivfQuantizerRows]] table — the streaming
-    * read side of the cross-session build-once/join-many lifecycle (the
-    * batch side is [[graft.ext.Similarity.ivfKnnJoinFromStored]]; both
-    * go through ONE validation path,
-    * [[graft.ext.Similarity.loadStoredQuantizer]], so a corrupt table
-    * fails the stream at plan-build time, not row-by-row in a
-    * micro-batch). The quantizer is a BATCH frame (nlist rows, collected
-    * once before the stream starts) — typically
-    * `spark.read.parquet(quantizerDir)` of the table the batch fit
-    * wrote.
-    */
-  def ivfCellCandidatePairs(stream: DataFrame, tsCol: String, idCol: String,
-                            vecCol: String, quantizer: DataFrame,
-                            watermark: String,
-                            maxBucket: Int): Dataset[CandidatePair] = {
-    val (centroids, offsets) = graft.ext.Similarity.loadStoredQuantizer(quantizer)
-    ivfCellCandidatePairs(stream, tsCol, idCol, vecCol, centroids, offsets,
-      watermark, maxBucket)
   }
 
   /** The shared bounded-bucket pair emitter under

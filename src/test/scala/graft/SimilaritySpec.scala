@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
+import graft.functions.{IvfPq, IvfQuantizer, PqBounds}
 
 /** LSH ANN recall + composed near-dup pipeline (VERDICT r1 #1/#2):
   * the round-1 lshTopK joined on one wide exact signature and returned 0
@@ -28,6 +29,14 @@ class SimilaritySpec extends SparkSpec {
     val far = (40 until 200).map(i => (i.toLong, randVec().toSeq))
     (near ++ far).toDF("vec_id", "embedding")
   }
+
+  /** Pinned anchors at the count-derived nlist (nprobe 2, minList 8). */
+  private def pinnedAuto(df: org.apache.spark.sql.DataFrame): IvfQuantizer =
+    IvfQuantizer.pinned(df, "vec_id", "embedding",
+      Similarity.autoNlist(df.count(), nprobe = 2, minList = 8))
+
+  private def pinned(df: org.apache.spark.sql.DataFrame, nlist: Int): IvfQuantizer =
+    IvfQuantizer.pinned(df, "vec_id", "embedding", nlist)
 
   test("lshTopK recall@20 >= 0.5 vs bruteForceTopK and returns k rows") {
     val k = 20
@@ -67,8 +76,8 @@ class SimilaritySpec extends SparkSpec {
     // probing ALL cells reaches every member exactly once → the exact
     // directed top-k, whatever the anchors are (the x_ann_ivf_full_probe
     // audit, at the join shape)
-    val got = Similarity.ivfKnnJoinPinned(fixture, "vec_id", "embedding",
-        nlist = 4, nprobe = 4, k = k)
+    val got = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        pinned(fixture, 4), nprobe = 4, k = k)
       .select("vec_id", "neighbor_id", "rank").as[(Long, Long, Long)].collect()
       .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._3).map(_._2).toSeq }
     assert(got.keySet == exact.keySet, "some query lost its neighbor list")
@@ -77,7 +86,7 @@ class SimilaritySpec extends SparkSpec {
     // the production KMeans form at nprobe < nlist: one row per (query,
     // rank), and the probed-cells recall trade still finds most top-1s
     val prod = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
-        nlist = 8, nprobe = 2, k = 1)
+        IvfQuantizer.fit(fixture, "embedding", nlist = 8), nprobe = 2, k = 1)
       .select("vec_id", "neighbor_id").as[(Long, Long)].collect().toMap
     assert(prod.size == vecs.size, s"expected ${vecs.size} rows, got ${prod.size}")
     val hit = prod.count { case (q, n) => exact(q).headOption.contains(n) }
@@ -98,27 +107,29 @@ class SimilaritySpec extends SparkSpec {
     assert(autoNlist(200000, 2, 8) == 633, "the x100 probe corpus (633^2 = 400689)")
   }
 
-  test("ivfKnnJoinAuto: pinned-auto twin equals the pinned form at the derived " +
-    "nlist; nlist-free default equals the auto form") {
+  test("ivfKnnJoin: the pinned-auto quantizer equals the pinned one at the derived " +
+    "nlist; a known count gives the same KMeans fit") {
     // n = 200, nprobe = 2 -> smallest m with m^2 >= 400 is exactly 20
     val derived = Similarity.autoNlist(200L, 2, 8)
     assert(derived == 20)
-    val pinnedAuto = Similarity.ivfKnnJoinPinnedAuto(fixture, "vec_id", "embedding",
-        nprobe = 2, k = 3)
+    val auto = pinnedAuto(fixture)
+    assert(auto.centroids.length == derived)
+    val pinnedAutoRows = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        auto, nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val pinnedExplicit = Similarity.ivfKnnJoinPinned(fixture, "vec_id", "embedding",
-        nlist = derived, nprobe = 2, k = 3)
+    val pinnedExplicit = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        pinned(fixture, derived), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
-    assert(pinnedAuto == pinnedExplicit, "auto twin must equal pinned at the derived nlist")
-    // the nlist-free default overload dispatches to the auto (KMeans)
-    // form — same seeded fit, so the result is identical
+    assert(pinnedAutoRows == pinnedExplicit, "auto twin must equal pinned at the derived nlist")
+    // the KMeans fit at the derived nlist: passing the count the nlist
+    // rule already paid for must not change the seeded fit
     val default = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
-        nprobe = 2, k = 3)
+        IvfQuantizer.fit(fixture, "embedding", derived), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val auto = Similarity.ivfKnnJoinAuto(fixture, "vec_id", "embedding",
-        nprobe = 2, k = 3)
+    val counted = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        IvfQuantizer.fit(fixture, "embedding", derived, knownCount = 200L), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
-    assert(default == auto, "nlist-free ivfKnnJoin must dispatch to the auto form")
+    assert(default == counted, "a known count must give the same fit as counting")
     assert(default.map(_._1) == fixture.as[(Long, Seq[Double])].collect()
       .map(_._1).toSet, "every row keeps a neighbor list")
   }
@@ -130,15 +141,15 @@ class SimilaritySpec extends SparkSpec {
     // probe ranking (the r13 advice scenario)
     val withZero = fixture.union(
       Seq((-1L, Seq.fill(dim)(0.0))).toDF("vec_id", "embedding"))
-    val got = Similarity.ivfKnnJoinPinned(withZero, "vec_id", "embedding",
-        nlist = 4, nprobe = 2, k = 3)
+    val got = Similarity.ivfKnnJoin(withZero, "vec_id", "embedding",
+        pinned(withZero, 4), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect()
     assert(got.nonEmpty)
     assert(!got.exists(r => r._1 == -1L || r._2 == -1L),
       "zero-norm vector must not appear as query or neighbor")
     assert(!got.exists(_._3.isNaN), "NaN cosine leaked through the guard")
-    val clean = Similarity.ivfKnnJoinPinned(fixture, "vec_id", "embedding",
-        nlist = 4, nprobe = 2, k = 3)
+    val clean = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        pinned(fixture, 4), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect()
     assert(got.toSet == clean.toSet,
       "a zero-norm row must be a no-op for everyone else's neighbors")
@@ -337,8 +348,8 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Long)].collect().toSet
     // probing ALL cells reaches every member exactly once -> exact top-k
     // (pinned by the full-probe test above), so the two must be EQUAL
-    val fullProbe = Similarity.ivfKnnJoinPinned(fixture, "vec_id", "embedding",
-        nlist = 4, nprobe = 4, k = 5)
+    val fullProbe = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        pinned(fixture, 4), nprobe = 4, k = 5)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(exact == fullProbe, "exactKnnJoin must equal the full-probe IVF join")
     // zero-norm exclusion: a zero vector neither queries nor serves
@@ -357,18 +368,19 @@ class SimilaritySpec extends SparkSpec {
     val stored = Similarity.ivfKnnJoinFromStored(fixture, "vec_id", "embedding",
         spark.read.parquet(dir), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
-    val inline = Similarity.ivfKnnJoinPinnedAuto(fixture, "vec_id", "embedding",
-        nprobe = 2, k = 3)
+    val inline = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        pinnedAuto(fixture), nprobe = 2, k = 3)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(stored == inline, "storage round-trip must not change a single row")
     // offsets are honored, not assumed zero: KMeans-style centroids with
-    // their ‖c‖²/2 offsets round-trip to the same result as FromModel
+    // their ‖c‖²/2 offsets round-trip to the same result as fromModel
     val (_, km) = Similarity.ivfIndex(fixture, "embedding", nlist = 4)
-    val kmQuant = Similarity.ivfQuantizerRows(spark, km.clusterCenters.map(_.toArray))
+    val kmQuant = IvfQuantizer.fromModel(km).rows(spark)
     val kmStored = Similarity.ivfKnnJoinFromStored(fixture, "vec_id", "embedding",
         kmQuant, nprobe = 2, k = 3).as[(Long, Long, Double, Long)].collect().toSet
-    val kmInline = Similarity.ivfKnnJoinFromModel(fixture, "vec_id", "embedding",
-        km, nprobe = 2, k = 3).as[(Long, Long, Double, Long)].collect().toSet
+    val kmInline = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        IvfQuantizer.fromModel(km), nprobe = 2, k = 3)
+      .as[(Long, Long, Double, Long)].collect().toSet
     assert(kmStored == kmInline, "KMeans quantizer must round-trip through the table form")
     val gapped = quant.filter(col("ivf_cell") =!= 3)
     val err = intercept[IllegalArgumentException] {
@@ -404,6 +416,30 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfKnnJoinFromStored(fixture, "vec_id", "embedding", empty, 1, 2)
     }
     assert(e5.getMessage.contains("empty"), s"wrong error: ${e5.getMessage}")
+  }
+
+  test("IvfQuantizer.pinned: a ragged corpus fails with the ragged stored " +
+    "table's dimension error, whichever anchor is shorter") {
+    val long = Seq(0.2, 0.1, 0.3)
+    val short = Seq(1.0, 0.0)
+    // shorter anchor first: rows of the other length used to be dropped
+    // silently; longer first: the probe kernel read past the short
+    // anchor on an executor (ArrayIndexOutOfBounds)
+    for ((first, second) <- Seq((short, long), (long, short))) {
+      val storedErr = intercept[IllegalArgumentException] {
+        Similarity.ivfKnnJoinFromStored(fixture, "vec_id", "embedding",
+          Seq((0, first, 0.0), (1, second, 0.0)).toDF("ivf_cell", "centroid", "offset"),
+          nprobe = 1, k = 1)
+      }
+      val corpus = Seq((0L, first), (1L, second), (2L, long)).toDF("vec_id", "embedding")
+      val pinnedErr = intercept[IllegalArgumentException] {
+        Similarity.ivfKnnJoin(corpus, "vec_id", "embedding", pinned(corpus, 2),
+          nprobe = 1, k = 1).collect()
+      }
+      assert(pinnedErr.getMessage == storedErr.getMessage,
+        s"pinned: ${pinnedErr.getMessage} / stored: ${storedErr.getMessage}")
+      assert(pinnedErr.getMessage.contains("share one dimension"))
+    }
   }
 
   test("IvfKernel: a NaN probe score is never seated; all-NaN scores reject the row") {
@@ -444,8 +480,9 @@ class SimilaritySpec extends SparkSpec {
     // and the sampled-fit model still quantizes usefully: full-probe
     // top-k through it equals the exact join (nprobe = nlist degenerates
     // to exact whatever the centroids are)
-    val full = Similarity.ivfKnnJoinFromModel(fixture, "vec_id", "embedding",
-      km, nprobe = 4, k = 2).as[(Long, Long, Double, Long)].collect().toSet
+    val full = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+      IvfQuantizer.fromModel(km), nprobe = 4, k = 2)
+      .as[(Long, Long, Double, Long)].collect().toSet
     val exact = Similarity.exactKnnJoin(fixture, "vec_id", "embedding", k = 2)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(full == exact)
@@ -536,7 +573,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("QuantizeUint8/QuantCosine: byte codes match quantizeInt8's int codes; " +
     "reconstruction cosine matches a hand-computed reference; null contract") {
-    val (lo, hi) = Similarity.ivfPqStats(fixture, "embedding")
+    val PqBounds(lo, hi) = PqBounds.stats(fixture, "embedding")
     assert(lo.length == dim && hi.length == dim)
     val byteCodes = fixture.select(col("vec_id"),
         graft.functions.GraftFunctions.quantize_uint8(
@@ -588,16 +625,18 @@ class SimilaritySpec extends SparkSpec {
     val nprobe = 2; val k = 3
     // kPrime >= any per-query candidate count -> the survivor stage is a
     // pass-through and the PQ join IS the IVF join (same quantizer)
-    val pq = Similarity.ivfPqKnnJoinPinnedAuto(fixture, "vec_id", "embedding",
-        nprobe, k, kPrime = 1000)
+    val bounds = PqBounds.stats(fixture, "embedding")
+    val pq = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding", pinnedAuto(fixture),
+        nprobe, k, Some(IvfPq(bounds, kPrime = 1000)))
       .as[(Long, Long, Double, Long)].collect().toSet
-    val ivf = Similarity.ivfKnnJoinPinnedAuto(fixture, "vec_id", "embedding", nprobe, k)
+    val ivf = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding", pinnedAuto(fixture),
+        nprobe, k)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(pq == ivf, "pass-through PQ join must equal the plain IVF join")
     // modest kPrime: per-query row count still <= k, ranks dense from 1,
     // and every cos is the EXACT cosine of the pair (codes never leak)
-    val tight = Similarity.ivfPqKnnJoinPinnedAuto(fixture, "vec_id", "embedding",
-        nprobe, k, kPrime = 6)
+    val tight = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding", pinnedAuto(fixture),
+        nprobe, k, Some(IvfPq(bounds, kPrime = 6)))
       .as[(Long, Long, Double, Long)].collect()
     val perQ = tight.groupBy(_._1)
     assert(perQ.values.forall(_.length <= k))
@@ -614,24 +653,30 @@ class SimilaritySpec extends SparkSpec {
       assert(cos == exact, s"($q,$n): output cos $cos != exact $exact")
     }
     // production (KMeans) form: smoke - n rows in, k-bounded out, runs
-    val prod = Similarity.ivfPqKnnJoin(fixture, "vec_id", "embedding",
-      nprobe, k, kPrime = 12)
+    val prod = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+      IvfQuantizer.fit(fixture, "embedding", Similarity.autoNlist(200L, nprobe, 8)),
+      nprobe, k, Some(IvfPq(bounds, kPrime = 12)))
     assert(prod.count() > 0)
     // stored-quantizer + stored-stats leg: reloading the same anchors
     // and the same bounds changes no row
     val derived = Similarity.autoNlist(200L, nprobe, 8)
     val quant = Similarity.ivfPinnedQuantizerRows(fixture, "vec_id", "embedding", derived)
-    val stats = Similarity.ivfPqStatsRows(fixture, "embedding")
-    val viaStored = Similarity.ivfPqKnnJoinFromStored(fixture, "vec_id", "embedding",
-        quant, stats, nprobe, k, kPrime = 6)
+    val stats = bounds.rows(spark)
+    val storedPq = Some(IvfPq(PqBounds.stored(stats), kPrime = 6))
+    val viaStored = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        IvfQuantizer.stored(quant), nprobe, k, storedPq)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(viaStored == tight.toSet, "PQ stored leg must equal the pinned-auto run")
-    // broadcast-handle leg: caller-owned broadcast, identical rows
-    val bc = Similarity.ivfQuantizerBroadcast(quant)
-    val viaBc = Similarity.ivfPqKnnJoinFromBroadcast(fixture, "vec_id", "embedding",
-        bc, stats, nprobe, k, kPrime = 6)
+    // broadcast-handle leg: caller-owned broadcast, identical rows for
+    // the PQ and the exact join
+    val bc = spark.sparkContext.broadcast(IvfQuantizer.stored(quant))
+    val viaBc = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding",
+        bc, nprobe, k, storedPq)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(viaBc == tight.toSet, "PQ broadcast leg must equal the pinned-auto run")
+    val exactBc = Similarity.ivfKnnJoin(fixture, "vec_id", "embedding", bc, nprobe, k, None)
+      .as[(Long, Long, Double, Long)].collect().toSet
+    assert(exactBc == ivf, "exact broadcast leg must equal the stored-table run")
     bc.destroy()
   }
 
@@ -641,14 +686,14 @@ class SimilaritySpec extends SparkSpec {
     val nprobe = 2; val k = 3
     val derived = Similarity.autoNlist(200L, nprobe, 8)
     val quant = Similarity.ivfPinnedQuantizerRows(fixture, "vec_id", "embedding", derived)
-    val stats = Similarity.ivfPqStatsRows(fixture, "embedding")
-    val (loS, hiS) = Similarity.loadStoredPqStats(stats)
+    val stats = PqBounds.stats(fixture, "embedding").rows(spark)
+    val PqBounds(loS, hiS) = PqBounds.stored(stats)
     // the corpus GROWS with an out-of-range vector: recomputed bounds
     // would stretch and silently change every cached code; stored
     // bounds must leave the original rows' codes bit-identical
     val grown = fixture.union(Seq((9999L, Seq.fill(dim)(50.0f)))
       .toDF("vec_id", "embedding"))
-    val (loG, hiG) = Similarity.ivfPqStats(grown, "embedding")
+    val PqBounds(loG, hiG) = PqBounds.stats(grown, "embedding")
     assert(hiG.zip(hiS).exists { case (g, s) => g > s },
       "fixture sanity: the grown corpus must actually stretch the recomputed bounds")
     def codesWith(df: org.apache.spark.sql.DataFrame, lo: Array[Double], hi: Array[Double]) =
@@ -667,8 +712,8 @@ class SimilaritySpec extends SparkSpec {
     assert(grownRecomputed.exists { case (id, b) => !b.sameElements(buildTime(id)) },
       "fixture sanity: recomputed stats DO change codes — the hole stored stats close")
     // and the stored join itself runs green against the grown corpus
-    val joined = Similarity.ivfPqKnnJoinFromStored(grown, "vec_id", "embedding",
-      quant, stats, nprobe, k, kPrime = 6)
+    val joined = Similarity.ivfKnnJoin(grown, "vec_id", "embedding",
+      IvfQuantizer.stored(quant), nprobe, k, Some(IvfPq(PqBounds.stored(stats), kPrime = 6)))
     assert(joined.count() > 0)
   }
 
@@ -679,15 +724,15 @@ class SimilaritySpec extends SparkSpec {
     // and the PQ join silently returned 0 rows
     val corrupt = fixture.union(
       Seq((5000L, Seq(Float.NaN) ++ Seq.fill(dim - 1)(0.25f))).toDF("vec_id", "embedding"))
-    val (loC, hiC) = Similarity.ivfPqStats(corrupt, "embedding")
-    val (loF, hiF) = Similarity.ivfPqStats(fixture, "embedding")
+    val PqBounds(loC, hiC) = PqBounds.stats(corrupt, "embedding")
+    val PqBounds(loF, hiF) = PqBounds.stats(fixture, "embedding")
     assert(!loC.exists(_.isNaN) && !hiC.exists(_.isNaN))
     // dim 0's bounds: the NaN element is invisible, but the corrupt
     // vector's real elements on OTHER dims still participate
     assert(loC(0) == loF(0) && hiC(0) == hiF(0),
       "dim 0 bounds must ignore the NaN element")
-    val joined = Similarity.ivfPqKnnJoinPinnedAuto(corrupt, "vec_id", "embedding",
-      nprobe = 2, k = 3, kPrime = 8)
+    val joined = Similarity.ivfKnnJoin(corrupt, "vec_id", "embedding", pinnedAuto(corrupt),
+      nprobe = 2, k = 3, Some(IvfPq(PqBounds(loC, hiC), kPrime = 8)))
     assert(joined.count() > 0, "a NaN-carrying corpus must not silence the join")
     // the corrupt ROW itself is excluded (probe kernel nulls it) — the
     // plain-IVF convention: null the row, never the lane
@@ -701,9 +746,11 @@ class SimilaritySpec extends SparkSpec {
     val outlier = fixture.withColumn("embedding",
       when(col("vec_id") === 3L, transform(vecD, _ => lit(1e6))).otherwise(vecD))
     // bounds sanity: min/max swallows the outlier, both clipped forms drop it
-    val (_, hiMm) = Similarity.ivfPqStats(outlier, "embedding")
-    val (_, hiRk) = Similarity.ivfPqStatsRankClipped(outlier, "embedding", 1)
-    val (_, hiAp) = Similarity.ivfPqStats(outlier, "embedding", clip = 0.02)
+    val minMax = PqBounds.stats(outlier, "embedding")
+    val clipped = PqBounds.stats(outlier, "embedding", clip = 0.02)
+    val hiMm = minMax.hi
+    val hiRk = PqBounds.rankClipped(outlier, "embedding", 1).hi
+    val hiAp = clipped.hi
     assert(hiMm.forall(_ == 1e6), "min/max hi must be the outlier on every dim")
     assert(hiRk.forall(_ < 10.0), "rank-clip must drop the outlier on every dim")
     assert(hiAp.forall(_ < 10.0), "approx clip must drop the outlier on every dim")
@@ -713,17 +760,18 @@ class SimilaritySpec extends SparkSpec {
     def recall(j: org.apache.spark.sql.DataFrame): Double =
       truth.count(j.select(col("vec_id"), col("neighbor_id"))
         .as[(Long, Long)].collect().toSet).toDouble / truth.size
-    val rMm = recall(Similarity.ivfPqKnnJoin(outlier, "vec_id", "embedding",
-      nprobe = 2, k = 3, kPrime = 8))
-    val rAp = recall(Similarity.ivfPqKnnJoin(outlier, "vec_id", "embedding",
-      nprobe = 2, k = 3, kPrime = 8, clip = 0.02))
+    val kmeans = IvfQuantizer.fit(outlier, "embedding", Similarity.autoNlist(200L, 2, 8))
+    def pqJoin(b: PqBounds) = Similarity.ivfKnnJoin(outlier, "vec_id", "embedding",
+      kmeans, nprobe = 2, k = 3, Some(IvfPq(b, kPrime = 8)))
+    val rMm = recall(pqJoin(minMax))
+    val rAp = recall(pqJoin(clipped))
     assert(rAp > rMm,
       s"clipped recall $rAp must beat crushed min/max recall $rMm")
   }
 
   test("QuantKernel.encode: a NaN element nulls the row (the IvfKernel " +
     "convention), never a silent code 0") {
-    val (lo, hi) = Similarity.ivfPqStats(fixture, "embedding")
+    val PqBounds(lo, hi) = PqBounds.stats(fixture, "embedding")
     val row = Seq(Tuple1(Seq(Double.NaN) ++ Seq.fill(dim - 1)(0.1))).toDF("v")
       .select(graft.functions.GraftFunctions.quantize_uint8(col("v"), lo, hi))
       .as[Option[Array[Byte]]].head()

@@ -226,13 +226,12 @@ class StreamingSpec extends SparkSpec {
     // 3 = exact copy of 0, 2 = unrelated, 4 = zero-norm (must vanish)
     val corpus = Seq((0L, v0), (1L, v0.map(_ * 2.0)), (2L, vec(2)), (3L, v0),
       (4L, Seq.fill(16)(0.0)))
-    val unit = graft.ext.Similarity.pinnedUnitAnchors(
+    val quant = graft.functions.IvfQuantizer.pinned(
       corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", 3)
-    val offs = unit.map(_ => 0.0)
     val input = MemoryStream[(java.sql.Timestamp, Long, Seq[Double])]
     val df = input.toDF().toDF("ts", "vec_id", "embedding")
     val out = StreamingOps.ivfCellCandidatePairs(df, "ts", "vec_id",
-      "embedding", unit, offs, watermark = "1 minute")
+      "embedding", quant, watermark = "1 minute")
     val query = out.writeStream.format("memory").queryName("ivf_sb_out")
       .outputMode("append").start()
     try {
@@ -248,7 +247,8 @@ class StreamingSpec extends SparkSpec {
       // batch membership via the SAME kernel at nprobe = 1, cell equi-join
       val mem = corpus.toDF("vec_id", "embedding")
         .select(col("vec_id"), element_at(graft.functions.GraftFunctions.ivf_probes(
-          col("embedding").cast("array<double>"), unit, offs, 1), 1).as("cell"))
+          col("embedding").cast("array<double>"), quant.centroids, quant.offsets, 1), 1)
+          .as("cell"))
         .filter(col("cell").isNotNull)
       val batch = mem.as("a")
         .join(mem.as("b"), col("a.cell") === col("b.cell") &&
@@ -294,10 +294,11 @@ class StreamingSpec extends SparkSpec {
       } finally query.stop()
     }
     val stored = run("ivf_stored_out", df => StreamingOps.ivfCellCandidatePairs(
-      df, "ts", "vec_id", "embedding", reloaded, "1 minute", 128))
-    val unit = graft.ext.Similarity.pinnedUnitAnchors(corpusDf, "vec_id", "embedding", 3)
+      df, "ts", "vec_id", "embedding", graft.functions.IvfQuantizer.stored(reloaded),
+      "1 minute", 128))
+    val unit = graft.functions.IvfQuantizer.pinned(corpusDf, "vec_id", "embedding", 3)
     val pinned = run("ivf_pinned_out", df => StreamingOps.ivfCellCandidatePairs(
-      df, "ts", "vec_id", "embedding", unit, unit.map(_ => 0.0), "1 minute"))
+      df, "ts", "vec_id", "embedding", unit, "1 minute"))
     assert(stored == pinned, s"stored=$stored pinned=$pinned")
     assert(stored.contains((0L, 3L)), "cross-batch exact twin missed")
     // validation shared with the batch path: a gapped table fails BEFORE
@@ -306,7 +307,8 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, Long, Seq[Double])]
     val err = intercept[IllegalArgumentException] {
       StreamingOps.ivfCellCandidatePairs(input.toDF().toDF("ts", "vec_id", "embedding"),
-        "ts", "vec_id", "embedding", gapped, "1 minute", 128)
+        "ts", "vec_id", "embedding", graft.functions.IvfQuantizer.stored(gapped),
+        "1 minute", 128)
     }
     assert(err.getMessage.contains("dense"), s"wrong error: ${err.getMessage}")
   }
