@@ -13,6 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * prints the generated classes it compiled and their compile time
   * (JVM-wide, so executor-side compiles count too): a warm rep that
   * still compiles means the row's classes missed the codegen cache.
+  * `spawns=` is the OS processes the JVM started during the rep
+  * ([[ProcessSpawns]]): a filesystem or shell fork shows there.
   *
   * `runMain graft.PhaseProbe <sfDir> [-reps N] q1 q2 ...`
   */
@@ -103,6 +105,7 @@ object PhaseProbe {
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val compileNs0 = CodeGenerator.compileTime
+        val spawns = new ProcessSpawns
         val t0 = System.nanoTime()
         val df = q.fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -111,13 +114,14 @@ object PhaseProbe {
         val t2 = System.nanoTime()
         val n = qe.toRdd.count()
         val t3 = System.nanoTime()
+        val nSpawns = spawns.stop().size
         Thread.sleep(150) // let the listener bus drain before reading counters
         def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.3f"
         println(f"[phase] ${q.name}%-30s rep=$rep rows=$n%-8d " +
           s"build=${s(t0, t1)} plan=${s(t1, t2)} exec=${s(t2, t3)} total=${s(t0, t3)} " +
           s"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} taskSec=${taskMs.get / 1000.0} " +
           s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
-          f"compileMs=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.0f")
+          f"compileMs=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.0f spawns=$nSpawns")
         System.gc(); Thread.sleep(100)
       }
     }

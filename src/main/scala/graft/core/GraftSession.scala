@@ -42,6 +42,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `maxEntries` is a STATIC conf, read once when the first query in the
   * JVM compiles: the first session fixes the cache size for the JVM's
   * lifetime, so every session must be built through [[configure]].
+  *
+  * Local filesystem without process spawns: without libhadoop (the
+  * native library Spark does not ship), Hadoop's `RawLocalFileSystem`
+  * forks a process on every `setPermission` (`chmod`, once per file
+  * create and mkdir) and every `getFileLinkStatus` (`readlink`, twice per
+  * `FileContext` rename). Every state-store delta, checksum and `.crc`
+  * file, offset and commit log entry, and every parquet write on `file:`
+  * paid them: 6,912 forks per run of the benchmark's stream workload,
+  * and 275–320 ms of state commit per micro-batch for ≤ 64 state rows.
+  * [[configure]] sets Hadoop's documented keys
+  * `spark.hadoop.fs.file.impl` = [[NioLocalFileSystem]] and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` = [[NioLocalFs]],
+  * whose raw layer answers those two calls through java.nio
+  * ([[NioRawLocalFileSystem]]). Files written, `.crc` and Spark's state
+  * checksum files included, file modes, atomic renames and symlink
+  * semantics are unchanged.
+  *
+  * The class replaced: without the key, `FileSystem` resolves `file:`
+  * through Hadoop's ServiceLoader, where the Hive jar Spark ships
+  * registers `org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem`, a
+  * `LocalFileSystem` whose `rename` onto an existing file returns false
+  * where Hadoop's own class replaces the file. Spark's writers delete
+  * before they rename and its checkpoints rename through `FileContext`,
+  * so neither depends on the difference.
+  *
+  * To opt out, set the two keys on the builder after [[configure]]:
+  * `org.apache.hadoop.fs.LocalFileSystem` (or the Hive class) and
+  * `org.apache.hadoop.fs.local.LocalFs`. Caveat: Hadoop's `FileSystem`
+  * cache keys on scheme, authority and user, not on conf. A `file:`
+  * `FileSystem` created in the JVM before the first graft session stays
+  * the stock class, and one created by a graft session outlives a later
+  * opt-out. `FileContext`, which streaming checkpoints use, is not cached
+  * and follows each session's conf.
   */
 object GraftSession {
 
@@ -68,6 +101,9 @@ object GraftSession {
     .config("spark.sql.artifact.isolation.enabled", "false")
     // stage ids follow AQE's planning order, which varies between runs
     .config("spark.sql.codegen.useIdInClassName", "false")
+    // `file:` without a forked chmod/readlink per file (scaladoc above)
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(

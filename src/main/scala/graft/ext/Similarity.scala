@@ -207,17 +207,22 @@ object Similarity {
     * splits (one, at the bench sfs) and the planes·dim matvec is the
     * per-row hot loop.
     *
-    * `idCol` is assumed UNIQUE per row (r16 advice — every corpus here
-    * satisfies it; a dedup key must). With duplicate ids the r16 shape's
-    * output differs from the r15 shape's: duplicate-id rows multiply
-    * candidates before the cosine filter and identical (id1, id2) rows
-    * collapse in the final pair dedup, where the old shape emitted
-    * duplicate output rows. Deduplicate ids upstream before handing a
-    * dirty corpus to this operator.
+    * `idCol` must be UNIQUE per non-null row (a dedup key must be): the
+    * id groups signature bits and attaches vectors, so the copies of a
+    * duplicated id would merge their signatures and share each other's
+    * vectors, and the pairs reported for that id would be wrong with no
+    * sign of it. A duplicated id throws an `IllegalArgumentException`
+    * naming it, checked by one aggregate job over the id column before
+    * the join is built. Deduplicate ids upstream.
     */
   def cosineNearDupLsh(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                        minCos: Double, bands: Int = 16, bitsPerBand: Int = 5,
                        sigRows: Option[DataFrame] = None): DataFrame = {
+    df.filter(col(idCol).isNotNull).groupBy(col(idCol)).count()
+      .filter(col("count") > 1).head(1).foreach { r =>
+        throw new IllegalArgumentException(s"cosineNearDupLsh: $idCol must be unique " +
+          s"per row, but ${r.get(0)} appears ${r.getLong(1)} times")
+      }
     val vecD = col(vecCol).cast("array<double>")
     val sigs = sigRows.getOrElse(
       bandedSignatureRows(pinFanout(df, col(idCol)), idCol, vecCol,

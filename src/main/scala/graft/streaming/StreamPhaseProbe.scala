@@ -10,7 +10,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * into start / per-batch / stop wall time, so the ~4 s-per-case bench
   * floor is attributable — query START (planning + state-store init +
   * checkpoint setup) vs per-micro-batch cost (incremental planning +
-  * state commit) vs STOP.
+  * state commit) vs STOP. `spawns=` is the OS processes the JVM
+  * started during the rep ([[graft.ProcessSpawns]]).
   *
   * `runMain graft.streaming.StreamPhaseProbe [reps]`
   */
@@ -29,6 +30,7 @@ object StreamPhaseProbe {
     def timedDrain(name: String)(mk: => (MemoryStream[(Timestamp, Long, String, String)], DataFrame, Seq[Seq[(Timestamp, Long, String, String)]])): Unit = {
       (1 to reps).foreach { rep =>
         val (input, out, chunks) = mk
+        val spawns = new graft.ProcessSpawns
         val t0 = System.nanoTime()
         val query: StreamingQuery = out.writeStream.format("noop")
           .outputMode("append").start()
@@ -45,10 +47,11 @@ object StreamPhaseProbe {
         }
         query.stop()
         val t3 = System.nanoTime()
+        val nSpawns = spawns.stop().size
         def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
         println(f"[sphase] $name%-22s rep=$rep start=${s(t0, t1)} " +
           s"batches=${batchTimes.map(t => f"$t%.2f").mkString(",")} " +
-          s"drain=${s(t1, t2)} stop=${s(t2, t3)} total=${s(t0, t3)}")
+          s"drain=${s(t1, t2)} stop=${s(t2, t3)} total=${s(t0, t3)} spawns=$nSpawns")
       }
     }
 

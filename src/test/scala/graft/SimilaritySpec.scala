@@ -187,6 +187,18 @@ class SimilaritySpec extends SparkSpec {
       assert(wide.contains((i, i + 1000)), s"scaled twin $i missed at wide bands"))
   }
 
+  test("cosineNearDupLsh: a duplicated id throws a declared error naming the id") {
+    // the second row carries another row's vector under a taken id: its
+    // pairs would be attributed to the wrong document
+    val Array(dupId, other) = fixture.select("vec_id").as[Long].take(2)
+    val dirty = fixture.union(fixture.filter(col("vec_id") === other)
+      .withColumn("vec_id", lit(dupId)))
+    val e = intercept[IllegalArgumentException](
+      Similarity.cosineNearDupLsh(dirty, "vec_id", "embedding", dim = dim, minCos = 0.9))
+    assert(e.getMessage ==
+      s"cosineNearDupLsh: vec_id must be unique per row, but $dupId appears 2 times")
+  }
+
   test("composed near-dup plan contains no all-pairs (nested-loop) join") {
     val plan = Similarity.cosineNearDupLsh(fixture, "vec_id", "embedding",
         dim = dim, minCos = 0.9)
