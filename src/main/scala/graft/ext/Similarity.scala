@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.SignBucketing
+
 /** Similarity search over embedding columns (`array<float>`).
   *
   *  - Brute-force cosine top-k: the exact baseline — one scan, a dot
@@ -225,7 +227,7 @@ object Similarity {
       }
     val vecD = col(vecCol).cast("array<double>")
     val sigs = sigRows.getOrElse(
-      bandedSignatureRows(pinFanout(df, col(idCol)), idCol, vecCol,
+      bandedSignatureRows(graft.core.Fanout.pin(df, col(idCol)), idCol, vecCol,
         dim, bands, bitsPerBand))
     val vecs = df.select(col(idCol).as("_vid"), vecD.as("_v"))
     val sv = sigs.join(vecs, col("_sid") === col("_vid"))
@@ -236,12 +238,13 @@ object Similarity {
     // exchange to ~1 partition at bench scale and the whole candidate
     // enumeration runs on one core (measured: 8 single-task jobs, 26 s
     // single-threaded at ×10 data). Pin the join partitioning to the
-    // cluster's parallelism instead ([[pinFanout]]; REPARTITION_BY_NUM is
-    // exempt from AQE coalescing): candidate work is spread over
-    // bands·2^bits buckets with mild skew (measured max bucket 2582 of
-    // 1.5e9 slots at ×100), so hash(band, sig) balances without salting.
+    // cluster's parallelism instead ([[graft.core.Fanout.pin]];
+    // REPARTITION_BY_NUM is exempt from AQE coalescing): candidate work
+    // is spread over bands·2^bits buckets with mild skew (measured max
+    // bucket 2582 of 1.5e9 slots at ×100), so hash(band, sig) balances
+    // without salting.
     // Both join sides share the one exchange (same canonical subplan).
-    val svP = pinFanout(sv, col("_band"), col("_sig"))
+    val svP = graft.core.Fanout.pin(sv, col("_band"), col("_sig"))
     svP.as("a")
       .join(svP.as("b"),
         col("a._band") === col("b._band") && col("a._sig") === col("b._sig") &&
@@ -258,11 +261,12 @@ object Similarity {
   }
 
   /** [[cosineNearDupLsh]] with the DATA-SCALED band width — the same
-    * [[autoPlanes]] occupancy rule the other ANN lanes apply, closing
+    * [[graft.functions.SignBucketing.Auto.planes]] occupancy rule the
+    * sign-bucket joins apply, closing
     * the one fixed-geometry hole the r12 ×10 sweep flagged (the 16×8
     * banding pins 256 buckets per band, so per-band candidate fan-out
     * grows quadratically with the corpus: ×12.3 wall at ×10 data).
-    * `bitsPerBand = autoPlanes(n, targetBucket, minBits)` holds each
+    * `bitsPerBand = Auto(targetBucket, minBits).planes(n)` holds each
     * band's EXPECTED bucket occupancy at ~`targetBucket` rows
     * regardless of corpus size; `bands` stays fixed (OR-amplification
     * is the recall knob, width is the occupancy knob). At or below the
@@ -276,7 +280,7 @@ object Similarity {
   def cosineNearDupLshAuto(df: DataFrame, idCol: String, vecCol: String,
                            dim: Int, minCos: Double, bands: Int = 16,
                            targetBucket: Long = 64L, minBits: Int = 8): DataFrame = {
-    val bits = autoPlanes(df.count(), targetBucket, minBits)
+    val bits = SignBucketing.Auto(targetBucket, minBits).planes(df.count())
     cosineNearDupLsh(df, idCol, vecCol, dim, minCos, bands, bits)
   }
 
@@ -468,11 +472,11 @@ object Similarity {
     val queries = probed
       .select(col(idCol).as("_qid"), col(s"_$v").as(s"_q$v"),
         explode(col("_probes")).as("_ci"))
-    // The exact join pins its parallelism ([[pinFanout]]): its output is
-    // the candidate stream (≈ n·nprobe·n/nlist rows), orders of magnitude
-    // above its input, so AQE's input-sized coalescing would park it on
-    // 1–2 tasks. The PQ cell join is not pinned.
-    def pin(d: DataFrame, key: String) = if (pq.isEmpty) pinFanout(d, col(key)) else d
+    // The exact join pins its parallelism ([[graft.core.Fanout.pin]]): its
+    // output is the candidate stream (≈ n·nprobe·n/nlist rows), orders of
+    // magnitude above its input, so AQE's input-sized coalescing would
+    // park it on 1–2 tasks. The PQ cell join is not pinned.
+    def pin(d: DataFrame, key: String) = if (pq.isEmpty) graft.core.Fanout.pin(d, col(key)) else d
     val candidates = pin(queries, "_ci")
       .join(pin(members, "_mcell"), col("_ci") === col("_mcell"))
       .filter(col("_qid") =!= col("neighbor_id"))
@@ -506,7 +510,7 @@ object Similarity {
     * external engine (the `x_ivf_knn_join_auto_pinned` oracle) re-derives
     * the same nlist from `count(*)` alone: a floating `ceil(sqrt(…))`
     * can land on either side of a perfect square across engines, the
-    * [[autoPlanes]] precedent.
+    * [[graft.functions.SignBucketing.Auto.planes]] precedent.
     */
   def autoNlist(n: Long, nprobe: Int, minList: Int): Int = {
     require(n >= 0 && nprobe >= 1 && minList >= 1,
@@ -608,256 +612,6 @@ object Similarity {
     }
   }
 
-  /** SemDeDup-style semantic near-duplicate pairs: bucket every vector by
-    * the SIGN BITS of its [[signedProjection]] (bucket = Σ 2^i over
-    * planes i with projection_i ≥ 0 — `planes` hyperplanes → 2^planes
-    * buckets), then verify exact cosine ≥ `minCos` WITHIN each bucket
-    * only. The semantic-dedup shape of the SemDeDup paper (cluster, then
-    * all-pairs inside the cluster) with a deterministic, portable
-    * partitioner instead of KMeans: the projection matrix is the
-    * portable-hash ±1 matrix, so an external engine can re-derive every
-    * bucket assignment AND every surviving pair from the formula alone —
-    * unlike [[cosineNearDupLsh]], whose xxhash64-seeded planes make it
-    * engine-specific (rows-only checkable).
-    *
-    * Scale shape: bucketing is a narrow per-row kernel (one
-    * [[graft.functions.MatVecProduct]] + a sign fold); the pair stage is
-    * a hash EQUI join on the bucket id — never a cross join — so the
-    * only quadratic term is within-bucket, bounded by the bucket's own
-    * occupancy. At 100 TB: raise `planes` until the largest bucket's
-    * all-pairs fits an executor (doubling planes halves expected
-    * occupancy); recall at a given `minCos` then follows the hyperplane
-    * collision bound cos(θ) — near-identical vectors land in one bucket
-    * w.p. ≈ 1. Skewed buckets (e.g. a zero-vector pile-up) are visible
-    * in the output's `bucket` column and can be salted upstream.
-    *
-    * Output: (id1, id2, bucket: long, cos: double), id1 < id2.
-    */
-  def semanticDedup(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-                    planes: Int, minCos: Double): DataFrame =
-    pairCos(signBuckets(df, idCol, vecCol, dIn, planes), idCol, minCos)
-
-  /** The planes-free form IS the default ([[knnJoin]]'s precedent), and
-    * it dispatches to [[semanticDedupCollapsed]] — the one composition
-    * that survives both measured scale failure modes (data-scaled +
-    * sub-split planes for clustered skew, exact-twin collapse for
-    * duplicate mass; r13 probe: 193–210 s auto → 5–7 s collapsed on the
-    * duplicate-heavy ×100 corpus, identity-cost without twins).
-    *
-    * OUTPUT CONTRACT — read before switching from a pinned form: this
-    * returns a CONNECTED-COVER `(id1, id2, cos)` of the near-duplicate
-    * graph, NOT the full within-bucket pair set, and carries NO
-    * `bucket` column. Twin clusters appear as rep→member star edges
-    * (cos = 1.0) instead of all m·(m−1)/2 pairs; connected components
-    * — what a keep-one-representative dedup pass consumes — never
-    * split versus the pair-set forms (see [[semanticDedupCollapsed]]
-    * for the one-directional fine print). Callers that need every
-    * individual pair (or the bucket id) should use
-    * [[semanticDedupAdaptive]] (full pairs, hot on duplicate mass) or
-    * [[semanticDedupAuto]] (full pairs, hot on clustered skew) and
-    * accept their documented scale trades.
-    */
-  def semanticDedup(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-                    minCos: Double): DataFrame =
-    semanticDedupCollapsed(df, idCol, vecCol, dIn, minCos)
-
-  /** The pairing half of semantic dedup over an already-bucketed frame
-    * (idCol, bucket, _v): within-bucket candidates via the bucket
-    * equi-join → exact cosine ≥ `minCos`. Shared by [[semanticDedup]]
-    * and [[semanticDedupAdaptive]], byte-identical plan to the pre-r13
-    * inline form.
-    */
-  /** Pin an exploding self-join's parallelism — see
-    * [[graft.core.Fanout.pin]] for the full rationale (candidate-stream
-    * output ≫ input, so AQE's input-byte-sized coalescing parks the
-    * enumeration on 1–2 tasks).
-    */
-  private def pinFanout(df: DataFrame, keys: Column*): DataFrame =
-    graft.core.Fanout.pin(df, keys: _*)
-
-  private def pairCos(bucketed: DataFrame, idCol: String, minCos: Double): DataFrame = {
-    val pinned = pinFanout(bucketed, col("bucket"))
-    val a = pinned.select(col(idCol).as("id1"), col("bucket"), col("_v").as("_v1"))
-    val b = pinned.select(col(idCol).as("id2"), col("bucket"), col("_v").as("_v2"))
-    a.join(b, "bucket")
-      .filter(col("id1") < col("id2"))
-      .withColumn("cos", cosine(col("_v1"), col("_v2")))
-      .filter(col("cos") >= minCos)
-      .select("id1", "id2", "bucket", "cos")
-  }
-
-  /** [[semanticDedup]] with the [[autoPlanes]] data-scaled plane rule
-    * (the [[knnJoinAuto]] pattern): bucket count grows with the corpus
-    * so within-bucket pair fan-out stays at ~`targetBucket` rows
-    * regardless of scale — the r11 scale study measured the pinned form
-    * ×25 at ×10 data, this form holds occupancy constant. Still fully
-    * portable: the plane count is a pure integer function of
-    * `count(*)`, so an external engine re-derives it (and every bucket)
-    * from the formula alone.
-    */
-  def semanticDedupAuto(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-                        minCos: Double, targetBucket: Long = 64L,
-                        minPlanes: Int = 6): DataFrame =
-    semanticDedup(df, idCol, vecCol, dIn,
-      autoPlanes(df.count(), targetBucket, minPlanes), minCos)
-
-  /** [[semanticDedupAuto]] with ADAPTIVE hot-cell sub-splitting — the
-    * same remedy [[knnJoinAdaptive]] applies to the kNN join, for the
-    * same r12 ×100 finding: the auto plane rule holds AVERAGE bucket
-    * occupancy at `targetBucket`, but clustered embeddings pile into few
-    * sign-cells and the within-bucket pair stage is quadratic in the HOT
-    * cell (measured ~200 s at sf10 stress for the auto form). Buckets
-    * over `splitFactor·targetBucket` rows get `delta` extra sign planes
-    * from the same deterministic JL family (see [[adaptiveBuckets]]).
-    *
-    * When no bucket exceeds the cap the result is IDENTICAL to
-    * [[semanticDedupAuto]]; above it, pairs inside split cells are
-    * restricted to sub-bucket mates — the recall trade bought only where
-    * the data is hot. The output `bucket` is the POST-split id (level-1
-    * bucket << delta, sub bits OR'd in for hot cells), so skew remains
-    * observable downstream. Fully portable/restatable: plane count,
-    * delta, and the hot set are pure integer functions of `count(*)`
-    * and the bucket histogram.
-    *
-    * Sub-splitting cannot separate EXACT twins (identical vectors have
-    * identical signs at every level) — on duplicate-heavy corpora this
-    * form stays hot (r13 probe, sf10 chained: auto 193–210 s → adaptive
-    * still 124–132 s, vs [[semanticDedupCollapsed]] 5–7 s). If the
-    * caller can consume a connected-cover instead of the full pair set,
-    * prefer the collapsed form there.
-    */
-  def semanticDedupAdaptive(df: DataFrame, idCol: String, vecCol: String,
-                            dIn: Int, minCos: Double, targetBucket: Long = 64L,
-                            minPlanes: Int = 6, splitFactor: Long = 4L): DataFrame =
-    pairCos(adaptiveBuckets(df, idCol, vecCol, dIn, targetBucket, minPlanes,
-      splitFactor), idCol, minCos)
-
-  /** Collapse bit-identical embedding rows to one representative each —
-    * the pre-pass that keeps [[knnJoinAuto]]/[[semanticDedupAuto]]'s
-    * occupancy rule honest on DUPLICATE-HEAVY corpora (the r12 ×100
-    * stress study: exact-twin vector clusters co-bucket under ANY plane
-    * count, so within-bucket pair work grows with the square of the
-    * duplicate multiplicity — a ×138 wall-clock blow-up at ×10 data on
-    * a corpus whose replicas collided to exact twins). Identical vectors
-    * are cosine-1 neighbors by definition: collapse them, run the ANN
-    * op on representatives, and fan results back out through the
-    * membership frame.
-    *
-    * Returns (representatives, membership): `representatives` is one
-    * row per distinct vector value (the MIN id wins — deterministic);
-    * `membership` maps every original id to its representative id and
-    * the cluster size. Grouping keys on the raw vector value (array
-    * equality), not a hash — no collision risk. One shuffle each.
-    */
-  def collapseExactVectors(df: DataFrame, idCol: String, vecCol: String)
-      : (DataFrame, DataFrame) = {
-    val reps = df.filter(col(vecCol).isNotNull)
-      .groupBy(col(vecCol))
-      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
-      .select(col(idCol), col(vecCol), col("dup_count"))
-    val membership = df.filter(col(vecCol).isNotNull)
-      .select(col(idCol), col(vecCol))
-      .join(reps.select(col(idCol).as("rep_id"), col(vecCol), col("dup_count")), Seq(vecCol))
-      .select(col(idCol), col("rep_id"), col("dup_count"))
-    (reps, membership)
-  }
-
-  /** [[knnJoinAdaptive]] with the [[collapseExactVectors]] pre-pass
-    * COMPOSED in — the full production ANN recipe for duplicate-heavy
-    * corpora (the r12 ×100 chained-stress finding: bit-identical twin
-    * clusters co-bucket under ANY plane count, so the pair stage grows
-    * with the SQUARE of duplicate multiplicity — ×138 wall at ×10 data
-    * — and the adaptive splitter cannot separate them because identical
-    * vectors have identical signs at every level). Here the join runs
-    * over one representative per distinct vector value and results fan
-    * back to every original row through the membership frame:
-    *
-    *  - query side: each original id inherits its representative's
-    *    neighbor list (identical vector ⇒ identical cosines);
-    *  - neighbor side: each representative neighbor expands to its
-    *    cluster's members — only the `k` smallest member ids per
-    *    cluster, since within one cluster all expanded rows share the
-    *    neighbor's cosine and rank ties break on id, so no later member
-    *    can reach any query's top-k;
-    *  - twins: other members of the query's own cluster are cosine-1
-    *    neighbors BY DEFINITION (identical vectors) and enter with
-    *    literal cos = 1.0 — the `k+1` smallest ids per cluster cover
-    *    every query's `k` smallest OTHER members.
-    *
-    * The final per-query top-k re-ranks the union by (cos desc, id) —
-    * so output stays n·k rows and every intermediate is linear in n
-    * plus rep-level pair work: the duplicate-multiplicity quadratic is
-    * gone by construction. Rows with a null vector are dropped (no
-    * vector, no neighbors — the IVF convention).
-    *
-    * Output: (idCol, neighbor_id, cos, rank), rank 1..k per ORIGINAL id.
-    */
-  def knnJoinCollapsed(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-                       k: Int, targetBucket: Long = 64L, minPlanes: Int = 6,
-                       splitFactor: Long = 4L): DataFrame = {
-    require(k > 0, s"need k > 0, got $k")
-    val (reps, membership) = collapseExactVectors(df, idCol, vecCol)
-    val repK = knnJoinAdaptive(reps, idCol, vecCol, dIn, k, targetBucket,
-      minPlanes, splitFactor)
-    val wm = org.apache.spark.sql.expressions.Window
-      .partitionBy("rep_id").orderBy(col(idCol))
-    val ranked = membership.select(col(idCol), col("rep_id"))
-      .withColumn("_mrk", row_number().over(wm))
-    val nbrMembers = ranked.filter(col("_mrk") <= k)
-      .select(col("rep_id").as("_nrep"), col(idCol).as("_nmem"))
-    val expanded = membership.select(col(idCol).as("_oid"), col("rep_id"))
-      .join(repK.select(col(idCol).as("_qrep"), col("neighbor_id"), col("cos")),
-        col("rep_id") === col("_qrep"))
-      .join(nbrMembers, col("neighbor_id") === col("_nrep"))
-      .select(col("_oid"), col("_nmem").as("neighbor_id"), col("cos"))
-    val twinCand = ranked.filter(col("_mrk") <= k + 1)
-      .select(col("rep_id"), col(idCol).as("_twin"))
-    val twins = membership.select(col(idCol).as("_oid"), col("rep_id"))
-      .join(twinCand, "rep_id")
-      .filter(col("_oid") =!= col("_twin"))
-      .select(col("_oid"), col("_twin").as("neighbor_id"), lit(1.0).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_oid").orderBy(col("cos").desc, col("neighbor_id"))
-    expanded.unionByName(twins)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("_oid").as(idCol), col("neighbor_id"), col("cos"), col("rank"))
-  }
-
-  /** [[semanticDedupAdaptive]] with the [[collapseExactVectors]]
-    * pre-pass composed in — the dedup twin of [[knnJoinCollapsed]].
-    * Emits a CONNECTED-COVER of the full near-duplicate graph, not
-    * every pair: cross-cluster edges are the rep-level adaptive pairs
-    * (members share their representative's cosines), and each twin
-    * cluster contributes STAR edges (rep → member, literal cos = 1.0)
-    * instead of its m·(m−1)/2 within-cluster pairs. The guarantee is
-    * ONE-directional: every connection the uncollapsed adaptive pair
-    * graph makes survives in the cover (members connect through their
-    * representatives), so no component ever splits — but collapsing
-    * shrinks the bucket-occupancy histogram, so fewer cells cross the
-    * sub-split cap, and the cover can keep true near-dup edges the
-    * uncollapsed run's extra split planes would have dropped: the
-    * cover may MERGE components the adaptive form keeps separate
-    * (always via genuine cos ≥ minCos edges — recall strictly gains).
-    * Output and pair work stay linear in duplicate multiplicity
-    * instead of quadratic. The `bucket` column is dropped:
-    * star edges have no bucket, and the post-split rep bucket is an
-    * internal detail ([[semanticDedupAdaptive]] still exposes it).
-    *
-    * Output: (id1, id2, cos), id1 < id2 (representatives are min-id,
-    * so star edges order naturally).
-    */
-  def semanticDedupCollapsed(df: DataFrame, idCol: String, vecCol: String,
-                             dIn: Int, minCos: Double, targetBucket: Long = 64L,
-                             minPlanes: Int = 6, splitFactor: Long = 4L): DataFrame = {
-    val (reps, membership) = collapseExactVectors(df, idCol, vecCol)
-    val repPairs = semanticDedupAdaptive(reps, idCol, vecCol, dIn, minCos,
-      targetBucket, minPlanes, splitFactor).select("id1", "id2", "cos")
-    val stars = membership.filter(col(idCol) =!= col("rep_id"))
-      .select(col("rep_id").as("id1"), col(idCol).as("id2"), lit(1.0).as("cos"))
-    repPairs.unionByName(stars)
-  }
-
   /** Blend a lexical score frame (id, raw score — e.g. BM25) with a
     * semantic cosine frame (id, cos ∈ [−1, 1]) into one hybrid
     * relevance: the lexical side min-max normalizes to [0, 1] (a
@@ -883,74 +637,183 @@ object Similarity {
           coalesce((col("_cos") + 1.0) / 2.0, lit(0.0)) * (1.0 - alpha)).as("hybrid"))
   }
 
-  /** Approximate k-nearest-neighbor SELF-join: every row's top-`k`
-    * most-cosine-similar other rows, among rows sharing its
-    * [[signBuckets]] sign-bit bucket — the all-rows twin of the
-    * one-query [[lshTopK]], and the primitive under SemDeDup-style
-    * cluster pruning or contrastive-pair mining.
+  /** SemDeDup-style semantic near-duplicate pairs: bucket every vector
+    * by the JL sign bits of its projection (`bucketing`, see
+    * [[graft.functions.SignBucketing]]), then verify exact cosine ≥
+    * `minCos` WITHIN each bucket only. This is SemDeDup's shape
+    * (cluster, then all-pairs inside the cluster) with a deterministic,
+    * portable partitioner instead of KMeans, so an external engine can
+    * re-derive every bucket and every surviving pair from the formula
+    * alone. [[cosineNearDupLsh]]'s xxhash64-seeded planes cannot offer
+    * that.
     *
-    * Scale shape: the only shuffle keys on the bucket id, the
-    * per-bucket join bounds pair fan-out to bucket sizes (tune
-    * `planes`: +1 plane halves expected bucket size), and the top-`k`
-    * window partitions by the LEFT id — never a global sort. Recall is
-    * bucket-limited like [[semanticDedup]]: a true neighbor in another
-    * bucket is missed; raise recall with fewer planes (bigger buckets)
-    * or union several independent plane banks upstream.
+    * Scale shape: bucketing is a narrow per-row kernel (one
+    * [[graft.functions.MatVecProduct]] + a sign fold) and the pair stage
+    * is a hash EQUI join on the bucket id, never a cross join, so the
+    * only quadratic term is within-bucket. Recall at a given `minCos`
+    * follows the hyperplane collision bound: near-identical vectors land
+    * in one bucket w.p. ≈ 1. Rows with a null vector are dropped.
     *
-    * The projection is the portable [[jlMatrix]] arithmetic, so bucket
-    * assignment — and therefore the whole result — is re-derivable by
-    * any engine from the formula alone (the oracle-checkability the
-    * xxhash-seeded [[lshTopK]] bands cannot offer).
-    *
-    * Output: (idCol, neighbor_id, cos, rank: long), rank 1..k per id by
-    * cosine desc (neighbor id breaks exact ties deterministically).
-    *
-    * This planes-free form IS the default: it applies the full
-    * production recipe — [[collapseExactVectors]] composed with the
-    * [[knnJoinAdaptive]] data-scaled plane rule and hot-cell
-    * sub-splitting ([[knnJoinCollapsed]]) — so the reachable API can
-    * neither degrade to all-pairs-per-bucket at scale (measured ×45
-    * wall at ×10 data for a pinned plane count), nor melt on clustered
-    * corpora whose hot sign-cell is 100× the occupancy target (r13
-    * probe, sf10 one-pass ×100: auto 1 086 s → adaptive 89–122 s), nor
-    * on duplicate-heavy corpora whose exact twins no plane count can
-    * separate (r13 probe, sf10 chained: auto 1 035 s → adaptive still
-    * 498–526 s → collapsed 11 s). On a twin-free corpus the collapse
-    * is an identity pre-pass within measurement noise (93 vs 89 s at
-    * sf10 one-pass) and the result matches [[knnJoinAdaptive]]
-    * row-for-row; below the occupancy cap all forms agree bit-for-bit.
+    * Output: (id1, id2, bucket: long, cos: double), id1 < id2. What the
+    * rows cover depends on the case:
+    *  - `Fixed`, `Auto`, `Adaptive`: the FULL within-bucket pair set.
+    *    `bucket` is the (post-split) bucket both ids share.
+    *  - `Collapsed` (the default): a CONNECTED COVER of the near-duplicate
+    *    graph, not every pair. Cross-cluster edges are the
+    *    representative-level Adaptive pairs (members share their
+    *    representative's cosines). Each twin cluster contributes STAR
+    *    edges (representative → member, cos = 1.0, `bucket` NULL) instead
+    *    of its m·(m−1)/2 pairs, so output and pair work stay linear in
+    *    duplicate multiplicity. The guarantee is one-directional: every
+    *    connection the uncollapsed Adaptive pair graph makes survives in
+    *    the cover, so no component splits. Collapsing shrinks the
+    *    occupancy histogram, so fewer cells cross the split cap, and the
+    *    cover may keep true near-dup edges the uncollapsed run's extra
+    *    planes would drop: it may MERGE components the Adaptive form
+    *    keeps apart, always through genuine cos ≥ minCos edges.
+    *    Representatives are min-id, so star edges are ordered.
     */
-  def knnJoin(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-              k: Int): DataFrame =
-    knnJoinCollapsed(df, idCol, vecCol, dIn, k)
+  def semanticDedup(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
+                    minCos: Double,
+                    bucketing: SignBucketing = SignBucketing.Default): DataFrame =
+    bucketing match {
+      case _: SignBucketing.Collapsed =>
+        val (reps, membership) = collapseExactVectors(df, idCol, vecCol)
+        val stars = membership.filter(col(idCol) =!= col("rep_id"))
+          .select(col("rep_id").as("id1"), col(idCol).as("id2"),
+            lit(null).cast("long").as("bucket"), lit(1.0).as("cos"))
+        pairCos(bucketing.buckets(reps, idCol, vecCol, dIn), idCol, minCos)
+          .unionByName(stars)
+      case _ =>
+        pairCos(bucketing.buckets(df, idCol, vecCol, dIn), idCol, minCos)
+    }
 
-  /** [[knnJoin]] with a CALLER-PINNED plane count. Bucket count is then
-    * fixed at `2^planes` regardless of corpus size, so within-bucket
-    * pair fan-out grows quadratically with data — use only when the
-    * plane count must be reproducible against a stored oracle
-    * (`x_knn_join`); otherwise the planes-free overload scales it.
+  /** The default [[semanticDedup]] cover without its `bucket` column:
+    * `(id1, id2, cos)`, id1 < id2.
     */
-  @deprecated("pinned planes degrade quadratically with data; use the " +
-    "planes-free knnJoin (data-scaled) unless oracle continuity requires " +
-    "a fixed plane count", "round 10")
-  def knnJoin(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-              planes: Int, k: Int): DataFrame =
-    knnJoinImpl(df, idCol, vecCol, dIn, planes, k)
+  def semanticDedupCollapsed(df: DataFrame, idCol: String, vecCol: String,
+                             dIn: Int, minCos: Double, targetBucket: Long = 64L,
+                             minPlanes: Int = 6, splitFactor: Long = 4L): DataFrame =
+    semanticDedup(df, idCol, vecCol, dIn, minCos,
+      SignBucketing.Collapsed(targetBucket, minPlanes, splitFactor)).select("id1", "id2", "cos")
 
-  private def knnJoinImpl(df: DataFrame, idCol: String, vecCol: String,
-                          dIn: Int, planes: Int, k: Int): DataFrame = {
-    require(k > 0, s"need k > 0, got $k")
-    pairTopK(signBuckets(df, idCol, vecCol, dIn, planes), idCol, k)
+  /** The pairing half of [[semanticDedup]] over a bucketed frame
+    * (idCol, _v, bucket): within-bucket candidates via the bucket
+    * equi-join, then exact cosine ≥ `minCos`. An undirected threshold
+    * join, where [[pairTopK]] is a directed top-k.
+    */
+  private def pairCos(bucketed: DataFrame, idCol: String, minCos: Double): DataFrame = {
+    val pinned = graft.core.Fanout.pin(bucketed, col("bucket"))
+    val a = pinned.select(col(idCol).as("id1"), col("bucket"), col("_v").as("_v1"))
+    val b = pinned.select(col(idCol).as("id2"), col("bucket"), col("_v").as("_v2"))
+    a.join(b, "bucket")
+      .filter(col("id1") < col("id2"))
+      .withColumn("cos", cosine(col("_v1"), col("_v2")))
+      .filter(col("cos") >= minCos)
+      .select("id1", "id2", "bucket", "cos")
   }
 
-  /** The pairing half of the kNN join over an already-bucketed frame
-    * (idCol, bucket, _v): within-bucket candidates → exact cosine →
-    * per-query top-k (ties broken by neighbor_id). Shared by
-    * [[knnJoinImpl]] and [[knnJoinAdaptive]], byte-identical plan to the
-    * pre-r12 inline form.
+  /** Collapse bit-identical embedding rows to one representative each —
+    * the pre-pass of [[graft.functions.SignBucketing.Collapsed]], which
+    * keeps the occupancy rule honest on DUPLICATE-HEAVY corpora (the r12
+    * ×100 stress study: exact-twin vector clusters co-bucket under ANY
+    * plane count, so within-bucket pair work grows with the square of the
+    * duplicate multiplicity — a ×138 wall-clock blow-up at ×10 data on
+    * a corpus whose replicas collided to exact twins). Identical vectors
+    * are cosine-1 neighbors by definition: collapse them, run the ANN
+    * op on representatives, and fan results back out through the
+    * membership frame.
+    *
+    * Returns (representatives, membership): `representatives` is one
+    * row per distinct vector value (the MIN id wins — deterministic);
+    * `membership` maps every original id to its representative id and
+    * the cluster size. Grouping keys on the raw vector value (array
+    * equality), not a hash — no collision risk. One shuffle each.
+    */
+  def collapseExactVectors(df: DataFrame, idCol: String, vecCol: String)
+      : (DataFrame, DataFrame) = {
+    val reps = df.filter(col(vecCol).isNotNull)
+      .groupBy(col(vecCol))
+      .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
+      .select(col(idCol), col(vecCol), col("dup_count"))
+    val membership = df.filter(col(vecCol).isNotNull)
+      .select(col(idCol), col(vecCol))
+      .join(reps.select(col(idCol).as("rep_id"), col(vecCol), col("dup_count")), Seq(vecCol))
+      .select(col(idCol), col("rep_id"), col("dup_count"))
+    (reps, membership)
+  }
+
+  /** Approximate k-nearest-neighbor SELF-join: every row's top-`k`
+    * most-cosine-similar other rows among the rows sharing its sign
+    * bucket (`bucketing`, see [[graft.functions.SignBucketing]]). It is
+    * the all-rows twin of the one-query [[lshTopK]], and the primitive
+    * under SemDeDup-style cluster pruning or contrastive-pair mining.
+    *
+    * Scale shape: the only shuffle keys on the bucket id, the
+    * per-bucket join bounds pair fan-out to bucket sizes, and the top-`k`
+    * window partitions by the LEFT id — never a global sort. Recall is
+    * bucket-limited like [[semanticDedup]]: a true neighbor in another
+    * bucket is missed. The projection is the portable [[jlMatrix]]
+    * arithmetic, so the whole result is re-derivable by any engine (the
+    * oracle-checkability the xxhash-seeded [[lshTopK]] bands cannot
+    * offer). Rows with a null vector are dropped: they get no neighbours
+    * and are nobody's neighbour.
+    *
+    * Output: (idCol, neighbor_id, cos, rank: long) for every case, rank
+    * 1..k per id by cosine desc, neighbor id breaking exact ties.
+    *  - `Fixed`, `Auto`, `Adaptive`: the top-k among the row's bucket-mates.
+    *  - `Collapsed` (the default): the join runs over one representative
+    *    per distinct vector and fans back out, so rank is per ORIGINAL
+    *    id. Each id inherits its representative's neighbours (identical
+    *    vector ⇒ identical cosines). A representative neighbour expands
+    *    to the `k` smallest member ids of its cluster: all of them share
+    *    its cosine and ties break on id, so no later member can reach a
+    *    top-k. Other members of the row's own cluster enter at literal
+    *    cos = 1.0, from the `k+1` smallest ids per cluster. On a twin-free
+    *    corpus this equals `Adaptive` row for row; below the occupancy cap
+    *    all of `Auto`, `Adaptive` and `Collapsed` agree bit for bit.
+    */
+  def knnJoin(df: DataFrame, idCol: String, vecCol: String, dIn: Int, k: Int,
+              bucketing: SignBucketing = SignBucketing.Default): DataFrame = {
+    require(k > 0, s"need k > 0, got k = $k")
+    bucketing match {
+      case _: SignBucketing.Collapsed =>
+        val (reps, membership) = collapseExactVectors(df, idCol, vecCol)
+        val repK = pairTopK(bucketing.buckets(reps, idCol, vecCol, dIn), idCol, k)
+        val wm = org.apache.spark.sql.expressions.Window
+          .partitionBy("rep_id").orderBy(col(idCol))
+        val ranked = membership.select(col(idCol), col("rep_id"))
+          .withColumn("_mrk", row_number().over(wm))
+        val nbrMembers = ranked.filter(col("_mrk") <= k)
+          .select(col("rep_id").as("_nrep"), col(idCol).as("_nmem"))
+        val expanded = membership.select(col(idCol).as("_oid"), col("rep_id"))
+          .join(repK.select(col(idCol).as("_qrep"), col("neighbor_id"), col("cos")),
+            col("rep_id") === col("_qrep"))
+          .join(nbrMembers, col("neighbor_id") === col("_nrep"))
+          .select(col("_oid"), col("_nmem").as("neighbor_id"), col("cos"))
+        val twinCand = ranked.filter(col("_mrk") <= k + 1)
+          .select(col("rep_id"), col(idCol).as("_twin"))
+        val twins = membership.select(col(idCol).as("_oid"), col("rep_id"))
+          .join(twinCand, "rep_id")
+          .filter(col("_oid") =!= col("_twin"))
+          .select(col("_oid"), col("_twin").as("neighbor_id"), lit(1.0).as("cos"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("_oid").orderBy(col("cos").desc, col("neighbor_id"))
+        expanded.unionByName(twins)
+          .withColumn("rank", row_number().over(w).cast("long"))
+          .filter(col("rank") <= k)
+          .select(col("_oid").as(idCol), col("neighbor_id"), col("cos"), col("rank"))
+      case _ =>
+        pairTopK(bucketing.buckets(df, idCol, vecCol, dIn), idCol, k)
+    }
+  }
+
+  /** The pairing half of [[knnJoin]] over a bucketed frame
+    * (idCol, _v, bucket): within-bucket candidates, exact cosine, then
+    * per-query top-k (ties broken by neighbor_id).
     */
   private def pairTopK(bucketed: DataFrame, idCol: String, k: Int): DataFrame = {
-    val pinned = pinFanout(bucketed, col("bucket"))
+    val pinned = graft.core.Fanout.pin(bucketed, col("bucket"))
     val a = pinned.select(col(idCol).as("_qid"), col("bucket"), col("_v").as("_v1"))
     val b = pinned.select(col(idCol).as("neighbor_id"), col("bucket"), col("_v").as("_v2"))
     val w = org.apache.spark.sql.expressions.Window
@@ -963,165 +826,17 @@ object Similarity {
       .select(col("_qid").as(idCol), col("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** [[knnJoinAuto]] with ADAPTIVE bucket sub-splitting — the r12 ×100
-    * finding's remedy (DESIGN.md "×100 probe"): the auto plane rule
-    * holds the AVERAGE occupancy at `targetBucket`, but clustered
-    * embeddings concentrate in few sign-cells (measured max 6 878 vs
-    * target 64 at 200 k vectors), and within-bucket pair work is
-    * quadratic in the HOT cell, not the average. Here buckets whose
-    * occupancy exceeds `splitFactor·targetBucket` get `delta` extra
-    * sign planes appended — the smallest delta with
-    * `maxOcc / 2^delta ≤ splitFactor·targetBucket` — from the SAME
-    * deterministic JL family (row i of [[jlMatrix]] is independent of
-    * the matrix height, so level-2 signs extend level-1 exactly).
-    * Distinct vectors split under extra planes; bit-identical twins
-    * never do — collapse those first with [[collapseExactVectors]].
-    *
-    * When no bucket exceeds the cap the result is IDENTICAL to
-    * [[knnJoinAuto]] (same buckets, same pairing, same tie-break) — so
-    * any oracle derived for the auto form holds verbatim below the
-    * threshold. Above it, candidates inside split cells are restricted
-    * to sub-bucket mates: the standard extra-planes recall trade,
-    * bought only where the data is hot, priced by the delta formula —
-    * a pure function of (n, bucket counts) an external engine can
-    * re-derive.
-    */
-  def knnJoinAdaptive(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-                      k: Int, targetBucket: Long = 64L, minPlanes: Int = 6,
-                      splitFactor: Long = 4L): DataFrame = {
-    require(k > 0, s"need k > 0, got $k")
-    pairTopK(adaptiveBuckets(df, idCol, vecCol, dIn, targetBucket, minPlanes,
-      splitFactor), idCol, k)
-  }
-
-  /** The adaptive-bucketing half shared by [[knnJoinAdaptive]] and
-    * [[semanticDedupAdaptive]]: [[signBuckets]] at the [[autoPlanes]]
-    * level-1 plane count, then buckets whose occupancy exceeds
-    * `splitFactor·targetBucket` get `delta` extra sign planes appended
-    * — the smallest delta with `maxOcc / 2^delta ≤ cap` — from the SAME
-    * deterministic JL family (row i of [[jlMatrix]] is independent of
-    * the matrix height, so level-2 signs extend level-1 exactly).
-    * Distinct vectors split under extra planes; bit-identical twins
-    * never do — collapse those first with [[collapseExactVectors]] (or
-    * use the composed [[knnJoinCollapsed]]/[[semanticDedupCollapsed]]).
-    *
-    * When no bucket exceeds the cap the output equals [[signBuckets]]
-    * at the auto plane count verbatim. An EMPTY (or all-null-vector)
-    * input short-circuits to the un-split bucketing — the same empty
-    * frame the auto forms produce — instead of reading a null max
-    * occupancy. Output: (idCol, _v, bucket), bucket = level-1 bucket
-    * << delta, sub bits OR'd in for hot cells (delta = 0 ⇒ unshifted).
-    */
-  private[graft] def adaptiveBuckets(df: DataFrame, idCol: String, vecCol: String,
-                                     dIn: Int, targetBucket: Long, minPlanes: Int,
-                                     splitFactor: Long): DataFrame = {
-    require(splitFactor >= 1, s"need splitFactor >= 1, got $splitFactor")
-    val planes0 = autoPlanes(df.count(), targetBucket, minPlanes)
-    val bucketed = signBuckets(df, idCol, vecCol, dIn, planes0)
-    val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("_occ"))
-    val cap = splitFactor * targetBucket
-    // null max = empty input → no bucket can exceed the cap
-    val maxOcc = Option(counts.agg(max(col("_occ"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (maxOcc <= cap) bucketed
-    else {
-      var delta = 1
-      while (delta < 20 && (maxOcc >> delta) > cap) delta += 1
-      require(planes0 + delta < 62, s"plane budget exceeded: $planes0 + $delta")
-      val hot = counts.filter(col("_occ") > cap).select(col("bucket"), lit(true).as("_hot"))
-      // level-2 signs: rows planes0 .. planes0+delta-1 of the SAME JL
-      // family (sign of row i is height-independent)
-      val subProj = graft.functions.GraftFunctions.matvec_product(
-        col("_v"), jlMatrix(dIn, planes0 + delta))
-      val sub = (planes0 until planes0 + delta).map(i =>
-          when(element_at(subProj, i + 1) >= 0, lit(1L << (i - planes0))).otherwise(lit(0L)))
-        .reduce((x, y) => x.bitwiseOR(y))
-      bucketed
-        .join(broadcast(hot), Seq("bucket"), "left")
-        .withColumn("bucket",
-          shiftleft(col("bucket"), delta)
-            .bitwiseOR(when(coalesce(col("_hot"), lit(false)), sub).otherwise(lit(0L))))
-        .drop("_hot")
-    }
-  }
-
-  /** [[knnJoin]] with the plane count scaled to the DATA, which is the
-    * piece the fixed-plane form leaves to the caller and the piece that
-    * decides whether the join survives a scale-up: bucket COUNT is
-    * `2^planes` (fixed), so at a fixed `planes` a ×10 corpus puts ×10
-    * rows in every bucket and the within-bucket pair fan-out grows
-    * ×100 — measured ×45 wall at ×10 data (sf0.1 → sf1, planes = 6).
-    * Holding EXPECTED bucket size at `targetBucket` instead prices one
-    * extra plane per corpus doubling: `planes = max(minPlanes,
-    * ceil(log2(n / targetBucket)))`, one cheap count() to learn `n`.
-    *
-    * Recall trades the other way (smaller buckets miss more true
-    * neighbors — the [[knnJoin]] scaladoc's union-of-banks remedy
-    * applies); the point of the rule is that the DEFAULT follows the
-    * data instead of silently degrading to all-pairs-per-bucket.
-    * With the defaults, every corpus up to `64 · 2^6 = 4096` rows
-    * resolves to `minPlanes` = 6 — so results (and any oracle derived
-    * for planes = 6) are IDENTICAL to `knnJoin(…, planes = 6, …)`
-    * below that size, and the plane count starts growing exactly when
-    * the data does.
-    *
-    * STEER (r13 ×10 sweep, the pinned-overload precedent at
-    * [[knnJoin]]): this mid-tier form holds AVERAGE occupancy only —
-    * on real corpora the hot sign-cell still grows superlinearly
-    * (measured ×13.0 wall at ×10 data vs ×6.6 adaptive / ×2.7
-    * collapsed on the same corpus). It remains public solely as the
-    * oracle-continuity anchor for the `x_knn_join_auto` registry row
-    * and as the below-cap reference semantics; new callers should use
-    * the planes-free [[knnJoin]] (the full collapsed+adaptive
-    * composition) or [[knnJoinAdaptive]] when the full per-pair output
-    * of this form is required.
-    */
-  def knnJoinAuto(df: DataFrame, idCol: String, vecCol: String, dIn: Int,
-                  k: Int, targetBucket: Long = 64L, minPlanes: Int = 6): DataFrame =
-    knnJoinImpl(df, idCol, vecCol, dIn,
-      autoPlanes(df.count(), targetBucket, minPlanes), k)
-
-  /** The [[knnJoinAuto]] plane rule — pure so the boundary arithmetic
-    * is unit-testable: smallest `planes >= minPlanes` with
-    * `n / 2^planes <= targetBucket`.
-    */
-  private[graft] def autoPlanes(n: Long, targetBucket: Long, minPlanes: Int): Int = {
-    require(targetBucket >= 1 && minPlanes >= 1,
-      s"need targetBucket >= 1 and minPlanes >= 1, got $targetBucket / $minPlanes")
-    var planes = minPlanes
-    // integer arithmetic, not floating log2: exact at powers of two.
-    // n <= targetBucket * 2^planes  <=>  ceil(n / targetBucket) <= 2^planes
-    // (the product form would overflow Long at large planes; a plain
-    // truncating n >> planes admits up to targetBucket - 1 extra rows)
-    val needed = (n + targetBucket - 1) / targetBucket
-    while (planes < 62 && needed > (1L << planes)) planes += 1
-    planes
-  }
-
-  /** Portable sign-bit bucketing shared by [[semanticDedup]] and
-    * [[knnJoin]]: project with the [[jlMatrix]] ±1 bank, take the sign
-    * bit per plane, pack to one long. Output: (idCol, _v, bucket).
-    */
-  private[graft] def signBuckets(df: DataFrame, idCol: String, vecCol: String,
-                          dIn: Int, planes: Int): DataFrame = {
-    val projected = df.select(col(idCol), col(vecCol).cast("array<double>").as("_v"),
-      jlProjection(col(vecCol), dIn, planes).as("_proj"))
-    projected.select(col(idCol), col("_v"),
-      signFold(col("_proj"), planes).as("bucket"))
-  }
-
   /** The JL ±1 projection of a vector column — the per-row kernel under
-    * [[signBuckets]], exposed so the streaming ingest twin
-    * ([[graft.streaming.StreamingOps.signBucketCandidatePairs]]) computes
-    * buckets with the SAME expression and bitwise identity is structural,
-    * not coincidental. Evaluate it through a projection barrier (a
-    * separate select) before folding, so the matvec runs once per row.
+    * [[graft.functions.SignBucketing]], shared with the streaming ingest
+    * twin ([[graft.streaming.StreamingOps.signBucketCandidatePairs]]) so
+    * bitwise identity of their buckets is structural, not coincidental.
+    * Evaluate it through a projection barrier (a separate select) before
+    * folding, so the matvec runs once per row. `planes` is validated by
+    * the caller's [[graft.functions.SignBucketing.Fixed]].
     */
-  private[graft] def jlProjection(vec: Column, dIn: Int, planes: Int): Column = {
-    require(planes > 0 && planes < 63, s"need 0 < planes < 63, got $planes")
+  private[graft] def jlProjection(vec: Column, dIn: Int, planes: Int): Column =
     graft.functions.GraftFunctions.matvec_product(
       vec.cast("array<double>"), jlMatrix(dIn, planes))
-  }
 
   /** Pack the signs of a projection array into one long — the other half
     * of the shared bucket kernel (see [[jlProjection]]).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.{Dedup, HtmlExtraction, Multimodal, Similarity, Sketches, TextAnalysis}
-import graft.functions.{GraftFunctions, IvfPq, IvfQuantizer, PqBounds}
+import graft.functions.{GraftFunctions, IvfPq, IvfQuantizer, PqBounds, SignBucketing}
 import graft.window.Windows
 
 /** Training-data-pipeline extension operators: dedup, similarity search,
@@ -596,7 +596,7 @@ object ExtQueries {
       "ORDER BY vec_id"
 
   /** Oracle for `x_cosine_near_dup_lsh_auto`: same pipeline, with the
-    * band width derived from `count(*)` by the shared autoPlanes rule
+    * band width derived from `count(*)` by the shared occupancy rule
     * (min bits ≥ 8 with 2^bits ≥ ceil(n / 64)) and 16 × bits planes
     * regenerated from the splitmix formula.
     */
@@ -958,7 +958,7 @@ object ExtQueries {
 
   /** The kNN self-join oracle at planes = 6 — shared verbatim by
     * `x_knn_join` (fixed planes) and `x_knn_join_auto` (data-scaled
-    * planes): with [[Similarity.knnJoinAuto]]'s defaults every corpus
+    * planes): with [[SignBucketing.Auto]]'s defaults every corpus
     * up to 4096 vectors resolves to planes = 6, and the largest
     * driver-checked embeddings table (sf0.1) is 2000 — so the auto
     * form is oracle-green at every checked sf and diverges from the
@@ -1039,7 +1039,7 @@ object ExtQueries {
   }
 
   /** [[knnJoinOracleSql]] with the plane count DERIVED from count(*) by
-    * the same integer rule as [[Similarity.autoPlanes]] (the
+    * the same integer rule as [[SignBucketing.Auto.planes]] (the
     * `x_semantic_dedup_auto` pattern) — so `x_knn_join_auto` is
     * oracle-green at ANY corpus size, not just the sizes where the rule
     * resolves to the pinned 6 (the gapped-sf1 sweep caught the shared
@@ -1078,8 +1078,8 @@ object ExtQueries {
       "SELECT vec_id, neighbor_id, round(c, 6) AS cos, CAST(rk AS BIGINT) AS rank " +
       "FROM r WHERE rk <= 3 ORDER BY vec_id, rank"
 
-  /** CTE block restating [[Similarity.adaptiveBuckets]] in DuckDB — the
-    * r13 adaptive promotion: level-1 sign buckets at the autoPlanes
+  /** CTE block restating [[SignBucketing.Adaptive]] in DuckDB — the
+    * r13 adaptive promotion: level-1 sign buckets at the Auto plane
     * count, the bucket occupancy histogram, the delta rule (smallest
     * d ≥ 1 with `maxOcc >> d ≤ cap`, 0 when no bucket exceeds the cap,
     * capped at 20 exactly like the Scala loop), level-2 sub-signs for
@@ -1183,7 +1183,7 @@ object ExtQueries {
       "mem AS (SELECT e.vec_id AS id, r0.vec_id AS rep FROM embeddings e " +
       "JOIN reps r0 ON e.embedding = r0.embedding)"
 
-  /** [[Similarity.knnJoinCollapsed]] restated: collapse → rep-level
+  /** `knnJoin` with [[SignBucketing.Collapsed]] restated: collapse → rep-level
     * adaptive kNN (k = 3) → fan-out. Neighbor clusters expand to their
     * k smallest member ids (same cosine, id tie-break — later members
     * cannot rank), twins enter at literal cos 1.0 for the k+1 smallest
@@ -3060,14 +3060,14 @@ object ExtQueries {
     // rows-only).
     Q("x_semantic_dedup",
       (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id", "embedding",
-          dIn = queryVec(s, d).length, planes = 6, minCos = 0.4)
+          dIn = queryVec(s, d).length, minCos = 0.4, bucketing = SignBucketing.Fixed(6))
         .select(col("id1"), col("id2"), col("bucket"),
           round(col("cos"), 6).as("cos"))
         .orderBy("id1", "id2"),
       Some(SemanticDedupOracleSql)),
 
     // The data-scaled twin (r11): same portable JL dedup, plane count
-    // from the autoPlanes integer rule (smallest p >= 6 with
+    // from the SignBucketing.Auto integer rule (smallest p >= 6 with
     // ceil(n/64) <= 2^p) — occupancy stays ~64 rows/bucket at any
     // corpus size, so pair fan-out is linear where the pinned form
     // measured ×25 at ×10 data. STILL fully oracle-checked: the DuckDB
@@ -3075,8 +3075,9 @@ object ExtQueries {
     // arithmetic (no floating log2 — exact at power-of-two boundaries),
     // then re-derives the projection, buckets, pairing, and cosines.
     Q("x_semantic_dedup_auto",
-      (s, d) => Similarity.semanticDedupAuto(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4)
+      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
+          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
+          bucketing = SignBucketing.Auto())
         .select(col("id1"), col("id2"), col("bucket"),
           round(col("cos"), 6).as("cos"))
         .orderBy("id1", "id2"),
@@ -3109,15 +3110,16 @@ object ExtQueries {
         "FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) >= 0.4 ORDER BY id1, id2")),
 
     // The ADAPTIVE production form of semantic dedup (r13 — closing the
-    // r12 verdict's gap: semanticDedupAuto shared knnJoinAuto's
+    // r12 verdict's gap: Auto-bucketed dedup shared the Auto kNN join's
     // sign-cell-skew blow-up, ~200 s at sf10 stress, with no landed
     // remedy): hot cells sub-split exactly as in x_knn_join_adaptive,
     // pairs restrict to sub-bucket mates, the emitted bucket is the
     // post-split id. Degenerate (= auto) at the gate sf; the split
     // fixture below exercises the other branch under the same gate.
     Q("x_semantic_dedup_adaptive",
-      (s, d) => Similarity.semanticDedupAdaptive(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4)
+      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
+          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
+          bucketing = SignBucketing.Adaptive())
         .select(col("id1"), col("id2"), col("bucket"),
           round(col("cos"), 6).as("cos"))
         .orderBy("id1", "id2"),
@@ -3126,22 +3128,23 @@ object ExtQueries {
     // Split-branch fixture (cap 16 < driver-sf maxOcc 87 → delta 3),
     // the same skew-exercise as x_knn_join_adaptive_split.
     Q("x_semantic_dedup_adaptive_split",
-      (s, d) => Similarity.semanticDedupAdaptive(Tables.embeddings(s, d), "vec_id",
+      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
           "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
-          targetBucket = 16L, splitFactor = 1L)
+          bucketing = SignBucketing.Adaptive(targetBucket = 16L, splitFactor = 1L))
         .select(col("id1"), col("id2"), col("bucket"),
           round(col("cos"), 6).as("cos"))
         .orderBy("id1", "id2"),
       Some(semanticDedupAdaptiveOracleSql(16, 6, 1, 0.4))),
 
-    // semanticDedupAdaptive composed with the exact-twin collapse: the
+    // Adaptive dedup composed with the exact-twin collapse: the
     // connected-cover contract — rep-level pairs carry cross-cluster
     // edges, twin clusters contribute star edges (rep → member, cos
     // 1.0) instead of their quadratic within-cluster pair sets, and
     // every connection of the uncollapsed pair graph survives in the
     // cover (one-directional — see the scaladoc; component parity on
-    // this corpus pinned by SimilaritySpec). No bucket column: star
-    // edges have none.
+    // this corpus pinned by SimilaritySpec). Called through
+    // semanticDedupCollapsed, the (id1, id2, cos) form the corpus
+    // benchmark runs.
     Q("x_semantic_dedup_collapsed",
       (s, d) => Similarity.semanticDedupCollapsed(Tables.embeddings(s, d), "vec_id",
           "embedding", dIn = queryVec(s, d).length, minCos = 0.4)
@@ -3149,13 +3152,12 @@ object ExtQueries {
         .orderBy("id1", "id2"),
       Some(semanticDedupCollapsedOracleSql(64, 6, 4, 0.4))),
 
-    // The planes-free DEFAULT entry point (r14 — closing the r13
-    // verdict's "safe default" gap): semanticDedup(df, id, vec, dIn,
-    // minCos) dispatches to the collapsed connected-cover composition,
-    // so the obvious call can no longer be the quadratic pinned
-    // fixture. Output contract (cover, no bucket column) is stated
-    // front-and-center in the overload's scaladoc; this row pins
-    // default == collapsed at the gate (same oracle).
+    // The DEFAULT bucketing (r14 — closing the r13 verdict's "safe
+    // default" gap): semanticDedup(df, id, vec, dIn, minCos) runs the
+    // Collapsed connected cover, so the obvious call can no longer be
+    // the quadratic pinned fixture. The cover contract (star edges
+    // carry a null bucket) is stated in semanticDedup's scaladoc; this
+    // row pins default == collapsed at the gate (same oracle).
     Q("x_semantic_dedup_default",
       (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
           "embedding", dIn = queryVec(s, d).length, minCos = 0.4)
@@ -3170,8 +3172,8 @@ object ExtQueries {
     // unrounded cosines in both engines (distinct-neighbor cosines
     // differ far above fp noise; exact ties break on neighbor id).
     Q("x_knn_join",
-      (s, d) => (Similarity.knnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
-          dIn = queryVec(s, d).length, planes = 6, k = 3): @scala.annotation.nowarn("cat=deprecation"))
+      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
+          dIn = queryVec(s, d).length, k = 3, bucketing = SignBucketing.Fixed(6))
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
@@ -3183,16 +3185,16 @@ object ExtQueries {
     // oracle derives the plane count from count(*) with the same
     // integer rule, so the row is green at any corpus size.
     Q("x_knn_join_auto",
-      (s, d) => Similarity.knnJoinAuto(Tables.embeddings(s, d), "vec_id", "embedding",
-          dIn = queryVec(s, d).length, k = 3)
+      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
+          dIn = queryVec(s, d).length, k = 3, bucketing = SignBucketing.Auto())
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
       Some(knnJoinAutoOracleSql)),
 
     // The ADAPTIVE production path (r13 promotion of the r12 ×100
-    // remedy; `knnJoin` dispatches to the collapsed composition of
-    // this form since the r13 probe): auto planes PLUS
+    // remedy; the default Collapsed bucketing composes the twin
+    // collapse with this form since the r13 probe): auto planes PLUS
     // hot-cell sub-splitting when a sign-cell exceeds
     // splitFactor·targetBucket rows (measured 8.5× over the auto form
     // at sf10 clustered; bit-identical below the cap). The oracle
@@ -3201,8 +3203,9 @@ object ExtQueries {
     // whether or not the corpus triggers the split (driver sf0.01
     // maxOcc 87 < 256: degenerate; the ×10 gapped sweep splits).
     Q("x_knn_join_adaptive",
-      (s, d) => Similarity.knnJoinAdaptive(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3)
+      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id",
+          "embedding", dIn = queryVec(s, d).length, k = 3,
+          bucketing = SignBucketing.Adaptive())
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
@@ -3216,15 +3219,15 @@ object ExtQueries {
     // shift, hot-cell membership, level-2 signs — not just the
     // degenerate path.
     Q("x_knn_join_adaptive_split",
-      (s, d) => Similarity.knnJoinAdaptive(Tables.embeddings(s, d), "vec_id",
+      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id",
           "embedding", dIn = queryVec(s, d).length, k = 3,
-          targetBucket = 16L, splitFactor = 1L)
+          bucketing = SignBucketing.Adaptive(targetBucket = 16L, splitFactor = 1L))
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
       Some(knnAdaptiveOracleSql(16, 6, 1))),
 
-    // knnJoinAdaptive composed with the exact-twin collapse pre-pass —
+    // Adaptive kNN composed with the exact-twin collapse pre-pass —
     // the full production ANN recipe for duplicate-heavy corpora (the
     // r12 chained-stress ×138 finding): reps join, members fan back
     // through membership, twins re-enter at literal cos 1.0. Driver
@@ -3233,8 +3236,9 @@ object ExtQueries {
     // arithmetic is exercised by the gapped ×10 sweep (replica twins)
     // and pinned by SimilaritySpec's exact-parity fixture.
     Q("x_knn_join_collapsed",
-      (s, d) => Similarity.knnJoinCollapsed(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3)
+      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id",
+          "embedding", dIn = queryVec(s, d).length, k = 3,
+          bucketing = SignBucketing.Collapsed())
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
@@ -3521,7 +3525,7 @@ object ExtQueries {
 
     // The data-scaled production form (r13 — closing the ×12.3-at-×10
     // watch item from the r12 sweep): band width follows count(*) via
-    // the shared autoPlanes rule, holding per-band bucket occupancy at
+    // the shared SignBucketing.Auto rule, holding per-band bucket occupancy at
     // ~64 rows so candidate work stays linear where the fixed 16×8
     // geometry goes quadratic. Degenerate (bits = 8, identical to the
     // fixed row) at the driver sf; the gapped ×10 sweep resolves
@@ -3800,19 +3804,20 @@ object ExtQueries {
     // algebra, vec_id < 2000 slice, full oracles — a no-op at the
     // sf0.01 gate, a hard cost bound at sweep sfs.
     Q("x_knn_join_capped",
-      (s, d) => (Similarity.knnJoin(
+      (s, d) => Similarity.knnJoin(
           Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, planes = 6,
-          k = 3): @scala.annotation.nowarn("cat=deprecation"))
+          "embedding", dIn = queryVec(s, d).length, k = 3,
+          bucketing = SignBucketing.Fixed(6))
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
       Some(cappedEmbeddingsOracle(knnJoinOracleSql))),
 
     Q("x_knn_join_auto_capped",
-      (s, d) => Similarity.knnJoinAuto(
+      (s, d) => Similarity.knnJoin(
           Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3)
+          "embedding", dIn = queryVec(s, d).length, k = 3,
+          bucketing = SignBucketing.Auto())
         .select(col("vec_id"), col("neighbor_id"),
           round(col("cos"), 6).as("cos"), col("rank"))
         .orderBy("vec_id", "rank"),
@@ -3821,7 +3826,8 @@ object ExtQueries {
     Q("x_semantic_dedup_capped",
       (s, d) => Similarity.semanticDedup(
           Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, planes = 6, minCos = 0.4)
+          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
+          bucketing = SignBucketing.Fixed(6))
         .select(col("id1"), col("id2"), col("bucket"),
           round(col("cos"), 6).as("cos"))
         .orderBy("id1", "id2"),

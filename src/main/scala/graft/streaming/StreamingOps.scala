@@ -329,6 +329,7 @@ object StreamingOps {
     val spark = stream.sparkSession
     import spark.implicits._
     import graft.ext.Similarity
+    graft.functions.SignBucketing.Fixed(planes) // rejects a bad plane count up front
     val banded = stream.withWatermark(tsCol, watermark)
       .filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(tsCol).as("eventTs"),
@@ -416,10 +417,9 @@ object StreamingOps {
             // NOTE a conditional `update` (skip when membership is
             // unchanged) elides nothing here: the timeout re-arm below
             // dirties the state row every touch, so Spark rewrites it
-            // regardless (MinhashProbe's A/B measured exactly noise).
+            // regardless (an A/B of the two measured exactly noise).
             // The write-per-touched-bucket floor is structural unless
-            // expiry is anchored at last-membership-change instead —
-            // probe variant `noarm` prices that trade.
+            // expiry is anchored at last-membership-change instead.
             state.update(BucketState(known))
             // expire the bucket `watermark` past its newest event (never
             // behind the current watermark — Spark rejects that)

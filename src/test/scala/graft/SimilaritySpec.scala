@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
-import graft.functions.{IvfPq, IvfQuantizer, PqBounds}
+import graft.functions.{IvfPq, IvfQuantizer, PqBounds, SignBucketing}
 
 /** LSH ANN recall + composed near-dup pipeline (VERDICT r1 #1/#2):
   * the round-1 lshTopK joined on one wide exact signature and returned 0
@@ -815,11 +815,13 @@ class SimilaritySpec extends SparkSpec {
     def vec(seed: Int) = Seq.tabulate(16)(i => (new scala.util.Random(seed * 31 + i).nextDouble() - 0.5).toFloat)
     // 40 well-spread vectors: no bucket near the cap → results must be EQUAL
     val spread = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val auto = graft.ext.Similarity.knnJoinAuto(spread, "vec_id", "embedding", 16, k = 3)
+    val auto = graft.ext.Similarity.knnJoin(spread, "vec_id", "embedding", 16, k = 3,
+        bucketing = SignBucketing.Auto())
       .collect().map(_.toSeq).toSet
-    val adapt = graft.ext.Similarity.knnJoinAdaptive(spread, "vec_id", "embedding", 16, k = 3)
+    val adapt = graft.ext.Similarity.knnJoin(spread, "vec_id", "embedding", 16, k = 3,
+        bucketing = SignBucketing.Adaptive())
       .collect().map(_.toSeq).toSet
-    assert(adapt == auto, "degenerate case must reproduce knnJoinAuto exactly")
+    assert(adapt == auto, "below the cap Adaptive must reproduce Auto exactly")
     // skewed corpus: 600 vectors tightly clustered around one direction
     // (tiny per-row noise — one sign-cell swallows the cluster) + 100 spread
     val base = Array.tabulate(16)(i => math.sin(i + 1.0))
@@ -827,8 +829,8 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, base.zipWithIndex.map { case (v, j) =>
         (v + 0.01 * new scala.util.Random(i * 97 + j).nextGaussian()).toFloat }.toSeq)
     } ++ (600 until 700).map(i => (i.toLong, vec(i)))).toDF("vec_id", "embedding")
-    val res = graft.ext.Similarity.knnJoinAdaptive(skewed, "vec_id", "embedding", 16,
-      k = 2, targetBucket = 8L, minPlanes = 4, splitFactor = 2L)
+    val res = graft.ext.Similarity.knnJoin(skewed, "vec_id", "embedding", 16, k = 2,
+      bucketing = SignBucketing.Adaptive(targetBucket = 8L, minPlanes = 4, splitFactor = 2L))
     val perQuery = res.groupBy("vec_id").count().select("count").as[Long].collect()
     assert(perQuery.forall(_ <= 2))
     // clustered rows must still find a same-cluster neighbor at cos ≈ 1
@@ -841,11 +843,13 @@ class SimilaritySpec extends SparkSpec {
   test("semanticDedupAdaptive: identical to semanticDedupAuto below the cap; subset with high retention above it") {
     def vec(seed: Int) = Seq.tabulate(16)(i => (new scala.util.Random(seed * 31 + i).nextDouble() - 0.5).toFloat)
     val spread = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val auto = graft.ext.Similarity.semanticDedupAuto(spread, "vec_id", "embedding", 16, minCos = 0.2)
+    val auto = graft.ext.Similarity.semanticDedup(spread, "vec_id", "embedding", 16, minCos = 0.2,
+        bucketing = SignBucketing.Auto())
       .collect().map(_.toSeq).toSet
-    val adapt = graft.ext.Similarity.semanticDedupAdaptive(spread, "vec_id", "embedding", 16, minCos = 0.2)
+    val adapt = graft.ext.Similarity.semanticDedup(spread, "vec_id", "embedding", 16, minCos = 0.2,
+        bucketing = SignBucketing.Adaptive())
       .collect().map(_.toSeq).toSet
-    assert(adapt == auto, "degenerate case must reproduce semanticDedupAuto exactly")
+    assert(adapt == auto, "below the cap Adaptive must reproduce Auto exactly")
     // skewed corpus (one hot sign-cell): splitting may only DROP pairs
     // (sub-bucket restriction), never add or change one — and the tight
     // cluster must retain nearly all of its near-dup pairs
@@ -854,11 +858,11 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, base.zipWithIndex.map { case (v, j) =>
         (v + 0.01 * new scala.util.Random(i * 97 + j).nextGaussian()).toFloat }.toSeq)
     } ++ (600 until 700).map(i => (i.toLong, vec(i)))).toDF("vec_id", "embedding")
-    val autoPairs = graft.ext.Similarity.semanticDedupAuto(skewed, "vec_id", "embedding", 16,
-        minCos = 0.99, targetBucket = 8L, minPlanes = 4)
+    val autoPairs = graft.ext.Similarity.semanticDedup(skewed, "vec_id", "embedding", 16, minCos = 0.99,
+        bucketing = SignBucketing.Auto(targetBucket = 8L, minPlanes = 4))
       .select("id1", "id2").as[(Long, Long)].collect().toSet
-    val adaptPairs = graft.ext.Similarity.semanticDedupAdaptive(skewed, "vec_id", "embedding", 16,
-        minCos = 0.99, targetBucket = 8L, minPlanes = 4, splitFactor = 2L)
+    val adaptPairs = graft.ext.Similarity.semanticDedup(skewed, "vec_id", "embedding", 16, minCos = 0.99,
+        bucketing = SignBucketing.Adaptive(targetBucket = 8L, minPlanes = 4, splitFactor = 2L))
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(adaptPairs.subsetOf(autoPairs), "split added pairs that do not exist un-split")
     assert(autoPairs.nonEmpty &&
@@ -868,11 +872,13 @@ class SimilaritySpec extends SparkSpec {
 
   test("adaptive forms degrade like the auto forms on empty and all-null inputs") {
     val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    assert(graft.ext.Similarity.knnJoinAdaptive(empty, "vec_id", "embedding", 16, k = 3).count() == 0)
-    assert(graft.ext.Similarity.semanticDedupAdaptive(empty, "vec_id", "embedding", 16, 0.5).count() == 0)
+    assert(graft.ext.Similarity.knnJoin(empty, "vec_id", "embedding", 16, k = 3,
+      bucketing = SignBucketing.Adaptive()).count() == 0)
+    assert(graft.ext.Similarity.semanticDedup(empty, "vec_id", "embedding", 16, 0.5,
+      bucketing = SignBucketing.Adaptive()).count() == 0)
     val allNull = Seq((1L, null.asInstanceOf[Seq[Float]]), (2L, null.asInstanceOf[Seq[Float]]))
       .toDF("vec_id", "embedding")
-    assert(graft.ext.Similarity.knnJoinCollapsed(allNull, "vec_id", "embedding", 16, k = 3).count() == 0)
+    assert(graft.ext.Similarity.knnJoin(allNull, "vec_id", "embedding", 16, k = 3).count() == 0)
     assert(graft.ext.Similarity.semanticDedupCollapsed(allNull, "vec_id", "embedding", 16, 0.5).count() == 0)
   }
 
@@ -899,18 +905,22 @@ class SimilaritySpec extends SparkSpec {
     // sets match: twins are bucket-mates in the full run, and the
     // collapsed run re-inserts them at literal cos 1.0 = the kernel's
     // exact twin cosine on unit/perfect-square vectors
-    val full = graft.ext.Similarity.knnJoinAdaptive(dupFixture, "vec_id", "embedding", 16, k = 3)
+    val full = graft.ext.Similarity.knnJoin(dupFixture, "vec_id", "embedding", 16, k = 3,
+        bucketing = SignBucketing.Adaptive())
       .collect().map(_.toSeq).toSet
-    val collapsed = graft.ext.Similarity.knnJoinCollapsed(dupFixture, "vec_id", "embedding", 16, k = 3)
+    val collapsed = graft.ext.Similarity.knnJoin(dupFixture, "vec_id", "embedding", 16, k = 3,
+        bucketing = SignBucketing.Collapsed())
       .collect().map(_.toSeq).toSet
     assert(collapsed == full,
       s"missing=${(full -- collapsed).take(5)} extra=${(collapsed -- full).take(5)}")
     // and on a duplicate-free corpus the composition is the identity
     def vec(seed: Int) = Seq.tabulate(16)(i => (new scala.util.Random(seed * 31 + i).nextDouble() - 0.5).toFloat)
     val spread = (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
-    val a = graft.ext.Similarity.knnJoinAdaptive(spread, "vec_id", "embedding", 16, k = 3)
+    val a = graft.ext.Similarity.knnJoin(spread, "vec_id", "embedding", 16, k = 3,
+        bucketing = SignBucketing.Adaptive())
       .collect().map(_.toSeq).toSet
-    val c = graft.ext.Similarity.knnJoinCollapsed(spread, "vec_id", "embedding", 16, k = 3)
+    val c = graft.ext.Similarity.knnJoin(spread, "vec_id", "embedding", 16, k = 3,
+        bucketing = SignBucketing.Collapsed())
       .collect().map(_.toSeq).toSet
     assert(c == a, "collapse over a dup-free corpus must be the identity")
   }
@@ -923,8 +933,8 @@ class SimilaritySpec extends SparkSpec {
       nodes.groupBy(find).values.map(_.toSet).toSet
     }
     val nodes = dupFixture.select("vec_id").as[Long].collect().toSet
-    val fullPairs = graft.ext.Similarity.semanticDedupAdaptive(dupFixture, "vec_id", "embedding",
-        16, minCos = 0.49)
+    val fullPairs = graft.ext.Similarity.semanticDedup(dupFixture, "vec_id", "embedding",
+        16, minCos = 0.49, bucketing = SignBucketing.Adaptive())
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     val cover = graft.ext.Similarity.semanticDedupCollapsed(dupFixture, "vec_id", "embedding",
         16, minCos = 0.49)
@@ -935,10 +945,16 @@ class SimilaritySpec extends SparkSpec {
     // the planes-free DEFAULT overload dispatches to this collapsed
     // composition — same rows, same component structure (r14: the safe
     // default the r13 verdict asked for)
-    val default = graft.ext.Similarity.semanticDedup(dupFixture, "vec_id", "embedding",
+    val defaultRows = graft.ext.Similarity.semanticDedup(dupFixture, "vec_id", "embedding",
         16, minCos = 0.49)
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
+    val default = defaultRows.select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(default == cover, "planes-free default must equal the collapsed cover")
+    // star edges (cos 1.0 twins) carry a null bucket; rep-level pairs keep theirs
+    val buckets = defaultRows.select("id1", "id2", "bucket").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> Option(r.get(2))).toMap
+    def cluster(id: Long): Long = if (id <= 4) 0L else if (id <= 7) 5L else id
+    assert(buckets.forall { case ((a, b), bk) =>
+      bk.isEmpty == (cluster(a) == cluster(b)) }, s"bucket column: $buckets")
     assert(components(default, nodes) == components(fullPairs, nodes),
       "default path must preserve the components of the full pair graph")
     // star edges replace within-cluster quadratics: the 5-twin cluster
@@ -1023,7 +1039,7 @@ class SimilaritySpec extends SparkSpec {
   test("semanticDedup: pairs are a bucket-filtered subset of the exact all-pairs set") {
     val minCos = 0.8
     val got = Similarity.semanticDedup(fixture, "vec_id", "embedding",
-        dIn = dim, planes = 4, minCos = minCos)
+        dIn = dim, minCos = minCos, bucketing = SignBucketing.Fixed(4))
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     // exact set with the boundary nudged below >= so the subset check is
     // conservative (cosineNearDuplicates filters with strict >)
@@ -1038,7 +1054,7 @@ class SimilaritySpec extends SparkSpec {
     val v = randVec().toSeq
     val dupes = Seq((900L, v), (901L, v)).toDF("vec_id", "embedding")
     val rows = Similarity.semanticDedup(fixture.union(dupes), "vec_id", "embedding",
-        dIn = dim, planes = 6, minCos = 0.99)
+        dIn = dim, minCos = 0.99, bucketing = SignBucketing.Fixed(6))
       .filter(col("id1") === 900L && col("id2") === 901L)
       .collect()
     assert(rows.length == 1, "identical pair missed — sign buckets must agree")
@@ -1071,8 +1087,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("knnJoin: per-bucket brute-force agreement, self excluded, k bounded") {
     val k = 2
-    val got = (Similarity.knnJoin(fixture, "vec_id", "embedding",
-        dIn = dim, planes = 4, k = k): @scala.annotation.nowarn("cat=deprecation"))
+    val got = Similarity.knnJoin(fixture, "vec_id", "embedding",
+        dIn = dim, k = k, bucketing = SignBucketing.Fixed(4))
       .as[(Long, Long, Double, Long)].collect().toSeq
     assert(got.nonEmpty)
     assert(got.forall { case (q, n, _, r) => q != n && r >= 1 && r <= k })
@@ -1103,20 +1119,21 @@ class SimilaritySpec extends SparkSpec {
       "fixed form while the rule resolves to minPlanes") {
     // integer boundary arithmetic: planes is the smallest >= minPlanes
     // with n / 2^planes <= targetBucket
-    assert(Similarity.autoPlanes(500L, 64L, 6) == 6)
-    assert(Similarity.autoPlanes(2000L, 64L, 6) == 6)
-    assert(Similarity.autoPlanes(4096L, 64L, 6) == 6, "boundary: 4096 = 64 * 2^6")
-    assert(Similarity.autoPlanes(4097L, 64L, 6) == 7, "one past the boundary")
-    assert(Similarity.autoPlanes(20000L, 64L, 6) == 9)
-    assert(Similarity.autoPlanes(0L, 64L, 6) == 6, "empty input keeps minPlanes")
+    val rule = SignBucketing.Auto(targetBucket = 64L, minPlanes = 6)
+    assert(rule.planes(500L) == 6)
+    assert(rule.planes(2000L) == 6)
+    assert(rule.planes(4096L) == 6, "boundary: 4096 = 64 * 2^6")
+    assert(rule.planes(4097L) == 7, "one past the boundary")
+    assert(rule.planes(20000L) == 9)
+    assert(rule.planes(0L) == 6, "empty input keeps minPlanes")
     // every driver-checked embeddings table sits below the boundary, so
     // the auto form must equal the fixed form bitwise (the shared-oracle
     // contract of x_knn_join_auto)
-    val auto = Similarity.knnJoinAuto(fixture, "vec_id", "embedding",
-        dIn = dim, k = 2, minPlanes = 4)
+    val auto = Similarity.knnJoin(fixture, "vec_id", "embedding",
+        dIn = dim, k = 2, bucketing = SignBucketing.Auto(minPlanes = 4))
       .as[(Long, Long, Double, Long)].collect().toSeq.sorted
-    val fixed = (Similarity.knnJoin(fixture, "vec_id", "embedding",
-        dIn = dim, planes = 4, k = 2): @scala.annotation.nowarn("cat=deprecation"))
+    val fixed = Similarity.knnJoin(fixture, "vec_id", "embedding",
+        dIn = dim, k = 2, bucketing = SignBucketing.Fixed(4))
       .as[(Long, Long, Double, Long)].collect().toSeq.sorted
     assert(auto == fixed, "auto diverged from fixed below the boundary")
     // the planes-free overload IS the auto rule — the reachable default
@@ -1124,9 +1141,59 @@ class SimilaritySpec extends SparkSpec {
     val viaDefault = Similarity.knnJoin(fixture, "vec_id", "embedding",
         dIn = dim, k = 2)
       .as[(Long, Long, Double, Long)].collect().toSeq.sorted
-    val viaAuto = Similarity.knnJoinAuto(fixture, "vec_id", "embedding",
-        dIn = dim, k = 2)
+    val viaAuto = Similarity.knnJoin(fixture, "vec_id", "embedding",
+        dIn = dim, k = 2, bucketing = SignBucketing.Auto())
       .as[(Long, Long, Double, Long)].collect().toSeq.sorted
-    assert(viaDefault == viaAuto, "planes-free knnJoin diverged from knnJoinAuto")
+    assert(viaDefault == viaAuto, "default bucketing diverged from Auto below the cap")
+  }
+
+  test("knnJoin and semanticDedup drop null-vector rows under every bucketing") {
+    val r = new scala.util.Random(11)
+    val vecs = (0 until 500).map(i => (i.toLong, Seq.fill(16)(r.nextGaussian())))
+    // negations of all-non-negative projections land real rows in bucket 0,
+    // the bucket a null projection used to fall into
+    val rows = vecs ++ vecs.map { case (i, v) => (i + 1000L, v.map(-_)) } :+
+      ((9999L, null.asInstanceOf[Seq[Double]]))
+    val df = rows.toDF("vec_id", "embedding")
+    assert(SignBucketing.Fixed(6).buckets(df, "vec_id", "embedding", 16)
+      .filter(col("bucket") === 0L).count() > 0, "fixture must populate bucket 0")
+    Seq(SignBucketing.Fixed(6), SignBucketing.Auto(), SignBucketing.Adaptive(),
+        SignBucketing.Collapsed()).foreach { b =>
+      val knn = Similarity.knnJoin(df, "vec_id", "embedding", 16, k = 3, bucketing = b)
+        .as[(Long, Long, Option[Double], Long)].collect()
+      assert(knn.nonEmpty, s"$b: no neighbours")
+      assert(knn.forall(_._3.isDefined), s"$b: knnJoin emitted a null cosine")
+      assert(!knn.exists(n => n._1 == 9999L || n._2 == 9999L),
+        s"$b: the null-vector row took part in knnJoin")
+      val pairs = Similarity.semanticDedup(df, "vec_id", "embedding", 16, minCos = 0.3,
+          bucketing = b)
+        .select("id1", "id2", "cos").as[(Long, Long, Option[Double])].collect()
+      assert(pairs.nonEmpty, s"$b: no pairs")
+      assert(pairs.forall(_._3.isDefined), s"$b: semanticDedup emitted a null cosine")
+      assert(!pairs.exists(p => p._1 == 9999L || p._2 == 9999L),
+        s"$b: the null-vector row took part in semanticDedup")
+    }
+  }
+
+  test("SignBucketing: an invalid field fails at construction, naming the " +
+    "field, before any Spark job runs") {
+    def rejects(field: String)(build: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(field), e.getMessage)
+    }
+    val group = "sign-bucketing-validation"
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      rejects("planes = 0")(SignBucketing.Fixed(0))
+      rejects("planes = 63")(SignBucketing.Fixed(63))
+      rejects("targetBucket = 0")(SignBucketing.Auto(targetBucket = 0L))
+      rejects("minPlanes = 0")(SignBucketing.Auto(minPlanes = 0))
+      rejects("splitFactor = 0")(SignBucketing.Adaptive(splitFactor = 0L))
+      rejects("splitFactor = 0")(SignBucketing.Collapsed(splitFactor = 0L))
+      rejects("k = 0")(Similarity.knnJoin(fixture, "vec_id", "embedding", dim, k = 0,
+        bucketing = SignBucketing.Auto()))
+    } finally spark.sparkContext.clearJobGroup()
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "validation ran a Spark job")
   }
 }

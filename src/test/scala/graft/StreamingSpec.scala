@@ -203,8 +203,8 @@ class StreamingSpec extends SparkSpec {
       query.processAllAvailable()
       val streamed = spark.table("sb_out").select("id1", "id2")
         .distinct().as[(Long, Long)].collect().toSet
-      val bk = graft.ext.Similarity.signBuckets(
-        corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", 16, 4)
+      val bk = graft.functions.SignBucketing.Fixed(4).buckets(
+        corpus.toDF("vec_id", "embedding"), "vec_id", "embedding", 16)
       val batch = bk.as("a")
         .join(bk.as("b"), col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
