@@ -154,37 +154,30 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame =
     withTsColumns(s, d, load(s, d, "events"))
 
-  private val eventsIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** [[events]] with the ordering-contract `_idx`
     * ([[Indexing.withOrderedIdx]] by `event_id`), materialized ONCE per
-    * (session, dir) and persisted — the contract's "every ingested table
-    * materializes its idx exactly once" (DESIGN.md), which the
-    * positional registry rows share instead of each paying the
+    * session and dir ([[Artifacts.memo]]) — the contract's "every
+    * ingested table materializes its idx exactly once" (DESIGN.md), which
+    * the positional registry rows share instead of each paying the
     * range-shuffle + count pass. At warehouse scale this is a written
     * table; here a persisted frame is the same contract at test scale.
     */
   def eventsIdx(s: SparkSession, d: String): DataFrame =
-    eventsIdxMemo.getOrElseUpdate((s, d), {
-      eventsIdxMemo.keys.filter(_._1 ne s).foreach(eventsIdxMemo.remove)
+    Artifacts.memo(s, ("events_idx", d)) {
       // materialized as PARQUET, not a persisted row cache: consumers get
       // codegen'd columnar scans with pruning/pushdown (a cached-row scan
       // cost anomaly_pipeline +0.5 s), and the on-disk table IS the
       // warehouse-scale shape of the contract. Path is PER-PROCESS
       // (unlike the write-once scratch sinks): a concurrent JVM on the
       // same sf dir must not overwrite files this session is reading.
-      // The raw dir's hash disambiguates dirs the [^a-zA-Z0-9.] sanitize
-      // would alias (e.g. "sf-1" vs "sf_1" — a second materialization
-      // must never overwrite files a memoized frame still reads lazily),
-      // and the pid root is removed on JVM exit so /tmp does not
-      // accumulate one tree per run.
-      val path = f"$idxRoot/${d.replaceAll("[^a-zA-Z0-9.]", "_")}_${d.hashCode}%08x/events_idx"
+      // The pid root is removed on JVM exit so /tmp does not accumulate
+      // one tree per run.
+      val path = s"$idxRoot/${Artifacts.dirName(d)}/events_idx"
       Indexing.withOrderedIdx(events(s, d), "_idx",
         org.apache.spark.sql.functions.col("event_id"))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path)
-    })
+    }(_ => ())
 
   /** Per-process scratch root for materialized idx tables; deleted by a
     * shutdown hook (registered once) so repeated runs don't accumulate

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+
 /** Deduplication operators for training-data pipelines, each designed
   * around one shuffle on a compact key (never on document text):
   *
@@ -698,24 +700,14 @@ object Dedup {
       // the superseded round's checkpoint blocks are dead the moment
       // `next` is materialized — release them NOW (bounded two live
       // rounds by construction) instead of waiting for GC + ContextCleaner
-      checkpointRdd(labels).foreach(_.unpersist(false))
+      Artifacts.release(labels)
       labels = next
       i += 1
     }
     require(converged, s"duplicateClusters did not converge in $maxIter rounds")
-    checkpointRdd(edges).foreach(_.unpersist(false)) // no further rounds read them
+    Artifacts.release(edges) // no further rounds read them
     labels.select("id", "cluster")
   }
-
-  /** The persisted RDD behind a `localCheckpoint`ed frame —
-    * `Dataset.unpersist` is a NO-OP for it (the blocks belong to the
-    * RDD inside the LogicalRDD plan, not to the CacheManager).
-    */
-  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
 
   /** Symmetric, de-duplicated (a, b) edge frame of a (id1, id2) pair
     * frame — shared by [[duplicateClusters]] and the plan audit so the

@@ -377,9 +377,7 @@ object Similarity {
     val assigned = km.transform(fitInput).drop("_ivf_v")
     // The checkpoint exists to feed the KMeans iterations; after fit it is
     // dead weight (callers persist the *assigned* frame for probing).
-    // Dataset.unpersist is a no-op for checkpoint-backed frames — release
-    // the blocks through the backing RDD (the duplicateClusters pattern).
-    graft.ext.Dedup.checkpointRdd(train).foreach(_.unpersist(false))
+    graft.core.Artifacts.release(train)
     (assigned, km)
   }
 
@@ -652,7 +650,8 @@ object Similarity {
     * is a hash EQUI join on the bucket id, never a cross join, so the
     * only quadratic term is within-bucket. Recall at a given `minCos`
     * follows the hyperplane collision bound: near-identical vectors land
-    * in one bucket w.p. ≈ 1. Rows with a null vector are dropped.
+    * in one bucket w.p. ≈ 1. Rows with a null vector or a vector whose
+    * length is not `dIn` are dropped.
     *
     * Output: (id1, id2, bucket: long, cos: double), id1 < id2. What the
     * rows cover depends on the case:
@@ -678,7 +677,8 @@ object Similarity {
                     bucketing: SignBucketing = SignBucketing.Default): DataFrame =
     bucketing match {
       case _: SignBucketing.Collapsed =>
-        val (reps, membership) = collapseExactVectors(df, idCol, vecCol)
+        val (reps, membership) =
+          collapseExactVectors(SignBucketing.usable(df, vecCol, dIn), idCol, vecCol)
         val stars = membership.filter(col(idCol) =!= col("rep_id"))
           .select(col("rep_id").as("id1"), col(idCol).as("id2"),
             lit(null).cast("long").as("bucket"), lit(1.0).as("cos"))
@@ -756,8 +756,8 @@ object Similarity {
     * bucket is missed. The projection is the portable [[jlMatrix]]
     * arithmetic, so the whole result is re-derivable by any engine (the
     * oracle-checkability the xxhash-seeded [[lshTopK]] bands cannot
-    * offer). Rows with a null vector are dropped: they get no neighbours
-    * and are nobody's neighbour.
+    * offer). Rows with a null vector or a vector whose length is not
+    * `dIn` are dropped: they get no neighbours and are nobody's neighbour.
     *
     * Output: (idCol, neighbor_id, cos, rank: long) for every case, rank
     * 1..k per id by cosine desc, neighbor id breaking exact ties.
@@ -778,7 +778,8 @@ object Similarity {
     require(k > 0, s"need k > 0, got k = $k")
     bucketing match {
       case _: SignBucketing.Collapsed =>
-        val (reps, membership) = collapseExactVectors(df, idCol, vecCol)
+        val (reps, membership) =
+          collapseExactVectors(SignBucketing.usable(df, vecCol, dIn), idCol, vecCol)
         val repK = pairTopK(bucketing.buckets(reps, idCol, vecCol, dIn), idCol, k)
         val wm = org.apache.spark.sql.expressions.Window
           .partitionBy("rep_id").orderBy(col(idCol))

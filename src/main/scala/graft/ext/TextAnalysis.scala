@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Artifacts
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, document fingerprinting.
   * All pure narrow column expressions (whole-stage codegen, zero shuffle) —
@@ -385,12 +387,12 @@ object TextAnalysis {
         val next = state
           .withColumn("_syms", applyMergeFold(col("_syms"), l, r))
           .localCheckpoint()
-        Dedup.checkpointRdd(state).foreach(_.unpersist(false))
+        Artifacts.release(state)
         state = next
         rank += 1
       }
     }
-    Dedup.checkpointRdd(state).foreach(_.unpersist(false))
+    Artifacts.release(state)
     merges.toSeq.toDF("merge_rank", "left", "right", "pair_count")
   }
 
@@ -465,7 +467,7 @@ object TextAnalysis {
         words0.limit(probeCap + 1).count() <= driverVocabLimit) {
       val collected = words0.select(col("_f"), col("_syms")).collect()
         .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
-      Dedup.checkpointRdd(words0).foreach(_.unpersist(false))
+      Artifacts.release(words0)
       return bpeLearnDriverTail(collected, numMerges).toDF(
         "merge_rank", "left", "right", "pair_count")
     }
@@ -544,7 +546,7 @@ object TextAnalysis {
         sinceCp += 1
         if (sinceCp >= cpEvery) {
           val next = state.localCheckpoint()
-          Dedup.checkpointRdd(lastCp).foreach(_.unpersist(false))
+          Artifacts.release(lastCp)
           lastCp = next
           state = next
           sinceCp = 0
@@ -552,7 +554,7 @@ object TextAnalysis {
       }
     }
     } finally {
-      Dedup.checkpointRdd(lastCp).foreach(_.unpersist(false))
+      Artifacts.release(lastCp)
     }
     merges.toSeq.toDF("merge_rank", "left", "right", "pair_count")
   }

@@ -68,7 +68,7 @@ object FedAvg {
       global = local.groupBy("dim").agg(avg(col("lw")).as("w"))
       if (r % checkpointEvery == 0 && r < rounds) {
         val next = global.localCheckpoint()
-        lastCp.flatMap(graft.ext.Dedup.checkpointRdd).foreach(_.unpersist(false))
+        lastCp.foreach(graft.core.Artifacts.release)
         lastCp = Some(next)
         global = next
       }

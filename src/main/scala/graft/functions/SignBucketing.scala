@@ -40,9 +40,10 @@ import graft.ext.Similarity
   */
 sealed trait SignBucketing {
 
-  /** Every row of `df` with a non-null vector, with its bucket:
+  /** Every row of `df` with a `dIn`-length vector, with its bucket:
     * (idCol, _v: array<double>, bucket: long). Rows with a null vector
-    * are dropped: no vector, no bucket, no neighbours (the
+    * or a vector of another length are dropped ([[SignBucketing.usable]]):
+    * no projection, no bucket, no neighbours (the
     * [[graft.ext.Similarity.collapseExactVectors]] and
     * [[graft.ext.Similarity.ivfKnnJoin]] convention).
     */
@@ -51,6 +52,13 @@ sealed trait SignBucketing {
 }
 
 object SignBucketing {
+
+  /** The rows of `df` whose vector can be projected: non-null and of
+    * length `dIn`. Any other vector gets a null projection, which would
+    * fold into bucket 0 and be ranked with a null cosine.
+    */
+  private[graft] def usable(df: DataFrame, vecCol: String, dIn: Int): DataFrame =
+    df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dIn)
 
   /** `planes` sign planes, 2^planes buckets. */
   final case class Fixed(planes: Int) extends SignBucketing {
@@ -63,7 +71,7 @@ object SignBucketing {
       */
     private[graft] def buckets(df: DataFrame, idCol: String, vecCol: String,
                                dIn: Int): DataFrame =
-      df.filter(col(vecCol).isNotNull)
+      usable(df, vecCol, dIn)
         .select(col(idCol), col(vecCol).cast("array<double>").as("_v"),
           Similarity.jlProjection(col(vecCol), dIn, planes).as("_proj"))
         .select(col(idCol), col("_v"),

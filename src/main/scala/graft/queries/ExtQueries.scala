@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.ext.{Dedup, HtmlExtraction, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.functions.{GraftFunctions, IvfPq, IvfQuantizer, PqBounds, SignBucketing}
 import graft.window.Windows
@@ -23,101 +23,74 @@ object ExtQueries {
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
 
-  /** Evict another session's memo entries, releasing whatever storage the
-    * evicted value holds: dropping a persisted frame from the map without
-    * unpersisting it would leak the cached copy for the old session's
-    * lifetime (and a re-request would persist a second one) when two
-    * sessions are live in one JVM. Release errors (dead session) are
-    * ignored — the blocks died with the context anyway.
-    */
-  private def evictStale[K, V](cache: scala.collection.concurrent.TrieMap[K, V])
-                              (stale: K => Boolean)(release: V => Unit): Unit =
-    cache.keys.filter(stale).foreach { k =>
-      cache.remove(k).foreach(v => try release(v) catch { case _: Throwable => () })
-    }
-
-  /** IVF index memo, one per (session, sf dir): build once (KMeans fit +
+  /** IVF index memo ([[Artifacts.memo]]): build once (KMeans fit +
     * assignment, persisted), probe many times — the FAISS lifecycle.
     * `x_ann_ivf_build` owns the build cost in the bench; `x_ann_ivf`
-    * measures the probe. Keyed by the session too: a cached frame is
-    * bound to the SparkSession that built it, so a restarted session in
-    * the same JVM must rebuild, not fail on a stale context.
+    * measures the probe.
     */
-  private val ivfCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.ml.clustering.KMeansModel)]()
-
   private def ivfFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    ivfCache.getOrElseUpdate((s, d), {
-      evictStale(ivfCache)(_._1 ne s) { case (df, _) => df.unpersist() }
+    Artifacts.memo(s, ("ivf", d)) {
       val (assigned, km) = Similarity.ivfIndex(
         Tables.embeddings(s, d).filter(col("vec_id") > 0), "embedding", nlist = 8)
       val cached = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cached.count() // materialize: later probes touch only the cached cells
       (cached, km)
-    })
+    } { case (df, _) => df.unpersist() }
 
   /** The auto-nlist KMeans quantizer memo (`x_ivf_knn_join_auto`,
     * `x_ivf_pq_knn_join`): same build-once lifecycle as [[ivfFor]], but
     * `nlist` follows `count(*)` by the [[graft.ext.Similarity.autoNlist]]
     * balance rule, and the one count also serves the fit cap. Only the
-    * quantizer is kept; the join assigns cells itself.
+    * quantizer (plain arrays, no blocks) is kept; the join assigns cells
+    * itself.
     */
-  private val ivfAutoCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), IvfQuantizer]()
-
   private def ivfQuantizerForAuto(s: org.apache.spark.sql.SparkSession, d: String) =
-    ivfAutoCache.getOrElseUpdate((s, d), {
-      evictStale(ivfAutoCache)(_._1 ne s)(_ => ()) // plain arrays; no blocks
+    Artifacts.memo(s, ("ivf_auto", d)) {
       val emb = Tables.embeddings(s, d)
       val n = emb.count()
       IvfQuantizer.fit(emb, "embedding",
         Similarity.autoNlist(n, nprobe = 2, minList = 8), knownCount = n)
-    })
+    }(_ => ())
 
-  /** Stored IVF quantizer table, written once per (session, sf dir) —
-    * the CROSS-SESSION leg of the build-once/join-many lifecycle (the
-    * [[ivfFor]]/[[ivfQuantizerForAuto]] memos cover within-session reuse):
-    * pinned-auto anchors ([[graft.ext.Similarity.ivfPinnedQuantizerRows]]
-    * at the [[graft.ext.Similarity.autoNlist]] count) persisted as an
-    * `(ivf_cell, centroid, offset)` parquet table that
-    * `x_ivf_knn_join_stored` reloads and joins from. Returns the table
-    * name.
+  /** A bucketed table written once per (session, `prefix`, sf dir) by
+    * [[graft.core.Layout.writeBucketed]], named `prefix` + the dir's
+    * [[Artifacts.dirName]]. Returns the table name; the value holds no
+    * blocks, so eviction releases nothing.
     */
-  private val ivfQuantCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
+  private def storedTable(s: org.apache.spark.sql.SparkSession, d: String, prefix: String,
+                          buckets: Int, key: String, moreKeys: String*)
+                         (rows: => org.apache.spark.sql.DataFrame): String =
+    Artifacts.memo(s, (prefix, d)) {
+      val table = prefix + Artifacts.dirName(d)
+      graft.core.Layout.writeBucketed(rows, table, buckets, key, moreKeys: _*)
+      table
+    }(_ => ())
 
-  private def ivfQuantTableFor(s: org.apache.spark.sql.SparkSession,
-                               d: String): String =
-    ivfQuantCache.getOrElseUpdate((s, d), {
-      evictStale(ivfQuantCache)(_._1 ne s)(_ => ()) // value is a table name; no blocks
-      val table = "graft_ivf_quant_auto_" + d.replaceAll("[^a-zA-Z0-9]", "_")
+  /** Stored IVF quantizer table — the CROSS-SESSION leg of the
+    * build-once/join-many lifecycle (the [[ivfFor]]/[[ivfQuantizerForAuto]]
+    * memos cover within-session reuse): pinned-auto anchors
+    * ([[graft.ext.Similarity.ivfPinnedQuantizerRows]] at the
+    * [[graft.ext.Similarity.autoNlist]] count) as an
+    * `(ivf_cell, centroid, offset)` table that `x_ivf_knn_join_stored`
+    * reloads and joins from.
+    */
+  private def ivfQuantTableFor(s: org.apache.spark.sql.SparkSession, d: String): String =
+    storedTable(s, d, "graft_ivf_quant_auto_", buckets = 1, "ivf_cell") {
       val emb = Tables.embeddings(s, d)
-      val quant = Similarity.ivfPinnedQuantizerRows(emb, "vec_id", "embedding",
+      Similarity.ivfPinnedQuantizerRows(emb, "vec_id", "embedding",
         Similarity.autoNlist(emb.count(), nprobe = 2, minList = 8))
-      graft.core.Layout.writeBucketed(quant, table, buckets = 1, "ivf_cell")
-      table
-    })
+    }
 
-  /** Stored PQ quantization-stats table, written once per (session, sf
-    * dir) alongside [[ivfQuantTableFor]]'s quantizer (r16 — VERDICT r15
-    * task 2): per-dim (lo, hi) as a [[graft.functions.PqBounds]]
-    * parquet table, so `x_ivf_pq_knn_join_stored` reads BOTH halves of
-    * the stored artifact — codes become a function of the artifact, not
-    * of whichever corpus version the join sees. Returns the table name.
+  /** Stored PQ quantization-stats table, written alongside
+    * [[ivfQuantTableFor]]'s quantizer (r16 — VERDICT r15 task 2): per-dim
+    * (lo, hi) as a [[graft.functions.PqBounds]] table, so
+    * `x_ivf_pq_knn_join_stored` reads BOTH halves of the stored artifact
+    * — codes become a function of the artifact, not of whichever corpus
+    * version the join sees.
     */
-  private val ivfPqStatsCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
-
-  private def ivfPqStatsTableFor(s: org.apache.spark.sql.SparkSession,
-                                 d: String): String =
-    ivfPqStatsCache.getOrElseUpdate((s, d), {
-      evictStale(ivfPqStatsCache)(_._1 ne s)(_ => ())
-      val table = "graft_ivf_pq_stats_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      val stats = PqBounds.stats(Tables.embeddings(s, d), "embedding").rows(s)
-      graft.core.Layout.writeBucketed(stats, table, buckets = 1, "dim")
-      table
-    })
+  private def ivfPqStatsTableFor(s: org.apache.spark.sql.SparkSession, d: String): String =
+    storedTable(s, d, "graft_ivf_pq_stats_", buckets = 1, "dim")(
+      PqBounds.stats(Tables.embeddings(s, d), "embedding").rows(s))
 
   /** Pinned anchors at the count-derived nlist (nprobe 2, minList 8): the
     * quantizer of every `_auto_pinned`-geometry IVF gate row.
@@ -837,124 +810,71 @@ object ExtQueries {
     "FROM it WHERE merge_rank < " + numMerges +
     ")) WHERE best0 IS NOT NULL))"
 
-  /** 100-merge BPE table memo, one per (session, sf dir): the learned
-    * artifact is 100 driver rows (a merge table, not data), so the memo
-    * holds the Seq itself — `x_bpe_merges_100` owns the learn cost in
-    * the bench, `x_bpe_subwords_100` prices encoding with the table.
+  /** 100-merge BPE table memo: the learned artifact is 100 driver rows
+    * (a merge table, not data), so the memo holds the Seq itself —
+    * `x_bpe_merges_100` owns the learn cost in the bench,
+    * `x_bpe_subwords_100` prices encoding with the table.
     */
-  private val bpe100Cache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]()
-
   private def bpe100For(s: org.apache.spark.sql.SparkSession,
                         d: String): Seq[(String, String)] =
-    bpe100Cache.getOrElseUpdate((s, d), {
-      evictStale(bpe100Cache)(_._1 ne s)(_ => ()) // plain driver rows; no blocks
+    Artifacts.memo(s, ("bpe100", d)) {
       TextAnalysis.bpeLearnBatched(Tables.documents(s, d), "text", numMerges = 100)
         .orderBy("merge_rank").select("left", "right").collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq
-    })
+    }(_ => ())
 
-  /** MinHash candidate-pair memo, one per (session, sf dir) — the same
-    * build/probe split as [[ivfFor]]: `x_minhash_lsh` owns candidate
-    * generation in the bench; `x_jaccard_verify` verifies PRECOMPUTED
-    * candidates, so its timing isolates the verification stage (the
-    * 100 TB lifecycle: candidates are written once, verified from
-    * storage).
+  /** MinHash candidate-pair memo — the same build/probe split as
+    * [[ivfFor]]: `x_minhash_lsh` owns candidate generation in the bench;
+    * `x_jaccard_verify` verifies PRECOMPUTED candidates, so its timing
+    * isolates the verification stage (the 100 TB lifecycle: candidates
+    * are written once, verified from storage).
     */
-  private val candCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
   private def minhashCandsFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    candCache.getOrElseUpdate((s, d), {
-      evictStale(candCache)(_._1 ne s)(_.unpersist())
+    Artifacts.memo(s, ("minhash_cands", d)) {
       val cached = Dedup.minhashCandidates(Tables.documents(s, d), "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cached.count() // materialize: verification reads only the cached pairs
       cached
-    })
+    }(_.unpersist())
 
-  /** Duplicate-cluster memo, one per (session, sf dir): connected
-    * components over the exact cosine near-dup pairs. The returned frame
-    * is the checkpoint-backed label table from
-    * [[Dedup.duplicateClusters]]; memoizing bounds it to one per
-    * session/sf.
+  /** Duplicate-cluster memo: connected components over the exact cosine
+    * near-dup pairs. The value is [[Dedup.duplicateClusters]]' label
+    * table, a projection of its last round's checkpoint, so eviction
+    * frees it through [[Artifacts.release]].
     */
-  private val clusterCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
   private def clustersFor(s: org.apache.spark.sql.SparkSession, d: String) =
-    clusterCache.getOrElseUpdate((s, d), {
-      // the memoized frame is localCheckpoint-backed, not CacheManager-
-      // registered: Dataset.unpersist would be a no-op, so release its
-      // blocks through the LogicalRDD's own RDD (intermediate rounds'
-      // blocks were already released inside duplicateClusters — the
-      // final labels frame is the only live checkpoint per entry)
-      evictStale(clusterCache)(_._1 ne s) { df =>
-        Dedup.checkpointRdd(df) match {
-          case Some(rdd) => rdd.unpersist(false)
-          case None => df.unpersist()
-        }
-      }
+    Artifacts.memo(s, ("clusters", d)) {
       Dedup.duplicateClusters(Similarity.cosineNearDuplicates(
         Tables.embeddings(s, d).filter(col("vec_id") < 300), "vec_id", "embedding", 0.3))
-    })
+    }(Artifacts.release)
 
-  /** Stored LSH signature index, written once per (session, sf dir) as a
-    * (_band, _sig)-bucketed table — the write side of the index lifecycle
-    * `x_cosine_near_dup_lsh_stored` probes. Returns the table name.
+  /** Stored LSH signature index, (_band, _sig)-bucketed — the write side
+    * of the index lifecycle `x_cosine_near_dup_lsh_stored` probes. `dim`
+    * is part of the key AND the name: an index built for one
+    * dimensionality must never serve a differently-dimensioned probe.
     */
-  private val lshIdxCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String, Int), String]()
-
   private def lshIndexTableFor(s: org.apache.spark.sql.SparkSession, d: String,
                                dim: Int): String =
-    // dim is part of the key AND the name: an index built for one
-    // dimensionality must never serve a differently-dimensioned probe
-    lshIdxCache.getOrElseUpdate((s, d, dim), {
-      evictStale(lshIdxCache)(_._1 ne s)(_ => ()) // value is a table name; no blocks
-      val table = s"graft_lsh_sig_${dim}_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      val sigs = Similarity.bandedSignatureRows(
-        Tables.embeddings(s, d), "vec_id", "embedding", dim, bitsPerBand = 8)
-      graft.core.Layout.writeBucketed(sigs, table, buckets = 8, "_band", "_sig")
-      table
-    })
+    storedTable(s, d, s"graft_lsh_sig_${dim}_", buckets = 8, "_band", "_sig")(
+      Similarity.bandedSignatureRows(
+        Tables.embeddings(s, d), "vec_id", "embedding", dim, bitsPerBand = 8))
 
   /** Stored hashed-3-gram pair table
-    * ([[graft.ext.TextAnalysis.ngramPairs]]), written once per
-    * (session, sf dir) bucketed by `_id` — the ingest-time write side of
-    * the lifecycle `x_jaccard_stored` verifies from. Returns the table
-    * name.
+    * ([[graft.ext.TextAnalysis.ngramPairs]]) bucketed by `_id` — the
+    * ingest-time write side of the lifecycle `x_jaccard_stored` verifies
+    * from.
     */
-  private val gramIdxCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
-
   private def gramTableFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    gramIdxCache.getOrElseUpdate((s, d), {
-      evictStale(gramIdxCache)(_._1 ne s)(_ => ()) // value is a table name; no blocks
-      val table = "graft_gram_pairs_3_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      graft.core.Layout.writeBucketed(
-        TextAnalysis.ngramPairs(Tables.documents(s, d), "doc_id", "text", 3),
-        table, buckets = 8, "_id")
-      table
-    })
+    storedTable(s, d, "graft_gram_pairs_3_", buckets = 8, "_id")(
+      TextAnalysis.ngramPairs(Tables.documents(s, d), "doc_id", "text", 3))
 
-  /** Stored duplicated-6-gram hash table ([[graft.ext.Dedup.dupGramTable]]),
-    * written once per (session, sf dir) bucketed by `gram_hash` — the
-    * write side of the span-scrub lifecycle `x_dup_scrub_stored` reads.
-    * Returns the table name.
+  /** Stored duplicated-6-gram hash table ([[graft.ext.Dedup.dupGramTable]])
+    * bucketed by `gram_hash` — the write side of the span-scrub lifecycle
+    * `x_dup_scrub_stored` reads.
     */
-  private val dupGramCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
-
   private def dupGramTableFor(s: org.apache.spark.sql.SparkSession, d: String): String =
-    dupGramCache.getOrElseUpdate((s, d), {
-      evictStale(dupGramCache)(_._1 ne s)(_ => ()) // value is a table name; no blocks
-      val table = "graft_dup_grams_6_" + d.replaceAll("[^a-zA-Z0-9]", "_")
-      graft.core.Layout.writeBucketed(
-        Dedup.dupGramTable(Tables.documents(s, d), "doc_id", "text", 6),
-        table, buckets = 8, "gram_hash")
-      table
-    })
+    storedTable(s, d, "graft_dup_grams_6_", buckets = 8, "gram_hash")(
+      Dedup.dupGramTable(Tables.documents(s, d), "doc_id", "text", 6))
 
   /** The kNN self-join oracle at planes = 6 — shared verbatim by
     * `x_knn_join` (fixed planes) and `x_knn_join_auto` (data-scaled

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 import graft.eval.Eval
 import graft.fed.{ClientConfig, FedAvg}
 import graft.io.{Sinks, Sources}
@@ -21,25 +21,18 @@ object IoModelQueries {
 
   private def ev(s: org.apache.spark.sql.SparkSession, d: String) = Tables.events(s, d)
 
-  /** Scratch dir, unique per sf so verify/bench runs don't collide. */
-  private def tmp(d: String, name: String): String =
-    s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9.]", "_")}/$name"
+  /** Scratch dir, unique per sf dir so verify/bench runs don't collide. */
+  private[queries] def tmp(d: String, name: String): String =
+    s"/tmp/graft_io/${Artifacts.dirName(d)}/$name"
 
-  /** Write-once memo per (session, scratch path): the sink side of a
-    * round-trip query runs on the FIRST invocation only — bench reps then
-    * time the scan, not three overwrite cycles of many small files (the
-    * round-3 `s4_directory_scan` 4.96 s was /tmp churn, not query cost).
-    * Keyed by session like [[ExtQueries]]'s ivf memo so a restarted
-    * session rewrites rather than trusting stale files.
+  /** Write-once memo ([[Artifacts.memo]]) per scratch path: the sink side
+    * of a round-trip query runs on the FIRST invocation in a session only
+    * — bench reps then time the scan, not three overwrite cycles of many
+    * small files (the round-3 `s4_directory_scan` 4.96 s was /tmp churn,
+    * not query cost).
     */
-  private val writeMemo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), Unit]()
-
   private def writeOnce(s: org.apache.spark.sql.SparkSession, path: String)(write: => Unit): Unit =
-    writeMemo.getOrElseUpdate((s, path), {
-      writeMemo.keys.filter(_._1 ne s).foreach(writeMemo.remove) // drop stale sessions
-      write
-    })
+    Artifacts.memo(s, ("write_once", path))(write)(_ => ())
 
   /** Derived 3-channel frame used by P8/R1-style demos. */
   private def channels(s: org.apache.spark.sql.SparkSession, d: String) =

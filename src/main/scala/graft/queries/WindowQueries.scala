@@ -475,7 +475,7 @@ object WindowQueries {
     // J6 — merge per-client files by client key recovered from the path.
     Q("j6_client_merge",
       (s, d) => {
-        val path = s"/tmp/graft_io/${d.replaceAll("[^a-zA-Z0-9.]", "_")}/j6"
+        val path = IoModelQueries.tmp(d, "j6")
         ev(s, d).select((col("user_id") % 4).as("client"), col("event_id"), col("value"))
           .write.mode("overwrite").partitionBy("client").json(path)
         s.read.schema("event_id LONG, value DOUBLE").json(s"$path/*/")

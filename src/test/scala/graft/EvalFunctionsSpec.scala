@@ -876,8 +876,8 @@ class EvalFunctionsSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (1L, 9L)).toDF("id1", "id2")
     val persistedBefore = spark.sparkContext.getPersistentRDDs.values
       .count(_.getStorageLevel.useMemory)
-    val got = graft.ext.Dedup.duplicateClusters(pairs)
-      .as[(Long, Long)].collect().toMap
+    val clusters = graft.ext.Dedup.duplicateClusters(pairs)
+    val got = clusters.as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
     // superseded rounds + edges are released deterministically inside
     // the loop: only the RETURNED labels checkpoint may remain live
@@ -885,6 +885,12 @@ class EvalFunctionsSpec extends SparkSpec {
       .count(_.getStorageLevel.useMemory)
     assert(persistedAfter <= persistedBefore + 1,
       s"before=$persistedBefore after=$persistedAfter — intermediate rounds leaked")
+    // the returned frame projects its checkpoint; release must still find it
+    graft.core.Artifacts.release(clusters)
+    val persistedReleased = spark.sparkContext.getPersistentRDDs.values
+      .count(_.getStorageLevel.useMemory)
+    assert(persistedReleased == persistedBefore,
+      s"before=$persistedBefore released=$persistedReleased — labels checkpoint kept")
   }
 
   test("ext: per-row hashed signature bands reproduce the batch candidate set") {

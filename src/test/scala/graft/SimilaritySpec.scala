@@ -1151,9 +1151,11 @@ class SimilaritySpec extends SparkSpec {
     val r = new scala.util.Random(11)
     val vecs = (0 until 500).map(i => (i.toLong, Seq.fill(16)(r.nextGaussian())))
     // negations of all-non-negative projections land real rows in bucket 0,
-    // the bucket a null projection used to fall into
+    // the bucket a null projection used to fall into; a vector of the
+    // wrong length (9998, 8 of dIn = 16) projects to null as well
     val rows = vecs ++ vecs.map { case (i, v) => (i + 1000L, v.map(-_)) } :+
-      ((9999L, null.asInstanceOf[Seq[Double]]))
+      ((9999L, null.asInstanceOf[Seq[Double]])) :+ ((9998L, Seq.fill(8)(0.5)))
+    val dropped = Set(9998L, 9999L)
     val df = rows.toDF("vec_id", "embedding")
     assert(SignBucketing.Fixed(6).buckets(df, "vec_id", "embedding", 16)
       .filter(col("bucket") === 0L).count() > 0, "fixture must populate bucket 0")
@@ -1163,15 +1165,15 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Option[Double], Long)].collect()
       assert(knn.nonEmpty, s"$b: no neighbours")
       assert(knn.forall(_._3.isDefined), s"$b: knnJoin emitted a null cosine")
-      assert(!knn.exists(n => n._1 == 9999L || n._2 == 9999L),
-        s"$b: the null-vector row took part in knnJoin")
+      assert(!knn.exists(n => dropped(n._1) || dropped(n._2)),
+        s"$b: a null or wrong-length vector row took part in knnJoin")
       val pairs = Similarity.semanticDedup(df, "vec_id", "embedding", 16, minCos = 0.3,
           bucketing = b)
         .select("id1", "id2", "cos").as[(Long, Long, Option[Double])].collect()
       assert(pairs.nonEmpty, s"$b: no pairs")
       assert(pairs.forall(_._3.isDefined), s"$b: semanticDedup emitted a null cosine")
-      assert(!pairs.exists(p => p._1 == 9999L || p._2 == 9999L),
-        s"$b: the null-vector row took part in semanticDedup")
+      assert(!pairs.exists(p => dropped(p._1) || dropped(p._2)),
+        s"$b: a null or wrong-length vector row took part in semanticDedup")
     }
   }
 
