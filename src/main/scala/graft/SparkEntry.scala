@@ -15,9 +15,16 @@ import graft.queries.{ExtQueries, IoModelQueries, Q, RelationalQueries,
   */
 object SparkEntry {
 
-  val registry: Seq[Q] =
-    RelationalQueries.all ++ WindowQueries.all ++ ExtQueries.all ++
+  /** Every row, in the order Bench runs them. Names are unique: the
+    * name-keyed maps below would otherwise drop a row silently.
+    */
+  val registry: Seq[Q] = {
+    val rows = RelationalQueries.all ++ WindowQueries.all ++ ExtQueries.all ++
       IoModelQueries.all ++ StreamParityQueries.all
+    val dup = rows.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dup.isEmpty, s"duplicate registry names: ${dup.toSeq.sorted.mkString(", ")}")
+    rows
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

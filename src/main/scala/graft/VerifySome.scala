@@ -1,13 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 
 /** Iteration harness: [[Verify]] for a SUBSET of registry rows.
   *
   * `runMain graft.VerifySome <sfDir> <outDir> <name>[,<name>…]` dumps just
   * the named queries (plus their oracle_sql.json slice) in the exact
   * layout `tools/check_correctness.py` consumes — so a new row can be
-  * oracle-checked in seconds instead of re-dumping all 190.
+  * oracle-checked in seconds instead of re-dumping the whole registry.
   */
 object VerifySome {
   def main(args: Array[String]): Unit = {
@@ -20,34 +19,11 @@ object VerifySome {
       .config("spark.sql.shuffle.partitions", "8"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
-    // Track failures: a throwing query must fail the harness itself (exit
-    // non-zero) AND stay out of the oracle slice, so an iteration run can
-    // never look green while having produced no parquet for a row.
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    names.foreach { name =>
-      try {
-        SparkEntry.queries(name)(spark, sfDir).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
-        println(s"[verify-some] wrote $name")
-      } catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify-some] $name failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val ok = names.filterNot(failed.contains)
-    val json = SparkEntry.oracleSql.view.filterKeys(ok.contains).toMap
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // A throwing query fails the harness itself (exit non-zero) AND stays
+    // out of the oracle slice, so an iteration run can never look green
+    // while having produced no parquet for a row.
+    val failed = Verify.dump(spark, sfDir, outDir, names, "verify-some",
+      keepFailedOracles = false)
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify-some] FAILED: ${failed.mkString(", ")}")

@@ -160,28 +160,6 @@ object Dedup {
           .otherwise(0L)).as("n_unchanged"))
   }
 
-  /** Word shingles of length `k` as the minhash token set. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = split(text, " +")
-    filter(
-      transform(toks, (_, i) => when(i + k <= size(toks),
-        concat_ws(" ", slice(toks, i + 1, lit(k))))),
-      s => s.isNotNull)
-  }
-
-  /** MinHash signature: for each of `numHashes` seeded hash functions, the
-    * minimum hash over the shingle set — ONE pass over the shingle array
-    * (an N-wide min accumulator), not one transform per hash function
-    * (Catalyst would inline the shingle construction into each, an
-    * N× blowup measured at 16× wall-clock on the bench).
-    */
-  def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
-    aggregate(
-      shingles(text, k),
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc, sequence(lit(0), lit(numHashes - 1)),
-        (a, i) => least(a, xxhash64(s, i))))
-
   /** One row per (doc, shingle-hash): the token-hash array is materialized
     * BELOW the Generate node, so it's computed once per document (Generate
     * does not collapse into the projection under it — unlike HOF lambdas,

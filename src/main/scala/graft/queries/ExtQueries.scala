@@ -82,7 +82,7 @@ object ExtQueries {
     }
 
   /** Stored PQ quantization-stats table, written alongside
-    * [[ivfQuantTableFor]]'s quantizer (r16 — VERDICT r15 task 2): per-dim
+    * [[ivfQuantTableFor]]'s quantizer: per-dim
     * (lo, hi) as a [[graft.functions.PqBounds]] table, so
     * `x_ivf_pq_knn_join_stored` reads BOTH halves of the stored artifact
     * — codes become a function of the artifact, not of whichever corpus
@@ -235,51 +235,58 @@ object ExtQueries {
       "SELECT id1, id2, round(dt / (sqrt(n1) * sqrt(n2)), 6) AS cos FROM cs " +
       "WHERE dt / (sqrt(n1) * sqrt(n2)) > 0.4 ORDER BY id1, id2"
 
-  /** Oracle for `x_ivf_knn_join_pinned` (nlist 8, nprobe 2, k 3): the
-    * full pinned-anchor IVF join restated — anchors are the 8
-    * smallest-id vectors L2-normalized; each row's anchor dots rank
-    * (dot desc, cell asc); rank 1 assigns membership, ranks ≤ 2 the
-    * probe list; candidates join probe→member cells (self excluded)
-    * and the exact cosine top-3 per query ranks (cos desc, neighbor).
-    * Row vectors divide by ‖v‖ AFTER the sum (`sum(x·c)/‖v‖`,
-    * mirroring the [[graft.functions.IvfKernel]] dot-then-scale order —
-    * the r14 advice: a per-element `x/‖v‖·c` sum rounds differently and
-    * can flip a near-tie probe cell). Zero-norm vectors are excluded on
-    * BOTH sides — as anchors and as query/member rows — mirroring the
-    * engine's guard (r13 advice: an unguarded zero norm diverges to
-    * NaN in Spark and to a division error here).
+  /** The pinned-anchor IVF membership restatement shared by every IVF
+    * oracle: anchors are the `nlistExpr` smallest-id nonzero vectors of
+    * `src`, L2-normalized (`cn`..`ccn`); each row's anchor dots (`dt`)
+    * rank (dot desc, cell asc) in `pr`, and rank 1 is membership
+    * (`mem`). Row vectors divide by ‖v‖ AFTER the sum (`sum(x·c)/‖v‖`,
+    * the [[graft.functions.IvfKernel]] dot-then-scale order: a
+    * per-element `x/‖v‖·c` sum rounds differently and can flip a
+    * near-tie probe cell). Zero-norm vectors are excluded on BOTH sides,
+    * as anchors and as rows, mirroring the engine's guard (unguarded, a
+    * zero norm is NaN in Spark and a division error here). `preCtes`,
+    * prepended verbatim, may define `src` and `nl`.
     */
-  private val IvfKnnJoinPinnedOracle: String =
-    ivfKnnJoinPinnedOracleSql("8", "2", "3")
+  private def ivfMembershipCtes(nlistExpr: String, preCtes: String,
+                                src: String = "embeddings"): String =
+    (if (preCtes.isEmpty) "" else preCtes + ", ") +
+      "cn AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding " +
+      s"FROM (SELECT vec_id, embedding FROM $src " +
+      "WHERE embedding IS NOT NULL AND " +
+      "list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0 " +
+      s"ORDER BY vec_id LIMIT $nlistExpr)), " +
+      "cc AS (SELECT ci, generate_subscripts(embedding, 1) - 1 AS j, " +
+      "CAST(unnest(embedding) AS DOUBLE) AS x FROM cn), " +
+      "cno AS (SELECT ci, sqrt(sum(x * x)) AS nrm FROM cc GROUP BY ci), " +
+      "ccn AS (SELECT cc.ci, cc.j, cc.x / cno.nrm AS x " +
+      "FROM cc JOIN cno ON cc.ci = cno.ci), " +
+      "ve AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS j, " +
+      s"CAST(unnest(embedding) AS DOUBLE) AS x FROM $src " +
+      "WHERE embedding IS NOT NULL), " +
+      "vno AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ve GROUP BY vec_id), " +
+      "dt AS (SELECT ve.vec_id, ccn.ci, " +
+      "sum(ve.x * ccn.x) / any_value(vno.nrm) AS dot " +
+      "FROM ve JOIN vno ON ve.vec_id = vno.vec_id " +
+      "JOIN ccn ON ve.j = ccn.j WHERE vno.nrm > 0 GROUP BY 1, 2), " +
+      "pr AS (SELECT vec_id, ci, row_number() OVER " +
+      "(PARTITION BY vec_id ORDER BY dot DESC, ci) AS rk FROM dt), " +
+      "mem AS (SELECT vec_id, ci FROM pr WHERE rk = 1)"
 
-  /** The pinned-anchor IVF oracle with anchor count / probe width /
-    * top-k as SQL expressions, shared by the fixed (nlist 8) and
-    * count-derived (`x_ivf_knn_join_auto_pinned`) rows. `nlistExpr`
-    * may reference CTEs prepended by the caller via `preCtes`.
+  /** [[ivfMembershipCtes]] plus the nprobe-2 probe list (`prob`) and the
+    * probe-cell members of every row, self excluded (`cand(qid, nid)`).
     */
-  private def ivfKnnJoinPinnedOracleSql(nlistExpr: String, nprobeExpr: String,
-                                        kExpr: String, preCtes: String = "",
-                                        src: String = "embeddings"): String =
-    "WITH " + ivfJoinCtes(nlistExpr, nprobeExpr, preCtes, src) + " " +
-      "SELECT qid AS vec_id, nid AS neighbor_id, round(cos, 6) AS cos, rank " +
-      s"FROM rnk WHERE rank <= $kExpr ORDER BY vec_id, rank"
-
-  /** The full pinned-anchor IVF join restatement as a CTE chain ending
-    * at `rnk` (qid, nid, cos, rank) — [[ivfMembershipCtes]] + probe
-    * fan-out, cell candidates, exact cosine, per-query rank. Shared by
-    * [[ivfKnnJoinPinnedOracleSql]] (which just adds the final SELECT)
-    * and composite audits ([[IvfRecallOracle]]) that join `rnk` against
-    * another derivation. `src` swaps the corpus table, e.g. for a
-    * bounded audit slice.
-    */
-  private def ivfJoinCtes(nlistExpr: String, nprobeExpr: String,
-                          preCtes: String = "",
-                          src: String = "embeddings"): String =
+  private def ivfCandidateCtes(nlistExpr: String, preCtes: String, src: String): String =
     ivfMembershipCtes(nlistExpr, preCtes, src) + ", " +
-      s"prob AS (SELECT vec_id, ci FROM pr WHERE rk <= $nprobeExpr), " +
+      "prob AS (SELECT vec_id, ci FROM pr WHERE rk <= 2), " +
       "cand AS (SELECT p.vec_id AS qid, m.vec_id AS nid FROM prob p " +
-      "JOIN mem m ON p.ci = m.ci AND p.vec_id <> m.vec_id), " +
-      "pe AS (SELECT cand.qid, cand.nid, unnest(e1.embedding) AS x1, " +
+      "JOIN mem m ON p.ci = m.ci AND p.vec_id <> m.vec_id)"
+
+  /** The exact tail of the plain IVF join: every candidate's cosine from
+    * the `src` vectors, ranked per query (cos desc, nid), ending at
+    * `rnk(qid, nid, cos, rank)`. Appended after [[ivfCandidateCtes]].
+    */
+  private def ivfExactRankCtes(src: String): String =
+    ", pe AS (SELECT cand.qid, cand.nid, unnest(e1.embedding) AS x1, " +
       "unnest(e2.embedding) AS x2 FROM cand " +
       s"JOIN $src e1 ON e1.vec_id = cand.qid " +
       s"JOIN $src e2 ON e2.vec_id = cand.nid), " +
@@ -290,25 +297,6 @@ object ExtQueries {
       "rnk AS (SELECT qid, nid, dt2 / (sqrt(n1) * sqrt(n2)) AS cos, " +
       "row_number() OVER (PARTITION BY qid " +
       "ORDER BY dt2 / (sqrt(n1) * sqrt(n2)) DESC, nid) AS rank FROM cs)"
-
-  /** The IVF-PQ-lite join restatement as a CTE chain ending at `rnk2`
-    * (qid, nid, cos, rank) — [[ivfMembershipCtes]] + probe fan-out +
-    * cell candidates, then the PQ split: per-dim (lo, hi) stats over the
-    * unnested corpus (`st`), affine uint8 RECONSTRUCTIONS
-    * `lo + clamp(floor((x−lo)/(hi−lo)·255 + .5))/255.0·(hi−lo)` (`rc` —
-    * literally that float order, the [[graft.functions.QuantCosine]]
-    * kernel contract), reconstruction-cosine survivor ranks bounded to
-    * `kPrimeExpr` (`sv`, NaN filtered like the engine), and the exact
-    * cosine top-k re-rank over survivors only (`cs2`/`rnk2`).
-    */
-  private def ivfPqJoinCtes(nlistExpr: String, nprobeExpr: String,
-                            kPrimeExpr: String, preCtes: String = "",
-                            src: String = "embeddings"): String =
-    ivfMembershipCtes(nlistExpr, preCtes, src) + ", " +
-      s"prob AS (SELECT vec_id, ci FROM pr WHERE rk <= $nprobeExpr), " +
-      "cand AS (SELECT p.vec_id AS qid, m.vec_id AS nid FROM prob p " +
-      "JOIN mem m ON p.ci = m.ci AND p.vec_id <> m.vec_id)" +
-      ivfPqChainCtes(kPrimeExpr, "", PqMinMaxStatsSql)
 
   /** The global min/max stats CTE body (the
     * [[graft.functions.PqBounds.stats]] clip = 0 default) — NaN-filtered
@@ -329,9 +317,9 @@ object ExtQueries {
       "row_number() OVER (PARTITION BY j ORDER BY x DESC) AS rd " +
       s"FROM ve WHERE NOT isnan(x)) WHERE ra > $c AND rd > $c GROUP BY j"
 
-  /** The PQ-specific half of the restatement — quantization stats
-    * (`statsSql`, see the two bodies above), affine uint8
-    * RECONSTRUCTIONS `lo + clamp(floor((x−lo)/(hi−lo)·255 + .5))/255.0
+  /** The PQ tail of the IVF join, appended after [[ivfCandidateCtes]] —
+    * quantization stats (`statsSql`, see the two bodies above), affine
+    * uint8 RECONSTRUCTIONS `lo + clamp(floor((x−lo)/(hi−lo)·255 + .5))/255.0
     * ·(hi−lo)` (literally that float order, the
     * [[graft.functions.QuantCosine]] kernel contract),
     * reconstruction-cosine survivor ranks bounded to `kPrimeExpr` (NaN
@@ -374,199 +362,154 @@ object ExtQueries {
       "row_number() OVER (PARTITION BY qid " +
       s"ORDER BY dt2 / (sqrt(n1) * sqrt(n2)) DESC, nid) AS rank FROM cs2$tag)"
 
-  /** Oracle for `x_ivf_knn_join_pinned_capped`: the nlist-8 fixture
-    * algebra on the BOUNDED vec_id < 2000 slice — the sweep stand-in for
-    * the designated-quadratic full fixture (r14 task 4: the two full
-    * fixtures cost ~205 s of the 592 s sf1 sweep and would dominate
-    * sf10; this row keeps their oracle-continuity value-checked at ANY
-    * sf while its cost stays pinned to the slice).
+  /** `nl(nlist)`: the engine's IVF balance rule over `count(*)` of `src`,
+    * the smallest nlist ≥ 8 with nlist² ≥ n·nprobe (nprobe = 2), in the
+    * same exact integer arithmetic as [[graft.ext.Similarity.autoNlist]]:
+    * a floating `ceil(sqrt(…))` could land on either side of a perfect
+    * square across engines.
     */
-  private val IvfKnnJoinPinnedCappedOracle: String =
-    ivfKnnJoinPinnedOracleSql("8", "2", "3",
-      "sl AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 2000)",
-      src = "sl")
+  private def autoNlistCtes(src: String): String =
+    s"nn AS (SELECT count(*) * 2 AS target FROM $src), " +
+      "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
+      "WHERE CAST(m AS HUGEINT) * m >= nn.target)"
 
-  /** Oracle for `x_ivf_pq_knn_join_pinned` (pinned-auto anchors,
-    * nprobe 2, kPrime 8, k 3): every PQ stage restated — the integer
-    * code values, the reconstruction cosines, the survivor cut, and the
-    * exact re-rank (see [[ivfPqJoinCtes]]).
+  /** Id bounds of the fixed corpus slices: a capped stand-in runs on
+    * `vec_id < CapBound`, a recall audit on `vec_id < AuditBound`. Both
+    * bound the row's cost at any sf; the 500-vector gate sfs fit inside.
     */
-  private val IvfPqKnnJoinPinnedOracle: String =
-    "WITH " + ivfPqJoinCtes("(SELECT nlist FROM nl)", "2", "8",
-      "nn AS (SELECT count(*) * 2 AS target FROM embeddings), " +
-        "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
-        "WHERE CAST(m AS HUGEINT) * m >= nn.target)") + " " +
-      "SELECT qid AS vec_id, nid AS neighbor_id, round(cos, 6) AS cos, rank " +
-      "FROM rnk2 WHERE rank <= 3 ORDER BY vec_id, rank"
+  private val CapBound = 2000
+  private val AuditBound = 500
 
-  /** Oracle for `x_ivf_pq_recall`: the [[IvfRecallOracle]] convention
-    * over the PQ lane — exact top-1 on the bounded slice LEFT JOINed
-    * against the PQ join's top-k on the same slice, `recovered` derived
-    * by both engines (a drift in the quantization arithmetic, the
-    * survivor cut, or the re-rank flips a flag and reds the row).
-    */
-  private val IvfPqRecallOracle: String =
-    "WITH " + ivfPqJoinCtes("(SELECT nlist FROM nl)", "2", "8",
-      "sl AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500), " +
-        "nn AS (SELECT count(*) * 2 AS target FROM sl), " +
-        "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
-        "WHERE CAST(m AS HUGEINT) * m >= nn.target)", src = "sl") + ", " +
-      "exd AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.x * b.x) AS dt3 " +
-      "FROM ve a JOIN ve b ON a.j = b.j AND a.vec_id <> b.vec_id GROUP BY 1, 2), " +
-      "exc AS (SELECT exd.qid, exd.nid, exd.dt3 / (va.nrm * vb.nrm) AS cos " +
-      "FROM exd JOIN vno va ON va.vec_id = exd.qid " +
-      "JOIN vno vb ON vb.vec_id = exd.nid WHERE va.nrm > 0 AND vb.nrm > 0), " +
-      "ext AS (SELECT qid, nid, cos, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY cos DESC, nid) AS rk FROM exc), " +
-      "t1 AS (SELECT qid, nid, cos FROM ext WHERE rk = 1), " +
-      "pqk AS (SELECT qid, nid FROM rnk2 WHERE rank <= 3) " +
-      "SELECT t1.qid AS vec_id, t1.nid AS top1_id, round(t1.cos, 6) AS cos, " +
-      "(pqk.nid IS NOT NULL) AS recovered FROM t1 " +
-      "LEFT JOIN pqk ON t1.qid = pqk.qid AND t1.nid = pqk.nid " +
-      "ORDER BY vec_id"
+  /** `sl(vec_id, embedding)`: the slice `vec_id < bound`. */
+  private def sliceCte(bound: Int): String =
+    s"sl AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < $bound)"
 
-  /** Oracle for `x_ivf_pq_outlier_recall` (r16 — VERDICT r15 task 3):
-    * ONE outlier-scaled vector (vec_id 3 × 10⁶ — direction preserved,
-    * so the exact-cosine truth is the unscaled corpus's) against TWO
-    * full PQ chains off the SHARED membership/candidate CTEs: global
-    * min/max stats (`_mm` — the bounds the outlier stretches ~10⁶×,
-    * crushing every dimension's int8 resolution: all normal values
-    * code to 0, reconstructions collapse to one corner, survivor
-    * ranking degenerates to id order) vs rank-clipped stats (`_cl`,
-    * c = 1 — the outlier is the single extreme element per side per
-    * dimension, so dropping one restores the normal range). Both
-    * `recovered` flags are derived by BOTH engines; the row IS the
-    * measured claim "clipped bounds hold recall where min/max
-    * degrades".
+  /** The embeddings a family row joins: all of them, or the capped slice. */
+  private def corpus(s: org.apache.spark.sql.SparkSession, d: String, capped: Boolean) =
+    if (capped) Tables.embeddings(s, d).filter(col("vec_id") < CapBound)
+    else Tables.embeddings(s, d)
+
+  /** The oracle of an IVF gate row (nprobe 2, k 3): anchors at `nlist`,
+    * or at the count-derived [[autoNlistCtes]] nlist when `None`; the
+    * exact or, with `pq`, the kPrime-8 PQ tail; over `sl` when `capped`.
     */
-  // The outlier is a CONSTANT vector (every element exactly 10^6), not a
-  // scaled copy: with hi pinned to one exact value per dimension, every
-  // normal element codes to 0 and every crushed reconstruction is
-  // BIT-IDENTICAL, so the degenerate survivor ranking ties EXACTLY and
-  // falls to the deterministic nid tie-break in both engines. A scaled
-  // outlier leaves near-zero dimensions partially resolved, and the
-  // last-ulp reconstruction-cosine differences (engine-specific sum
-  // order) flipped survivor ranks at the kPrime boundary — measured as
-  // 2/500 recovered-flag diffs before this pin.
-  private val IvfPqOutlierRecallOracle: String = {
-    val pre =
-      "sl AS (SELECT vec_id, CASE WHEN vec_id = 3 THEN " +
-        "list_transform(embedding, x -> 1000000.0) " +
-        "ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END AS embedding " +
-        "FROM embeddings WHERE vec_id < 500), " +
-        "nn AS (SELECT count(*) * 2 AS target FROM sl), " +
-        "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
-        "WHERE CAST(m AS HUGEINT) * m >= nn.target)"
-    "WITH " + ivfMembershipCtes("(SELECT nlist FROM nl)", pre, "sl") + ", " +
-      "prob AS (SELECT vec_id, ci FROM pr WHERE rk <= 2), " +
-      "cand AS (SELECT p.vec_id AS qid, m.vec_id AS nid FROM prob p " +
-      "JOIN mem m ON p.ci = m.ci AND p.vec_id <> m.vec_id)" +
-      ivfPqChainCtes("8", "_mm", PqMinMaxStatsSql) +
-      ivfPqChainCtes("8", "_cl", pqRankClipStatsSql(1)) + ", " +
-      "exd AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.x * b.x) AS dt3 " +
-      "FROM ve a JOIN ve b ON a.j = b.j AND a.vec_id <> b.vec_id GROUP BY 1, 2), " +
-      "exc AS (SELECT exd.qid, exd.nid, exd.dt3 / (va.nrm * vb.nrm) AS cos " +
-      "FROM exd JOIN vno va ON va.vec_id = exd.qid " +
-      "JOIN vno vb ON vb.vec_id = exd.nid WHERE va.nrm > 0 AND vb.nrm > 0), " +
-      "ext AS (SELECT qid, nid, cos, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY cos DESC, nid) AS rk FROM exc), " +
-      "t1 AS (SELECT qid, nid, cos FROM ext WHERE rk = 1), " +
-      "mmk AS (SELECT qid, nid FROM rnk2_mm WHERE rank <= 3), " +
-      "clk AS (SELECT qid, nid FROM rnk2_cl WHERE rank <= 3) " +
-      "SELECT t1.qid AS vec_id, t1.nid AS top1_id, round(t1.cos, 6) AS cos, " +
-      "(mmk.nid IS NOT NULL) AS recovered_minmax, " +
-      "(clk.nid IS NOT NULL) AS recovered_clipped FROM t1 " +
-      "LEFT JOIN mmk ON t1.qid = mmk.qid AND t1.nid = mmk.nid " +
-      "LEFT JOIN clk ON t1.qid = clk.qid AND t1.nid = clk.nid " +
-      "ORDER BY vec_id"
+  private def ivfJoinOracle(nlist: Option[Int], pq: Boolean, capped: Boolean): String = {
+    val src = if (capped) "sl" else "embeddings"
+    val pre = (if (capped) Seq(sliceCte(CapBound)) else Nil) ++
+      nlist.fold(Seq(autoNlistCtes(src)))(_ => Nil)
+    val tail = if (pq) ivfPqChainCtes("8", "", PqMinMaxStatsSql) else ivfExactRankCtes(src)
+    "WITH " + ivfCandidateCtes(nlist.fold("(SELECT nlist FROM nl)")(_.toString),
+        pre.mkString(", "), src) + tail +
+      " SELECT qid AS vec_id, nid AS neighbor_id, round(cos, 6) AS cos, rank " +
+      s"FROM ${if (pq) "rnk2" else "rnk"} WHERE rank <= 3 ORDER BY vec_id, rank"
   }
 
-  /** The membership half of the pinned-anchor IVF restatement, shared
-    * by [[ivfKnnJoinPinnedOracleSql]] and the streaming ingest twin's
-    * oracle: anchors (CTE `cn`..`ccn`), per-row normalized dots (`dt`),
-    * probe ranking (`pr`), and rank-1 membership (`mem`).
+  /** The oracle of a recall audit: `ctes` (an IVF chain over the slice
+    * `sl`, from [[ivfCandidateCtes]]) plus every query's exact top-1
+    * neighbour over the chain's `ve`/`vno` (`t1`), LEFT JOINed against
+    * the top-3 of each ranked relation in `hits` (flag column →
+    * relation). Both sides are restated, so a drift in either the exact
+    * baseline or the ANN chain flips a flag.
     */
-  private def ivfMembershipCtes(nlistExpr: String, preCtes: String = "",
-                                src: String = "embeddings"): String =
-    (if (preCtes.isEmpty) "" else preCtes + ", ") +
-      "cn AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding " +
-      s"FROM (SELECT vec_id, embedding FROM $src " +
-      "WHERE embedding IS NOT NULL AND " +
-      "list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0 " +
-      s"ORDER BY vec_id LIMIT $nlistExpr)), " +
-      "cc AS (SELECT ci, generate_subscripts(embedding, 1) - 1 AS j, " +
-      "CAST(unnest(embedding) AS DOUBLE) AS x FROM cn), " +
-      "cno AS (SELECT ci, sqrt(sum(x * x)) AS nrm FROM cc GROUP BY ci), " +
-      "ccn AS (SELECT cc.ci, cc.j, cc.x / cno.nrm AS x " +
-      "FROM cc JOIN cno ON cc.ci = cno.ci), " +
-      "ve AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS j, " +
-      s"CAST(unnest(embedding) AS DOUBLE) AS x FROM $src " +
-      "WHERE embedding IS NOT NULL), " +
-      "vno AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ve GROUP BY vec_id), " +
-      "dt AS (SELECT ve.vec_id, ccn.ci, " +
-      "sum(ve.x * ccn.x) / any_value(vno.nrm) AS dot " +
-      "FROM ve JOIN vno ON ve.vec_id = vno.vec_id " +
-      "JOIN ccn ON ve.j = ccn.j WHERE vno.nrm > 0 GROUP BY 1, 2), " +
-      "pr AS (SELECT vec_id, ci, row_number() OVER " +
-      "(PARTITION BY vec_id ORDER BY dot DESC, ci) AS rk FROM dt), " +
-      "mem AS (SELECT vec_id, ci FROM pr WHERE rk = 1)"
+  private def recallOracle(ctes: String, hits: Seq[(String, String)]): String = {
+    val hs = hits.zipWithIndex.map { case ((flag, rel), i) => (flag, rel, s"h$i") }
+    "WITH " + ctes + ", " +
+      "exd AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.x * b.x) AS dt3 " +
+      "FROM ve a JOIN ve b ON a.j = b.j AND a.vec_id <> b.vec_id GROUP BY 1, 2), " +
+      "exc AS (SELECT exd.qid, exd.nid, exd.dt3 / (va.nrm * vb.nrm) AS cos " +
+      "FROM exd JOIN vno va ON va.vec_id = exd.qid " +
+      "JOIN vno vb ON vb.vec_id = exd.nid WHERE va.nrm > 0 AND vb.nrm > 0), " +
+      "ext AS (SELECT qid, nid, cos, row_number() OVER " +
+      "(PARTITION BY qid ORDER BY cos DESC, nid) AS rk FROM exc), " +
+      "t1 AS (SELECT qid, nid, cos FROM ext WHERE rk = 1), " +
+      hs.map { case (_, rel, h) => s"$h AS (SELECT qid, nid FROM $rel WHERE rank <= 3)" }
+        .mkString(", ") +
+      " SELECT t1.qid AS vec_id, t1.nid AS top1_id, round(t1.cos, 6) AS cos, " +
+      hs.map { case (flag, _, h) => s"($h.nid IS NOT NULL) AS $flag" }.mkString(", ") +
+      " FROM t1 " +
+      hs.map { case (_, _, h) => s"LEFT JOIN $h ON t1.qid = $h.qid AND t1.nid = $h.nid " }
+        .mkString + "ORDER BY vec_id"
+  }
+
+  /** Candidates of a recall audit: the pinned-auto IVF chain over the
+    * audit slice `sl`, which the CTE `slice` defines.
+    */
+  private def auditCandidateCtes(slice: String): String =
+    ivfCandidateCtes("(SELECT nlist FROM nl)", slice + ", " + autoNlistCtes("sl"), "sl")
 
   /** Oracle for `xs_stream_ivf_pairs`: same-membership-cell pairs under
     * the count-derived pinned-auto anchors — the batch restatement of
     * the ingest twin's candidate set (the drained stream's DISTINCT is
-    * exactly this join; nprobe = 1 slices the [[IvfKnnJoinPinnedOracle]]
-    * algebra down to `mem` ⋈ `mem`).
+    * exactly this join; nprobe = 1 slices the pinned IVF join algebra
+    * down to `mem` ⋈ `mem`).
     */
   val IvfStreamMembershipOracle: String =
-    "WITH " + ivfMembershipCtes("(SELECT nlist FROM nl)",
-      "nn AS (SELECT count(*) * 2 AS target FROM embeddings), " +
-        "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
-        "WHERE CAST(m AS HUGEINT) * m >= nn.target)") +
+    "WITH " + ivfMembershipCtes("(SELECT nlist FROM nl)", autoNlistCtes("embeddings")) +
       " SELECT a.vec_id AS id1, b.vec_id AS id2 FROM mem a " +
       "JOIN mem b ON a.ci = b.ci AND a.vec_id < b.vec_id ORDER BY id1, id2"
 
-  /** Oracle for `x_ivf_knn_join_auto_pinned`: the pinned-anchor IVF
-    * restatement with the anchor count derived from `count(*)` by the
-    * engine's balance rule — smallest nlist ≥ 8 with nlist² ≥ n·nprobe
-    * (nprobe = 2) — in the same exact integer arithmetic
-    * ([[graft.ext.Similarity.autoNlist]]): a floating `ceil(sqrt(…))`
-    * could land on either side of a perfect square across engines.
+  /** Where an IVF join row's quantizer comes from. KMeans seeds its
+    * centroids inside the engine, so those rows are rows-only; pinned
+    * anchors (the nlist smallest-id vectors, L2-normalized, no RNG) are
+    * restated by [[ivfJoinOracle]].
     */
-  private val IvfKnnJoinAutoPinnedOracle: String =
-    ivfKnnJoinPinnedOracleSql("(SELECT nlist FROM nl)", "2", "3",
-      "nn AS (SELECT count(*) * 2 AS target FROM embeddings), " +
-        "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
-        "WHERE CAST(m AS HUGEINT) * m >= nn.target)")
+  private sealed trait IvfSource
+  /** The session-memoized KMeans index ([[ivfFor]], nlist 8). */
+  private case object KMeansMemo extends IvfSource
+  /** KMeans at the count-derived nlist, session-memoized ([[ivfQuantizerForAuto]]). */
+  private case object KMeansAuto extends IvfSource
+  /** KMeans at nlist 8, fit on the corpus the row joins. */
+  private case object KMeansFit extends IvfSource
+  /** Pinned anchors at `nlist`, or at the count-derived nlist when `None`. */
+  private final case class Pinned(nlist: Option[Int]) extends IvfSource
+  /** The count-derived pinned anchors written once per (session, sf) and
+    * reloaded ([[ivfQuantTableFor]]); a PQ row also reloads the stored
+    * quantization stats.
+    */
+  private case object Stored extends IvfSource
 
-  /** Oracle for `x_ivf_recall`: BOTH sides of the recall audit restated
-    * — the exact top-1 neighbor per query (all-pairs within the bounded
-    * id slice, the `x_cosine_lsh_recall` truth-side convention) LEFT
-    * JOINed against the pinned-auto IVF join's top-k on the SAME slice
-    * (the [[ivfJoinCtes]] algebra with `src` = the slice, nlist from the
-    * slice count), so `recovered` is derived, not pinned: a divergence
-    * in EITHER pipeline — quantizer ranking, cell join, top-k, or the
-    * exact baseline — flips a flag and reds the row. The exact side
-    * reuses the slice's `ve`/`vno` unnest CTEs.
+  /** One IVF join row (nprobe 2, k 3), built by [[ivfQ]]; `pq` adds the
+    * kPrime-8 PQ stage, `capped` runs it on the `vec_id < 2000` slice.
     */
-  private val IvfRecallOracle: String =
-    "WITH " + ivfJoinCtes("(SELECT nlist FROM nl)", "2",
-      "sl AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500), " +
-        "nn AS (SELECT count(*) * 2 AS target FROM sl), " +
-        "nl AS (SELECT min(m) AS nlist FROM generate_series(8, 100000) t(m), nn " +
-        "WHERE CAST(m AS HUGEINT) * m >= nn.target)", src = "sl") + ", " +
-      "exd AS (SELECT a.vec_id AS qid, b.vec_id AS nid, sum(a.x * b.x) AS dt3 " +
-      "FROM ve a JOIN ve b ON a.j = b.j AND a.vec_id <> b.vec_id GROUP BY 1, 2), " +
-      "exc AS (SELECT exd.qid, exd.nid, exd.dt3 / (va.nrm * vb.nrm) AS cos " +
-      "FROM exd JOIN vno va ON va.vec_id = exd.qid " +
-      "JOIN vno vb ON vb.vec_id = exd.nid WHERE va.nrm > 0 AND vb.nrm > 0), " +
-      "ext AS (SELECT qid, nid, cos, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY cos DESC, nid) AS rk FROM exc), " +
-      "t1 AS (SELECT qid, nid, cos FROM ext WHERE rk = 1), " +
-      "ivfk AS (SELECT qid, nid FROM rnk WHERE rank <= 3) " +
-      "SELECT t1.qid AS vec_id, t1.nid AS top1_id, round(t1.cos, 6) AS cos, " +
-      "(ivfk.nid IS NOT NULL) AS recovered FROM t1 " +
-      "LEFT JOIN ivfk ON t1.qid = ivfk.qid AND t1.nid = ivfk.nid " +
-      "ORDER BY vec_id"
+  private final case class IvfRow(name: String, source: IvfSource, pq: Boolean = false,
+                                  capped: Boolean = false)
+
+  private def ivfQ(r: IvfRow): Q = Q(r.name, (s, d) => {
+    val emb = corpus(s, d, r.capped)
+    val quantizer = r.source match {
+      case KMeansMemo => IvfQuantizer.fromModel(ivfFor(s, d)._2)
+      case KMeansAuto => ivfQuantizerForAuto(s, d)
+      case KMeansFit => IvfQuantizer.fit(emb, "embedding", nlist = 8)
+      case Pinned(Some(n)) => IvfQuantizer.pinned(emb, "vec_id", "embedding", nlist = n)
+      case Pinned(None) => pinnedAuto(emb)
+      case Stored => IvfQuantizer.stored(s.table(ivfQuantTableFor(s, d)))
+    }
+    val pq = Option.when(r.pq)(IvfPq(
+      if (r.source == Stored) PqBounds.stored(s.table(ivfPqStatsTableFor(s, d)))
+      else PqBounds.stats(emb, "embedding"), kPrime = 8))
+    knnRows(Similarity.ivfKnnJoin(emb, "vec_id", "embedding", quantizer, nprobe = 2, k = 3, pq))
+  }, r.source match {
+    case Pinned(nlist) => Some(ivfJoinOracle(nlist, r.pq, r.capped))
+    case Stored => Some(ivfJoinOracle(None, r.pq, r.capped))
+    case _ => None
+  })
+
+  /** The recall-audit rows: every `slice` row's exact top-1 neighbour
+    * (vec_id, top1_id, cos), with one flag per `hits` entry (flag column,
+    * ANN join) saying whether that join's top-k holds it.
+    */
+  private def recallFlags(slice: org.apache.spark.sql.DataFrame,
+                          hits: (String, org.apache.spark.sql.DataFrame)*) = {
+    val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
+      .select(col("vec_id"), col("neighbor_id").as("top1_id"), round(col("cos"), 6).as("cos"))
+    hits.foldLeft(truth) { case (t, (flag, hit)) =>
+        t.join(hit.select(col("vec_id"), col("neighbor_id").as("top1_id"), lit(true).as(s"_$flag")),
+          Seq("vec_id", "top1_id"), "left")
+      }
+      .select(Seq(col("vec_id"), col("top1_id"), col("cos")) ++ hits.map { case (flag, _) =>
+        coalesce(col(s"_$flag"), lit(false)).as(flag) }: _*)
+      .orderBy("vec_id")
+  }
 
   /** Oracle for `x_cosine_near_dup_lsh_auto`: same pipeline, with the
     * band width derived from `count(*)` by the shared occupancy rule
@@ -876,297 +819,186 @@ object ExtQueries {
     storedTable(s, d, "graft_dup_grams_6_", buckets = 8, "gram_hash")(
       Dedup.dupGramTable(Tables.documents(s, d), "doc_id", "text", 6))
 
-  /** The kNN self-join oracle at planes = 6 — shared verbatim by
-    * `x_knn_join` (fixed planes) and `x_knn_join_auto` (data-scaled
-    * planes): with [[SignBucketing.Auto]]'s defaults every corpus
-    * up to 4096 vectors resolves to planes = 6, and the largest
-    * driver-checked embeddings table (sf0.1) is 2000 — so the auto
-    * form is oracle-green at every checked sf and diverges from the
-    * fixed form only past the size where the fixed form's per-bucket
-    * fan-out has already gone quadratic (measured ×45 wall at ×10
-    * data; the auto form re-measured ×13 — see DESIGN.md).
+  /** What a sign-bucket row calls and returns. Every kNN row asks for
+    * k = [[KnnK]] and every dedup row for cosine ≥ [[DedupMinCos]].
     */
-  private val knnJoinOracleSql: String =
-    "WITH x AS (SELECT vec_id, len(embedding) AS dim, " +
-      "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-      "generate_subscripts(embedding, 1) - 1 AS j FROM embeddings), " +
-      "io AS (SELECT unnest(generate_series(0, 5)) AS i), " +
-      "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-      "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-      "THEN 1 ELSE -1 END) / sqrt(6.0) AS y FROM x CROSS JOIN io GROUP BY vec_id, i), " +
-      "bk AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-      "THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS bucket " +
-      "FROM p GROUP BY vec_id), " +
-      "pr AS (SELECT a.vec_id AS qid, b.vec_id AS nid " +
-      "FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id), " +
-      "dd AS (SELECT qid, nid, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.qid " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.nid), " +
-      "sm AS (SELECT qid, nid, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM dd GROUP BY qid, nid), " +
-      "r AS (SELECT qid AS vec_id, nid AS neighbor_id, " +
-      "dt / (sqrt(nx) * sqrt(ny)) AS c, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY dt / (sqrt(nx) * sqrt(ny)) DESC, nid) AS rk " +
-      "FROM sm) " +
-      "SELECT vec_id, neighbor_id, round(c, 6) AS cos, CAST(rk AS BIGINT) AS rank " +
-      "FROM r WHERE rk <= 3 ORDER BY vec_id, rank"
+  private sealed trait SignCall
+  /** `knnJoin`: (vec_id, neighbor_id, cos, rank). */
+  private final case class Knn(b: SignBucketing) extends SignCall
+  /** `semanticDedup` with its bucket column: (id1, id2, bucket, cos). */
+  private final case class Pairs(b: SignBucketing) extends SignCall
+  /** The connected cover through the `semanticDedupCollapsed` forwarder
+    * at its own default parameters, the form the corpus benchmark
+    * compiles against: (id1, id2, cos). `c` is what the oracle restates.
+    */
+  private final case class Cover(c: SignBucketing.Collapsed) extends SignCall
+  /** `semanticDedup` with no bucketing argument: (id1, id2, cos). `c` is
+    * what the oracle restates.
+    */
+  private final case class DefaultCover(c: SignBucketing.Collapsed) extends SignCall
 
-  /** The `x_semantic_dedup` restatement (portable JL sign buckets at
-    * 6 planes, within-bucket exact cosine ≥ 0.4) — a named val so the
-    * capped stand-in reuses it verbatim on the bounded slice.
-    */
-  private val SemanticDedupOracleSql: String =
-    "WITH x AS (SELECT vec_id, len(embedding) AS dim, " +
-      "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-      "generate_subscripts(embedding, 1) - 1 AS j FROM embeddings), " +
-      "io AS (SELECT unnest(generate_series(0, 5)) AS i), " +
-      "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-      "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-      "THEN 1 ELSE -1 END) / sqrt(6.0) AS y FROM x CROSS JOIN io GROUP BY vec_id, i), " +
-      "bk AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-      "THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS bucket " +
-      "FROM p GROUP BY vec_id), " +
-      "pr AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.bucket AS bucket " +
-      "FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id), " +
-      "d AS (SELECT id1, id2, bucket, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.id1 " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.id2), " +
-      "sm AS (SELECT id1, id2, bucket, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM d GROUP BY id1, id2, bucket) " +
-      "SELECT id1, id2, bucket, round(dt / (sqrt(nx) * sqrt(ny)), 6) AS cos " +
-      "FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) >= 0.4 ORDER BY id1, id2"
+  private val KnnK = 3
+  private val DedupMinCos = 0.4
 
-  /** Rewrites an embeddings-sourced oracle to run on the bounded
-    * `vec_id < 2000` slice — the capped stand-in pattern (r16): every
-    * `embeddings` reference (scan, count, re-score joins) swaps to the
-    * `sl` slice CTE, so the restated algebra is IDENTICAL and only the
-    * universe shrinks. Purely textual, which is safe here because the
-    * oracle strings are pure SQL with no other token containing the
-    * word.
+  /** One sign-bucket registry row, built by [[signQ]]; `capped` runs it
+    * on the `vec_id < 2000` slice.
     */
-  private def cappedEmbeddingsOracle(oracle: String): String = {
-    require(oracle.startsWith("WITH "), "expected a WITH-prefixed oracle")
-    "WITH sl AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 2000), " +
-      oracle.stripPrefix("WITH ").replace("embeddings", "sl")
-  }
+  private final case class SignRow(name: String, call: SignCall, capped: Boolean = false)
 
-  /** [[knnJoinOracleSql]] with the plane count DERIVED from count(*) by
-    * the same integer rule as [[SignBucketing.Auto.planes]] (the
-    * `x_semantic_dedup_auto` pattern) — so `x_knn_join_auto` is
-    * oracle-green at ANY corpus size, not just the sizes where the rule
-    * resolves to the pinned 6 (the gapped-sf1 sweep caught the shared
-    * fixed-6 oracle diverging at 20 k vectors → 9 planes).
-    */
-  private val knnJoinAutoOracleSql: String =
-    "WITH nn AS (SELECT (count(*) + 63) // 64 AS needed FROM embeddings), " +
-      "pl AS (SELECT min(p) AS planes FROM generate_series(6, 62) t(p), nn " +
-      "WHERE (CAST(1 AS BIGINT) << p) >= nn.needed), " +
-      "x AS (SELECT vec_id, len(embedding) AS dim, " +
-      "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-      "generate_subscripts(embedding, 1) - 1 AS j FROM embeddings), " +
-      "io AS (SELECT unnest(generate_series(0, planes - 1)) AS i FROM pl), " +
-      "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-      "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-      "THEN 1 ELSE -1 END) / sqrt((SELECT planes FROM pl) * 1.0) AS y " +
-      "FROM x CROSS JOIN io GROUP BY vec_id, i), " +
-      "bk AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-      "THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS bucket " +
-      "FROM p GROUP BY vec_id), " +
-      "pr AS (SELECT a.vec_id AS qid, b.vec_id AS nid " +
-      "FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id), " +
-      "dd AS (SELECT qid, nid, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.qid " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.nid), " +
-      "sm AS (SELECT qid, nid, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM dd GROUP BY qid, nid), " +
-      "r AS (SELECT qid AS vec_id, nid AS neighbor_id, " +
-      "dt / (sqrt(nx) * sqrt(ny)) AS c, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY dt / (sqrt(nx) * sqrt(ny)) DESC, nid) AS rk " +
-      "FROM sm) " +
-      "SELECT vec_id, neighbor_id, round(c, 6) AS cos, CAST(rk AS BIGINT) AS rank " +
-      "FROM r WHERE rk <= 3 ORDER BY vec_id, rank"
+  private def signQ(r: SignRow): Q = Q(r.name, (s, d) => {
+    val emb = corpus(s, d, r.capped)
+    val dIn = queryVec(s, d).length
+    def cover(pairs: org.apache.spark.sql.DataFrame) =
+      pairs.select(col("id1"), col("id2"), round(col("cos"), 6).as("cos")).orderBy("id1", "id2")
+    r.call match {
+      case Knn(b) =>
+        knnRows(Similarity.knnJoin(emb, "vec_id", "embedding", dIn, KnnK, b))
+      case Pairs(b) =>
+        Similarity.semanticDedup(emb, "vec_id", "embedding", dIn, DedupMinCos, b)
+          .select(col("id1"), col("id2"), col("bucket"), round(col("cos"), 6).as("cos"))
+          .orderBy("id1", "id2")
+      case Cover(_) =>
+        cover(Similarity.semanticDedupCollapsed(emb, "vec_id", "embedding", dIn, DedupMinCos))
+      case DefaultCover(_) =>
+        cover(Similarity.semanticDedup(emb, "vec_id", "embedding", dIn, DedupMinCos))
+    }
+  }, Some(signOracle(r)))
 
-  /** CTE block restating [[SignBucketing.Adaptive]] in DuckDB — the
-    * r13 adaptive promotion: level-1 sign buckets at the Auto plane
-    * count, the bucket occupancy histogram, the delta rule (smallest
-    * d ≥ 1 with `maxOcc >> d ≤ cap`, 0 when no bucket exceeds the cap,
-    * capped at 20 exactly like the Scala loop), level-2 sub-signs for
-    * rows planes..planes+delta−1 of the SAME portable JL family (the
-    * sign of row i is height-independent, so the unscaled sum's sign
-    * matches Spark's scaled projection), and the final post-split id
-    * `(bucket << delta) | (hot ? sub : 0)`. Ends in `bk2(vec_id,
-    * bucket)`; `src` must provide (vec_id, embedding) — `embeddings`
-    * for the direct rows, the `reps` CTE for the collapsed ones.
-    * Every quantity is a pure integer function of count(*) and the
-    * bucket histogram, so the restatement is engine-agnostic.
+  /** A kNN join's rows as the registry compares them. */
+  private def knnRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("vec_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"), col("rank"))
+      .orderBy("vec_id", "rank")
+
+  /** `x(vec_id, dim, v, j)` unnests `src`, and `p(vec_id, i, y)` projects
+    * every vector onto the portable JL rows `0 until planes` (SQL).
     */
-  private def adaptiveBucketCtes(targetBucket: Int, minPlanes: Int,
-                                 splitFactor: Int, src: String): String = {
-    val cap = targetBucket.toLong * splitFactor
+  private def jlProjectionCtes(src: String, planes: String): String =
+    "x AS (SELECT vec_id, len(embedding) AS dim, CAST(unnest(embedding) AS DOUBLE) AS v, " +
+      s"generate_subscripts(embedding, 1) - 1 AS j FROM $src), " + jlRowsCte("p", "0", planes)
+
+  /** `name(vec_id, i, y)`: the projection of every `x` vector onto JL
+    * rows `from until until`. Entry (i, j) is +1 when
+    * `((i·dim + j)·2654435761) mod 2^32 < 2^31`, else −1
+    * ([[Similarity.jlMatrix]]), so the sign of row i does not depend on
+    * the matrix height. The 1/√planes scale is left out: no bucket
+    * changes under positive scaling.
+    */
+  private def jlRowsCte(name: String, from: String, until: String): String =
+    s"$name AS (SELECT vec_id, i, sum(v * CASE WHEN " +
+      "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 THEN 1 ELSE -1 END) AS y " +
+      s"FROM x CROSS JOIN (SELECT unnest(generate_series($from, $until - 1)) AS i) " +
+      "GROUP BY vec_id, i)"
+
+  /** `name(vec_id, out)`: Σ 2^(shift) over the rows of `proj` with y ≥ 0. */
+  private def signFoldCte(name: String, out: String, proj: String, shift: String = "i"): String =
+    s"$name AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
+      s"THEN (CAST(1 AS BIGINT) << ($shift)) ELSE 0 END) AS BIGINT) AS $out FROM $proj GROUP BY vec_id)"
+
+  /** `pl(planes)`: [[SignBucketing.Auto.planes]] over `count(*)` of
+    * `src`, the smallest p ≥ minPlanes with ceil(n / targetBucket) ≤ 2^p,
+    * in integer arithmetic (no floating log2).
+    */
+  private def planeRuleCtes(targetBucket: Long, minPlanes: Int, src: String): String =
     s"nn AS (SELECT (count(*) + ${targetBucket - 1}) // $targetBucket AS needed FROM $src), " +
       s"pl AS (SELECT min(p) AS planes FROM generate_series($minPlanes, 62) t(p), nn " +
-      "WHERE (CAST(1 AS BIGINT) << p) >= nn.needed), " +
-      "x AS (SELECT vec_id, len(embedding) AS dim, " +
-      "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-      s"generate_subscripts(embedding, 1) - 1 AS j FROM $src), " +
-      "io AS (SELECT unnest(generate_series(0, planes - 1)) AS i FROM pl), " +
-      "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-      "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-      "THEN 1 ELSE -1 END) AS y FROM x CROSS JOIN io GROUP BY vec_id, i), " +
-      "bk AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-      "THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS bucket " +
-      "FROM p GROUP BY vec_id), " +
-      "oc AS (SELECT bucket, count(*) AS occ FROM bk GROUP BY bucket), " +
-      s"dl AS (SELECT CASE WHEN max(occ) <= $cap THEN 0 ELSE " +
-      "coalesce((SELECT min(d) FROM generate_series(1, 19) t(d) " +
-      s"WHERE ((SELECT max(occ) FROM oc) >> d) <= $cap), 20) END AS delta FROM oc), " +
-      "io2 AS (SELECT unnest(generate_series(planes, planes + delta - 1)) AS i FROM pl, dl), " +
-      "p2 AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-      "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-      "THEN 1 ELSE -1 END) AS y FROM x CROSS JOIN io2 GROUP BY vec_id, i), " +
-      "sb AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-      "THEN (CAST(1 AS BIGINT) << (i - (SELECT planes FROM pl))) ELSE 0 END) AS BIGINT) AS sub " +
-      "FROM p2 GROUP BY vec_id), " +
-      "bk2 AS (SELECT b.vec_id, ((b.bucket << (SELECT delta FROM dl)) | " +
-      s"CASE WHEN o.occ > $cap THEN coalesce(s.sub, 0) ELSE 0 END) AS bucket " +
-      "FROM bk b JOIN oc o ON b.bucket = o.bucket LEFT JOIN sb s ON s.vec_id = b.vec_id)"
+      "WHERE (CAST(1 AS BIGINT) << p) >= nn.needed)"
+
+  /** `bk(vec_id, bucket)` for every `src` vector under `b`, restated
+    * from its numeric fields only. Adaptive: level-1 buckets at the Auto
+    * plane count (`b1`), the occupancy histogram (`oc`), the delta rule
+    * (smallest d ≥ 1 with `maxOcc >> d ≤ cap`, 0 when no bucket exceeds
+    * the cap, 20 at most, as the Scala loop), level-2 signs from JL rows
+    * planes until planes + delta (`sb`), and the post-split id
+    * `(bucket << delta) | (hot ? sub : 0)`. Collapsed: the same over the
+    * min-id representative of each distinct vector (`reps`), with
+    * `mem(id, rep)` mapping every non-null row to its representative
+    * (DuckDB groups and joins LIST values natively, like Spark's groupBy
+    * on the array column).
+    */
+  private[queries] def signBucketCtes(b: SignBucketing, src: String): String = b match {
+    case SignBucketing.Fixed(planes) =>
+      jlProjectionCtes(src, planes.toString) + ", " + signFoldCte("bk", "bucket", "p")
+    case SignBucketing.Auto(targetBucket, minPlanes) =>
+      planeRuleCtes(targetBucket, minPlanes, src) + ", " +
+        jlProjectionCtes(src, "(SELECT planes FROM pl)") + ", " + signFoldCte("bk", "bucket", "p")
+    case SignBucketing.Adaptive(targetBucket, minPlanes, splitFactor) =>
+      val cap = targetBucket * splitFactor
+      planeRuleCtes(targetBucket, minPlanes, src) + ", " +
+        jlProjectionCtes(src, "(SELECT planes FROM pl)") + ", " + signFoldCte("b1", "bucket", "p") + ", " +
+        "oc AS (SELECT bucket, count(*) AS occ FROM b1 GROUP BY bucket), " +
+        s"dl AS (SELECT CASE WHEN max(occ) <= $cap THEN 0 ELSE " +
+        "coalesce((SELECT min(d) FROM generate_series(1, 19) t(d) " +
+        s"WHERE ((SELECT max(occ) FROM oc) >> d) <= $cap), 20) END AS delta FROM oc), " +
+        jlRowsCte("p2", "(SELECT planes FROM pl)", "(SELECT planes + delta FROM pl, dl)") + ", " +
+        signFoldCte("sb", "sub", "p2", "i - (SELECT planes FROM pl)") + ", " +
+        "bk AS (SELECT b.vec_id, ((b.bucket << (SELECT delta FROM dl)) | " +
+        s"CASE WHEN o.occ > $cap THEN coalesce(s.sub, 0) ELSE 0 END) AS bucket " +
+        "FROM b1 b JOIN oc o ON b.bucket = o.bucket LEFT JOIN sb s ON s.vec_id = b.vec_id)"
+    case SignBucketing.Collapsed(targetBucket, minPlanes, splitFactor) =>
+      s"reps AS (SELECT min(vec_id) AS vec_id, embedding FROM $src " +
+        "WHERE embedding IS NOT NULL GROUP BY embedding), " +
+        s"mem AS (SELECT e.vec_id AS id, r0.vec_id AS rep FROM $src e " +
+        "JOIN reps r0 ON e.embedding = r0.embedding), " +
+        signBucketCtes(SignBucketing.Adaptive(targetBucket, minPlanes, splitFactor), "reps")
   }
 
-  /** The kNN pairing/ranking tail over an adaptive `bk2` (the
-    * [[knnJoinOracleSql]] tail verbatim, with `+ 0` normalizing a
-    * cosine that rounds to zero from below — DuckDB `round` keeps the
-    * IEEE sign bit, Spark's cannot emit −0.0; the m2b lesson applied
-    * up front). `vecSrc` supplies the vectors for exact re-scoring.
+  /** The DuckDB restatement of a sign-bucket row: [[signBucketCtes]],
+    * same-bucket pairs re-scored by exact cosine from the corpus (`sm`),
+    * then the kNN or dedup tail. Over `Collapsed` buckets the kNN tail
+    * fans each representative's top-k out to the k smallest member ids
+    * of each neighbour cluster (later members cannot rank) and adds
+    * twins at cos 1.0 for the k + 1 smallest ids per cluster, then
+    * re-ranks per original id; the dedup tail adds the star edges
+    * (rep → member, cos 1.0). `+ 0` turns DuckDB's −0.0 from `round`
+    * into the 0.0 Spark emits.
     */
-  private def knnAdaptiveOracleSql(targetBucket: Int, minPlanes: Int,
-                                   splitFactor: Int): String =
-    "WITH " + adaptiveBucketCtes(targetBucket, minPlanes, splitFactor, "embeddings") + ", " +
-      "pr AS (SELECT a.vec_id AS qid, b.vec_id AS nid " +
-      "FROM bk2 a JOIN bk2 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id), " +
-      "dd AS (SELECT qid, nid, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.qid " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.nid), " +
-      "sm AS (SELECT qid, nid, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM dd GROUP BY qid, nid), " +
-      "r AS (SELECT qid AS vec_id, nid AS neighbor_id, " +
-      "dt / (sqrt(nx) * sqrt(ny)) AS c, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY dt / (sqrt(nx) * sqrt(ny)) DESC, nid) AS rk " +
-      "FROM sm) " +
-      "SELECT vec_id, neighbor_id, round(c, 6) + 0 AS cos, CAST(rk AS BIGINT) AS rank " +
-      "FROM r WHERE rk <= 3 ORDER BY vec_id, rank"
-
-  /** The semantic-dedup tail over an adaptive `bk2`: within-(post-split)-
-    * bucket pairs, exact cosine ≥ `minCos`, bucket id exposed.
-    */
-  private def semanticDedupAdaptiveOracleSql(targetBucket: Int, minPlanes: Int,
-                                             splitFactor: Int, minCos: Double): String =
-    "WITH " + adaptiveBucketCtes(targetBucket, minPlanes, splitFactor, "embeddings") + ", " +
-      "pr AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.bucket AS bucket " +
-      "FROM bk2 a JOIN bk2 b ON a.bucket = b.bucket AND a.vec_id < b.vec_id), " +
-      "d AS (SELECT id1, id2, bucket, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.id1 " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.id2), " +
-      "sm AS (SELECT id1, id2, bucket, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM d GROUP BY id1, id2, bucket) " +
-      "SELECT id1, id2, bucket, round(dt / (sqrt(nx) * sqrt(ny)), 6) + 0 AS cos " +
-      s"FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) >= $minCos ORDER BY id1, id2"
-
-  /** The min-id-representative collapse CTE shared by the collapsed
-    * oracles: `reps(vec_id, embedding)` one row per distinct vector
-    * value, `mem(id, rep)` every non-null row to its representative
-    * (DuckDB groups/joins on LIST values natively — array equality,
-    * like Spark's groupBy on the array column).
-    */
-  private val collapseCtes: String =
-    "reps AS (SELECT min(vec_id) AS vec_id, embedding FROM embeddings " +
-      "WHERE embedding IS NOT NULL GROUP BY embedding), " +
-      "mem AS (SELECT e.vec_id AS id, r0.vec_id AS rep FROM embeddings e " +
-      "JOIN reps r0 ON e.embedding = r0.embedding)"
-
-  /** `knnJoin` with [[SignBucketing.Collapsed]] restated: collapse → rep-level
-    * adaptive kNN (k = 3) → fan-out. Neighbor clusters expand to their
-    * k smallest member ids (same cosine, id tie-break — later members
-    * cannot rank), twins enter at literal cos 1.0 for the k+1 smallest
-    * ids per cluster, and the final per-original top-k re-ranks by
-    * (cos DESC, id).
-    */
-  private def knnCollapsedOracleSql(targetBucket: Int, minPlanes: Int,
-                                    splitFactor: Int, k: Int): String =
-    "WITH " + collapseCtes + ", " +
-      adaptiveBucketCtes(targetBucket, minPlanes, splitFactor, "reps") + ", " +
-      "pr AS (SELECT a.vec_id AS qid, b.vec_id AS nid " +
-      "FROM bk2 a JOIN bk2 b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id), " +
-      "dd AS (SELECT qid, nid, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.qid " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.nid), " +
-      "sm AS (SELECT qid, nid, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM dd GROUP BY qid, nid), " +
-      "tk AS (SELECT qid, nid, c FROM (SELECT qid, nid, " +
-      "dt / (sqrt(nx) * sqrt(ny)) AS c, row_number() OVER " +
-      "(PARTITION BY qid ORDER BY dt / (sqrt(nx) * sqrt(ny)) DESC, nid) AS rk " +
-      s"FROM sm) WHERE rk <= $k), " +
-      "mr AS (SELECT id, rep, row_number() OVER (PARTITION BY rep ORDER BY id) AS mrk FROM mem), " +
-      s"nbm AS (SELECT rep AS nrep, id AS nmem FROM mr WHERE mrk <= $k), " +
-      "ex AS (SELECT m.id AS oid, n.nmem AS neighbor_id, t.c AS cos " +
-      "FROM mem m JOIN tk t ON t.qid = m.rep JOIN nbm n ON n.nrep = t.nid), " +
-      s"twc AS (SELECT rep, id AS twin FROM mr WHERE mrk <= ${k + 1}), " +
-      "tw AS (SELECT m.id AS oid, t.twin AS neighbor_id, CAST(1.0 AS DOUBLE) AS cos " +
-      "FROM mem m JOIN twc t ON t.rep = m.rep WHERE m.id <> t.twin), " +
-      "u AS (SELECT * FROM ex UNION ALL SELECT * FROM tw), " +
-      "f AS (SELECT oid, neighbor_id, cos, row_number() OVER " +
-      "(PARTITION BY oid ORDER BY cos DESC, neighbor_id) AS rk2 FROM u) " +
-      "SELECT oid AS vec_id, neighbor_id, round(cos, 6) + 0 AS cos, " +
-      s"CAST(rk2 AS BIGINT) AS rank FROM f WHERE rk2 <= $k ORDER BY vec_id, rank"
-
-  /** [[Similarity.semanticDedupCollapsed]] restated: rep-level adaptive
-    * pairs (cross-cluster edges) UNION star edges (rep → member,
-    * literal cos 1.0) — the connected-cover contract.
-    */
-  private def semanticDedupCollapsedOracleSql(targetBucket: Int, minPlanes: Int,
-                                              splitFactor: Int, minCos: Double): String =
-    "WITH " + collapseCtes + ", " +
-      adaptiveBucketCtes(targetBucket, minPlanes, splitFactor, "reps") + ", " +
-      "pr AS (SELECT a.vec_id AS id1, b.vec_id AS id2 " +
-      "FROM bk2 a JOIN bk2 b ON a.bucket = b.bucket AND a.vec_id < b.vec_id), " +
-      "d AS (SELECT id1, id2, unnest(e1.embedding) AS xx, " +
-      "unnest(e2.embedding) AS yy FROM pr " +
-      "JOIN embeddings e1 ON e1.vec_id = pr.id1 " +
-      "JOIN embeddings e2 ON e2.vec_id = pr.id2), " +
-      "sm AS (SELECT id1, id2, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-      "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-      "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-      "FROM d GROUP BY id1, id2), " +
-      "rp AS (SELECT id1, id2, dt / (sqrt(nx) * sqrt(ny)) AS c FROM sm " +
-      s"WHERE dt / (sqrt(nx) * sqrt(ny)) >= $minCos), " +
-      "st AS (SELECT rep AS id1, id AS id2, CAST(1.0 AS DOUBLE) AS c " +
-      "FROM mem WHERE id <> rep) " +
-      "SELECT id1, id2, round(c, 6) + 0 AS cos " +
-      "FROM (SELECT * FROM rp UNION ALL SELECT * FROM st) u ORDER BY id1, id2"
+  private def signOracle(r: SignRow): String = {
+    val (b, knn, bucketCol) = r.call match {
+      case Knn(b) => (b, true, false)
+      case Pairs(b) => (b, false, true)
+      case Cover(c) => (c, false, false)
+      case DefaultCover(c) => (c, false, false)
+    }
+    val base = if (r.capped) "sl" else "embeddings"
+    val collapsed = b.isInstanceOf[SignBucketing.Collapsed]
+    val pairs =
+      s"pr AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.bucket AS bucket FROM bk a " +
+        s"JOIN bk b ON a.bucket = b.bucket AND a.vec_id ${if (knn) "<>" else "<"} b.vec_id), " +
+        "dd AS (SELECT id1, id2, bucket, unnest(e1.embedding) AS xx, " +
+        s"unnest(e2.embedding) AS yy FROM pr JOIN $base e1 ON e1.vec_id = pr.id1 " +
+        s"JOIN $base e2 ON e2.vec_id = pr.id2), " +
+        "sm AS (SELECT id1, id2, bucket, dt / (sqrt(nx) * sqrt(ny)) AS c FROM (" +
+        "SELECT id1, id2, bucket, sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
+        "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
+        "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny FROM dd GROUP BY id1, id2, bucket))"
+    val tail =
+      if (knn) {
+        val ranked = "r AS (SELECT id1, id2, c, row_number() OVER " +
+          "(PARTITION BY id1 ORDER BY c DESC, id2) AS rk FROM sm), "
+        val nb =
+          if (!collapsed) "nb AS (SELECT id1 AS vec_id, id2 AS neighbor_id, c, rk FROM r)"
+          else "mr AS (SELECT id, rep, row_number() OVER (PARTITION BY rep ORDER BY id) AS mrk FROM mem), " +
+            "ex AS (SELECT m.id AS vec_id, n.id AS neighbor_id, t.c FROM mem m " +
+            s"JOIN r t ON t.id1 = m.rep AND t.rk <= $KnnK JOIN mr n ON n.rep = t.id2 AND n.mrk <= $KnnK), " +
+            "tw AS (SELECT m.id AS vec_id, t.id AS neighbor_id, CAST(1.0 AS DOUBLE) AS c FROM mem m " +
+            s"JOIN mr t ON t.rep = m.rep AND t.mrk <= ${KnnK + 1} WHERE m.id <> t.id), " +
+            "nb AS (SELECT vec_id, neighbor_id, c, row_number() OVER " +
+            "(PARTITION BY vec_id ORDER BY c DESC, neighbor_id) AS rk " +
+            "FROM (SELECT * FROM ex UNION ALL SELECT * FROM tw))"
+        ranked + nb + " SELECT vec_id, neighbor_id, round(c, 6) + 0 AS cos, " +
+          s"CAST(rk AS BIGINT) AS rank FROM nb WHERE rk <= $KnnK ORDER BY vec_id, rank"
+      } else {
+        val cols = if (bucketCol) "id1, id2, bucket" else "id1, id2"
+        val star =
+          if (!collapsed) ""
+          else s" UNION ALL SELECT rep, id, ${if (bucketCol) "NULL, " else ""}" +
+            "CAST(1.0 AS DOUBLE) FROM mem WHERE id <> rep"
+        s"rp AS (SELECT $cols, c FROM sm WHERE c >= $DedupMinCos$star) " +
+          s"SELECT $cols, round(c, 6) + 0 AS cos FROM rp ORDER BY id1, id2"
+      }
+    "WITH " + (if (r.capped) sliceCte(CapBound) + ", " else "") +
+      signBucketCtes(b, base) + ", " + pairs + ", " + tail
+  }
 
   /** The UNMATERIALIZED plans behind the memoized queries, for the plan
     * audit (ExplainAuditSpec): a memo returns a checkpoint/persisted
@@ -2971,198 +2803,37 @@ object ExtQueries {
         "(isnan(dt / (sqrt(nx) * sqrt(nc))) OR dt / (sqrt(nx) * sqrt(nc)) < 0.2) " +
         "AS outlier FROM s ORDER BY vec_id")),
 
-    // SemDeDup-style semantic near-dup: portable JL sign-bit buckets
-    // (6 hyperplanes → 64 buckets), exact cosine >= 0.4 within buckets
-    // only. Fully oracle-checked — the DuckDB side re-derives the
-    // projection matrix from the portable-hash formula, the sign-bit
-    // bucket, the bucket equi-join, AND the cosine, end to end (the
-    // xxhash-seeded LSH twin x_cosine_near_dup_lsh can only be
-    // rows-only).
-    Q("x_semantic_dedup",
-      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id", "embedding",
-          dIn = queryVec(s, d).length, minCos = 0.4, bucketing = SignBucketing.Fixed(6))
-        .select(col("id1"), col("id2"), col("bucket"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some(SemanticDedupOracleSql)),
-
-    // The data-scaled twin (r11): same portable JL dedup, plane count
-    // from the SignBucketing.Auto integer rule (smallest p >= 6 with
-    // ceil(n/64) <= 2^p) — occupancy stays ~64 rows/bucket at any
-    // corpus size, so pair fan-out is linear where the pinned form
-    // measured ×25 at ×10 data. STILL fully oracle-checked: the DuckDB
-    // side derives the plane count from count(*) with the same integer
-    // arithmetic (no floating log2 — exact at power-of-two boundaries),
-    // then re-derives the projection, buckets, pairing, and cosines.
-    Q("x_semantic_dedup_auto",
-      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
-          bucketing = SignBucketing.Auto())
-        .select(col("id1"), col("id2"), col("bucket"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some("WITH nn AS (SELECT (count(*) + 63) // 64 AS needed FROM embeddings), " +
-        "pl AS (SELECT min(p) AS planes FROM generate_series(6, 62) t(p), nn " +
-        "WHERE (CAST(1 AS BIGINT) << p) >= nn.needed), " +
-        "x AS (SELECT vec_id, len(embedding) AS dim, " +
-        "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-        "generate_subscripts(embedding, 1) - 1 AS j FROM embeddings), " +
-        "io AS (SELECT unnest(generate_series(0, planes - 1)) AS i FROM pl), " +
-        "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-        "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-        "THEN 1 ELSE -1 END) / sqrt((SELECT planes FROM pl) * 1.0) AS y " +
-        "FROM x CROSS JOIN io GROUP BY vec_id, i), " +
-        "bk AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-        "THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS bucket " +
-        "FROM p GROUP BY vec_id), " +
-        "pr AS (SELECT a.vec_id AS id1, b.vec_id AS id2, a.bucket AS bucket " +
-        "FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id), " +
-        "d AS (SELECT id1, id2, bucket, unnest(e1.embedding) AS xx, " +
-        "unnest(e2.embedding) AS yy FROM pr " +
-        "JOIN embeddings e1 ON e1.vec_id = pr.id1 " +
-        "JOIN embeddings e2 ON e2.vec_id = pr.id2), " +
-        "sm AS (SELECT id1, id2, bucket, " +
-        "sum(CAST(xx AS DOUBLE) * CAST(yy AS DOUBLE)) AS dt, " +
-        "sum(CAST(xx AS DOUBLE) * CAST(xx AS DOUBLE)) AS nx, " +
-        "sum(CAST(yy AS DOUBLE) * CAST(yy AS DOUBLE)) AS ny " +
-        "FROM d GROUP BY id1, id2, bucket) " +
-        "SELECT id1, id2, bucket, round(dt / (sqrt(nx) * sqrt(ny)), 6) AS cos " +
-        "FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) >= 0.4 ORDER BY id1, id2")),
-
-    // The ADAPTIVE production form of semantic dedup (r13 — closing the
-    // r12 verdict's gap: Auto-bucketed dedup shared the Auto kNN join's
-    // sign-cell-skew blow-up, ~200 s at sf10 stress, with no landed
-    // remedy): hot cells sub-split exactly as in x_knn_join_adaptive,
-    // pairs restrict to sub-bucket mates, the emitted bucket is the
-    // post-split id. Degenerate (= auto) at the gate sf; the split
-    // fixture below exercises the other branch under the same gate.
-    Q("x_semantic_dedup_adaptive",
-      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
-          bucketing = SignBucketing.Adaptive())
-        .select(col("id1"), col("id2"), col("bucket"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some(semanticDedupAdaptiveOracleSql(64, 6, 4, 0.4))),
-
-    // Split-branch fixture (cap 16 < driver-sf maxOcc 87 → delta 3),
-    // the same skew-exercise as x_knn_join_adaptive_split.
-    Q("x_semantic_dedup_adaptive_split",
-      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
-          bucketing = SignBucketing.Adaptive(targetBucket = 16L, splitFactor = 1L))
-        .select(col("id1"), col("id2"), col("bucket"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some(semanticDedupAdaptiveOracleSql(16, 6, 1, 0.4))),
-
-    // Adaptive dedup composed with the exact-twin collapse: the
-    // connected-cover contract — rep-level pairs carry cross-cluster
-    // edges, twin clusters contribute star edges (rep → member, cos
-    // 1.0) instead of their quadratic within-cluster pair sets, and
-    // every connection of the uncollapsed pair graph survives in the
-    // cover (one-directional — see the scaladoc; component parity on
-    // this corpus pinned by SimilaritySpec). Called through
-    // semanticDedupCollapsed, the (id1, id2, cos) form the corpus
-    // benchmark runs.
-    Q("x_semantic_dedup_collapsed",
-      (s, d) => Similarity.semanticDedupCollapsed(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4)
-        .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some(semanticDedupCollapsedOracleSql(64, 6, 4, 0.4))),
-
-    // The DEFAULT bucketing (r14 — closing the r13 verdict's "safe
-    // default" gap): semanticDedup(df, id, vec, dIn, minCos) runs the
-    // Collapsed connected cover, so the obvious call can no longer be
-    // the quadratic pinned fixture. The cover contract (star edges
-    // carry a null bucket) is stated in semanticDedup's scaladoc; this
-    // row pins default == collapsed at the gate (same oracle).
-    Q("x_semantic_dedup_default",
-      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4)
-        .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some(semanticDedupCollapsedOracleSql(64, 6, 4, 0.4))),
-
-    // Approximate kNN self-join: top-3 neighbors per vector among
-    // same-sign-bucket rows. Same portable JL arithmetic as
-    // x_semantic_dedup, so the oracle re-derives bucket, pairing,
-    // cosine, AND the per-id ranking end to end — the ranking compares
-    // unrounded cosines in both engines (distinct-neighbor cosines
-    // differ far above fp noise; exact ties break on neighbor id).
-    Q("x_knn_join",
-      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
-          dIn = queryVec(s, d).length, k = 3, bucketing = SignBucketing.Fixed(6))
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(knnJoinOracleSql)),
-
-    // The production form of the same join: planes follow the corpus
-    // size (one count()), holding expected bucket size at 64 — the
-    // knob the fixed-planes anchor above leaves to the caller. The
-    // oracle derives the plane count from count(*) with the same
-    // integer rule, so the row is green at any corpus size.
-    Q("x_knn_join_auto",
-      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
-          dIn = queryVec(s, d).length, k = 3, bucketing = SignBucketing.Auto())
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(knnJoinAutoOracleSql)),
-
-    // The ADAPTIVE production path (r13 promotion of the r12 ×100
-    // remedy; the default Collapsed bucketing composes the twin
-    // collapse with this form since the r13 probe): auto planes PLUS
-    // hot-cell sub-splitting when a sign-cell exceeds
-    // splitFactor·targetBucket rows (measured 8.5× over the auto form
-    // at sf10 clustered; bit-identical below the cap). The oracle
-    // restates the FULL adaptive rule — occupancy histogram, delta,
-    // level-2 sub-signs from the same JL family — so the row is green
-    // whether or not the corpus triggers the split (driver sf0.01
-    // maxOcc 87 < 256: degenerate; the ×10 gapped sweep splits).
-    Q("x_knn_join_adaptive",
-      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3,
-          bucketing = SignBucketing.Adaptive())
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(knnAdaptiveOracleSql(64, 6, 4))),
-
-    // The skew-exercising fixture for the SPLIT branch at the gate sf:
-    // targetBucket 16 / splitFactor 1 puts the cap at 16 while the
-    // driver sf0.01 corpus's hottest sign-cell holds 87 rows (measured,
-    // DESIGN.md ×100 study) → delta = 3 (87 >> 3 = 10 ≤ 16), so the
-    // driver's own hash gate checks the sub-split arithmetic — bucket
-    // shift, hot-cell membership, level-2 signs — not just the
-    // degenerate path.
-    Q("x_knn_join_adaptive_split",
-      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3,
-          bucketing = SignBucketing.Adaptive(targetBucket = 16L, splitFactor = 1L))
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(knnAdaptiveOracleSql(16, 6, 1))),
-
-    // Adaptive kNN composed with the exact-twin collapse pre-pass —
-    // the full production ANN recipe for duplicate-heavy corpora (the
-    // r12 chained-stress ×138 finding): reps join, members fan back
-    // through membership, twins re-enter at literal cos 1.0. Driver
-    // tables have no exact-twin vectors, so at the gate sf this equals
-    // the adaptive row with singleton clusters — the twin/star
-    // arithmetic is exercised by the gapped ×10 sweep (replica twins)
-    // and pinned by SimilaritySpec's exact-parity fixture.
-    Q("x_knn_join_collapsed",
-      (s, d) => Similarity.knnJoin(Tables.embeddings(s, d), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3,
-          bucketing = SignBucketing.Collapsed())
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(knnCollapsedOracleSql(64, 6, 4, 3))),
+    // The sign-bucket family (Similarity.knnJoin / semanticDedup over
+    // SignBucketing), each row oracle-checked by signOracle. The gate
+    // sfs hold 500 twin-free vectors, where Fixed(6), Auto, Adaptive and
+    // Collapsed pick the same pairs; sf0.1 (2,000 vectors) and the ×10
+    // ScaleGen corpus (20,000, with twins) take the other branches of
+    // the count-derived rules.
+    // pinned-plane anchor: 6 planes whatever the corpus size
+    signQ(SignRow("x_semantic_dedup", Pairs(SignBucketing.Fixed(6)))),
+    // planes from count(*), ~64 rows per bucket at any size
+    signQ(SignRow("x_semantic_dedup_auto", Pairs(SignBucketing.Auto()))),
+    // hot-cell split; below the cap it equals auto
+    signQ(SignRow("x_semantic_dedup_adaptive", Pairs(SignBucketing.Adaptive()))),
+    // split fixture: cap 16 < sf0.01's hottest cell (87 rows), so delta = 3
+    signQ(SignRow("x_semantic_dedup_adaptive_split",
+      Pairs(SignBucketing.Adaptive(targetBucket = 16L, splitFactor = 1L)))),
+    // twin collapse: rep pairs plus star edges (rep → member, cos 1.0),
+    // through the forwarder's own default parameters
+    signQ(SignRow("x_semantic_dedup_collapsed", Cover(SignBucketing.Collapsed(64L, 6, 4L)))),
+    // default = collapsed: the call with no bucketing gives the same cover
+    signQ(SignRow("x_semantic_dedup_default", DefaultCover(SignBucketing.Collapsed(64L, 6, 4L)))),
+    // the kNN rows mirror the dedup rows: pinned-plane anchor,
+    signQ(SignRow("x_knn_join", Knn(SignBucketing.Fixed(6)))),
+    // count-derived planes,
+    signQ(SignRow("x_knn_join_auto", Knn(SignBucketing.Auto()))),
+    // hot-cell split,
+    signQ(SignRow("x_knn_join_adaptive", Knn(SignBucketing.Adaptive()))),
+    // split fixture,
+    signQ(SignRow("x_knn_join_adaptive_split",
+      Knn(SignBucketing.Adaptive(targetBucket = 16L, splitFactor = 1L)))),
+    // twin collapse: neighbours fan out to members, twins enter at cos 1.0
+    signQ(SignRow("x_knn_join_collapsed", Knn(SignBucketing.Collapsed()))),
 
     Q("x_random_projection",
       (s, d) => {
@@ -3175,19 +2846,9 @@ object ExtQueries {
             round(element_at(col("projection"), 4), 6).as("y3"))
           .orderBy("vec_id")
       },
-      Some("WITH x AS (SELECT vec_id, len(embedding) AS dim, " +
-        "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-        "generate_subscripts(embedding, 1) - 1 AS j FROM embeddings), " +
-        "io AS (SELECT unnest(generate_series(0, 3)) AS i), " +
-        "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-        "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-        "THEN 1 ELSE -1 END) / sqrt(4.0) AS y FROM x CROSS JOIN io GROUP BY vec_id, i) " +
-        "SELECT vec_id, " +
-        "round(max(CASE WHEN i = 0 THEN y END), 6) AS y0, " +
-        "round(max(CASE WHEN i = 1 THEN y END), 6) AS y1, " +
-        "round(max(CASE WHEN i = 2 THEN y END), 6) AS y2, " +
-        "round(max(CASE WHEN i = 3 THEN y END), 6) AS y3 " +
-        "FROM p GROUP BY vec_id ORDER BY vec_id")),
+      Some("WITH " + jlProjectionCtes("embeddings", "4") + " SELECT vec_id, " +
+        (0 until 4).map(i => s"round(max(CASE WHEN i = $i THEN y END) / sqrt(4.0), 6) AS y$i")
+          .mkString(", ") + " FROM p GROUP BY vec_id ORDER BY vec_id")),
 
     // Benchmark decontamination: flag corpus docs sharing any 4-gram
     // with the held-out "benchmark" slice (doc_id % 20 == 0). Hashed
@@ -3501,8 +3162,8 @@ object ExtQueries {
 
     // IVF index build: KMeans coarse quantizer fit + cell assignment,
     // persisted for reuse. Per-cell sizes are KMeans-internal, so the
-    // output is the index's PARTITION CONTRACT, oracle-checked since
-    // r11: every corpus vector is assigned to exactly one cell
+    // output is the index's PARTITION CONTRACT, oracle-checked: every
+    // corpus vector is assigned to exactly one cell
     // (n_assigned == n_vecs == the corpus count DuckDB states) and the
     // cell ids stay within the requested nlist = 8 (cells_bounded). The
     // bench still prices the build — this row's first touch pays the
@@ -3533,7 +3194,7 @@ object ExtQueries {
       },
       None),
 
-    // IVF probe machinery AUDIT (r10 verdict item 1): probing ALL
+    // IVF probe machinery AUDIT: probing ALL
     // nlist = 8 cells must degenerate to the exact brute-force top-20 —
     // cell routing, the isin filter, and the re-rank all sit on the
     // checked path, and the oracle is the hash-free brute-force SQL. A
@@ -3550,327 +3211,92 @@ object ExtQueries {
       },
       Some(BruteForceTopKSql)),
 
-    // IVF kNN SELF-JOIN (r13): the all-rows form of the IVF lane —
-    // x_ann_ivf serves one query vector; this probes nprobe cells PER
-    // ROW and joins on the cell id. The production quantizer is the
-    // ivfIndex spherical KMeans (engine-specific seeded centroids →
-    // rows-only), with the ENTIRE probe/membership/join/top-k algebra
-    // under the gate via the pinned twin below (same ivfKnnJoin — only
-    // the quantizer differs).
-    Q("x_ivf_knn_join",
-      (s, d) => {
-        // reuse the session-memoized quantizer (the build-once/join-many
-        // lifecycle; the fit dominated this row's bench time at 3 reps)
-        val (_, km) = ivfFor(s, d)
-        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id",
-            "embedding", IvfQuantizer.fromModel(km), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      None),
 
-    // The gate twin: pinned anchor centroids (the nlist smallest-id
-    // vectors, L2-normalized — ORDER BY id LIMIT nlist, no RNG), so the
-    // oracle restates the quantizer itself: normalized-anchor dots,
-    // (dot desc, cell) probe ranking, rank-1 membership, the cell
-    // equi-join with self exclusion, exact cosine, and the (cos desc,
-    // neighbor) top-k. Cross-engine exposure is rank flips between
-    // near-equal dots/cosines — the documented knnJoinOracleSql class
-    // (distinct values sit far above fp noise on this corpus).
-    Q("x_ivf_knn_join_pinned",
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfKnnJoin(emb, "vec_id", "embedding",
-            IvfQuantizer.pinned(emb, "vec_id", "embedding", nlist = 8), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      Some(IvfKnnJoinPinnedOracle)),
+    // The IVF join family (Similarity.ivfKnnJoin over IvfQuantizer).
+    // production form: the memoized KMeans index (rows-only)
+    ivfQ(IvfRow("x_ivf_knn_join", KMeansMemo)),
+    // gate twin: the same join over anchors the oracle can restate
+    ivfQ(IvfRow("x_ivf_knn_join_pinned", Pinned(Some(8)))),
+    // nlist follows count(*): n^1.5 total work where either fixed dial is n²
+    ivfQ(IvfRow("x_ivf_knn_join_auto", KMeansAuto)),
+    // gate twin of the balance rule (nlist 32 at n = 500, 200 at n = 20,000)
+    ivfQ(IvfRow("x_ivf_knn_join_auto_pinned", Pinned(None))),
 
-    // The PRODUCTION form of the IVF self-join (r14 — closing the r13
-    // verdict's fixed-geometry hole): nlist follows count(*) by the
-    // balance rule (smallest nlist ≥ 8 with nlist² ≥ n·nprobe), the
-    // point where assignment/probe-rank work (n·nlist) crosses
-    // candidate verification (n·nprobe·n/nlist) — total n^1.5 where
-    // either fixed dial goes n². KMeans centroids stay engine-seeded → rows-only;
-    // the _auto_pinned twin below puts the NLIST RULE itself under the
-    // oracle.
-    Q("x_ivf_knn_join_auto",
-      (s, d) => {
-        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id",
-            "embedding", ivfQuantizerForAuto(s, d), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      None),
-
-    // Gate twin of the auto form: deterministic smallest-id anchors
-    // (the x_ivf_knn_join_pinned algebra) with the anchor COUNT derived
-    // from count(*) by the same integer rule the production form
-    // applies — so the scale dial, not just the join algebra, is
-    // oracle-checked at every corpus size the gate runs (nlist = 32 at
-    // the sf0.01 gate, n = 500; 200 at the gapped sf1 sweep, n = 20000).
-    Q("x_ivf_knn_join_auto_pinned",
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfKnnJoin(emb, "vec_id", "embedding",
-            pinnedAuto(emb), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      Some(IvfKnnJoinAutoPinnedOracle)),
-
-    // IVF RECALL AUDIT (the x_cosine_lsh_recall convention, extended to
-    // a DERIVED flag): each query's exact top-1 neighbor — the all-pairs
-    // truth anchor, BOUNDED to the vec_id < 500 slice on BOTH sides so
-    // the truth quadratic never touches the full corpus — carries a
-    // `recovered` flag saying whether the pinned-auto IVF join's top-3
-    // on the same slice contains it. Unlike the LSH audit the oracle
-    // does NOT pin recovered = true (nprobe = 2 trades recall for probe
-    // work by design): DuckDB re-derives BOTH pipelines — the exact
-    // baseline AND the full IVF quantizer/join algebra — and computes
-    // the same flag, so a rank flip, a probe-rule drift, or a baseline
-    // bug each red the row. ExplainAudit-exempt for the truth side's
-    // non-equi join, same rationale as the LSH audit; the IVF side under
-    // audit is the production equi-join shape. NOTE the rate itself
-    // (~27% at the gate sf) is a property of the FIXTURE quantizer —
-    // smallest-id anchors are corpus-luck, and nprobe = 2 of nlist = 32
-    // probes ~6% of the corpus — not of the lane: the production KMeans
-    // quantizer places cells at cluster centers (SimilaritySpec pins
-    // ≥ 50% top-1 recall for it), and nprobe is the caller's recall
-    // dial (nprobe = nlist degenerates to exact, the full-probe row).
-    // The row's VALUE is that the flag is derived identically by two
-    // engines, whatever the rate.
+    // IVF recall audit: each query's exact top-1 on the vec_id < 500
+    // slice, flagged when the pinned-auto IVF join's top-3 on the same
+    // slice holds it. The rate (~27% at the gate sf) belongs to the
+    // smallest-id fixture anchors at nprobe 2 of 32, not to the lane:
+    // SimilaritySpec pins ≥ 50% for KMeans cells. The row's value is
+    // that both engines derive every flag. ExplainAudit-exempt for the
+    // truth side's non-equi join.
     Q("x_ivf_recall",
       (s, d) => {
-        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 500)
-        val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            round(col("cos"), 6).as("cos"))
-        val hit = Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
-            pinnedAuto(slice), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            lit(true).as("_hit"))
-        truth.join(hit, Seq("vec_id", "top1_id"), "left")
-          .select(col("vec_id"), col("top1_id"), col("cos"),
-            coalesce(col("_hit"), lit(false)).as("recovered"))
-          .orderBy("vec_id")
+        val slice = Tables.embeddings(s, d).filter(col("vec_id") < AuditBound)
+        recallFlags(slice, "recovered" ->
+          Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice), nprobe = 2, k = 3))
       },
-      Some(IvfRecallOracle)),
+      Some(recallOracle(auditCandidateCtes(sliceCte(AuditBound)) + ivfExactRankCtes("sl"),
+        Seq("recovered" -> "rnk")))),
 
-    // The stored-quantizer leg of the IVF lifecycle: the pinned-auto
-    // anchors are WRITTEN once per (session, sf) as an (ivf_cell,
-    // centroid, offset) parquet table and the join verifies from the
-    // RELOADED table — the cross-session build-once/join-many form (fit
-    // per corpus version, amortize over every later run; nlist rows
-    // move, the corpus never does). Same oracle as the inline
-    // auto-pinned leg: storage round-tripping must not change a single
-    // row, and the driver checks that (the x_cosine_near_dup_lsh_stored
-    // precedent).
-    Q("x_ivf_knn_join_stored",
-      (s, d) => {
-        val table = ivfQuantTableFor(s, d)
-        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
-            IvfQuantizer.stored(s.table(table)), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      Some(IvfKnnJoinAutoPinnedOracle)),
+    // cross-session leg: reloading the anchors must not change a row
+    ivfQ(IvfRow("x_ivf_knn_join_stored", Stored)),
+    // capped stand-ins of the two nlist-8 rows for sweeps past sf0.1
+    ivfQ(IvfRow("x_ivf_knn_join_capped", KMeansFit, capped = true)),
+    ivfQ(IvfRow("x_ivf_knn_join_pinned_capped", Pinned(Some(8)), capped = true)),
+    // capped stand-ins for the sign-bucket rows whose within-bucket work
+    // is quadratic at scale, so sweeps past sf0.1 can skip the full rows
+    signQ(SignRow("x_knn_join_capped", Knn(SignBucketing.Fixed(6)), capped = true)),
+    signQ(SignRow("x_knn_join_auto_capped", Knn(SignBucketing.Auto()), capped = true)),
+    signQ(SignRow("x_semantic_dedup_capped", Pairs(SignBucketing.Fixed(6)), capped = true)),
+    // PQ production form: uint8 codes in the cell join, exact re-rank of
+    // the top-8 survivors (rows-only)
+    ivfQ(IvfRow("x_ivf_pq_knn_join", KMeansAuto, pq = true)),
+    // gate twin: codes, reconstruction cosines, survivor cut and re-rank
+    ivfQ(IvfRow("x_ivf_pq_knn_join_pinned", Pinned(None), pq = true)),
+    // both stored halves: stats from the artifact, not the current corpus
+    ivfQ(IvfRow("x_ivf_pq_knn_join_stored", Stored, pq = true)),
 
-    // Bounded-corpus stand-ins for the two DESIGNATED-QUADRATIC gate
-    // fixtures (r15 — VERDICT r14 task 4): same nlist = 8 fixture
-    // geometry, corpus sliced to vec_id < 2000 (the x_ivf_recall slice
-    // precedent; a no-op at the sf0.01 gate, a hard cost bound at sweep
-    // sfs). The ×10+ sweeps run THESE and skip the full fixtures via
-    // SPARK_GRAFT_BENCH_SKIP — tools/sweep_check.py accepts that skip
-    // only when these stand-ins are present and green, so the fixtures'
-    // oracle continuity stays value-checked at every sf while the
-    // sweep's fixture cost is flat by construction. The full forms stay
-    // in the registry for the driver gate sf.
-    Q("x_ivf_knn_join_capped",
-      (s, d) => {
-        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 2000)
-        Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
-            IvfQuantizer.fit(slice, "embedding", nlist = 8), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      None),
-
-    Q("x_ivf_knn_join_pinned_capped",
-      (s, d) => {
-        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 2000)
-        Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
-            IvfQuantizer.pinned(slice, "vec_id", "embedding", nlist = 8), nprobe = 2, k = 3)
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      Some(IvfKnnJoinPinnedCappedOracle)),
-
-    // r16: the same stand-in treatment for the three sign-bucket rows
-    // that would dominate the x100 (sf10) sweep — the two pinned-plane
-    // oracle-continuity anchors (x_knn_join x36.6, x_semantic_dedup
-    // x30.2 at x10; quadratic-per-bucket BY DESIGNATION, default
-    // dispatch bypasses both) and the steered mid-tier x_knn_join_auto
-    // (measured 1,086 s at sf10 in the r12 probe — hot-cell drift the
-    // adaptive/collapsed production forms remedy). Same fixture
-    // algebra, vec_id < 2000 slice, full oracles — a no-op at the
-    // sf0.01 gate, a hard cost bound at sweep sfs.
-    Q("x_knn_join_capped",
-      (s, d) => Similarity.knnJoin(
-          Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3,
-          bucketing = SignBucketing.Fixed(6))
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(cappedEmbeddingsOracle(knnJoinOracleSql))),
-
-    Q("x_knn_join_auto_capped",
-      (s, d) => Similarity.knnJoin(
-          Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, k = 3,
-          bucketing = SignBucketing.Auto())
-        .select(col("vec_id"), col("neighbor_id"),
-          round(col("cos"), 6).as("cos"), col("rank"))
-        .orderBy("vec_id", "rank"),
-      Some(cappedEmbeddingsOracle(knnJoinAutoOracleSql))),
-
-    Q("x_semantic_dedup_capped",
-      (s, d) => Similarity.semanticDedup(
-          Tables.embeddings(s, d).filter(col("vec_id") < 2000), "vec_id",
-          "embedding", dIn = queryVec(s, d).length, minCos = 0.4,
-          bucketing = SignBucketing.Fixed(6))
-        .select(col("id1"), col("id2"), col("bucket"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy("id1", "id2"),
-      Some(cappedEmbeddingsOracle(SemanticDedupOracleSql))),
-
-    // IVF-PQ-lite (r15 — VERDICT r14 task 5): the candidate cell join
-    // ships PACKED UINT8 BINARY codes (1 byte/dim — 8× less shuffle
-    // than raw array<double>), candidates rank by reconstruction
-    // cosine, and only the top-kPrime survivors per query re-join raw
-    // vectors for the exact top-k — the standard memory-bounded ANN
-    // shape at 100 TB. Production form: session-memoized KMeans
-    // quantizer at the autoNlist balance rule (engine-seeded → rows
-    // only); the _pinned twin puts EVERY stage under the oracle.
-    Q("x_ivf_pq_knn_join",
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfKnnJoin(emb, "vec_id", "embedding", ivfQuantizerForAuto(s, d),
-            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(emb, "embedding"), kPrime = 8)))
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      None),
-
-    // Gate twin: pinned-auto anchors, so DuckDB restates the integer
-    // code values (the quantizeInt8 affine formula is integer-exact),
-    // the reconstruction cosines in the kernel's dot-then-scale float
-    // order, the kPrime survivor cut, and the exact re-rank.
-    Q("x_ivf_pq_knn_join_pinned",
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        Similarity.ivfKnnJoin(emb, "vec_id", "embedding", pinnedAuto(emb),
-            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(emb, "embedding"), kPrime = 8)))
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      Some(IvfPqKnnJoinPinnedOracle)),
-
-    // The stored-quantizer leg of the PQ lifecycle: reloads the SAME
-    // (ivf_cell, centroid, offset) parquet table x_ivf_knn_join_stored
-    // uses (one quantizer table serves both the plain and PQ joins -
-    // the build-once/join-many contract extends across lane variants)
-    // PLUS the stored (dim, lo, hi) stats table (r16): the quantization
-    // bounds are read from the artifact, not recomputed from the
-    // current corpus, so cached codes stay stable across corpus
-    // versions AND the FromStored plan drops a full-corpus stats pass.
-    // Same oracle as the inline pinned leg: at build time the stats
-    // were computed from this corpus, so storage round-tripping of
-    // BOTH tables must not change a single row.
-    Q("x_ivf_pq_knn_join_stored",
-      (s, d) => {
-        val table = ivfQuantTableFor(s, d)
-        val stats = ivfPqStatsTableFor(s, d)
-        Similarity.ivfKnnJoin(Tables.embeddings(s, d), "vec_id", "embedding",
-            IvfQuantizer.stored(s.table(table)), nprobe = 2, k = 3,
-            Some(IvfPq(PqBounds.stored(s.table(stats)), kPrime = 8)))
-          .select(col("vec_id"), col("neighbor_id"),
-            round(col("cos"), 6).as("cos"), col("rank"))
-          .orderBy("vec_id", "rank")
-      },
-      Some(IvfPqKnnJoinPinnedOracle)),
-
-    // PQ RECALL AUDIT (the x_ivf_recall convention): exact top-1 on the
-    // bounded slice vs the PQ join's top-3 on the same slice, recovered
-    // derived by BOTH engines. Prices the quantized-survivor recall
-    // trade on top of the cell recall the plain-IVF audit prices (the
-    // delta between the two rows' rates IS the int8 cost, near zero —
-    // kPrime = 8 survivor slots recover reconstruction-error rank
-    // flips around the top-3 boundary).
+    // PQ recall audit: the x_ivf_recall shape over the PQ join, so the
+    // gap between the two rows' rates is the cost of the uint8 codes.
     Q("x_ivf_pq_recall",
       (s, d) => {
-        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 500)
-        val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            round(col("cos"), 6).as("cos"))
-        val hit = Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice),
-            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(slice, "embedding"), kPrime = 8)))
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            lit(true).as("_hit"))
-        truth.join(hit, Seq("vec_id", "top1_id"), "left")
-          .select(col("vec_id"), col("top1_id"), col("cos"),
-            coalesce(col("_hit"), lit(false)).as("recovered"))
-          .orderBy("vec_id")
+        val slice = Tables.embeddings(s, d).filter(col("vec_id") < AuditBound)
+        recallFlags(slice, "recovered" -> Similarity.ivfKnnJoin(slice, "vec_id",
+          "embedding", pinnedAuto(slice), nprobe = 2, k = 3,
+          Some(IvfPq(PqBounds.stats(slice, "embedding"), kPrime = 8))))
       },
-      Some(IvfPqRecallOracle)),
+      Some(recallOracle(auditCandidateCtes(sliceCte(AuditBound)) +
+        ivfPqChainCtes("8", "", PqMinMaxStatsSql), Seq("recovered" -> "rnk2")))),
 
-    // OUTLIER ROBUSTNESS AUDIT (r16 — VERDICT r15 task 3): one vector
-    // scaled x10^6 (direction preserved -> the exact truth is
-    // unchanged) stretches the global min/max bounds ~10^6x and
-    // crushes every dimension's int8 resolution: all normal values
-    // code to 0, reconstructions collapse to one corner, the survivor
-    // cut degenerates to id order, and recall craters. Rank-clipped
-    // bounds (c = 1 -- the deterministic, oracle-restatable twin of
-    // the production approx_percentile `clip` form) drop the outlier
-    // per dimension and hold recall. Both flags derived by both
-    // engines; the contrast IS the claim, recorded as data.
+    // Outlier audit: vec_id 3 becomes the constant vector 10^6, which
+    // stretches the global min/max bounds until every normal value codes
+    // to 0 and survivors fall to id order; rank-clipped bounds (c = 1)
+    // drop it per dimension and hold recall. A constant (not a scaled
+    // copy) makes every crushed reconstruction bit-identical, so the
+    // degenerate ranking ties exactly and falls to the nid tie-break in
+    // both engines; a scaled outlier left last-ulp survivor flips at the
+    // kPrime boundary. Both flags are derived by both engines.
     Q("x_ivf_pq_outlier_recall",
       (s, d) => {
         val vecD = col("embedding").cast("array<double>")
-        val slice = Tables.embeddings(s, d).filter(col("vec_id") < 500)
+        val slice = Tables.embeddings(s, d).filter(col("vec_id") < AuditBound)
           .withColumn("embedding",
             when(col("vec_id") === 3L, transform(vecD, _ => lit(1e6)))
               .otherwise(vecD))
-        val truth = Similarity.exactKnnJoin(slice, "vec_id", "embedding", k = 1)
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            round(col("cos"), 6).as("cos"))
-        val mm = Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice),
-            nprobe = 2, k = 3, Some(IvfPq(PqBounds.stats(slice, "embedding"), kPrime = 8)))
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            lit(true).as("_hm"))
-        val cl = Similarity.ivfKnnJoin(slice, "vec_id", "embedding", pinnedAuto(slice),
-            nprobe = 2, k = 3, Some(IvfPq(PqBounds.rankClipped(slice, "embedding", 1), kPrime = 8)))
-          .select(col("vec_id"), col("neighbor_id").as("top1_id"),
-            lit(true).as("_hc"))
-        truth.join(mm, Seq("vec_id", "top1_id"), "left")
-          .join(cl, Seq("vec_id", "top1_id"), "left")
-          .select(col("vec_id"), col("top1_id"), col("cos"),
-            coalesce(col("_hm"), lit(false)).as("recovered_minmax"),
-            coalesce(col("_hc"), lit(false)).as("recovered_clipped"))
-          .orderBy("vec_id")
+        def pq(bounds: PqBounds) = Similarity.ivfKnnJoin(slice, "vec_id", "embedding",
+          pinnedAuto(slice), nprobe = 2, k = 3, Some(IvfPq(bounds, kPrime = 8)))
+        recallFlags(slice,
+          "recovered_minmax" -> pq(PqBounds.stats(slice, "embedding")),
+          "recovered_clipped" -> pq(PqBounds.rankClipped(slice, "embedding", 1)))
       },
-      Some(IvfPqOutlierRecallOracle)),
+      Some(recallOracle(auditCandidateCtes(
+          "sl AS (SELECT vec_id, CASE WHEN vec_id = 3 THEN " +
+            "list_transform(embedding, x -> 1000000.0) " +
+            "ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END AS embedding " +
+            s"FROM embeddings WHERE vec_id < $AuditBound)") +
+          ivfPqChainCtes("8", "_mm", PqMinMaxStatsSql) +
+          ivfPqChainCtes("8", "_cl", pqRankClipStatsSql(1)),
+        Seq("recovered_minmax" -> "rnk2_mm", "recovered_clipped" -> "rnk2_cl")))),
 
     // M3 — FFT magnitude per sliding window (native Catalyst expression).
     // DuckDB has no FFT, but the REPORTED bins are low-order DFT

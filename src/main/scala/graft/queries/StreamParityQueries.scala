@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.Dedup
+import graft.functions.SignBucketing
 import graft.streaming.StreamingOps
 
 /** Streaming operators under the DRIVER's correctness gate (r10 verdict
@@ -366,19 +367,9 @@ object StreamParityQueries {
           .distinct()
           .orderBy("id1", "id2")
       },
-      Some("WITH x AS (SELECT vec_id, len(embedding) AS dim, " +
-        "CAST(unnest(embedding) AS DOUBLE) AS v, " +
-        "generate_subscripts(embedding, 1) - 1 AS j FROM embeddings), " +
-        "io AS (SELECT unnest(generate_series(0, 5)) AS i), " +
-        "p AS (SELECT vec_id, i, sum(v * CASE WHEN " +
-        "((i * dim + j) * 2654435761) % 4294967296 < 2147483648 " +
-        "THEN 1 ELSE -1 END) / sqrt(6.0) AS y FROM x CROSS JOIN io GROUP BY vec_id, i), " +
-        "bk AS (SELECT vec_id, CAST(sum(CASE WHEN y >= 0 " +
-        "THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS bucket " +
-        "FROM p GROUP BY vec_id) " +
-        "SELECT a.vec_id AS id1, b.vec_id AS id2 FROM bk a " +
-        "JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id " +
-        "ORDER BY id1, id2")),
+      Some("WITH " + ExtQueries.signBucketCtes(SignBucketing.Fixed(6), "embeddings") +
+        " SELECT a.vec_id AS id1, b.vec_id AS id2 FROM bk a " +
+        "JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id ORDER BY id1, id2")),
 
     // IVF membership-cell candidates at INGEST under the gate — the
     // streaming twin of the IVF kNN lane's cell join. The quantizer is

@@ -171,28 +171,19 @@ object Windows {
       .drop("_rk")
   }
 
-  /** W6/W7 at scale — [[rollingMin]]/[[rollingMean]] for a single global
-    * series via chunk+halo (halo = width−1 trailing rows): the pandas
-    * null-head rule holds because a frame is only complete when `width`
-    * rows are actually present — chunk 0's head rows see a short frame,
-    * every halo-backed row sees a full one. Requires dense idx, like
-    * every positional operator here.
+  /** W6 at scale — [[rollingMin]] for a single global series via
+    * chunk+halo (halo = width−1 trailing rows): the pandas null-head rule
+    * holds because a frame is only complete when `width` rows are
+    * actually present — chunk 0's head rows see a short frame, every
+    * halo-backed row sees a full one. Requires dense idx, like every
+    * positional operator here.
     */
   def rollingMinChunked(df: DataFrame, idxCol: String, valueCol: String, width: Int,
-                        chunkSize: Long = 100000L, out: String = "rolling_min"): DataFrame =
-    rollingChunked(df, idxCol, valueCol, width, chunkSize, out, min)
-
-  def rollingMeanChunked(df: DataFrame, idxCol: String, valueCol: String, width: Int,
-                         chunkSize: Long = 100000L, out: String = "rolling_mean"): DataFrame =
-    rollingChunked(df, idxCol, valueCol, width, chunkSize, out, avg)
-
-  private def rollingChunked(df: DataFrame, idxCol: String, valueCol: String,
-                             width: Int, chunkSize: Long, out: String,
-                             f: Column => Column): DataFrame = {
+                        chunkSize: Long = 100000L, out: String = "rolling_min"): DataFrame = {
     val w = Window.partitionBy(col("_tgt")).orderBy(col(idxCol))
       .rowsBetween(-(width - 1), 0)
     withChunkHalo(df, idxCol, width - 1, chunkSize)
-      .withColumn(out, when(count(lit(1)).over(w) === width, f(col(valueCol)).over(w)))
+      .withColumn(out, when(count(lit(1)).over(w) === width, min(col(valueCol)).over(w)))
       .filter(col("_tgt") === expr(s"`$idxCol` DIV $chunkSize"))
       .drop("_tgt")
   }
