@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
@@ -25,7 +24,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // stream rows get more reps by default: their 2-4.5 s micro-batch
     // floor is scheduling-dominated, and at 3 reps the medians moved
@@ -33,11 +31,7 @@ object Bench {
     // — two of them topped the suite on wobble alone. 5 reps costs
     // ~+30 s wall (medians, so the reported totals are unaffected).
     val streamReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_REPS", "5").toInt.max(1)
-    val spark = graft.core.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     try SparkEntry.entry(spark).queryExecution.toRdd.count() catch { case _: Throwable => }
     // Pre-materialize the shared eventsIdx table in the warmup: it is
     // written ONCE per (session, dir) and whichever timed query touched

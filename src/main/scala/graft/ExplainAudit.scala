@@ -10,8 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan
   * construction), and non-equi/cross joins where NEITHER side is provably
   * ≤ 1 row (a broadcast scalar-aggregate cross join is the intended
   * lazy-count pattern, not an all-pairs product). CI gate via
-  * ExplainAuditSpec; interactive: `runMain graft.ExplainAudit [sfDir]
-  * [-full]` (-full dumps each flagged plan's tree).
+  * ExplainAuditSpec; interactive: `graft.Run audit <sfDir> [-full]`.
   */
 object ExplainAudit {
 
@@ -77,7 +76,7 @@ object ExplainAudit {
     * (name, notes) for each plan with an unexempted global window,
     * non-equi/cross data-sized join, or plan-construction error.
     * Run by ExplainAuditSpec in CI so the scale posture can't silently
-    * regress; `main` prints the same sweep for interactive use.
+    * regress; `graft.Run audit` prints the same sweep for interactive use.
     */
   def audit(spark: SparkSession, sfDir: String): Seq[(String, Seq[String], String)] = {
     // xs_stream_* rows EXECUTE a full streaming query when invoked (they
@@ -118,23 +117,5 @@ object ExplainAudit {
           ""))
       }
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.filterNot(_.startsWith("-"))
-      .getOrElse("/root/testdata/sf0.001")
-    val full = args.contains("-full")
-    val spark = graft.core.GraftSession.configure(SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val flagged = audit(spark, sfDir)
-    flagged.foreach { case (name, notes, tree) =>
-      println(s"[audit] $name:" + (if (exempt(name)) " (exempt)" else ""))
-      notes.foreach(n => println(s"[audit]     $n"))
-      if (full) println(tree.take(4000))
-    }
-    println(s"[audit] done: ${flagged.size} plans flagged " +
-      s"(${flagged.count(f => !exempt(f._1))} unexempted)")
-    spark.stop()
   }
 }

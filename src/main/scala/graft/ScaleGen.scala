@@ -3,12 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: build an N× scale-up of a testdata directory so the scale
-  * posture the plans *claim* can be *measured* (the round-8 verdict's
-  * "prove the lane at 10× scale" lead). `runMain graft.ScaleGen [srcDir]
-  * [dstDir] [factor]` — defaults: /root/testdata/sf0.1 →
-  * target/testdata/sf1 ×10 (repo-local, gitignored; /root/testdata is
-  * read-only).
+/** Builds an N× scale-up of a testdata directory, so the scale posture
+  * the plans claim can be measured: `graft.Run scale <src> <dst>
+  * <factor>` ([[generate]]).
   *
   * What scales and how (the corpus tables the dedup/winnow/text/window
   * lanes read):
@@ -156,24 +153,23 @@ object ScaleGen {
     df.crossJoin(broadcast(spine))
   }
 
-  def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = if (args.length > 1) args(1) else "target/testdata/sf1"
-    val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = graft.core.GraftSession.local()
+  /** Writes every table of `src` to `dst`: the corpus tables scaled
+    * ×`factor` as above, the TPC-H tables unchanged.
+    */
+  def generate(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
     val t0 = System.nanoTime()
 
     // idCol uniqueness is asserted on the WRITTEN data: the chained-pass id
     // collision this would have caught (500k rows → 95k distinct doc_ids)
     // produced plausible-looking lane timings and surfaced only on manual
     // inspection.
-    // Output layout (r17, guide §6/§2.5): the scaled frames descend from a
-    // single-file source via a broadcast crossJoin, so a plain write
-    // produced ONE part file with ONE parquet row group (90 MB at ×100) —
-    // and parquet scan parallelism is per ROW GROUP, so every scan-bound
-    // operator in the sweep ran single-task no matter the split count or
-    // core count (the "one huge unsplittable file" input-skew case; a real
-    // 100 TB corpus arrives as thousands of files). Spread the scaled
+    // Output layout: the scaled frames descend from a single-file source
+    // via a broadcast crossJoin, so a plain write produces ONE part file
+    // with ONE parquet row group (90 MB at ×100) — and parquet scan
+    // parallelism is per ROW GROUP, so every scan-bound operator in a
+    // sweep would run single-task no matter the split count or core count
+    // (the "one huge unsplittable file" input-skew case; a real 100 TB
+    // corpus arrives as thousands of files). Spread the scaled
     // tables over enough files to scan in parallel: hash by the id column
     // (deterministic — not round-robin, see SPARK-38388) into
     // max(defaultParallelism, sourceBytes·factor / 16 MB) files, capped at
@@ -209,6 +205,5 @@ object ScaleGen {
       .foreach(t => write(t, core.Tables.load(spark, src, t)))
 
     println(f"[scalegen] done ×$factor from $src in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    spark.stop()
   }
 }

@@ -105,7 +105,10 @@ object GraftSession {
     .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** A [[configure]]d local session on `cores` cores (default
+    * `SPARK_GRAFT_CPUS`, else 4) with as many shuffle partitions.
+    */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)): SparkSession = {
     val s = configure(
       SparkSession.builder()
         .master(s"local[$cores]")

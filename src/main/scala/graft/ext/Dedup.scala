@@ -184,8 +184,9 @@ object Dedup {
     * single-element `transform`: HOF lambdas evaluate interpreted, so if
     * `th` were an inline expression every `element_at(th, …)` would
     * re-split and re-hash the whole document — O(tokens²·chars) per row
-    * (the winnowFingerprintsHof CollapseProject lesson, which a Column-
-    * level function can't solve with projection staging). A lambda
+    * (the CollapseProject lesson of the test-side
+    * `TextAnalysisTwins.winnowFingerprintsHof`, which a Column-level
+    * function can't solve with projection staging). A lambda
     * variable is evaluated once and read O(1) thereafter.
     */
   def shingleHashArray(text: Column, n: Int): Column =

@@ -360,7 +360,7 @@ object Similarity {
     // KMeans iterates over this frame many
     // times, and a plain cache keeps the full SQL lineage (scan +
     // normalize) inside every iteration task's binary — measured r16
-    // (PhaseProbe -jobs), task DESERIALIZATION was ~90% of the fit jobs'
+    // (`graft.Run run -jobs`), task DESERIALIZATION was ~90% of the fit jobs'
     // task time at the bench sf. Checkpointing stores the computed
     // partitions and truncates the plan after the first pass; partition
     // count and row order are exactly the cached frame's, so the

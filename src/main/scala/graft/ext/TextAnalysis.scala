@@ -35,8 +35,8 @@ object TextAnalysis {
     * through a lookaround split and an INTERPRETED higher-order filter
     * (HOFs are CodegenFallback; measured 7.1 s single-task for 50 k docs
     * at ×10 vs 0.6 s for this form). Parity with the split form is
-    * pinned in EvalFunctionsSpec against [[subwordCountSplit]] for BMP
-    * text; on astral-plane characters this form counts CODE POINTS
+    * pinned in EvalFunctionsSpec against the test-side
+    * `TextAnalysisTwins.subwordCountSplit` for BMP text; on astral-plane characters this form counts CODE POINTS
     * (`length`/`translate` semantics — exactly what the DuckDB oracle's
     * identity computes), where the old UTF-16 split counted each
     * surrogate half as its own piece. The corpora contain no astral
@@ -50,13 +50,6 @@ object TextAnalysis {
 
   private[graft] val AlnumChars =
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
-
-  /** The original lookaround-split twin of [[subwordCount]] — kept ONLY
-    * as the independent re-derivation the kernel form is pinned bitwise
-    * against (the winnowFingerprintsHof rule); nothing else calls it.
-    */
-  private[graft] def subwordCountSplit(text: Column): Column =
-    size(filter(split(text, "(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"), t => length(t) > 0))
 
   /** Canonical text normalization for dedup keys: lowercase, strip
     * punctuation, collapse whitespace runs, trim. Exact dedup over the
@@ -102,7 +95,7 @@ object TextAnalysis {
     trim(regexp_replace(decoded, "\\s+", " "))
   }
 
-  private val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for")
+  private[graft] val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for")
 
   /** Quality signals: char length, token count, mean token length,
     * punctuation ratio, stopword ratio. Heuristics of the C4/Gopher-rule
@@ -116,8 +109,8 @@ object TextAnalysis {
     // measured 6.2 s single-task for 50 k docs at ×10 vs <1 s for this
     // form. Value-identical by construction (piece count = space-run
     // count + 1 under split's limit=-1; ASCII bytes never occur inside
-    // UTF-8 multi-byte sequences), pinned bitwise against
-    // [[qualitySignalsSplit]] in EvalFunctionsSpec.
+    // UTF-8 multi-byte sequences), pinned bitwise against the test-side
+    // `TextAnalysisTwins.qualitySignalsSplit` in EvalFunctionsSpec.
     val st = graft.functions.GraftFunctions.space_token_stats(col(textCol), Stopwords)
     val nTok = st.getField("n_tokens")
     df.withColumn("n_chars_m", length(col(textCol)))
@@ -127,25 +120,6 @@ object TextAnalysis {
       .withColumn("punct_ratio",
         st.getField("n_punct").cast("double") / length(col(textCol)))
       .withColumn("stopword_ratio", st.getField("n_stop").cast("double") / nTok)
-  }
-
-  /** The original split/HOF twin of [[qualitySignals]] — kept ONLY as
-    * the independent re-derivation the byte-scan kernel is pinned
-    * bitwise against; nothing else calls it.
-    */
-  private[graft] def qualitySignalsSplit(df: DataFrame, textCol: String): DataFrame = {
-    val toks = tokens(col(textCol))
-    val nTok = size(toks)
-    df.withColumn("n_chars_m", length(col(textCol)))
-      .withColumn("n_tokens", nTok)
-      .withColumn("mean_token_len",
-        (length(col(textCol)) - nTok + 1).cast("double") / nTok)
-      .withColumn("punct_ratio",
-        (length(col(textCol)) -
-          length(regexp_replace(col(textCol), "[\\.,;:!\\?]", ""))).cast("double") /
-          length(col(textCol)))
-      .withColumn("stopword_ratio",
-        size(filter(toks, t => t.isin(Stopwords: _*))).cast("double") / nTok)
   }
 
   /** Quality FILTER: the decision step over [[qualitySignals]] — C4/Gopher
@@ -288,10 +262,11 @@ object TextAnalysis {
     // the gram array is built through Dedup.shingleHashArray's let-bound
     // form: HOF lambdas run interpreted, so an INLINE token-hash array
     // would be re-tokenized per element_at — O(tokens²·chars) per doc
-    // (measured ~10 ms/doc at sf0.1; the winnowFingerprintsHof lesson)
+    // (measured ~10 ms/doc at sf0.1; the lesson of the test-side
+    // `TextAnalysisTwins.winnowFingerprintsHof`)
     df.select(col(idCol), Dedup.shingleHashArray(col(textCol), n).as("_grams"))
       // projection barrier: keep CollapseProject from inlining _grams
-      // into both size() consumers below (winnowFingerprintsHof:1168)
+      // into both size() consumers below (as in `winnowFingerprintsHof`)
       .select(col(idCol), col("_grams"), explode(array(lit(0))).as("_b1"))
       .select(col(idCol),
         size(col("_grams")).cast("long").as("n_ngrams"),
@@ -636,8 +611,8 @@ object TextAnalysis {
     * plan-constant like the [[graft.ext.Similarity]] JL matrix. The
     * original interpreted expression-CHAIN form (one `aggregate` lambda
     * per merge, measured 33 s warm at sf0.1 for 12 merges once the
-    * bench drained real output) survives as [[bpeEncodeHof]] for parity
-    * pinning.
+    * bench drained real output) survives as the test-side
+    * `TextAnalysisTwins.bpeEncodeHof` for parity pinning.
     *
     * Output: (idCol, subwords: array<string>).
     */
@@ -645,21 +620,6 @@ object TextAnalysis {
                 merges: Seq[(String, String)]): DataFrame =
     df.select(col(idCol),
       graft.functions.GraftFunctions.bpe_encode(col(textCol), merges).as("subwords"))
-
-  /** The interpreted HOF-chain twin of [[bpeEncode]] — kept ONLY as the
-    * independent re-derivation the kernel is pinned bitwise against
-    * (the winnowFingerprintsHof rule); nothing in the library calls it.
-    */
-  private[graft] def bpeEncodeHof(df: DataFrame, idCol: String, textCol: String,
-                                  merges: Seq[(String, String)]): DataFrame = {
-    def chars(w: Column): Column =
-      transform(sequence(lit(0), length(w) - 1), i => w.substr(i + lit(1), lit(1)))
-    def enc(w: Column): Column =
-      merges.foldLeft(chars(w)) { case (c, (l, r)) => applyMergeFold(c, l, r) }
-    df.select(col(idCol),
-      flatten(transform(filter(tokens(col(textCol)), w => length(w) > 0),
-        w => enc(w))).as("subwords"))
-  }
 
   /** [[bpeEncode]] at production vocabulary scale. The expression-chain
     * encoder nests one fold per merge in the PLAN, which is right at a
@@ -783,7 +743,7 @@ object TextAnalysis {
     * table): a single implementation makes the learner/encoder parity
     * invariant structural rather than coincidental.
     */
-  private def applyMergeFold(syms: Column, l: String, r: String): Column =
+  private[graft] def applyMergeFold(syms: Column, l: String, r: String): Column =
     aggregate(syms, array().cast("array<string>"),
       (acc, s) => when(
         size(acc) > 0 && element_at(acc, -1) === lit(l) && s === lit(r),
@@ -1148,7 +1108,7 @@ object TextAnalysis {
     // and an email may contain an ip/phone substring), and their
     // replaces chain sequentially per the documented order contract.
     // Bitwise parity with the regexp chain pinned in EvalFunctionsSpec
-    // against [[redactPiiRegexp]].
+    // against the test-side `TextAnalysisTwins.redactPiiRegexp`.
     val t = col(textCol)
     val em = graft.functions.GraftFunctions.regex_count_replace(t, EmailRe, "<EMAIL>")
     df.withColumn("n_emails", em.getField("n"))
@@ -1157,20 +1117,6 @@ object TextAnalysis {
       .withColumn("redacted",
         regexp_replace(regexp_replace(em.getField("replaced"),
           Ipv4Re, "<IP>"), PhoneRe, "<PHONE>"))
-  }
-
-  /** The original regexp-chain twin of [[redactPii]] — kept ONLY as the
-    * independent re-derivation the fused form is pinned bitwise against;
-    * nothing else calls it.
-    */
-  private[graft] def redactPiiRegexp(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_emails", size(regexp_extract_all(t, lit(EmailRe), lit(0))))
-      .withColumn("n_ips", size(regexp_extract_all(t, lit(Ipv4Re), lit(0))))
-      .withColumn("n_phones", size(regexp_extract_all(t, lit(PhoneRe), lit(0))))
-      .withColumn("redacted",
-        regexp_replace(regexp_replace(regexp_replace(t,
-          EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"), PhoneRe, "<PHONE>"))
   }
 
   /** TF-IDF top-`k` terms per document: tf = in-document term count,
@@ -1222,8 +1168,9 @@ object TextAnalysis {
     * hash-select runs as ONE codegen'd kernel call per row
     * ([[graft.functions.WinnowSelect]], the CosineSim precedent), which
     * replaced the interpreted higher-order-function chain this operator
-    * shipped with (kept below as [[winnowFingerprintsHof]], the parity
-    * reference) at ~6× the throughput. Documents shorter than k tokens
+    * shipped with (kept as the test-side
+    * `TextAnalysisTwins.winnowFingerprintsHof`, the parity reference) at
+    * ~6× the throughput. Documents shorter than k tokens
     * have no k-gram and emit nothing; documents with fewer than w grams
     * are winnowed as one window.
     *
@@ -1241,72 +1188,6 @@ object TextAnalysis {
       // synthesize `size(_fps) > 0` from a plain explode and evaluate
       // the kernel a second time per row in that filter. Equivalent:
       // ≥ k tokens ⇒ ≥ 1 gram ⇒ ≥ 1 window ⇒ _fps is never empty.
-      .select(col(idCol), explode_outer(col("_fps")).as("_fp"))
-      .select(col(idCol), col("_fp.pos").as("pos"),
-        // build-time (k, w) stamped as field metadata (survives the
-        // parquet round-trip) so a stored fingerprint index probed at
-        // different parameters fails loudly — the ngramPairs contract
-        col("_fp.gram_hash").as("gram_hash",
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putLong("winnow_k", k.toLong).putLong("winnow_w", w.toLong)
-            .build()))
-  }
-
-  /** The original higher-order-function formulation of
-    * [[winnowFingerprints]] — retained as the independent parity
-    * reference for the codegen kernel (EvalFunctionsSpec pins bitwise
-    * agreement) and as the worked example of the HOF pitfalls it hits.
-    *
-    * The token-hash and gram-hash arrays each materialize BELOW a
-    * single-element-explode Generate (the [[ngramCounts]] /
-    * bandedSignatureRows barrier pattern): without the barriers,
-    * CollapseProject re-inlines `_th` into every gram lambda and `_gh`
-    * into every window lambda, turning the chain O(n²·w·chars) per
-    * document — measured as a hang at 500 docs; with them each array is
-    * computed once per row and every downstream reference is an O(1)
-    * data read.
-    */
-  private[graft] def winnowFingerprintsHof(df: DataFrame, idCol: String, textCol: String,
-                                           k: Int = 4, w: Int = 5): DataFrame = {
-    require(k >= 1 && w >= 1, s"need k >= 1 and w >= 1, got $k / $w")
-    val M = 2147483647L // 2^31 - 1: keeps every intermediate < 2^39
-    def tokHash(t: Column): Column =
-      when(length(t) === 0, lit(0L)).otherwise(
-        aggregate(sequence(lit(1), length(t)), lit(0L),
-          (a, i) => pmod(a * lit(31L) + ascii(t.substr(i, lit(1))), lit(M))))
-    def gramHash(th: Column, p: Column): Column =
-      aggregate(sequence(lit(0), lit(k - 1)), lit(0L),
-        (a, j) => pmod(a * lit(131L) + element_at(th, p + j + 1), lit(M)))
-    val grams = df
-      .select(col(idCol), tokens(col(textCol)).as("_ws"))
-      .filter(size(col("_ws")) >= k)
-      .select(col(idCol),
-        transform(col("_ws"), t => tokHash(t)).as("_th"))
-      .select(col(idCol), col("_th"), explode(array(lit(0))).as("_b1"))
-      .select(col(idCol),
-        transform(sequence(lit(0), size(col("_th")) - k),
-          p => gramHash(col("_th"), p)).as("_gh"))
-      .select(col(idCol), col("_gh"), explode(array(lit(0))).as("_b2"))
-    // a short document (fewer than w grams) degrades to width = #grams:
-    // one whole-document window, the standard winnowing edge rule
-    val width = least(lit(w), size(col("_gh")))
-    def pick(gh: Column, q: Column): Column = {
-      val sl = slice(gh, q + 1, width)
-      val m = array_min(sl)
-      val j = array_max(filter(sequence(lit(0), width - 1),
-        jj => element_at(sl, jj + 1) === m))
-      struct((q + j).cast("long").as("pos"), m.as("gram_hash"))
-    }
-    grams
-      .select(col(idCol), array_distinct(
-        transform(sequence(lit(0), size(col("_gh")) - width),
-          q => pick(col("_gh"), q))).as("_fps"))
-      // explode_OUTER: a plain explode makes InferFiltersFromGenerate
-      // synthesize `size(_fps) > 0`, which pushes below both barriers
-      // and re-inlines the whole chain into one per-row filter (the
-      // exact blow-up the barriers exist to stop). The outer form skips
-      // the inference and is equivalent: ≥ 1 gram ⇒ ≥ 1 window ⇒ _fps
-      // is never empty.
       .select(col(idCol), explode_outer(col("_fps")).as("_fp"))
       .select(col(idCol), col("_fp.pos").as("pos"),
         // build-time (k, w) stamped as field metadata (survives the

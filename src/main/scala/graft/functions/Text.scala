@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    multi-byte sequences, so byte comparison is exact).
   *
   * Every kernel is pinned bitwise against its expression-chain twin in
-  * EvalFunctionsSpec (the winnowFingerprintsHof rule).
+  * EvalFunctionsSpec (twins in the test-side `TextAnalysisTwins`).
   */
 object TextKernel {
 

@@ -14,6 +14,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * and keep bitwise-identical results (same sequential fold order).
   */
 
+/** Prints an expression's plan-constant array arguments by length and
+  * content hash. An array's own `toString` is its JVM identity hash, so
+  * the same plan printed differently in every run.
+  */
+private[functions] trait ContentArgs extends Expression {
+  override protected def stringArgs: Iterator[Any] = super.stringArgs.map {
+    case m: Array[Array[Double]] =>
+      s"double[${m.length}][]:${java.util.Arrays.deepHashCode(m.asInstanceOf[Array[AnyRef]]).toHexString}"
+    case a: Array[Double] => s"double[${a.length}]:${java.util.Arrays.hashCode(a).toHexString}"
+    case a: Array[Long] => s"long[${a.length}]:${java.util.Arrays.hashCode(a).toHexString}"
+    case other => other
+  }
+}
+
 /** Cosine similarity of two `array<double>` columns. Null when either
   * side is null, lengths differ, or any element is null — exactly the
   * propagation of the `zip_with` + `aggregate` form it replaces (zip_with
@@ -105,7 +119,7 @@ case class CosineSim(left: Expression, right: Expression)
   * mismatch with the matrix columns.
   */
 case class MatVecProduct(child: Expression, matrix: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with ContentArgs {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
@@ -214,7 +228,7 @@ case class MatVecProduct(child: Expression, matrix: Array[Array[Double]])
   */
 case class IvfProbes(child: Expression, centroids: Array[Array[Double]],
                      offsets: Array[Double], nprobe: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ContentArgs {
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
@@ -390,7 +404,7 @@ object IvfKernel {
   * truncating).
   */
 case class QuantizeUint8(child: Expression, lo: Array[Double], hi: Array[Double])
-    extends UnaryExpression {
+    extends UnaryExpression with ContentArgs {
 
   override def dataType: DataType = org.apache.spark.sql.types.BinaryType
   override def nullable: Boolean = true
@@ -436,7 +450,7 @@ case class QuantizeUint8(child: Expression, lo: Array[Double], hi: Array[Double]
   */
 case class QuantCosine(left: Expression, right: Expression,
                        lo: Array[Double], hi: Array[Double])
-    extends BinaryExpression {
+    extends BinaryExpression with ContentArgs {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -529,7 +543,7 @@ object QuantKernel {
   * collect time.
   */
 case class SortedLongContains(child: Expression, sorted: Array[Long])
-    extends UnaryExpression {
+    extends UnaryExpression with ContentArgs {
 
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def nullable: Boolean = child.nullable

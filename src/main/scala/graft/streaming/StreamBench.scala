@@ -24,7 +24,7 @@ object StreamBench {
   /** One batch's worth of rows per feed call; cases feed `batches` times. */
   private val batches = 6
 
-  private[streaming] def drain[T](spark: SparkSession, input: MemoryStream[T],
+  private def drain[T](spark: SparkSession, input: MemoryStream[T],
                        out: DataFrame, chunks: Seq[Seq[T]]): Unit = {
     val query: StreamingQuery = out.writeStream.format("noop")
       .outputMode("append").start()
@@ -52,7 +52,7 @@ object StreamBench {
     * vocabulary; ~1 in 6 duplicates an earlier text so dedup lanes do
     * real suppression work.
     */
-  private[streaming] def docs(n: Int, seed: Long): Seq[(Timestamp, Long, String, String)] = {
+  private def docs(n: Int, seed: Long): Seq[(Timestamp, Long, String, String)] = {
     val rng = new scala.util.Random(seed)
     val vocab = (0 until 180).map(i => s"w$i")
     val t0 = 1700000000000L
@@ -69,7 +69,7 @@ object StreamBench {
     }
   }
 
-  private[streaming] def chunked[T](rows: Seq[T]): Seq[Seq[T]] = {
+  private def chunked[T](rows: Seq[T]): Seq[Seq[T]] = {
     val per = math.max(1, rows.length / batches)
     rows.grouped(per).toSeq
   }

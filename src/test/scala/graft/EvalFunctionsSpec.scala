@@ -432,14 +432,14 @@ class EvalFunctionsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").as[(Long, Option[Seq[String]])].collect().toSeq
     val kernelDocs = rows(graft.ext.TextAnalysis.bpeEncode(docs, "doc_id", "text", learned))
-    val hofDocs = rows(graft.ext.TextAnalysis.bpeEncodeHof(docs, "doc_id", "text", learned))
+    val hofDocs = rows(TextAnalysisTwins.bpeEncodeHof(docs, "doc_id", "text", learned))
     assert(kernelDocs == hofDocs, "kernel diverged from HOF chain on documents")
     // null text → null array (both); space runs and edge spaces collapse;
     // empty text → empty array
     val edge = Seq((1L, null), (2L, "  low   lower "), (3L, ""), (4L, " "))
       .asInstanceOf[Seq[(Long, String)]].toDF("doc_id", "text")
     val kernelE = rows(graft.ext.TextAnalysis.bpeEncode(edge, "doc_id", "text", learned))
-    val hofE = rows(graft.ext.TextAnalysis.bpeEncodeHof(edge, "doc_id", "text", learned))
+    val hofE = rows(TextAnalysisTwins.bpeEncodeHof(edge, "doc_id", "text", learned))
     assert(kernelE == hofE, s"edge-case divergence:\n$kernelE\n$hofE")
     assert(kernelE.head._2.isEmpty, "null text must encode to null")
     assert(kernelE(2)._2.contains(Seq.empty), "empty text must encode to []")
@@ -1217,7 +1217,7 @@ class EvalFunctionsSpec extends SparkSpec {
         out.select("doc_id", "pos", "gram_hash").as[(Long, Long, Long)]
           .collect().sortBy(r => (r._1, r._2, r._3)).toSeq
       val fast = rows(graft.ext.TextAnalysis.winnowFingerprints(df, "doc_id", "text", k, w))
-      val hof = rows(graft.ext.TextAnalysis.winnowFingerprintsHof(df, "doc_id", "text", k, w))
+      val hof = rows(TextAnalysisTwins.winnowFingerprintsHof(df, "doc_id", "text", k, w))
       assert(fast == hof, s"$tag k=$k w=$w")
     }
   }
@@ -1439,7 +1439,7 @@ class EvalFunctionsSpec extends SparkSpec {
       !col("text").rlike("[\\x{10000}-\\x{10FFFF}]"))
     val bad = bmp.select(
       graft.ext.TextAnalysis.subwordCount(col("text")).as("k"),
-      graft.ext.TextAnalysis.subwordCountSplit(col("text")).as("t"), col("text"))
+      TextAnalysisTwins.subwordCountSplit(col("text")).as("t"), col("text"))
       .filter(!(col("k") <=> col("t"))).limit(3).collect()
     assert(bad.isEmpty, s"subwordCount mismatch: ${bad.mkString("; ")}")
     // astral: one emoji = one non-alnum CODE POINT, the oracle identity
@@ -1455,7 +1455,7 @@ class EvalFunctionsSpec extends SparkSpec {
     // on empty text — the operator's domain is non-empty documents
     val fix = textFixture.filter(length(col("text")) > 0)
     val k = graft.ext.TextAnalysis.qualitySignals(fix, "text")
-    val t = graft.ext.TextAnalysis.qualitySignalsSplit(fix, "text")
+    val t = TextAnalysisTwins.qualitySignalsSplit(fix, "text")
     // join rows positionally via a window-free zip: both frames derive
     // from the same input in the same order — compare via collected rows
     // (fixture is small)
@@ -1473,7 +1473,7 @@ class EvalFunctionsSpec extends SparkSpec {
         lit(" u1@mail.example 10.0.9.7 555-123-4567 a@1.2.3.4.zz x@y.c")))
     val cols = Seq("n_emails", "n_ips", "n_phones", "redacted")
     val kr = graft.ext.TextAnalysis.redactPii(aug, "text").select("text", cols: _*).collect()
-    val tr = graft.ext.TextAnalysis.redactPiiRegexp(aug, "text").select("text", cols: _*).collect()
+    val tr = TextAnalysisTwins.redactPiiRegexp(aug, "text").select("text", cols: _*).collect()
     assert(kr.length == tr.length)
     kr.zip(tr).foreach { case (a, b) => assert(a == b, s"redactPii mismatch: $a vs $b") }
   }

@@ -4,7 +4,7 @@ package graft
   * OPTIMIZED plan must be free of unpartitioned data-sized windows and
   * non-equi/cross data-sized joins — the two patterns that silently turn
   * a 100 TB plan into a single-task or all-pairs job. The sweep itself
-  * lives in [[ExplainAudit.audit]] (also runnable as a main); the only
+  * lives in [[ExplainAudit.audit]] (also `graft.Run audit`); the only
   * allowed hits are the documented [[ExplainAudit.exempt]] set.
   */
 class ExplainAuditSpec extends SparkSpec {

@@ -12,12 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.core.GraftSession.configure(
-      SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
+    val s = graft.core.GraftSession.local(cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -3,7 +3,7 @@
 # without holding the sbt lock (sweeps/corpus generation run for tens of
 # minutes; code work continues in sbt meanwhile). Mirrors build.sbt's
 # JDK17 add-opens + driver flags. Usage:
-#   tools/run_graft.sh graft.ScaleGen /root/testdata/sf0.1 target/testdata/sf10 100
+#   tools/run_graft.sh graft.Run scale /root/testdata/sf0.1 target/testdata/sf10 100
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Compare two QueryRun logs (same registry, different scale factors):
-per-query warm time ratio, sorted worst-first. Warm = last rep.
+"""Compare two `graft.Run run` logs (same registry, different scale
+factors): per-query warm time ratio, sorted worst-first. Warm = last rep.
 
 Usage: scale_ratio.py <small.log> <big.log> [--factor 10]
 
@@ -12,7 +12,7 @@ worth explaining or fixing.
 import re, sys
 
 def parse(path):
-    # [queryrun] name  rep=N rows=R  T.TTs rdds=K
+    # [queryrun] name  rep=N rows=R  T.TTs build=… plan=… exec=… … rdds=K
     rx = re.compile(r"\[queryrun\] (\S+)\s+rep=(\d+) rows=(\d+)\s+([\d.]+)s")
     out = {}
     for line in open(path):

@@ -3,7 +3,7 @@
 
 Usage: sweep_check.py [--allow-designated] <registry.txt> <bench.json> [...]
 
-<registry.txt> is `graft.RegistryDump` output (one row name per line).
+<registry.txt> is `graft.Run list` output (one row name per line).
 Every non-`xs_` registry row must appear in each bench JSON's "queries"
 map with no entry in its "failed" list; exits 1 (loudly, with the set
 difference) otherwise. Extra rows in the JSON (stream_* cases when
