@@ -36,10 +36,11 @@ import graft.core.GraftSession
   *    last rep. No rows: the whole registry.
   *  - `plans <sfDir> <outDir> <tag> rows…` — runs each row and writes its
   *    final (post-AQE) formatted plan to `<name>_<tag>.txt`, and its
-  *    optimized logical plan, expression ids normalised to `#x`, to
-  *    `<name>_<tag>.logical.txt`. The post-AQE plan can differ between
-  *    two runs of the same code; the logical one does not when both runs
-  *    dump the same rows in the same order.
+  *    optimized logical plan to `<name>_<tag>.logical.txt`, with the
+  *    JVM's counters masked: expression ids print as `#x`, lambda
+  *    variables as `x_n`, function objects as `$$Lambda`. The post-AQE
+  *    plan can differ between two runs of the same code; the logical one
+  *    does not, whatever ran before it.
   *  - `verify <sfDir> <outDir> <a,b,…>` — [[Verify.dump]] for those rows
   *    only, in the layout `tools/check_correctness.py` reads. A row that
   *    throws fails the run and stays out of the oracle slice.
@@ -165,7 +166,10 @@ object Run {
       val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
       qe.toRdd.count() // run, so AQE's final plan exists
       write(s"${name}_$tag.txt", qe.explainString(ExplainMode.fromString("formatted")))
-      write(s"${name}_$tag.logical.txt", qe.optimizedPlan.treeString.replaceAll("#\\d+", "#x"))
+      write(s"${name}_$tag.logical.txt", qe.optimizedPlan.treeString
+        .replaceAll("#\\d+", "#x")
+        .replaceAll("(lambda \\w+?)_\\d+", "$1_n")
+        .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+", "\\$\\$Lambda"))
     }
   }
 

@@ -170,24 +170,22 @@ object Tables {
       // materialized as PARQUET, not a persisted row cache: consumers get
       // codegen'd columnar scans with pruning/pushdown (a cached-row scan
       // cost anomaly_pipeline +0.5 s), and the on-disk table IS the
-      // warehouse-scale shape of the contract. Path is PER-PROCESS
-      // (unlike the write-once scratch sinks): a concurrent JVM on the
-      // same sf dir must not overwrite files this session is reading.
-      // The pid root is removed on JVM exit so /tmp does not accumulate
-      // one tree per run.
-      val path = s"$idxRoot/${Artifacts.dirName(d)}/events_idx"
+      // warehouse-scale shape of the contract. Path is under the
+      // per-process [[scratchRoot]]: a concurrent JVM on the same sf dir
+      // must not overwrite files this session is reading.
+      val path = s"$scratchRoot/${Artifacts.dirName(d)}/events_idx"
       Indexing.withOrderedIdx(events(s, d), "_idx",
         org.apache.spark.sql.functions.col("event_id"))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path)
     }(_ => ())
 
-  /** Per-process scratch root for materialized idx tables; deleted by a
-    * shutdown hook (registered once) so repeated runs don't accumulate
-    * under /tmp/graft_idx.
+  /** Per-process scratch root for materialized idx tables and the
+    * round-trip rows' sink files; deleted by a shutdown hook (registered
+    * once) so repeated runs don't accumulate under /tmp/graft_scratch.
     */
-  private lazy val idxRoot: String = {
-    val root = s"/tmp/graft_idx/${ProcessHandle.current().pid()}"
+  private[graft] lazy val scratchRoot: String = {
+    val root = s"/tmp/graft_scratch/${ProcessHandle.current().pid()}"
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm))

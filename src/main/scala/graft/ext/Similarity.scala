@@ -68,18 +68,6 @@ object Similarity {
     Math.floorMod(z, 2000L).toDouble / 1000.0 - 1.0
   }
 
-  /** Driver-side signature of a local vector (same hyperplanes as
-    * [[hyperplaneSignature]]) — lets a single-query ANN compute its
-    * signatures without a Spark job.
-    */
-  def signatureLocal(vec: Array[Double], bits: Int, offset: Int = 0): Long =
-    (0 until bits).map { b =>
-      var dot = 0.0
-      var i = 0
-      while (i < vec.length) { dot += vec(i) * hyperplane(offset + b, i); i += 1 }
-      if (dot >= 0) 1L << b else 0L
-    }.reduce(_ | _)
-
   /** Random-hyperplane signature: `bits` sign bits of projections onto
     * deterministic pseudo-random hyperplanes. `offset` selects an
     * independent hyperplane range so banded schemes can derive many
@@ -128,8 +116,8 @@ object Similarity {
     * attach) or leave it unbucketed; what the stored table saves is the
     * signature COMPUTATION (the planes·dim matvec pass), not the band
     * exchange.
-    * Bitwise identical to [[bandedSignatures]]/[[signatureLocal]] (same
-    * sequential fold per plane).
+    * Bitwise identical to [[bandedSignatures]] (same sequential fold per
+    * plane).
     */
   def bandedSignatureRows(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                           bands: Int = 16, bitsPerBand: Int = 5): DataFrame = {

@@ -304,6 +304,21 @@ case class IvfProbesBroadcast(child: Expression,
 
   @transient private lazy val q: IvfQuantizer = bc.value
 
+  /** The quantizer by shape and content hash, like [[ContentArgs]]: a
+    * broadcast prints its id, which counts the broadcasts made before it,
+    * so the same plan would print differently after other rows ran.
+    * Hashed once per expression, not once per plan render.
+    */
+  @transient private lazy val quantizerArg: String =
+    s"quantizer(double[${q.centroids.length}][]:" +
+      java.util.Arrays.deepHashCode(q.centroids.asInstanceOf[Array[AnyRef]]).toHexString +
+      s", double[${q.offsets.length}]:${java.util.Arrays.hashCode(q.offsets).toHexString})"
+
+  override protected def stringArgs: Iterator[Any] = super.stringArgs.map {
+    case `bc` => quantizerArg
+    case other => other
+  }
+
   override def nullSafeEval(input: Any): Any =
     IvfKernel.probes(input.asInstanceOf[ArrayData], q.centroids, q.offsets, nprobe)
 

@@ -99,6 +99,19 @@ object ExtQueries {
     IvfQuantizer.pinned(df, "vec_id", "embedding",
       Similarity.autoNlist(df.count(), nprobe = 2, minList = 8))
 
+  /** `t(doc_id, toks)`: every document's whitespace tokens, the opening
+    * CTE of the token-level text oracles.
+    */
+  private[queries] val DocToksCte: String =
+    "WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), "
+
+  /** `e(doc_id, toks, p)`: the 1-based start of every n-token window of
+    * `t`; documents shorter than n have none.
+    */
+  private[queries] def ngramStartsCte(n: Int): String =
+    s"e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - ${n - 1})) AS p FROM t " +
+      s"WHERE len(toks) >= $n)"
+
   /** Shared winnowing oracle prefix at the registry parameters
     * (k = 4, w = 5): restates `TextAnalysis.winnowFingerprints`'
     * portable arithmetic — char-code token polynomials, 4-gram hash
@@ -143,6 +156,29 @@ object ExtQueries {
     "pr AS (SELECT a.doc_id AS id1, b.doc_id AS id2, CAST(count(*) AS BIGINT) AS n_shared " +
     "FROM g2 a JOIN g2 b ON a.h = b.h AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
     "pq AS (SELECT id1, id2 FROM pr WHERE n_shared >= 2)"
+
+  /** Appended after [[WinnowPairGateCtes]]: `u2g` keeps the positions of
+    * the gated hashes (the stop-gram cap gates the position join too,
+    * like the engine), and `mm` is every fingerprint a qualifying pair
+    * shares, with its position in both documents and its diagonal.
+    */
+  private val WinnowMatchCtes: String =
+    ", u2g AS (SELECT u2.* FROM u2 JOIN dfc ON u2.h = dfc.h), " +
+    "mm AS (SELECT fa.doc_id AS id1, fb.doc_id AS id2, fa.pos AS pos1, fb.pos AS pos2, " +
+    "fa.h AS gram_hash, fa.pos - fb.pos AS diag FROM u2g fa " +
+    "JOIN u2g fb ON fa.h = fb.h AND fa.doc_id < fb.doc_id " +
+    "JOIN pq ON fa.doc_id = pq.id1 AND fb.doc_id = pq.id2)"
+
+  /** [[WinnowMatchCtes]] merged into islands: `il.isl` numbers the runs
+    * of one pair along one diagonal, a gap over w = 5 positions starting
+    * a new run.
+    */
+  private val WinnowIslandCtes: String =
+    WinnowMatchCtes + ", " +
+    "fl AS (SELECT *, CASE WHEN pos1 - lag(pos1) OVER " +
+    "(PARTITION BY id1, id2, diag ORDER BY pos1) > 5 THEN 1 ELSE 0 END AS ni FROM mm), " +
+    "il AS (SELECT *, sum(ni) OVER (PARTITION BY id1, id2, diag ORDER BY pos1 " +
+    "ROWS UNBOUNDED PRECEDING) AS isl FROM fl)"
 
   /** DuckDB restatement of the splitmix64 hyperplane grid
     * ([[graft.ext.Similarity]]'s `hyperplane(p, i)`), ending in a CTE
@@ -688,15 +724,132 @@ object ExtQueries {
     * rationale.
     */
   private val JaccardTruthCtes: String =
-    "WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-    "e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS p FROM t " +
-    "WHERE len(toks) >= 3), " +
+    DocToksCte + ngramStartsCte(3) + ", " +
     "g AS (SELECT DISTINCT doc_id, array_to_string(toks[p:p+2], ' ') AS gr FROM e), " +
     "c AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id), " +
     "pr AS (SELECT a.doc_id AS id1, b.doc_id AS id2, CAST(count(*) AS BIGINT) AS sh " +
     "FROM g a JOIN g b ON a.gr = b.gr AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
     "j AS (SELECT id1, id2, CAST(sh AS DOUBLE) / (c1.n + c2.n - sh) AS jac " +
     "FROM pr JOIN c c1 ON c1.doc_id = pr.id1 JOIN c c2 ON c2.doc_id = pr.id2)"
+
+  /** Exact 3-gram Jaccard of each adjacent-id pair (id, id + 1) with
+    * id < 50, over string gram sets: the oracle of `x_jaccard_exact` and
+    * `x_jaccard_stored`.
+    */
+  private val AdjacentJaccardOracle: String =
+    DocToksCte + ngramStartsCte(3) + ", " +
+    "g AS (SELECT doc_id, list(DISTINCT array_to_string(toks[p:p+2], ' ')) AS sh " +
+    "FROM e GROUP BY doc_id), " +
+    "pr AS (SELECT a.doc_id AS id1, b.doc_id AS id2, a.sh AS s1, b.sh AS s2 " +
+    "FROM g a JOIN g b ON b.doc_id = a.doc_id + 1 WHERE a.doc_id < 50) " +
+    "SELECT id1, id2, round(CAST(len(list_intersect(s1, s2)) AS DOUBLE) / " +
+    "len(list_distinct(list_concat(s1, s2))), 6) AS jaccard " +
+    "FROM pr ORDER BY id1, id2"
+
+  /** Appended after [[DocToksCte]]: `g(doc_id, p, gram)` is every 6-token
+    * window (0-based start p), `dup` the grams two or more documents
+    * share, and `cov(doc_id, tp)` every token position such a gram covers.
+    */
+  private val DupCoverCtes: String =
+    "e AS (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 6)) AS p FROM t " +
+    "WHERE len(toks) >= 6), " +
+    "g AS (SELECT doc_id, p, array_to_string(toks[p + 1 : p + 6], ' ') AS gram FROM e), " +
+    "dup AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2), " +
+    "cov AS (SELECT DISTINCT doc_id, tp FROM " +
+    "(SELECT doc_id, unnest(generate_series(p, p + 5)) AS tp FROM g JOIN dup USING (gram)))"
+
+  /** The scrub's reassembly: the tokens of `t` (column `toks`, each
+    * aliased `w`) at positions not in `cov(doc_id, tp)`, rejoined in
+    * order, as (doc_id, n_tokens, n_dropped, clean_text).
+    */
+  private def scrubTail(toks: String, w: String): String =
+    s"tok AS (SELECT doc_id, unnest($toks) AS $w, " +
+    s"unnest(generate_series(0, len($toks) - 1)) AS p FROM t), " +
+    s"kept AS (SELECT tok.doc_id, tok.p, tok.$w FROM tok LEFT JOIN cov " +
+    "ON tok.doc_id = cov.doc_id AND tok.p = cov.tp WHERE cov.tp IS NULL), " +
+    s"r AS (SELECT doc_id, count(*) AS nk, string_agg($w, ' ' ORDER BY p) AS txt " +
+    "FROM kept GROUP BY doc_id) " +
+    s"SELECT t.doc_id, CAST(len(t.$toks) AS BIGINT) AS n_tokens, " +
+    s"CAST(len(t.$toks) - coalesce(r.nk, 0) AS BIGINT) AS n_dropped, " +
+    "coalesce(r.txt, '') AS clean_text " +
+    "FROM t LEFT JOIN r USING (doc_id) ORDER BY t.doc_id"
+
+  /** Every duplicated-6-gram position scrubbed from every document: the
+    * oracle of `x_dup_span_scrub`, `x_dup_scrub_stored` and
+    * `xs_stream_scrub`, whose outputs are the same by construction.
+    */
+  private[queries] val DupSpanScrubOracle: String =
+    DocToksCte + DupCoverCtes + ", " + scrubTail("toks", "w")
+
+  /** `sm(id1, id2, dt, nx, ny)`: the dot product and squared norms of
+    * every embedding pair id1 < id2 with both ids below `bound`.
+    */
+  private def cosinePairCtes(bound: Int): String =
+    "d AS (SELECT a.vec_id AS id1, b.vec_id AS id2, unnest(a.embedding) AS x, " +
+    "unnest(b.embedding) AS y FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
+    s"WHERE a.vec_id < $bound AND b.vec_id < $bound), " +
+    "sm AS (SELECT id1, id2, sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dt, " +
+    "sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx, " +
+    "sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS ny FROM d GROUP BY id1, id2)"
+
+  /** `cl(id, cluster)`: the connected components of the undirected pairs
+    * `pairs(id1, id2)`, each id labelled with its component's minimum id
+    * by recursive reachability (the query opens WITH RECURSIVE).
+    */
+  private def clusterCtes(pairs: String): String =
+    s"e AS (SELECT id1 AS a, id2 AS b FROM $pairs UNION SELECT id2, id1 FROM $pairs), " +
+    "r AS (SELECT a AS id, a AS lab FROM e " +
+    "UNION SELECT e.a, r.lab FROM e JOIN r ON r.id = e.b), " +
+    "cl AS (SELECT id, min(lab) AS cluster FROM r GROUP BY id)"
+
+  /** [[clustersFor]] restated: the exact-cosine pairs `p` (cos > 0.3,
+    * ids < 300) and their components `cl`.
+    */
+  private val CosineClusterCtes: String =
+    "WITH RECURSIVE " + cosinePairCtes(300) + ", " +
+    "p AS (SELECT id1, id2 FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) > 0.3), " + clusterCtes("p")
+
+  /** After [[clusterCtes]]: `w(cluster, id, rn, members)` ranks each
+    * cluster's members by characters (most first, ids without a document
+    * last), then by id; rn = 1 is the canonical member.
+    */
+  private val CanonicalRankCtes: String =
+    "q AS (SELECT cl.cluster, cl.id, dd.n_chars FROM cl " +
+    "LEFT JOIN documents dd ON cl.id = dd.doc_id), " +
+    "w AS (SELECT cluster, id, row_number() OVER " +
+    "(PARTITION BY cluster ORDER BY n_chars DESC NULLS LAST, id) AS rn, " +
+    "count(*) OVER (PARTITION BY cluster) AS members FROM q)"
+
+  /** Incremental exact dedup over text equality: `seen` is the ingested
+    * slice (doc_id % 5 = 0), `unseen` the rest of the corpus minus seen
+    * texts, and `k(text, keep)` the first id of each unseen text.
+    */
+  private val IncrementalDedupCtes: String =
+    "WITH seen AS (SELECT DISTINCT text FROM documents WHERE doc_id % 5 = 0), " +
+    "batch AS (SELECT * FROM documents WHERE doc_id % 5 <> 0), " +
+    "unseen AS (SELECT b.doc_id, b.text, b.lang, b.source FROM batch b " +
+    "LEFT JOIN seen s ON b.text = s.text WHERE s.text IS NULL), " +
+    "k AS (SELECT text, min(doc_id) AS keep FROM unseen GROUP BY text)"
+
+  private val IncrementalDedupOracle: String =
+    IncrementalDedupCtes + " SELECT u.doc_id, u.lang, u.source FROM unseen u " +
+    "JOIN k ON u.text = k.text AND u.doc_id = k.keep ORDER BY u.doc_id"
+
+  /** BM25 (k1 = 1.2, b = 0.75) of the query window/join/sort: `sc(doc_id,
+    * s)` holds one term's score per matching (document, term).
+    */
+  private val Bm25Ctes: String =
+    DocToksCte +
+    "dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM t), " +
+    "st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dd), " +
+    "e AS (SELECT doc_id, unnest(toks) AS tt FROM t), " +
+    "tf AS (SELECT doc_id, tt, CAST(count(*) AS DOUBLE) AS tf FROM e " +
+    "WHERE tt IN ('window', 'join', 'sort') GROUP BY 1, 2), " +
+    "dft AS (SELECT tt, CAST(count(*) AS DOUBLE) AS dft FROM tf GROUP BY 1), " +
+    "sc AS (SELECT tf.doc_id, " +
+    "ln((st.n - dft.dft + 0.5) / (dft.dft + 0.5) + 1) * tf.tf * (1.2 + 1.0) / " +
+    "(tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dd.dl / st.avgdl)) AS s " +
+    "FROM tf JOIN dft USING (tt) JOIN dd ON dd.doc_id = tf.doc_id CROSS JOIN st)"
 
   /** DuckDB restatement of the deterministic BPE-12 learner, shared by
     * the `x_bpe_merges` and `x_bpe_subwords` oracles. The corpus
@@ -753,6 +906,26 @@ object ExtQueries {
     "FROM it WHERE merge_rank < " + numMerges +
     ")) WHERE best0 IS NOT NULL))"
 
+  /** The learned merge table, one row per merge in rank order. */
+  private def bpeMergesOracle(numMerges: Int): String =
+    bpeOracleCtes(numMerges) +
+      " SELECT merge_rank, l AS \"left\", r AS \"right\", c AS pair_count " +
+      "FROM it WHERE merge_rank >= 1 ORDER BY merge_rank"
+
+  /** Per-document subword counts: each token's symbol count in the
+    * learner's final state, summed per document (0 for documents with no
+    * tokens).
+    */
+  private def bpeSubwordsOracle(numMerges: Int): String =
+    bpeOracleCtes(numMerges) + ", " +
+      "fin AS (SELECT unnest(st) AS ws FROM (SELECT st FROM it ORDER BY merge_rank DESC LIMIT 1)), " +
+      "wl AS (SELECT array_to_string(ws.syms, '') AS w, len(ws.syms) AS k FROM fin), " +
+      "dt AS (SELECT doc_id, t FROM (SELECT doc_id, " +
+      "unnest(string_split_regex(text, ' +')) AS t FROM documents) WHERE length(t) > 0), " +
+      "cnt AS (SELECT dt.doc_id, sum(wl.k) AS n FROM dt JOIN wl ON dt.t = wl.w GROUP BY dt.doc_id) " +
+      "SELECT d.doc_id, CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_subwords " +
+      "FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id ORDER BY d.doc_id"
+
   /** 100-merge BPE table memo: the learned artifact is 100 driver rows
     * (a merge table, not data), so the memo holds the Seq itself —
     * `x_bpe_merges_100` owns the learn cost in the bench,
@@ -790,6 +963,24 @@ object ExtQueries {
       Dedup.duplicateClusters(Similarity.cosineNearDuplicates(
         Tables.embeddings(s, d).filter(col("vec_id") < 300), "vec_id", "embedding", 0.3))
     }(Artifacts.release)
+
+  /** The content hashes of the ingested slice (doc_id % 5 = 0): the
+    * history the incremental-dedup rows probe.
+    */
+  private def seenHashes(docs: org.apache.spark.sql.DataFrame) =
+    Dedup.exact(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
+      .select(col("content_hash"))
+
+  /** The members of `clusters(id, cluster)` that are not their cluster's
+    * canonical document (most characters, then lowest id), as `doc_id`.
+    */
+  private def nonCanonical(clusters: org.apache.spark.sql.DataFrame,
+                           docs: org.apache.spark.sql.DataFrame) = {
+    val canon = Dedup.canonicalPerCluster(clusters, "id", "cluster", docs, "doc_id", "n_chars")
+    clusters.join(canon.select(col("cluster"), col("canonical_id")), "cluster")
+      .filter(col("id") =!= col("canonical_id"))
+      .select(col("id").as("doc_id"))
+  }
 
   /** Stored LSH signature index, (_band, _sig)-bucketed — the write side
     * of the index lifecycle `x_cosine_near_dup_lsh_stored` probes. `dim`
@@ -1140,19 +1331,12 @@ object ExtQueries {
     Q("x_dedup_incremental",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val seen = Dedup.exact(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-          .select(col("content_hash"))
+        val seen = seenHashes(docs)
         Dedup.exactIncremental(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", seen)
           .select(col("doc_id"), col("lang"), col("source"))
           .orderBy("doc_id")
       },
-      Some("WITH seen AS (SELECT DISTINCT text FROM documents WHERE doc_id % 5 = 0), " +
-        "batch AS (SELECT * FROM documents WHERE doc_id % 5 <> 0), " +
-        "unseen AS (SELECT b.doc_id, b.text, b.lang, b.source FROM batch b " +
-        "LEFT JOIN seen s ON b.text = s.text WHERE s.text IS NULL), " +
-        "k AS (SELECT text, min(doc_id) AS keep FROM unseen GROUP BY text) " +
-        "SELECT u.doc_id, u.lang, u.source FROM unseen u " +
-        "JOIN k ON u.text = k.text AND u.doc_id = k.keep ORDER BY u.doc_id")),
+      Some(IncrementalDedupOracle)),
 
     // The same incremental dedup THROUGH the bloom prefilter: the
     // history's bloom filter (built per call here; stored alongside the
@@ -1163,8 +1347,7 @@ object ExtQueries {
     Q("x_dedup_incremental_bloom",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val seen = Dedup.exact(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-          .select(col("content_hash"))
+        val seen = seenHashes(docs)
         // size by the metadata-only corpus count (upper bound on the
         // ingested slice): overestimating only lowers the FPR, and it
         // avoids a full distinct-count job per call
@@ -1175,13 +1358,7 @@ object ExtQueries {
           .select(col("doc_id"), col("lang"), col("source"))
           .orderBy("doc_id")
       },
-      Some("WITH seen AS (SELECT DISTINCT text FROM documents WHERE doc_id % 5 = 0), " +
-        "batch AS (SELECT * FROM documents WHERE doc_id % 5 <> 0), " +
-        "unseen AS (SELECT b.doc_id, b.text, b.lang, b.source FROM batch b " +
-        "LEFT JOIN seen s ON b.text = s.text WHERE s.text IS NULL), " +
-        "k AS (SELECT text, min(doc_id) AS keep FROM unseen GROUP BY text) " +
-        "SELECT u.doc_id, u.lang, u.source FROM unseen u " +
-        "JOIN k ON u.text = k.text AND u.doc_id = k.keep ORDER BY u.doc_id")),
+      Some(IncrementalDedupOracle)),
 
     // HTML text extraction: markup is built DETERMINISTICALLY around
     // each document (script/style payloads, comments, entities), then
@@ -1333,7 +1510,7 @@ object ExtQueries {
         "(SELECT CAST(count(*) AS BIGINT) FROM k) AS n_quality, " +
         "(SELECT CAST(count(*) AS BIGINT) FROM u) AS n_survivors")),
 
-    // Round-6 composite: the corpus-VERSION build funnel in one plan —
+    // The corpus-VERSION build funnel in one plan —
     // incremental exact dedup of the new batch against the ingested
     // slice's hash table, a 4-gram decontamination gate vs the benchmark
     // slice, then a boilerplate filter over the survivors' own n-gram
@@ -1344,8 +1521,7 @@ object ExtQueries {
     Q("x_corpus_funnel",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        val seen = Dedup.exact(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text")
-          .select(col("content_hash"))
+        val seen = seenHashes(docs)
         val unseen = Dedup.exactIncremental(
           docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", seen)
         val clean = unseen.join(
@@ -1361,13 +1537,9 @@ object ExtQueries {
           .crossJoin(broadcast(clean.agg(count(lit(1)).as("n_clean"))))
           .crossJoin(broadcast(fin.agg(count(lit(1)).as("n_final"))))
       },
-      Some("WITH seen AS (SELECT DISTINCT text FROM documents WHERE doc_id % 5 = 0), " +
-        "b AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0), " +
-        "un AS (SELECT b.doc_id, b.text FROM b LEFT JOIN seen sn ON b.text = sn.text " +
-        "WHERE sn.text IS NULL), " +
-        "u AS (SELECT un.doc_id, un.text FROM un JOIN " +
-        "(SELECT text, min(doc_id) AS k FROM un GROUP BY text) m " +
-        "ON un.text = m.text AND un.doc_id = m.k), " +
+      Some(IncrementalDedupCtes + ", " +
+        "u AS (SELECT un.doc_id, un.text FROM unseen un " +
+        "JOIN k ON un.text = k.text AND un.doc_id = k.keep), " +
         "tb AS (SELECT string_split_regex(text, ' +') AS toks FROM documents " +
         "WHERE doc_id % 20 = 0), " +
         "eb AS (SELECT toks, unnest(generate_series(1, len(toks) - 3)) AS p FROM tb " +
@@ -1491,7 +1663,7 @@ object ExtQueries {
         .select(col("doc_id"), col("n_bigrams"),
           round(col("avg_logprob"), 6).as("avg_logprob"))
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
+      Some(DocToksCte +
         "e AS (SELECT doc_id, toks[p] AS w1, toks[p+1] AS w2 FROM " +
         "(SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS p FROM t " +
         "WHERE len(toks) >= 2)), " +
@@ -1677,7 +1849,7 @@ object ExtQueries {
       (s, d) => TextAnalysis.chunkDocuments(Tables.documents(s, d),
           "doc_id", "text", chunkLen = 16, stride = 8, minChunk = 4)
         .orderBy("doc_id", "chunk_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
+      Some(DocToksCte +
         "s AS (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 1, 8)) AS st FROM t), " +
         "c AS (SELECT doc_id, CAST(st // 8 AS BIGINT) AS chunk_id, " +
         "CAST(st AS BIGINT) AS start_pos, toks[st + 1:st + 16] AS ch FROM s) " +
@@ -1764,13 +1936,8 @@ object ExtQueries {
       (s, d) => Dedup.winnowMatches(Tables.documents(s, d),
           "doc_id", "text", k = 4, w = 5)
         .orderBy("id1", "id2", "pos1", "pos2"),
-      Some(WinnowOracleCtes + WinnowPairGateCtes + ", " +
-        // the stop-gram cap gates the POSITION join too, like the engine
-        "u2g AS (SELECT u2.* FROM u2 JOIN dfc ON u2.h = dfc.h) " +
-        "SELECT fa.doc_id AS id1, fb.doc_id AS id2, fa.pos AS pos1, fb.pos AS pos2, " +
-        "fa.h AS gram_hash FROM u2g fa JOIN u2g fb ON fa.h = fb.h AND fa.doc_id < fb.doc_id " +
-        "JOIN pq ON fa.doc_id = pq.id1 AND fb.doc_id = pq.id2 " +
-        "ORDER BY id1, id2, pos1, pos2")),
+      Some(WinnowOracleCtes + WinnowPairGateCtes + WinnowMatchCtes +
+        " SELECT id1, id2, pos1, pos2, gram_hash FROM mm ORDER BY id1, id2, pos1, pos2")),
 
     // Matched fingerprints merged into ALIGNED SPAN ranges per pair:
     // same-diagonal selections within the winnowing density bound (w)
@@ -1780,16 +1947,7 @@ object ExtQueries {
       (s, d) => Dedup.winnowSpans(Tables.documents(s, d),
           "doc_id", "text", k = 4, w = 5)
         .orderBy("id1", "id2", "start1", "start2"),
-      Some(WinnowOracleCtes + WinnowPairGateCtes + ", " +
-        "u2g AS (SELECT u2.* FROM u2 JOIN dfc ON u2.h = dfc.h), " +
-        "mm AS (SELECT fa.doc_id AS id1, fb.doc_id AS id2, fa.pos AS pos1, " +
-        "fa.pos - fb.pos AS diag FROM u2g fa " +
-        "JOIN u2g fb ON fa.h = fb.h AND fa.doc_id < fb.doc_id " +
-        "JOIN pq ON fa.doc_id = pq.id1 AND fb.doc_id = pq.id2), " +
-        "fl AS (SELECT *, CASE WHEN pos1 - lag(pos1) OVER " +
-        "(PARTITION BY id1, id2, diag ORDER BY pos1) > 5 THEN 1 ELSE 0 END AS ni FROM mm), " +
-        "il AS (SELECT *, sum(ni) OVER (PARTITION BY id1, id2, diag ORDER BY pos1 " +
-        "ROWS UNBOUNDED PRECEDING) AS isl FROM fl) " +
+      Some(WinnowOracleCtes + WinnowPairGateCtes + WinnowIslandCtes + " " +
         "SELECT id1, id2, CAST(min(pos1) AS BIGINT) AS start1, " +
         "CAST(max(pos1) + 4 AS BIGINT) AS end1, " +
         "CAST(min(pos1) - diag AS BIGINT) AS start2, " +
@@ -1814,12 +1972,7 @@ object ExtQueries {
             cand.select("id1", "id2"), docs, "doc_id", "text", shingleLen = 3)
           .filter(col("jaccard") >= 0.5)
         val clusters = Dedup.duplicateClusters(verified.select("id1", "id2"))
-        val canon = Dedup.canonicalPerCluster(clusters, "id", "cluster",
-          docs, "doc_id", "n_chars")
-        val dropped = clusters
-          .join(canon.select(col("cluster"), col("canonical_id")), "cluster")
-          .filter(col("id") =!= col("canonical_id"))
-          .select(col("id").as("doc_id"))
+        val dropped = nonCanonical(clusters, docs)
         docs.join(dropped, Seq("doc_id"), "left_anti")
           .select("doc_id").orderBy("doc_id")
       },
@@ -1833,16 +1986,8 @@ object ExtQueries {
         "JOIN sh b ON pq.id2 = b.doc_id " +
         "WHERE CAST(len(list_intersect(a.s3, b.s3)) AS DOUBLE) / " +
         "len(list_distinct(list_concat(a.s3, b.s3))) >= 0.5), " +
-        "e AS (SELECT id1 AS a, id2 AS b FROM vp UNION SELECT id2, id1 FROM vp), " +
-        "r AS (SELECT a AS id, a AS lab FROM e " +
-        "UNION SELECT e.a, r.lab FROM e JOIN r ON r.id = e.b), " +
-        "cl AS (SELECT id, min(lab) AS cluster FROM r GROUP BY id), " +
-        "cq AS (SELECT cl.cluster, cl.id, dd.n_chars FROM cl " +
-        "LEFT JOIN documents dd ON cl.id = dd.doc_id), " +
-        "rk AS (SELECT cluster, id, row_number() OVER " +
-        "(PARTITION BY cluster ORDER BY n_chars DESC NULLS LAST, id) AS rn FROM cq) " +
-        "SELECT doc_id FROM documents " +
-        "WHERE doc_id NOT IN (SELECT id FROM rk WHERE rn > 1) ORDER BY doc_id")),
+        clusterCtes("vp") + ", " + CanonicalRankCtes + " SELECT doc_id FROM documents " +
+        "WHERE doc_id NOT IN (SELECT id FROM w WHERE rn > 1) ORDER BY doc_id")),
 
     // The winnow spans applied as a SCRUB: each aligned shared-span
     // range is removed from the higher-id document of its pair
@@ -1853,30 +1998,12 @@ object ExtQueries {
       (s, d) => Dedup.winnowScrub(Tables.documents(s, d), "doc_id", "text",
           k = 4, w = 5)
         .orderBy("doc_id"),
-      Some(WinnowOracleCtes + WinnowPairGateCtes + ", " +
-        "u2g AS (SELECT u2.* FROM u2 JOIN dfc ON u2.h = dfc.h), " +
-        "mm AS (SELECT fa.doc_id AS id1, fb.doc_id AS id2, fa.pos AS pos1, " +
-        "fa.pos - fb.pos AS diag FROM u2g fa " +
-        "JOIN u2g fb ON fa.h = fb.h AND fa.doc_id < fb.doc_id " +
-        "JOIN pq ON fa.doc_id = pq.id1 AND fb.doc_id = pq.id2), " +
-        "fl AS (SELECT *, CASE WHEN pos1 - lag(pos1) OVER " +
-        "(PARTITION BY id1, id2, diag ORDER BY pos1) > 5 THEN 1 ELSE 0 END AS ni FROM mm), " +
-        "il AS (SELECT *, sum(ni) OVER (PARTITION BY id1, id2, diag ORDER BY pos1 " +
-        "ROWS UNBOUNDED PRECEDING) AS isl FROM fl), " +
+      Some(WinnowOracleCtes + WinnowPairGateCtes + WinnowIslandCtes + ", " +
         "sp AS (SELECT id2, min(pos1) - diag AS s2, max(pos1) + 4 - diag AS e2 " +
         "FROM il GROUP BY id1, id2, diag, isl), " +
         "cov AS (SELECT DISTINCT doc_id, tp FROM " +
         "(SELECT id2 AS doc_id, unnest(generate_series(s2, e2 - 1)) AS tp FROM sp)), " +
-        "tok AS (SELECT doc_id, unnest(ws) AS wd, " +
-        "unnest(generate_series(0, len(ws) - 1)) AS p FROM t), " +
-        "kept AS (SELECT tok.doc_id, tok.p, tok.wd FROM tok LEFT JOIN cov " +
-        "ON tok.doc_id = cov.doc_id AND tok.p = cov.tp WHERE cov.tp IS NULL), " +
-        "r AS (SELECT doc_id, count(*) AS nk, string_agg(wd, ' ' ORDER BY p) AS txt " +
-        "FROM kept GROUP BY doc_id) " +
-        "SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_tokens, " +
-        "CAST(len(t.ws) - coalesce(r.nk, 0) AS BIGINT) AS n_dropped, " +
-        "coalesce(r.txt, '') AS clean_text " +
-        "FROM t LEFT JOIN r USING (doc_id) ORDER BY t.doc_id")),
+        scrubTail("ws", "wd"))),
 
     // Gopher intra-doc repetition: duplicate 3-gram fraction per doc —
     // a zero-shuffle narrow projection (array_distinct on hashed grams;
@@ -1884,7 +2011,7 @@ object ExtQueries {
     Q("x_dup_ngrams",
       (s, d) => TextAnalysis.dupNgramStats(Tables.documents(s, d), "doc_id", "text", n = 3)
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
+      Some(DocToksCte +
         "e AS (SELECT doc_id, array_to_string(toks[p:p+2], ' ') AS g FROM " +
         "(SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS p FROM t " +
         "WHERE len(toks) >= 3)), " +
@@ -2023,12 +2150,7 @@ object ExtQueries {
           Tables.embeddings(s, d).filter(col("vec_id") < 300), "vec_id", "embedding", 0.3)
         .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
         .orderBy("id1", "id2"),
-      Some("WITH d AS (SELECT a.vec_id AS id1, b.vec_id AS id2, unnest(a.embedding) AS x, " +
-        "unnest(b.embedding) AS y FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
-        "WHERE a.vec_id < 300 AND b.vec_id < 300), " +
-        "sm AS (SELECT id1, id2, sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dt, " +
-        "sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx, " +
-        "sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS ny FROM d GROUP BY id1, id2) " +
+      Some("WITH " + cosinePairCtes(300) + " " +
         "SELECT id1, id2, round(dt / (sqrt(nx) * sqrt(ny)), 6) AS cos FROM sm " +
         "WHERE dt / (sqrt(nx) * sqrt(ny)) > 0.3 ORDER BY id1, id2")),
 
@@ -2103,19 +2225,8 @@ object ExtQueries {
       (s, d) => clustersFor(s, d)
         .select(col("id").as("vec_id"), col("cluster"))
         .orderBy("vec_id"),
-      Some("WITH RECURSIVE " +
-        "d AS (SELECT a.vec_id AS id1, b.vec_id AS id2, unnest(a.embedding) AS x, " +
-        "unnest(b.embedding) AS y FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
-        "WHERE a.vec_id < 300 AND b.vec_id < 300), " +
-        "sm AS (SELECT id1, id2, sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dt, " +
-        "sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx, " +
-        "sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS ny FROM d GROUP BY id1, id2), " +
-        "p AS (SELECT id1, id2 FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) > 0.3), " +
-        "e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p), " +
-        "r AS (SELECT a AS id, a AS lab FROM e " +
-        "UNION SELECT e.a, r.lab FROM e JOIN r ON r.id = e.b) " +
-        "SELECT id AS vec_id, CAST(min(lab) AS BIGINT) AS cluster FROM r " +
-        "GROUP BY id ORDER BY vec_id")),
+      Some(CosineClusterCtes +
+        " SELECT id AS vec_id, CAST(cluster AS BIGINT) AS cluster FROM cl ORDER BY vec_id")),
 
     // Quality-aware canonical selection over the duplicate clusters:
     // per cluster, keep the member with the most characters (tie ->
@@ -2127,23 +2238,7 @@ object ExtQueries {
           clustersFor(s, d), "id", "cluster",
           Tables.documents(s, d), "doc_id", "n_chars")
         .orderBy("cluster"),
-      Some("WITH RECURSIVE " +
-        "d AS (SELECT a.vec_id AS id1, b.vec_id AS id2, unnest(a.embedding) AS x, " +
-        "unnest(b.embedding) AS y FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
-        "WHERE a.vec_id < 300 AND b.vec_id < 300), " +
-        "sm AS (SELECT id1, id2, sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dt, " +
-        "sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx, " +
-        "sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS ny FROM d GROUP BY id1, id2), " +
-        "p AS (SELECT id1, id2 FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) > 0.3), " +
-        "e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p), " +
-        "r AS (SELECT a AS id, a AS lab FROM e " +
-        "UNION SELECT e.a, r.lab FROM e JOIN r ON r.id = e.b), " +
-        "cl AS (SELECT id, min(lab) AS cluster FROM r GROUP BY id), " +
-        "q AS (SELECT cl.cluster, cl.id, dd.n_chars FROM cl " +
-        "LEFT JOIN documents dd ON cl.id = dd.doc_id), " +
-        "w AS (SELECT cluster, id, row_number() OVER " +
-        "(PARTITION BY cluster ORDER BY n_chars DESC NULLS LAST, id) AS rn, " +
-        "count(*) OVER (PARTITION BY cluster) AS members FROM q) " +
+      Some(CosineClusterCtes + ", " + CanonicalRankCtes + " " +
         "SELECT CAST(cluster AS BIGINT) AS cluster, id AS canonical_id, " +
         "CAST(members AS BIGINT) AS members FROM w WHERE rn = 1 ORDER BY cluster")),
 
@@ -2157,34 +2252,14 @@ object ExtQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val clusters = clustersFor(s, d)
-        val canon = Dedup.canonicalPerCluster(clusters, "id", "cluster",
-          docs, "doc_id", "n_chars")
-        val dropped = clusters
-          .join(canon.select(col("cluster"), col("canonical_id")), "cluster")
-          .filter(col("id") =!= col("canonical_id"))
-          .select(col("id").as("doc_id"))
+        val dropped = nonCanonical(clusters, docs)
         val kept = docs.join(dropped, Seq("doc_id"), "left_anti")
         docs.agg(count(lit(1)).as("n_input"))
           .crossJoin(broadcast(clusters.agg(count(lit(1)).as("n_clustered"))))
           .crossJoin(broadcast(dropped.agg(count(lit(1)).as("n_dropped"))))
           .crossJoin(broadcast(kept.agg(count(lit(1)).as("n_kept"))))
       },
-      Some("WITH RECURSIVE " +
-        "d AS (SELECT a.vec_id AS id1, b.vec_id AS id2, unnest(a.embedding) AS x, " +
-        "unnest(b.embedding) AS y FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
-        "WHERE a.vec_id < 300 AND b.vec_id < 300), " +
-        "sm AS (SELECT id1, id2, sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dt, " +
-        "sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx, " +
-        "sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS ny FROM d GROUP BY id1, id2), " +
-        "p AS (SELECT id1, id2 FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) > 0.3), " +
-        "e AS (SELECT id1 AS a, id2 AS b FROM p UNION SELECT id2, id1 FROM p), " +
-        "r AS (SELECT a AS id, a AS lab FROM e " +
-        "UNION SELECT e.a, r.lab FROM e JOIN r ON r.id = e.b), " +
-        "cl AS (SELECT id, min(lab) AS cluster FROM r GROUP BY id), " +
-        "q AS (SELECT cl.cluster, cl.id, dd.n_chars FROM cl " +
-        "LEFT JOIN documents dd ON cl.id = dd.doc_id), " +
-        "w AS (SELECT cluster, id, row_number() OVER " +
-        "(PARTITION BY cluster ORDER BY n_chars DESC NULLS LAST, id) AS rn FROM q) " +
+      Some(CosineClusterCtes + ", " + CanonicalRankCtes + " " +
         "SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_input, " +
         "(SELECT CAST(count(*) AS BIGINT) FROM cl) AS n_clustered, " +
         "(SELECT CAST(count(*) AS BIGINT) FROM w WHERE rn > 1) AS n_dropped, " +
@@ -2391,16 +2466,7 @@ object ExtQueries {
           .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
           .orderBy("id1", "id2")
       },
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS p FROM t " +
-        "WHERE len(toks) >= 3), " +
-        "g AS (SELECT doc_id, list(DISTINCT array_to_string(toks[p:p+2], ' ')) AS sh " +
-        "FROM e GROUP BY doc_id), " +
-        "pr AS (SELECT a.doc_id AS id1, b.doc_id AS id2, a.sh AS s1, b.sh AS s2 " +
-        "FROM g a JOIN g b ON b.doc_id = a.doc_id + 1 WHERE a.doc_id < 50) " +
-        "SELECT id1, id2, round(CAST(len(list_intersect(s1, s2)) AS DOUBLE) / " +
-        "len(list_distinct(list_concat(s1, s2))), 6) AS jaccard " +
-        "FROM pr ORDER BY id1, id2")),
+      Some(AdjacentJaccardOracle)),
 
     // Verification from the STORED gram-pair table: the same
     // deterministic adjacent-id pairs as x_jaccard_exact, verified via
@@ -2416,16 +2482,7 @@ object ExtQueries {
           .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
           .orderBy("id1", "id2")
       },
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS p FROM t " +
-        "WHERE len(toks) >= 3), " +
-        "g AS (SELECT doc_id, list(DISTINCT array_to_string(toks[p:p+2], ' ')) AS sh " +
-        "FROM e GROUP BY doc_id), " +
-        "pr AS (SELECT a.doc_id AS id1, b.doc_id AS id2, a.sh AS s1, b.sh AS s2 " +
-        "FROM g a JOIN g b ON b.doc_id = a.doc_id + 1 WHERE a.doc_id < 50) " +
-        "SELECT id1, id2, round(CAST(len(list_intersect(s1, s2)) AS DOUBLE) / " +
-        "len(list_distinct(list_concat(s1, s2))), 6) AS jaccard " +
-        "FROM pr ORDER BY id1, id2")),
+      Some(AdjacentJaccardOracle)),
 
     // Int8 quantization of the embedding corpus: per-dim affine codes +
     // per-vector reconstruction MSE. q_sum is an exact integer checksum
@@ -2462,9 +2519,7 @@ object ExtQueries {
       (s, d) => TextAnalysis.bpeLearnBatched(Tables.documents(s, d), "text",
           numMerges = 12)
         .orderBy("merge_rank"),
-      Some(bpeOracleCtes(12) +
-        " SELECT merge_rank, l AS \"left\", r AS \"right\", c AS pair_count " +
-        "FROM it WHERE merge_rank >= 1 ORDER BY merge_rank")),
+      Some(bpeMergesOracle(12))),
 
     // The DISTRIBUTED batched rounds of the same learner, forced via
     // driverVocabLimit = 0 — the regime a 100 TB corpus vocabulary
@@ -2477,9 +2532,7 @@ object ExtQueries {
       (s, d) => TextAnalysis.bpeLearnBatched(Tables.documents(s, d), "text",
           numMerges = 12, driverVocabLimit = 0L)
         .orderBy("merge_rank"),
-      Some(bpeOracleCtes(12) +
-        " SELECT merge_rank, l AS \"left\", r AS \"right\", c AS pair_count " +
-        "FROM it WHERE merge_rank >= 1 ORDER BY merge_rank")),
+      Some(bpeMergesOracle(12))),
 
     // The production-vocabulary shape of the same learner: 100 merges,
     // where one job per merge would be impractical — the batched rounds
@@ -2491,9 +2544,7 @@ object ExtQueries {
       (s, d) => TextAnalysis.bpeLearnBatched(Tables.documents(s, d), "text",
           numMerges = 100)
         .orderBy("merge_rank"),
-      Some(bpeOracleCtes(100) +
-        " SELECT merge_rank, l AS \"left\", r AS \"right\", c AS pair_count " +
-        "FROM it WHERE merge_rank >= 1 ORDER BY merge_rank")),
+      Some(bpeMergesOracle(100))),
 
     // The production ENCODE lifecycle over that table: the scalable
     // encoder (constant plan size, distinct-word encode + join-back)
@@ -2507,14 +2558,7 @@ object ExtQueries {
           "doc_id", "text", bpe100For(s, d))
         .select(col("doc_id"), size(col("subwords")).cast("long").as("n_subwords"))
         .orderBy("doc_id"),
-      Some(bpeOracleCtes(100) + ", " +
-        "fin AS (SELECT unnest(st) AS ws FROM (SELECT st FROM it ORDER BY merge_rank DESC LIMIT 1)), " +
-        "wl AS (SELECT array_to_string(ws.syms, '') AS w, len(ws.syms) AS k FROM fin), " +
-        "dt AS (SELECT doc_id, t FROM (SELECT doc_id, " +
-        "unnest(string_split_regex(text, ' +')) AS t FROM documents) WHERE length(t) > 0), " +
-        "cnt AS (SELECT dt.doc_id, sum(wl.k) AS n FROM dt JOIN wl ON dt.t = wl.w GROUP BY dt.doc_id) " +
-        "SELECT d.doc_id, CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_subwords " +
-        "FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id ORDER BY d.doc_id")),
+      Some(bpeSubwordsOracle(100))),
 
     // The full tokenizer lifecycle: learn the merge table, then ENCODE
     // the corpus with it — per-doc subword counts. Oracle-checked: the
@@ -2534,14 +2578,7 @@ object ExtQueries {
           .select(col("doc_id"), size(col("subwords")).cast("long").as("n_subwords"))
           .orderBy("doc_id")
       },
-      Some(bpeOracleCtes(12) + ", " +
-        "fin AS (SELECT unnest(st) AS ws FROM (SELECT st FROM it ORDER BY merge_rank DESC LIMIT 1)), " +
-        "wl AS (SELECT array_to_string(ws.syms, '') AS w, len(ws.syms) AS k FROM fin), " +
-        "dt AS (SELECT doc_id, t FROM (SELECT doc_id, " +
-        "unnest(string_split_regex(text, ' +')) AS t FROM documents) WHERE length(t) > 0), " +
-        "cnt AS (SELECT dt.doc_id, sum(wl.k) AS n FROM dt JOIN wl ON dt.t = wl.w GROUP BY dt.doc_id) " +
-        "SELECT d.doc_id, CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_subwords " +
-        "FROM documents d LEFT JOIN cnt ON d.doc_id = cnt.doc_id ORDER BY d.doc_id")),
+      Some(bpeSubwordsOracle(12))),
 
     // Tokenizer-vocabulary coverage: per-doc OOV fraction against the
     // corpus's top-20 tokens (vocabulary is 31 types at every sf, so
@@ -2589,18 +2626,7 @@ object ExtQueries {
           Seq("window", "join", "sort"))
         .select(col("doc_id"), round(col("bm25"), 6).as("bm25"))
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks " +
-        "FROM documents), " +
-        "dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM t), " +
-        "st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dd), " +
-        "e AS (SELECT doc_id, unnest(toks) AS tt FROM t), " +
-        "tf AS (SELECT doc_id, tt, CAST(count(*) AS DOUBLE) AS tf FROM e " +
-        "WHERE tt IN ('window', 'join', 'sort') GROUP BY 1, 2), " +
-        "dft AS (SELECT tt, CAST(count(*) AS DOUBLE) AS dft FROM tf GROUP BY 1), " +
-        "sc AS (SELECT tf.doc_id, " +
-        "ln((st.n - dft.dft + 0.5) / (dft.dft + 0.5) + 1) * tf.tf * (1.2 + 1.0) / " +
-        "(tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dd.dl / st.avgdl)) AS s " +
-        "FROM tf JOIN dft USING (tt) JOIN dd ON dd.doc_id = tf.doc_id CROSS JOIN st) " +
+      Some(Bm25Ctes + " " +
         "SELECT doc_id, round(sum(s), 6) AS bm25 FROM sc " +
         "GROUP BY doc_id ORDER BY doc_id")),
 
@@ -2624,18 +2650,7 @@ object ExtQueries {
           .select(col("doc_id"), round(col("hybrid"), 6).as("hybrid"))
           .orderBy("doc_id")
       },
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks " +
-        "FROM documents), " +
-        "dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM t), " +
-        "st AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM dd), " +
-        "e AS (SELECT doc_id, unnest(toks) AS tt FROM t), " +
-        "tf AS (SELECT doc_id, tt, CAST(count(*) AS DOUBLE) AS tf FROM e " +
-        "WHERE tt IN ('window', 'join', 'sort') GROUP BY 1, 2), " +
-        "dft AS (SELECT tt, CAST(count(*) AS DOUBLE) AS dft FROM tf GROUP BY 1), " +
-        "sc AS (SELECT tf.doc_id, " +
-        "ln((st.n - dft.dft + 0.5) / (dft.dft + 0.5) + 1) * tf.tf * (1.2 + 1.0) / " +
-        "(tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dd.dl / st.avgdl)) AS s " +
-        "FROM tf JOIN dft USING (tt) JOIN dd ON dd.doc_id = tf.doc_id CROSS JOIN st), " +
+      Some(Bm25Ctes + ", " +
         "bm AS (SELECT doc_id, sum(s) AS bm25 FROM sc GROUP BY doc_id), " +
         "mm AS (SELECT min(bm25) AS lo, max(bm25) AS hi FROM bm), " +
         "nb AS (SELECT doc_id, CASE WHEN mm.hi = mm.lo THEN 1.0 " +
@@ -2865,9 +2880,7 @@ object ExtQueries {
           "doc_id", "text", n = 4)
           .orderBy("doc_id")
       },
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 3)) AS p FROM t " +
-        "WHERE len(toks) >= 4), " +
+      Some(DocToksCte + ngramStartsCte(4) + ", " +
         "g AS (SELECT doc_id, array_to_string(toks[p:p+3], ' ') AS ngram FROM e), " +
         "bench AS (SELECT DISTINCT ngram FROM g WHERE doc_id % 20 = 0), " +
         "hit AS (SELECT doc_id, count(DISTINCT ngram) AS n_shared FROM g " +
@@ -2886,7 +2899,7 @@ object ExtQueries {
       (s, d) => Dedup.chunkDedup(Tables.documents(s, d), "doc_id", "text",
           chunkTokens = 2)
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
+      Some(DocToksCte +
         "c0 AS (SELECT doc_id, toks, unnest(generate_series(0, (len(toks) - 1) // 2)) AS p FROM t), " +
         "c AS (SELECT doc_id, p, array_to_string(toks[p * 2 + 1 : p * 2 + 2], ' ') AS chunk " +
         "FROM c0), " +
@@ -2910,13 +2923,7 @@ object ExtQueries {
       (s, d) => Dedup.duplicatedSpans(Tables.documents(s, d), "doc_id", "text",
           k = 6)
         .orderBy("doc_id", "span_start"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 6)) AS p FROM t " +
-        "WHERE len(toks) >= 6), " +
-        "g AS (SELECT doc_id, p, array_to_string(toks[p + 1 : p + 6], ' ') AS gram FROM e), " +
-        "dup AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2), " +
-        "cov AS (SELECT DISTINCT doc_id, tp FROM " +
-        "(SELECT doc_id, unnest(generate_series(p, p + 5)) AS tp FROM g JOIN dup USING (gram))), " +
+      Some(DocToksCte + DupCoverCtes + ", " +
         "isl AS (SELECT doc_id, tp, tp - row_number() OVER " +
         "(PARTITION BY doc_id ORDER BY tp) AS grp FROM cov) " +
         "SELECT doc_id, CAST(min(tp) AS BIGINT) AS span_start, " +
@@ -2930,23 +2937,7 @@ object ExtQueries {
       (s, d) => Dedup.scrubDuplicatedSpans(Tables.documents(s, d), "doc_id", "text",
           k = 6)
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 6)) AS p FROM t " +
-        "WHERE len(toks) >= 6), " +
-        "g AS (SELECT doc_id, p, array_to_string(toks[p + 1 : p + 6], ' ') AS gram FROM e), " +
-        "dup AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2), " +
-        "cov AS (SELECT DISTINCT doc_id, tp FROM " +
-        "(SELECT doc_id, unnest(generate_series(p, p + 5)) AS tp FROM g JOIN dup USING (gram))), " +
-        "tok AS (SELECT doc_id, unnest(toks) AS w, " +
-        "unnest(generate_series(0, len(toks) - 1)) AS p FROM t), " +
-        "kept AS (SELECT tok.doc_id, tok.p, tok.w FROM tok LEFT JOIN cov " +
-        "ON tok.doc_id = cov.doc_id AND tok.p = cov.tp WHERE cov.tp IS NULL), " +
-        "r AS (SELECT doc_id, count(*) AS nk, string_agg(w, ' ' ORDER BY p) AS txt " +
-        "FROM kept GROUP BY doc_id) " +
-        "SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens, " +
-        "CAST(len(t.toks) - coalesce(r.nk, 0) AS BIGINT) AS n_dropped, " +
-        "coalesce(r.txt, '') AS clean_text " +
-        "FROM t LEFT JOIN r USING (doc_id) ORDER BY t.doc_id")),
+      Some(DupSpanScrubOracle)),
 
     // The scrub through its STORED lifecycle: the duplicated-gram table
     // is written bucketed by hash, reloaded from the catalog, and the
@@ -2958,23 +2949,7 @@ object ExtQueries {
       (s, d) => Dedup.scrubFromStored(Tables.documents(s, d), "doc_id", "text",
           k = 6, s.table(dupGramTableFor(s, d)))
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 6)) AS p FROM t " +
-        "WHERE len(toks) >= 6), " +
-        "g AS (SELECT doc_id, p, array_to_string(toks[p + 1 : p + 6], ' ') AS gram FROM e), " +
-        "dup AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2), " +
-        "cov AS (SELECT DISTINCT doc_id, tp FROM " +
-        "(SELECT doc_id, unnest(generate_series(p, p + 5)) AS tp FROM g JOIN dup USING (gram))), " +
-        "tok AS (SELECT doc_id, unnest(toks) AS w, " +
-        "unnest(generate_series(0, len(toks) - 1)) AS p FROM t), " +
-        "kept AS (SELECT tok.doc_id, tok.p, tok.w FROM tok LEFT JOIN cov " +
-        "ON tok.doc_id = cov.doc_id AND tok.p = cov.tp WHERE cov.tp IS NULL), " +
-        "r AS (SELECT doc_id, count(*) AS nk, string_agg(w, ' ' ORDER BY p) AS txt " +
-        "FROM kept GROUP BY doc_id) " +
-        "SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens, " +
-        "CAST(len(t.toks) - coalesce(r.nk, 0) AS BIGINT) AS n_dropped, " +
-        "coalesce(r.txt, '') AS clean_text " +
-        "FROM t LEFT JOIN r USING (doc_id) ORDER BY t.doc_id")),
+      Some(DupSpanScrubOracle)),
 
     // Per-document n-gram novelty / boilerplate fractions over the
     // corpus's own 4-grams (df = 1 → novel; df >= 3 → boilerplate).
@@ -2984,9 +2959,7 @@ object ExtQueries {
       (s, d) => TextAnalysis.ngramNovelty(Tables.documents(s, d), "doc_id", "text",
           n = 4, boilerplateDf = 3)
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 3)) AS p FROM t " +
-        "WHERE len(toks) >= 4), " +
+      Some(DocToksCte + ngramStartsCte(4) + ", " +
         "g AS (SELECT DISTINCT doc_id, array_to_string(toks[p:p+3], ' ') AS ngram FROM e), " +
         "dfc AS (SELECT ngram, count(*) AS docfreq FROM g GROUP BY ngram) " +
         "SELECT doc_id, CAST(count(*) AS BIGINT) AS n_ngrams, " +
@@ -3119,7 +3092,7 @@ object ExtQueries {
         .orderBy("id1", "id2"),
       Some(CosineNearDupLshAutoOracle)),
 
-    // Cosine-LSH RECALL AUDIT (r10 verdict item 1): the exact truth set
+    // Cosine-LSH RECALL AUDIT: the exact truth set
     // at cos > 0.5, left-joined against the banded-LSH pipeline's pairs,
     // so every strong near-dup carries a `recovered` flag the oracle
     // pins TRUE. The audit runs 32 bands × 4 bits (same 128 planes as
@@ -3135,7 +3108,7 @@ object ExtQueries {
     // The truth side is the exact all-pairs anchor, BOUNDED to the
     // vec_id < 500 slice (the whole corpus at the verify sf, a fixed
     // audit sample beyond it — the full-corpus form measured ×46 wall at
-    // ×10 data in the r11 scale study, pure truth-side quadratics; the
+    // ×10 data, pure truth-side quadratics; the
     // LSH side under audit still runs over the FULL corpus). Exempt in
     // ExplainAudit like x_cosine_near_dup, same rationale.
     Q("x_cosine_lsh_recall",
@@ -3151,12 +3124,7 @@ object ExtQueries {
             coalesce(col("_hit"), lit(false)).as("recovered"))
           .orderBy("id1", "id2")
       },
-      Some("WITH d AS (SELECT a.vec_id AS id1, b.vec_id AS id2, unnest(a.embedding) AS x, " +
-        "unnest(b.embedding) AS y FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
-        "WHERE a.vec_id < 500 AND b.vec_id < 500), " +
-        "sm AS (SELECT id1, id2, sum(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS dt, " +
-        "sum(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nx, " +
-        "sum(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS ny FROM d GROUP BY id1, id2) " +
+      Some("WITH " + cosinePairCtes(500) + " " +
         "SELECT id1, id2, round(dt / (sqrt(nx) * sqrt(ny)), 6) AS cos, true AS recovered " +
         "FROM sm WHERE dt / (sqrt(nx) * sqrt(ny)) > 0.5 ORDER BY id1, id2")),
 

@@ -21,9 +21,11 @@ object IoModelQueries {
 
   private def ev(s: org.apache.spark.sql.SparkSession, d: String) = Tables.events(s, d)
 
-  /** Scratch dir, unique per sf dir so verify/bench runs don't collide. */
+  /** Scratch dir under the per-process [[Tables.scratchRoot]], unique
+    * per sf dir so rows of different dirs don't collide.
+    */
   private[queries] def tmp(d: String, name: String): String =
-    s"/tmp/graft_io/${Artifacts.dirName(d)}/$name"
+    s"${Tables.scratchRoot}/${Artifacts.dirName(d)}/$name"
 
   /** Write-once memo ([[Artifacts.memo]]) per scratch path: the sink side
     * of a round-trip query runs on the FIRST invocation in a session only
@@ -40,6 +42,64 @@ object IoModelQueries {
       col("user_id").cast("double").as("u"),
       (col("event_id") % 7).cast("double").as("m"))
 
+  /** `value` z-scored over the contiguous event order `_idx`. */
+  private def standardized(s: org.apache.spark.sql.SparkSession, d: String) =
+    Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
+
+  /** Non-overlapping n-event windows of [[standardized]]. */
+  private def windows(s: org.apache.spark.sql.SparkSession, d: String, n: Int) =
+    Windows.slidingWindows(standardized(s, d), "_idx", "value", n, n)
+
+  /** [[windows]] restated: `wn(window_id, x0 … x(k−1))` holds the
+    * z-scored values of each full k-event window. Windows key on the
+    * contiguous row number, not on raw event_id, so id-gapped corpora
+    * (ScaleGen replicas) window alike on both sides.
+    */
+  private def windowCtes(k: Int): String =
+    "WITH sv AS (SELECT event_id, (value - (SELECT avg(value) FROM events)) / " +
+      "(SELECT stddev_samp(value) FROM events) AS v FROM events), " +
+      "t AS (SELECT row_number() OVER (ORDER BY event_id) - 1 AS ridx, " +
+      "list(v) OVER w AS l, count(*) OVER w AS cnt FROM sv " +
+      s"WINDOW w AS (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND ${k - 1} FOLLOWING)), " +
+      s"wn AS (SELECT ridx // $k AS window_id, " +
+      (0 until k).map(i => s"l[${i + 1}] AS x$i").mkString(", ") +
+      s" FROM t WHERE ridx % $k = 0 AND cnt = $k), "
+
+  /** A weight as a SQL literal, parenthesized when negative. */
+  private def litSql(v: Double) = if (v < 0) s"($v)" else v.toString
+
+  /** tanh(a) as (e^{2a}−1)/(e^{2a}+1) with ±20 saturation guards:
+    * DuckDB 1.0.0 has no tanh, and exp(2·20) is finite while the ratio
+    * beyond it is 1.0 to double precision.
+    */
+  private def tanhSql(a: String) =
+    s"CASE WHEN $a > 20 THEN 1.0 WHEN $a < -20 THEN -1.0 " +
+      s"ELSE (exp(2*$a)-1)/(exp(2*$a)+1) END"
+
+  /** The one forward pass of the 4→2→4 tanh autoencoder over `wn`, with
+    * [[M2b]]'s weights times `scale`: `aa<k>` holds the hidden
+    * pre-activations a0, a1, `h<k>` their tanh h0, h1, and `o<k>` the
+    * linear outputs o0 … o3. Terms follow `DenseAutoencoder.forward`'s
+    * accumulation order (bias first, then inputs in index order), so the
+    * two sides differ only by libm exp ulps.
+    */
+  private def forwardCtes(scale: Double, k: String): String = {
+    val w1 = M2b.w1.map(_.map(_ * scale)); val b1 = M2b.b1.map(_ * scale)
+    val w2 = M2b.w2.map(_.map(_ * scale)); val b2 = M2b.b2.map(_ * scale)
+    def aExpr(r: Int) =
+      s"${litSql(b1(r))} + " + (0 to 3).map(c => s"${litSql(w1(r)(c))}*x$c").mkString(" + ")
+    def oExpr(j: Int) =
+      s"${litSql(b2(j))} + " + (0 to 1).map(r => s"${litSql(w2(j)(r))}*h$r").mkString(" + ")
+    s"aa$k AS (SELECT *, ${aExpr(0)} AS a0, ${aExpr(1)} AS a1 FROM wn), " +
+      s"h$k AS (SELECT *, ${tanhSql("a0")} AS h0, ${tanhSql("a1")} AS h1 FROM aa$k), " +
+      s"o$k AS (SELECT *, ${oExpr(0)} AS o0, ${oExpr(1)} AS o1, " +
+      s"${oExpr(2)} AS o2, ${oExpr(3)} AS o3 FROM h$k)"
+  }
+
+  /** One window's reconstruction MSE over [[forwardCtes]]' outputs. */
+  private val WindowMse =
+    (0 to 3).map(j => s"(o$j-x$j)*(o$j-x$j)").mkString("(", " + ", ") / 4")
+
   /** Literal weights + generated unrolled oracle for `m1b` — an H=1, T=3
     * LSTM autoencoder is scalar math, so the ENTIRE seq2seq forward pass
     * (3 encoder steps → repeat-vector → 3 decoder steps → dense head →
@@ -47,8 +107,7 @@ object IoModelQueries {
     * constants the flat weight array is built from, in the kernel's
     * accumulation order (bias + w_in·inₜ + w_h·h_{t-1};
     * c = f·c_prev + i·g; h = o·tanh(c)), so the two sides differ only by
-    * libm exp/tanh ulps. tanh is stated as (e^{2a}−1)/(e^{2a}+1) with
-    * ±20 saturation guards (driver DuckDB 1.0.0 has no tanh).
+    * libm exp/tanh ulps; tanh is [[tanhSql]].
     */
   private object M1b {
     // encoder gate rows [w_x, w_h] in f,i,o,g order; then biases
@@ -72,9 +131,6 @@ object IoModelQueries {
       wOut, bOut)
 
     private def sig(a: String) = s"1.0/(1.0 + exp(-($a)))"
-    private def th(c: String) =
-      s"CASE WHEN $c > 20 THEN 1.0 WHEN $c < -20 THEN -1.0 " +
-        s"ELSE (exp(2*$c)-1)/(exp(2*$c)+1) END"
 
     /** Three unrolled steps of one LSTM side as CTEs (`p` = column/CTE
       * prefix; `in(t)` = the step-input term — x_t for the encoder, the
@@ -91,15 +147,15 @@ object IoModelQueries {
         val cPrev = if (t == 1) "" else s"${p}f$t*${p}c${t - 1} + "
         s"${p}s${t}a AS (SELECT *, ${sig(pre("f"))} AS ${p}f$t, " +
           s"${sig(pre("i"))} AS ${p}i$t, ${sig(pre("o"))} AS ${p}o$t, " +
-          s"${th(s"(${pre("g")})")} AS ${p}g$t FROM $src), " +
+          s"${tanhSql(s"(${pre("g")})")} AS ${p}g$t FROM $src), " +
           s"${p}s${t}b AS (SELECT *, $cPrev${p}i$t*${p}g$t AS ${p}c$t FROM ${p}s${t}a), " +
-          s"${p}s${t}c AS (SELECT *, ${p}o$t*${th(s"${p}c$t")} AS ${p}h$t FROM ${p}s${t}b), "
+          s"${p}s${t}c AS (SELECT *, ${p}o$t*${tanhSql(s"${p}c$t")} AS ${p}h$t FROM ${p}s${t}b), "
       }
       (ctes.mkString, s"${p}s3c")
     }
 
     val oracle: String = {
-      val (encC, encLast) = side("e", "wn", t => s"x$t",
+      val (encC, encLast) = side("e", "wn", t => s"x${t - 1}",
         Map("f" -> wfx, "i" -> wix, "o" -> wox, "g" -> wgx),
         Map("f" -> wfh, "i" -> wih, "o" -> woh, "g" -> wgh),
         Map("f" -> bf, "i" -> bi, "o" -> bo, "g" -> bg))
@@ -107,18 +163,12 @@ object IoModelQueries {
         Map("f" -> dfz, "i" -> diz, "o" -> doz, "g" -> dgz),
         Map("f" -> dfh, "i" -> dih, "o" -> doh, "g" -> dgh),
         Map("f" -> bdf, "i" -> bdi, "o" -> bdo, "g" -> bdg))
-      "WITH sv AS (SELECT event_id, (value - (SELECT avg(value) FROM events)) / " +
-        "(SELECT stddev_samp(value) FROM events) AS v FROM events), " +
-        "t AS (SELECT row_number() OVER (ORDER BY event_id) - 1 AS ridx, " +
-        "list(v) OVER w AS l, count(*) OVER w AS cnt FROM sv " +
-        "WINDOW w AS (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND 2 FOLLOWING)), " +
-        "wn AS (SELECT ridx // 3 AS window_id, l[1] AS x1, l[2] AS x2, l[3] AS x3 " +
-        "FROM t WHERE ridx % 3 = 0 AND cnt = 3), " +
+      windowCtes(3) +
         encC + decC +
         s"y AS (SELECT *, $bOut + $wOut*dh1 AS y1, $bOut + $wOut*dh2 AS y2, " +
         s"$bOut + $wOut*dh3 AS y3 FROM $decLast) " +
-        "SELECT window_id, round(((y1-x1)*(y1-x1) + (y2-x2)*(y2-x2) + " +
-        "(y3-x3)*(y3-x3))/3, 6) AS mse FROM y ORDER BY window_id"
+        "SELECT window_id, round(((y1-x0)*(y1-x0) + (y2-x1)*(y2-x1) + " +
+        "(y3-x2)*(y3-x2))/3, 6) AS mse FROM y ORDER BY window_id"
     }
   }
 
@@ -133,15 +183,15 @@ object IoModelQueries {
     * order follows the flat weight layout (W1 row-major, b1, W2
     * row-major, b2) so the norm accumulates in the kernel's index order.
     *
-    * PRECISION CONTRACT (why this pin is summation-order-safe at ANY sf,
-    * the r11 fix): Spark's treeAggregate and DuckDB's sum accumulate the
+    * PRECISION CONTRACT (why this pin is summation-order-safe at ANY
+    * sf): Spark's treeAggregate and DuckDB's sum accumulate the
     * per-window gradients in different orders, so the two sides' mean
     * gradients differ by δg ≲ 1e-12 absolute (u·log₂(m)·Σ|per-window
     * terms|/m for any m). The t=1 Adam ratio g/(|g|+ε), ε=1e-8, has
     * derivative ε/(|g|+ε)² — up to 1/ε = 1e8 near g≈0 — so for a TINY
     * mean-gradient component the weight update amplifies δg to
     * δw ~ lr·δg/ε ≈ 1e-8, and NO fixed rounding grid pins such a
-    * component reliably (the r11 round(·,7) flake). The row therefore
+    * component reliably (a single round(·,7) pin flakes). The row therefore
     * pins two columns: `g6` = round(clipped·scaled mean gradient, 6) for
     * EVERY component — well-conditioned, |δ| ≲ 1e-12 against a 1e-6
     * grid — and `w1` = round(post-Adam weight, 6) ONLY where
@@ -178,20 +228,10 @@ object IoModelQueries {
       g.map(_ * sc)
     }
 
-    private def lit(v: Double) = if (v < 0) s"($v)" else v.toString
-    private def th(a: String) =
-      s"CASE WHEN $a > 20 THEN 1.0 WHEN $a < -20 THEN -1.0 " +
-        s"ELSE (exp(2*$a)-1)/(exp(2*$a)+1) END"
-
     val oracle: String = {
-      // forward: pre-activations in the kernel's accumulation order
-      def aExpr(r: Int) =
-        s"${lit(b1(r))} + " + (0 to 3).map(c => s"${lit(w1(r)(c))}*x$c").mkString(" + ")
-      def oExpr(j: Int) =
-        s"${lit(b2(j))} + " + (0 to 1).map(r => s"${lit(w2(j)(r))}*h$r").mkString(" + ")
       // backward: delta_j = 2(o_j − x_j)/4; deltaH_r = (Σ_j d_j·W2[j][r])·(1−h_r²)
       def dhExpr(r: Int) =
-        "(" + (0 to 3).map(j => s"d$j*${lit(w2(j)(r))}").mkString(" + ") + s") * (1 - h$r*h$r)"
+        "(" + (0 to 3).map(j => s"d$j*${litSql(w2(j)(r))}").mkString(" + ") + s") * (1 - h$r*h$r)"
       // mean gradient per flat index (W1 row-major, b1, W2 row-major, b2)
       val gradExprs: Seq[String] =
         (for (r <- 0 to 1; c <- 0 to 3) yield s"sum(dh$r*x$c)/count(*)") ++
@@ -203,36 +243,27 @@ object IoModelQueries {
         gradExprs.zipWithIndex.map { case (e, k) => s"$e AS g$k" }.mkString(", ") +
         " FROM bp), "
       val lc = "lc AS (SELECT " + (0 until n).map { k =>
-        val gr = s"g$k + 2*${lit(l2)}*${lit(flat(k))}"
-        s"CASE WHEN $gr > ${lit(clipV)} THEN ${lit(clipV)} " +
-          s"WHEN $gr < -${lit(clipV)} THEN -${lit(clipV)} ELSE $gr END AS gc$k"
+        val gr = s"g$k + 2*${litSql(l2)}*${litSql(flat(k))}"
+        s"CASE WHEN $gr > ${litSql(clipV)} THEN ${litSql(clipV)} " +
+          s"WHEN $gr < -${litSql(clipV)} THEN -${litSql(clipV)} ELSE $gr END AS gc$k"
       }.mkString(", ") + " FROM gm), "
       val nn = "nn AS (SELECT *, sqrt(" +
         (0 until n).map(k => s"gc$k*gc$k").mkString(" + ") + ") AS nrm FROM lc), "
-      val ss = s"ss AS (SELECT *, CASE WHEN nrm > ${lit(clipN)} " +
-        s"THEN ${lit(clipN)}/nrm ELSE 1.0 END AS sc FROM nn) "
+      val ss = s"ss AS (SELECT *, CASE WHEN nrm > ${litSql(clipN)} " +
+        s"THEN ${litSql(clipN)}/nrm ELSE 1.0 END AS sc FROM nn) "
       // `+ 0` normalizes IEEE signed zero: DuckDB's round() preserves the
       // sign bit (−1e-9 → −0.0) while Spark's Round (BigDecimal) cannot
       // emit −0.0, so a value that rounds to zero would be ==-equal but
-      // binary-distinct under the driver's hash gate (the r11/r12 m2b
-      // failure). IEEE: −0.0 + 0.0 = +0.0; nonzero values are unchanged.
+      // binary-distinct under a hash compare. IEEE:
+      // −0.0 + 0.0 = +0.0; nonzero values are unchanged.
       val branches = (0 until n).map { k =>
         s"SELECT CAST($k AS BIGINT) AS i, round(gc$k*sc, 6) + 0 AS g6, " +
-          s"(CASE WHEN abs(gc$k*sc) >= ${lit(tau)} THEN round(${lit(flat(k))} - " +
-          s"${lit(lr)}*(gc$k*sc)/(sqrt((gc$k*sc)*(gc$k*sc))+1e-8), 6) " +
-          s"ELSE round(${lit(flat(k))}, 6) END) + 0 AS w1 FROM ss"
+          s"(CASE WHEN abs(gc$k*sc) >= ${litSql(tau)} THEN round(${litSql(flat(k))} - " +
+          s"${litSql(lr)}*(gc$k*sc)/(sqrt((gc$k*sc)*(gc$k*sc))+1e-8), 6) " +
+          s"ELSE round(${litSql(flat(k))}, 6) END) + 0 AS w1 FROM ss"
       }.mkString(" UNION ALL ")
-      "WITH sv AS (SELECT event_id, (value - (SELECT avg(value) FROM events)) / " +
-        "(SELECT stddev_samp(value) FROM events) AS v FROM events), " +
-        "t AS (SELECT row_number() OVER (ORDER BY event_id) - 1 AS ridx, " +
-        "list(v) OVER w AS l, count(*) OVER w AS cnt FROM sv " +
-        "WINDOW w AS (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)), " +
-        "wn AS (SELECT ridx // 4 AS window_id, l[1] AS x0, l[2] AS x1, l[3] AS x2, l[4] AS x3 " +
-        "FROM t WHERE ridx % 4 = 0 AND cnt = 4), " +
-        s"aa AS (SELECT *, ${aExpr(0)} AS a0, ${aExpr(1)} AS a1 FROM wn), " +
-        s"h AS (SELECT *, ${th("a0")} AS h0, ${th("a1")} AS h1 FROM aa), " +
-        s"o AS (SELECT *, ${oExpr(0)} AS o0, ${oExpr(1)} AS o1, " +
-        s"${oExpr(2)} AS o2, ${oExpr(3)} AS o3 FROM h), " +
+      windowCtes(4) +
+        forwardCtes(1.0, "") + ", " +
         "b AS (SELECT *, 2*(o0-x0)/4 AS d0, 2*(o1-x1)/4 AS d1, " +
         "2*(o2-x2)/4 AS d2, 2*(o3-x3)/4 AS d3 FROM o), " +
         s"bp AS (SELECT *, ${dhExpr(0)} AS dh0, ${dhExpr(1)} AS dh1 FROM b), " +
@@ -255,35 +286,13 @@ object IoModelQueries {
     val scales = Seq(1.0, 0.5, 0.0)
     def tag(sc: Double): String = s"m2b_x$sc"
 
-    private def lit(v: Double) = if (v < 0) s"($v)" else v.toString
-    private def th(a: String) =
-      s"CASE WHEN $a > 20 THEN 1.0 WHEN $a < -20 THEN -1.0 " +
-        s"ELSE (exp(2*$a)-1)/(exp(2*$a)+1) END"
-
     val oracle: String = {
       val perCand = scales.zipWithIndex.map { case (scale, k) =>
-        val w1 = M2b.w1.map(_.map(_ * scale)); val b1 = M2b.b1.map(_ * scale)
-        val w2 = M2b.w2.map(_.map(_ * scale)); val b2 = M2b.b2.map(_ * scale)
-        def aExpr(r: Int) =
-          s"${lit(b1(r))} + " + (0 to 3).map(c => s"${lit(w1(r)(c))}*x$c").mkString(" + ")
-        def oExpr(j: Int) =
-          s"${lit(b2(j))} + " + (0 to 1).map(r => s"${lit(w2(j)(r))}*h$r").mkString(" + ")
-        s"a$k AS (SELECT *, ${aExpr(0)} AS a0, ${aExpr(1)} AS a1 FROM wn), " +
-          s"h$k AS (SELECT *, ${th("a0")} AS h0, ${th("a1")} AS h1 FROM a$k), " +
-          s"o$k AS (SELECT *, ${oExpr(0)} AS o0, ${oExpr(1)} AS o1, " +
-          s"${oExpr(2)} AS o2, ${oExpr(3)} AS o3 FROM h$k), " +
-          s"m$k AS (SELECT '${tag(scale)}' AS tag, " +
-          "avg(((o0-x0)*(o0-x0) + (o1-x1)*(o1-x1) + (o2-x2)*(o2-x2) + " +
-          s"(o3-x3)*(o3-x3)) / 4) AS vm FROM o$k)"
+        forwardCtes(scale, k.toString) +
+          s", m$k AS (SELECT '${tag(scale)}' AS tag, avg($WindowMse) AS vm FROM o$k)"
       }
       val union = scales.indices.map(k => s"SELECT tag, vm FROM m$k").mkString(" UNION ALL ")
-      "WITH sv AS (SELECT event_id, (value - (SELECT avg(value) FROM events)) / " +
-        "(SELECT stddev_samp(value) FROM events) AS v FROM events), " +
-        "t AS (SELECT row_number() OVER (ORDER BY event_id) - 1 AS ridx, " +
-        "list(v) OVER w AS l, count(*) OVER w AS cnt FROM sv " +
-        "WINDOW w AS (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)), " +
-        "wn AS (SELECT ridx // 4 AS window_id, l[1] AS x0, l[2] AS x1, l[3] AS x2, l[4] AS x3 " +
-        "FROM t WHERE ridx % 4 = 0 AND cnt = 4), " +
+      windowCtes(4) +
         perCand.mkString(", ") + ", " +
         s"scored AS ($union) " +
         "SELECT CAST(row_number() OVER (ORDER BY vm, tag) AS BIGINT) AS rank, " +
@@ -523,8 +532,7 @@ object IoModelQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 64, 64)
+        val wins = windows(s, d, 64)
         val t = Trainer.fit(new DenseAutoencoder(Seq(64, 16, 4, 16, 64)), wins,
           "values", epochs = 3, lr = 1e-3)
         t.lossHistory.zipWithIndex.map { case (l, e) => (e, l) }.toDF("epoch", "loss")
@@ -537,8 +545,7 @@ object IoModelQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 32, 32)
+        val wins = windows(s, d, 32)
         val t = Trainer.fit(new graft.model.LstmAutoencoder(32, 8), wins,
           "values", epochs = 2, lr = 5e-3)
         t.lossHistory.zipWithIndex.map { case (l, e) => (e, l) }.toDF("epoch", "loss")
@@ -551,69 +558,29 @@ object IoModelQueries {
       (s, d) => {
         val model = new DenseAutoencoder(Seq(64, 16, 64))
         val t = graft.model.TrainedAutoencoder(model, model.initWeights(), Nil)
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 64, 64)
+        val wins = windows(s, d, 64)
         t.score(wins).select(col("window_id"), round(col("mse"), 6).as("mse"))
           .orderBy("window_id")
       },
       None),
 
     // M7 oracle twin — the SAME scoring kernel (TrainedAutoencoder.score →
-    // DenseAutoencoder.forward), but with a 4→2→4 model whose weights are
-    // LITERALS, so DuckDB can restate the whole forward pass (tanh hidden,
-    // linear output, per-window MSE) in closed form. m7_reconstruction_score
-    // exercises the production shape (64→16→64, Xavier init) rows-only;
-    // this row puts the scoring MATH itself under the driver's hash gate.
-    // Term order in the oracle matches forward()'s accumulation order
-    // (bias first, then inputs in index order), so the two sides differ
-    // only by libm tanh ulps — absorbed by round(…, 6). The driver's
-    // DuckDB (1.0.0) has no tanh; the oracle states it as
-    // (e^{2a}−1)/(e^{2a}+1) with ±20 saturation guards (exp(2·20) is
-    // finite, beyond it the ratio is 1.0 to well past double precision —
-    // the guard only exists to dodge exp overflow at |a| > 354).
+    // DenseAutoencoder.forward), but with the literal 4→2→4 [[M2b]]
+    // weights, so DuckDB restates the whole forward pass (tanh hidden,
+    // linear output, per-window MSE) through [[forwardCtes]]; round(…, 6)
+    // absorbs the libm ulps. m7_reconstruction_score exercises the
+    // production shape (64→16→64, Xavier init) rows-only; this row puts
+    // the scoring MATH itself under the DuckDB oracle gate.
     Q("m7b_fixed_reconstruction",
       (s, d) => {
         val model = new DenseAutoencoder(Seq(4, 2, 4))
-        // flat layout (initWeights contract): W1 row-major, b1, W2, b2
-        val w = Array[Double](
-          0.1, -0.2, 0.3, 0.05,    // W1 row 0
-          -0.15, 0.25, -0.1, 0.2,  // W1 row 1
-          0.01, -0.02,             // b1
-          0.5, -0.4,               // W2 row 0
-          0.3, 0.6,                // W2 row 1
-          -0.2, 0.1,               // W2 row 2
-          0.25, -0.35,             // W2 row 3
-          0.02, -0.01, 0.03, 0.0)  // b2
-        val t = graft.model.TrainedAutoencoder(model, w, Nil)
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 4, 4)
+        val t = graft.model.TrainedAutoencoder(model, M2b.flat, Nil)
+        val wins = windows(s, d, 4)
         t.score(wins).select(col("window_id"), round(col("mse"), 6).as("mse"))
           .orderBy("window_id")
       },
-      // windows key on the CONTIGUOUS ordering-contract idx (two-phase
-      // Indexing.withOrderedIdx / row_number), not raw event_id — so the
-      // row holds on id-gapped corpora (ScaleGen replicas) too, where id
-      // arithmetic and row frames would diverge.
-      Some("WITH sv AS (SELECT event_id, (value - (SELECT avg(value) FROM events)) / " +
-        "(SELECT stddev_samp(value) FROM events) AS v FROM events), " +
-        "t AS (SELECT row_number() OVER (ORDER BY event_id) - 1 AS ridx, " +
-        "list(v) OVER w AS l, count(*) OVER w AS cnt FROM sv " +
-        "WINDOW w AS (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)), " +
-        "wn AS (SELECT ridx // 4 AS window_id, l[1] AS x0, l[2] AS x1, l[3] AS x2, l[4] AS x3 " +
-        "FROM t WHERE ridx % 4 = 0 AND cnt = 4), " +
-        "aa AS (SELECT window_id, x0, x1, x2, x3, " +
-        "0.01 + 0.1*x0 + -0.2*x1 + 0.3*x2 + 0.05*x3 AS a0, " +
-        "-0.02 + -0.15*x0 + 0.25*x1 + -0.1*x2 + 0.2*x3 AS a1 FROM wn), " +
-        "h AS (SELECT window_id, x0, x1, x2, x3, " +
-        "CASE WHEN a0 > 20 THEN 1.0 WHEN a0 < -20 THEN -1.0 " +
-        "ELSE (exp(2*a0)-1)/(exp(2*a0)+1) END AS h0, " +
-        "CASE WHEN a1 > 20 THEN 1.0 WHEN a1 < -20 THEN -1.0 " +
-        "ELSE (exp(2*a1)-1)/(exp(2*a1)+1) END AS h1 FROM aa), " +
-        "o AS (SELECT window_id, x0, x1, x2, x3, " +
-        "0.02 + 0.5*h0 + -0.4*h1 AS o0, -0.01 + 0.3*h0 + 0.6*h1 AS o1, " +
-        "0.03 + -0.2*h0 + 0.1*h1 AS o2, 0.0 + 0.25*h0 + -0.35*h1 AS o3 FROM h) " +
-        "SELECT window_id, round(((o0-x0)*(o0-x0) + (o1-x1)*(o1-x1) + (o2-x2)*(o2-x2) + " +
-        "(o3-x3)*(o3-x3)) / 4, 6) AS mse FROM o ORDER BY window_id")),
+      Some(windowCtes(4) + forwardCtes(1.0, "") +
+        s" SELECT window_id, round($WindowMse, 6) AS mse FROM o ORDER BY window_id")),
 
     // M1 oracle twin — the SAME LSTM kernel (TrainedAutoencoder.score →
     // LstmAutoencoder.forwardFull: 3 encoder steps → repeat-vector → 3
@@ -628,8 +595,7 @@ object IoModelQueries {
         require(model.numWeights == M1b.flat.length,
           s"m1b weight layout drifted: ${model.numWeights} != ${M1b.flat.length}")
         val t = graft.model.TrainedAutoencoder(model, M1b.flat, Nil)
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 3, 3)
+        val wins = windows(s, d, 3)
         t.score(wins).select(col("window_id"), round(col("mse"), 6).as("mse"))
           .orderBy("window_id")
       },
@@ -651,8 +617,7 @@ object IoModelQueries {
         val model = new DenseAutoencoder(Seq(4, 2, 4))
         require(model.numWeights == M2b.flat.length,
           s"m2b weight layout drifted: ${model.numWeights} != ${M2b.flat.length}")
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 4, 4)
+        val wins = windows(s, d, 4)
         val trained = Trainer.fitFrom(model, M2b.flat.clone(), wins, "values",
           epochs = 1, lr = M2b.lr, lrDecay = 0.99, l2 = M2b.l2,
           clipNorm = M2b.clipN, clipValue = M2b.clipV)
@@ -679,8 +644,7 @@ object IoModelQueries {
     Q("m5b_epoch_loss",
       (s, d) => {
         val model = new DenseAutoencoder(Seq(4, 2, 4))
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 4, 4)
+        val wins = windows(s, d, 4)
         val trained = Trainer.fitFrom(model, M2b.flat.clone(), wins, "values",
           epochs = 1, lr = M2b.lr, lrDecay = 0.99, l2 = M2b.l2,
           clipNorm = M2b.clipN, clipValue = M2b.clipV)
@@ -688,23 +652,8 @@ object IoModelQueries {
         Seq(trained.lossHistory.head).toDF("_raw")
           .select(round(col("_raw"), 6).as("epoch_loss"))
       },
-      Some("WITH sv AS (SELECT event_id, (value - (SELECT avg(value) FROM events)) / " +
-        "(SELECT stddev_samp(value) FROM events) AS v FROM events), " +
-        "t AS (SELECT row_number() OVER (ORDER BY event_id) - 1 AS ridx, " +
-        "list(v) OVER w AS l, count(*) OVER w AS cnt FROM sv " +
-        "WINDOW w AS (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)), " +
-        "wn AS (SELECT ridx // 4 AS window_id, l[1] AS x0, l[2] AS x1, l[3] AS x2, l[4] AS x3 " +
-        "FROM t WHERE ridx % 4 = 0 AND cnt = 4), " +
-        "aa AS (SELECT *, 0.01 + 0.1*x0 + -0.2*x1 + 0.3*x2 + 0.05*x3 AS a0, " +
-        "-0.02 + -0.15*x0 + 0.25*x1 + -0.1*x2 + 0.2*x3 AS a1 FROM wn), " +
-        "h AS (SELECT *, CASE WHEN a0 > 20 THEN 1.0 WHEN a0 < -20 THEN -1.0 " +
-        "ELSE (exp(2*a0)-1)/(exp(2*a0)+1) END AS h0, " +
-        "CASE WHEN a1 > 20 THEN 1.0 WHEN a1 < -20 THEN -1.0 " +
-        "ELSE (exp(2*a1)-1)/(exp(2*a1)+1) END AS h1 FROM aa), " +
-        "o AS (SELECT *, 0.02 + 0.5*h0 + -0.4*h1 AS o0, -0.01 + 0.3*h0 + 0.6*h1 AS o1, " +
-        "0.03 + -0.2*h0 + 0.1*h1 AS o2, 0.0 + 0.25*h0 + -0.35*h1 AS o3 FROM h) " +
-        "SELECT round(avg(((o0-x0)*(o0-x0) + (o1-x1)*(o1-x1) + (o2-x2)*(o2-x2) + " +
-        "(o3-x3)*(o3-x3)) / 4), 6) AS epoch_loss FROM o")),
+      Some(windowCtes(4) + forwardCtes(1.0, "") +
+        s" SELECT round(avg($WindowMse), 6) AS epoch_loss FROM o")),
 
     // M4 oracle twin — one bias-corrected Adam step (t = 1) through the
     // SAME Trainer.applyUpdate that fit() runs every epoch: L2 from the
@@ -804,8 +753,7 @@ object IoModelQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 32, 32).cache()
+        val wins = windows(s, d, 32).cache()
         val (train, valid) = Prep.sequentialSplit(wins, "window_id", 0.7, 1)
         val scored = Tuning.randomSearch(train, valid, "values", 32,
           trials = 4, epochs = 2,
@@ -831,8 +779,7 @@ object IoModelQueries {
     Q("m9b_model_selection",
       (s, d) => {
         val model = new DenseAutoencoder(Seq(4, 2, 4))
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
-        val wins = Windows.slidingWindows(std, "_idx", "value", 4, 4)
+        val wins = windows(s, d, 4)
         val cands = M9b.scales.map { sc =>
           (M9b.tag(sc), TrainedAutoencoder(model, M2b.flat.map(_ * sc), Nil))
         }
@@ -855,7 +802,7 @@ object IoModelQueries {
         // the 4 per-client window frames otherwise re-runs the
         // stats-fit + transform scans of raw events when FedAvg.run
         // materializes its persist (8 event scans per run instead of 2).
-        val std = Prep.standardize(ev(s, d), Tables.eventsIdx(s, d), Seq("value"))
+        val std = standardized(s, d)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val w = Window.partitionBy(col("client")).orderBy(col("event_id"))
         val perClient = (0 until 4).map { c =>

@@ -150,9 +150,7 @@ object StreamParityQueries {
           StreamingOps.contaminatedAtIngest(docStream(s, d), "text",
             Tables.documents(s, d).filter(col("doc_id") % 20 === 0), "text", n = 4))
         .select(col("doc_id"), col("contaminated")).orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 3)) AS p FROM t " +
-        "WHERE len(toks) >= 4), " +
+      Some(ExtQueries.DocToksCte + ExtQueries.ngramStartsCte(4) + ", " +
         "g AS (SELECT doc_id, array_to_string(toks[p:p+3], ' ') AS ngram FROM e), " +
         "bench AS (SELECT DISTINCT ngram FROM g WHERE doc_id % 20 = 0), " +
         "hit AS (SELECT DISTINCT doc_id FROM g JOIN bench USING (ngram)) " +
@@ -170,23 +168,7 @@ object StreamParityQueries {
             k = 6))
         .select(col("doc_id"), col("n_tokens"), col("n_dropped"), col("clean_text"))
         .orderBy("doc_id"),
-      Some("WITH t AS (SELECT doc_id, string_split_regex(text, ' +') AS toks FROM documents), " +
-        "e AS (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 6)) AS p FROM t " +
-        "WHERE len(toks) >= 6), " +
-        "g AS (SELECT doc_id, p, array_to_string(toks[p + 1 : p + 6], ' ') AS gram FROM e), " +
-        "dup AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2), " +
-        "cov AS (SELECT DISTINCT doc_id, tp FROM " +
-        "(SELECT doc_id, unnest(generate_series(p, p + 5)) AS tp FROM g JOIN dup USING (gram))), " +
-        "tok AS (SELECT doc_id, unnest(toks) AS w, " +
-        "unnest(generate_series(0, len(toks) - 1)) AS p FROM t), " +
-        "kept AS (SELECT tok.doc_id, tok.p, tok.w FROM tok LEFT JOIN cov " +
-        "ON tok.doc_id = cov.doc_id AND tok.p = cov.tp WHERE cov.tp IS NULL), " +
-        "r AS (SELECT doc_id, count(*) AS nk, string_agg(w, ' ' ORDER BY p) AS txt " +
-        "FROM kept GROUP BY doc_id) " +
-        "SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens, " +
-        "CAST(len(t.toks) - coalesce(r.nk, 0) AS BIGINT) AS n_dropped, " +
-        "coalesce(r.txt, '') AS clean_text " +
-        "FROM t LEFT JOIN r USING (doc_id) ORDER BY t.doc_id")),
+      Some(ExtQueries.DupSpanScrubOracle)),
 
     // Gap sessionization at ingest: per-event episode labels (gap 600 s
     // per user). The oracle replays the same ms-granularity gap rule

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.{Artifacts, Tables}
 
-/** Session artifacts: a new session frees what an old one built, and sf
-  * dirs that sanitize alike never share a stored table or scratch path.
+/** Session artifacts: a new session frees what an old one built, sf
+  * dirs that sanitize alike never share a stored table or scratch path,
+  * and scratch files live under the one per-process root.
   */
 class ArtifactsSpec extends SparkSpec {
 
@@ -48,11 +49,21 @@ class ArtifactsSpec extends SparkSpec {
       assert(perFlag.sum == rows, s"$d: scan counted ${perFlag.sum} rows, lineitem has $rows")
     } finally {
       // the copies and the scan's scratch files (named by dirName)
-      val scratch = Seq("sf-x", "sf_x").map(n => Paths.get("/tmp/graft_io",
+      val scratch = Seq("sf-x", "sf_x").map(n => Paths.get(Tables.scratchRoot,
         Artifacts.dirName(root.resolve(n).toString)))
       (root +: scratch).filter(Files.exists(_)).foreach { dir =>
         Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p))
       }
     }
+  }
+
+  test("round-trip scratch and the events idx share the per-process scratch root") {
+    assume(new java.io.File(s"$sf/lineitem.parquet").exists())
+    SparkEntry.queries("s1_csv_roundtrip")(spark, sf).collect()
+    Tables.eventsIdx(spark, sf)
+    val dir = Paths.get(Tables.scratchRoot, Artifacts.dirName(sf))
+    assert(Tables.scratchRoot == s"/tmp/graft_scratch/${ProcessHandle.current().pid()}")
+    assert(Files.isDirectory(dir.resolve("s1")), s"no s1 scratch under $dir")
+    assert(Files.isDirectory(dir.resolve("events_idx")), s"no events_idx under $dir")
   }
 }

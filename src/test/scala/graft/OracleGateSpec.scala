@@ -4,9 +4,10 @@ import java.nio.file.{Files, Path}
 
 import scala.sys.process.{Process, ProcessLogger}
 
-/** The DuckDB oracle gate for the sign-bucket and IVF families, inside
-  * the test suite: every oracle-bearing row of the two families, plus the
-  * two rows that share their JL projection, is dumped on sf0.001 through
+/** The DuckDB oracle gate inside the test suite: every oracle-bearing
+  * row of the sign-bucket and IVF families (plus the two rows that share
+  * their JL projection), and every row whose oracle is built from a
+  * shared text-dedup or autoencoder stage, is dumped on sf0.001 through
   * [[Verify.dump]] (the path `graft.Verify` takes) and compared by
   * `tools/check_correctness.py`. One test per row, so a failure names the
   * row. Without `duckdb`, `pandas` and `numpy` for `python3` the row
@@ -16,13 +17,32 @@ class OracleGateSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** The oracle-bearing rows of the two families, read from the registry
-    * in its order, so no row of either family is left out of the gate.
+  /** The rows whose oracles restate a shared stage: the document token
+    * CTE, n-gram starts, duplicated-span cover and scrub tail, exact
+    * cosine pairs, cluster closure and canonical rank, incremental dedup,
+    * Jaccard, winnow islands, BPE, BM25, and the z-score window prefix
+    * and 4→2→4 forward pass of the autoencoder rows.
+    */
+  private val stageRows = Set(
+    "x_dedup_incremental", "x_dedup_incremental_bloom", "x_corpus_funnel", "x_lm_score",
+    "x_doc_chunks", "x_winnow_matches", "x_winnow_spans", "x_winnow_dedup_corpus",
+    "x_winnow_scrub", "x_dup_ngrams", "x_cosine_near_dup", "x_dedup_clusters",
+    "x_canonical_selection", "x_canonical_corpus", "x_jaccard_verify", "x_jaccard_fallback",
+    "x_minhash_recall", "x_jaccard_exact", "x_jaccard_stored", "x_bpe_merges",
+    "x_bpe_merges_dist", "x_bpe_merges_100", "x_bpe_subwords_100", "x_bpe_subwords",
+    "x_bm25", "x_hybrid_search", "x_decontaminate", "x_chunk_dedup", "x_dup_spans",
+    "x_dup_span_scrub", "x_dup_scrub_stored", "x_novelty", "x_cosine_lsh_recall",
+    "xs_stream_decontaminate", "xs_stream_scrub", "m7b_fixed_reconstruction",
+    "m1b_lstm_fixed_reconstruction", "m2b_train_epoch", "m5b_epoch_loss",
+    "m9b_model_selection")
+
+  /** The gated rows, read from the registry in its order, so no
+    * oracle-bearing row of the two ANN families is left out.
     */
   private val rows = SparkEntry.registry.map(_.name).filter { n =>
     SparkEntry.oracleSql.contains(n) &&
       (Seq("x_semantic_dedup", "x_knn_join", "x_ivf_").exists(n.startsWith) ||
-        n == "x_random_projection" || n == "xs_stream_semantic_pairs")
+        n == "x_random_projection" || n == "xs_stream_semantic_pairs" || stageRows(n))
   }
 
   /** The checker needs all three modules. */
@@ -60,8 +80,9 @@ class OracleGateSpec extends SparkSpec {
     assert(names.distinct.size == names.size)
   }
 
-  test("the gate covers the 25 oracle rows of the two families") {
-    assert(rows.size == 25, rows.mkString(", "))
+  test("the gate covers the 65 oracle rows of the ANN families and shared stages") {
+    assert(stageRows.forall(SparkEntry.oracleSql.contains), stageRows.filterNot(SparkEntry.oracleSql.contains))
+    assert(rows.size == 65, rows.mkString(", "))
   }
 
   rows.foreach { row =>

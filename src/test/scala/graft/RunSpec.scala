@@ -105,4 +105,14 @@ class RunSpec extends SparkSpec {
     assert(a.sameElements(b))
     assert(bytes(s"${row}_a.txt").nonEmpty)
   }
+
+  test("an IVF broadcast row's logical plan does not depend on the rows run before it") {
+    val row = "x_ivf_pq_recall"
+    assert(run("plans", sf, tmp.toString, "alone", row)._1 == 0)
+    assert(run("plans", sf, tmp.toString, "after", "x_knn_join_collapsed", row)._1 == 0)
+    def bytes(tag: String) = Files.readAllBytes(tmp.resolve(s"${row}_$tag.logical.txt"))
+    assert(bytes("alone").nonEmpty)
+    assert(bytes("alone").sameElements(bytes("after")),
+      new String(bytes("alone"), UTF_8) + "\n---\n" + new String(bytes("after"), UTF_8))
+  }
 }

@@ -19,7 +19,8 @@ import numpy as np
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def main(sf_dir, out_dir, only=None, skip=None):
+def connect(sf_dir):
+    """A DuckDB connection with one view per table of `sf_dir` that exists."""
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata ships single parquet FILES; ScaleGen writes
@@ -27,7 +28,13 @@ def main(sf_dir, out_dir, only=None, skip=None):
         p = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(p):
             p = f"{p}/*.parquet"
+        elif not os.path.exists(p):
+            continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+def main(sf_dir, out_dir, only=None, skip=None):
+    con = connect(sf_dir)
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     if only:
         oracle = {k: v for k, v in oracle.items() if k in only}
