@@ -43,6 +43,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * JVM compiles: the first session fixes the cache size for the JVM's
   * lifetime, so every session must be built through [[configure]].
   *
+  * Runtime bloom filters are off (`spark.sql.optimizer.runtime.bloomFilter.enabled`,
+  * README "Runtime bloom filters"). Spark injects one into a join when
+  * its size estimate of the side to be filtered passes a 10 GB gate
+  * (`applicationSideScanSizeThreshold`), and for RDD-backed
+  * and checkpointed frames that estimate is absurd: non-CBO estimates
+  * multiply through explodes and inner joins, so the IIoT pass's
+  * 1,077-row score checkpoint was estimated at 5.7·10²² bytes. The
+  * per-period join then built eight 1 MiB filters over a 359-row cached
+  * table and broadcast them in two 8.1 MiB task binaries, the largest
+  * task-thread frames of a profiled pass. No registry row's plan uses one.
+  * To opt out, set the key back to `true` on the builder after
+  * [[configure]].
+  *
   * Local filesystem without process spawns: without libhadoop (the
   * native library Spark does not ship), Hadoop's `RawLocalFileSystem`
   * forks a process on every `setPermission` (`chmod`, once per file
@@ -101,6 +114,8 @@ object GraftSession {
     .config("spark.sql.artifact.isolation.enabled", "false")
     // stage ids follow AQE's planning order, which varies between runs
     .config("spark.sql.codegen.useIdInClassName", "false")
+    // estimates of RDD-backed frames pass the filter's size gate (scaladoc above)
+    .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
     // `file:` without a forked chmod/readlink per file (scaladoc above)
     .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)

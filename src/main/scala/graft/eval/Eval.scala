@@ -1,6 +1,7 @@
 package graft.eval
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Evaluation operators (SURVEY.md §2.4 A4–A8, §2.7 J1–J5, §2.5 W9):
@@ -130,8 +131,11 @@ object Eval {
     * `src/evaluation/visualization.py:58-94`.
     *
     * Input is period-granularity (already ~1000× reduced from raw
-    * samples), so the unpartitioned rolling window is driver-thread tiny
-    * even at 100 TB of raw input; the threshold is a 1-row broadcast.
+    * samples). Ungrouped, the unpartitioned rolling window is
+    * driver-thread tiny even at 100 TB of raw input and the threshold is
+    * a 1-row broadcast. Grouped, everything is one window pass over
+    * `partitionBy(groupCols)`: one shuffle on the keys, no broadcast, no
+    * join.
     */
   def anomalyStart(mse: DataFrame, periodCol: String, mseCol: String,
                    validationFrac: Double = 0.1, k: Double = 4.0,
@@ -139,52 +143,47 @@ object Eval {
     // The reference slices and smooths POSITIONALLY (first 10% of rows,
     // rolling over w preceding rows) — on arrays, position and period id
     // coincide. Here the period column may be sparse (filtered series,
-    // empty periods), so a dense 0..n-1 position is derived first and
-    // every positional step (validation slice, chunked rolling min) runs
-    // on it; the reported anomaly_start stays the original period value.
-    // Ungrouped: two-phase bucketed rank (scale-safe, no global window) +
-    // chunk+halo rolling min, which REQUIRES the dense index — chunk heads
-    // of a sparse series would lack halo rows and silently null the min.
-    // Grouped: per-group row_number (parallel by key).
-    val positioned =
-      if (groupCols.isEmpty)
-        graft.window.Windows.rangeBucketedCumSum(
-            mse.withColumn("_one", lit(1L)), periodCol, Seq("_one"))
-          .withColumn("_pos", (col("_one_cum") - 1).cast("long"))
-          .drop("_one", "_one_cum")
-      else mse.withColumn("_pos", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(groupCols.map(col): _*).orderBy(col(periodCol))) - 1)
-    val np =
-      if (groupCols.isEmpty) positioned.agg(count(lit(1)).as("_np"))
-      else positioned.groupBy(groupCols.map(col): _*).agg(count(lit(1)).as("_np"))
-    val withNp =
-      if (groupCols.isEmpty) positioned.crossJoin(broadcast(np))
-      else positioned.join(broadcast(np), groupCols)
-    val validation = withNp.filter(col("_pos") < floor(col("_np") * validationFrac))
-    val thr =
-      if (groupCols.isEmpty)
-        validation.agg((avg(col(mseCol)) + lit(k) * stddev_samp(col(mseCol))).as("_thr"))
-      else validation.groupBy(groupCols.map(col): _*)
-        .agg((avg(col(mseCol)) + lit(k) * stddev_samp(col(mseCol))).as("_thr"))
-    val smoothed =
-      if (groupCols.isEmpty)
-        graft.window.Windows.rollingMinChunked(positioned, "_pos", mseCol, rollingWidth,
-          chunkSize = 100000L, out = "_rmin")
-      else graft.window.Windows.rollingMin(
-        positioned, "_pos", mseCol, rollingWidth, groupCols, out = "_rmin")
-    // LEFT join: a group whose validation slice is empty (fewer than
-    // 1/validationFrac periods) must still appear — with a null threshold
-    // and the 0 sentinel (the reference yields NaN + no alarm), not vanish.
-    val joined =
-      if (groupCols.isEmpty) smoothed.crossJoin(broadcast(thr))
-      else smoothed.join(broadcast(thr), groupCols, "left")
+    // empty periods), so a dense 0..n-1 position is derived first; the
+    // validation slice runs on it and the rolling min on a rows frame (or,
+    // ungrouped, on chunks of it); the reported anomaly_start stays the
+    // original period value.
     val exceeded = coalesce(min(when(col("_rmin") > col("_thr"), col(periodCol))), lit(0L))
       .as("anomaly_start")
-    if (groupCols.isEmpty)
-      joined.agg(first(col("_thr")).as("threshold"), exceeded)
-    else joined.groupBy(groupCols.map(col): _*)
-      .agg(first(col("_thr")).as("threshold"), exceeded)
+    if (groupCols.nonEmpty) {
+      // Per-group position, size, rolling min and threshold over windows
+      // partitioned by the keys (the rolling min's window orders by the
+      // period like `_pos`'s, so it adds no exchange or sort); the final
+      // groupBy reuses that partitioning. A group whose validation slice
+      // is empty (fewer than 1/validationFrac periods) still appears, with
+      // a null threshold and the 0 sentinel (the reference yields NaN + no
+      // alarm).
+      val keys = groupCols.map(col)
+      val group = Window.partitionBy(keys: _*)
+      val inValidation = when(col("_pos") < floor(col("_np") * validationFrac), col(mseCol))
+      val positioned = mse.withColumn("_pos", row_number().over(group.orderBy(col(periodCol))) - 1)
+      graft.window.Windows.rollingMin(positioned, periodCol, mseCol, rollingWidth, groupCols,
+          out = "_rmin")
+        .withColumn("_np", count(lit(1)).over(group))
+        .withColumn("_thr",
+          avg(inValidation).over(group) + lit(k) * stddev_samp(inValidation).over(group))
+        .groupBy(keys: _*)
+        .agg(first(col("_thr")).as("threshold"), exceeded)
+    } else {
+      // Two-phase bucketed rank (scale-safe, no global window) + chunk+halo
+      // rolling min, which REQUIRES the dense index — chunk heads of a
+      // sparse series would lack halo rows and silently null the min.
+      val positioned = graft.window.Windows.rangeBucketedCumSum(
+          mse.withColumn("_one", lit(1L)), periodCol, Seq("_one"))
+        .withColumn("_pos", (col("_one_cum") - 1).cast("long"))
+        .drop("_one", "_one_cum")
+      val np = positioned.agg(count(lit(1)).as("_np"))
+      val validation = positioned.crossJoin(broadcast(np))
+        .filter(col("_pos") < floor(col("_np") * validationFrac))
+      val thr = validation.agg((avg(col(mseCol)) + lit(k) * stddev_samp(col(mseCol))).as("_thr"))
+      val smoothed = graft.window.Windows.rollingMinChunked(positioned, "_pos", mseCol,
+        rollingWidth, chunkSize = 100000L, out = "_rmin")
+      smoothed.crossJoin(broadcast(thr)).agg(first(col("_thr")).as("threshold"), exceeded)
+    }
   }
 
   /** J5 — fractional label ranges → index set: `[a, b)` fractions of `n`

@@ -3,6 +3,7 @@ package graft.window
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Sequence / window operators (SURVEY.md §2.5 W1–W14) — the heart of the
   * reference's dataflow (windowing for the autoencoder, rolling thresholds,
@@ -510,10 +511,11 @@ object Windows {
     * score-ordered sweeps like ROC). Keys are ranged into `numBuckets`
     * equal-width buckets between the broadcast (min, max) — a 1-row lazy
     * aggregate, no driver action; partial cumsums run per-bucket in
-    * parallel; the only unpartitioned window is over the numBuckets-row
-    * totals ledger. Input must be key-distinct (aggregate by key first) so
-    * within-bucket ordering is total. Appends `<c>_cum` (inclusive of the
-    * current row) per requested column.
+    * parallel; the bucket offsets are one fold over the numBuckets-row
+    * totals ledger, with no unpartitioned window. Input must be
+    * key-distinct (aggregate by key first) so within-bucket ordering is
+    * total. Appends `<c>_cum` (inclusive of the current row) per
+    * requested column.
     */
   def rangeBucketedCumSum(byKey: DataFrame, keyCol: String, sumCols: Seq[String],
                           numBuckets: Int = 1024, descending: Boolean = false): DataFrame = {
@@ -525,15 +527,33 @@ object Windows {
         .otherwise(least(rawB, lit(numBuckets - 1L))).cast("long"))
       .drop("_lo", "_hi")
     val keyOrd = if (descending) col(keyCol).desc else col(keyCol).asc
-    val bOrd = if (descending) col("_b").desc else col("_b").asc
     val wLocal = Window.partitionBy(col("_b")).orderBy(keyOrd)
       .rowsBetween(Window.unboundedPreceding, 0)
     val totalAggs = sumCols.map(c => sum(col(c)).as(s"_t_$c"))
     val totals = bucketed.groupBy("_b").agg(totalAggs.head, totalAggs.tail: _*)
-    val wOff = Window.orderBy(bOrd).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sumCols.foldLeft(totals) { (t, c) =>
-      t.withColumn(s"_off_$c", coalesce(sum(col(s"_t_$c")).over(wOff), lit(0L)))
-    }.select(col("_b") +: sumCols.map(c => col(s"_off_$c")): _*)
+    // Offsets ledger: exclusive prefix sums of the ≤ numBuckets totals.
+    // The totals are collected into one array sorted by bucket (a 1-row
+    // aggregate, not an unpartitioned window), folded once, and exploded
+    // back to one row per bucket.
+    val types = sumCols.map(c => totals.schema(s"_t_$c").dataType)
+    val runs = sumCols.map(c => s"_r_$c")
+    val ledger = totals.agg(sort_array(collect_list(
+      struct(col("_b") +: sumCols.map(c => col(s"_t_$c")): _*)), asc = !descending).as("_l"))
+    val entry = StructType(StructField("_b", LongType) +:
+      sumCols.zip(types).map { case (c, t) => StructField(s"_off_$c", t) })
+    val zero = struct(runs.zip(types).map { case (r, t) => lit(0).cast(t).as(r) } :+
+      array().cast(ArrayType(entry)).as("_out"): _*)
+    def step(acc: Column, x: Column): Column = {
+      val sums = sumCols.zip(runs).zip(types).map { case ((c, r), t) =>
+        (acc(r) + coalesce(x(s"_t_$c"), lit(0))).cast(t).as(r)
+      }
+      val out = struct(x("_b").as("_b") +:
+        sumCols.zip(runs).map { case (c, r) => acc(r).as(s"_off_$c") }: _*)
+      struct(sums :+ concat(acc("_out"), array(out)).as("_out"): _*)
+    }
+    val offsets = ledger
+      .select(explode(aggregate(col("_l"), zero, step, _("_out"))).as("_e"))
+      .select("_e.*")
     val withLocal = sumCols.foldLeft(bucketed) { (d2, c) =>
       d2.withColumn(s"_loc_$c", sum(col(c)).over(wLocal))
     }

@@ -118,6 +118,60 @@ class EvalFunctionsSpec extends SparkSpec {
     assert(res.getLong(1) == 162L * 60000L, s"anomaly_start=${res.getLong(1)}")
   }
 
+  test("anomalyStart grouped: per-group start and threshold match a plain-Scala reference") {
+    // validation = first floor(n·frac) periods by position, μ + k·σ
+    // (ddof=1; null below two values), rolling min over w positions with
+    // a null head, first period whose rolling min exceeds the threshold,
+    // 0 when none or when the threshold is null
+    def reference(series: Seq[(Long, Double)], frac: Double, k: Double,
+                  w: Int): (Option[Double], Long) = {
+      val s = series.sortBy(_._1)
+      val v = s.take(math.floor(s.size * frac).toInt).map(_._2)
+      val thr = if (v.size < 2) None else {
+        val mu = v.sum / v.size
+        Some(mu + k * math.sqrt(v.map(x => (x - mu) * (x - mu)).sum / (v.size - 1)))
+      }
+      val start = thr.flatMap { t =>
+        (w - 1 until s.size).find(i => s.slice(i - w + 1, i + 1).map(_._2).min > t).map(s(_)._1)
+      }.getOrElse(0L)
+      (thr, start)
+    }
+    val rnd = new scala.util.Random(11)
+    // validation values lie in [1, 1.1), later normal ones in [0.9, 1), so
+    // only fault values (≥ 9) can pass a threshold of μ + 4σ ≥ 1
+    def value(pos: Int, n: Int, fault: Boolean) =
+      (if (fault) 9.0 else if (pos < n / 10) 1.0 else 0.9) + rnd.nextDouble() * 0.1
+    val groups: Map[(String, Int), Seq[(Long, Double)]] = Map(
+      // fewer than 1/validationFrac periods: empty validation slice
+      ("a", 1) -> (0 until 8).map(p => (p.toLong, value(p, 8, p >= 5))),
+      // sparse period ids, fault from the 30th period on
+      ("a", 2) -> (0 until 40).map(i => (i * 7L + (i % 3), value(i, 40, i >= 30))),
+      // never exceeds its threshold
+      ("b", 1) -> (0 until 30).map(p => (p.toLong, value(p, 30, fault = false))),
+      // lone spikes the rolling min suppresses, then a sustained fault
+      ("b", 2) -> (0 until 50).map(p => (p.toLong,
+        value(p, 50, p == 12 || p == 20 || p == 21 || p >= 41))))
+    val df = groups.toSeq.flatMap { case ((m, mach), rows) =>
+      rows.map { case (p, v) => (m, mach, p, v) }
+    }.toDF("model", "machine", "period", "mse")
+    val got = Eval.anomalyStart(df, "period", "mse", validationFrac = 0.1, k = 4.0,
+        rollingWidth = 3, groupCols = Seq("model", "machine"))
+      .select("model", "machine", "threshold", "anomaly_start").collect()
+      .map(r => (r.getString(0), r.getInt(1)) ->
+        (if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.getLong(3))).toMap
+    assert(got.keySet == groups.keySet)
+    groups.foreach { case (g, rows) =>
+      val (thr, start) = reference(rows, 0.1, 4.0, 3)
+      val (gotThr, gotStart) = got(g)
+      assert(gotThr.isDefined == thr.isDefined &&
+        gotThr.zip(thr).forall { case (a, b) => math.abs(a - b) < 1e-9 },
+        s"$g threshold $gotThr, expected $thr")
+      assert(gotStart == start, s"$g anomaly_start $gotStart, expected $start")
+    }
+    assert(got(("a", 1)) == ((None, 0L)) && got(("b", 1))._2 == 0L)
+    assert(got(("a", 2))._2 == 32 * 7L + 2 && got(("b", 2))._2 == 43L)
+  }
+
   test("M3: FFT magnitude matches direct DFT on power-of-two input") {
     val x = Array.tabulate(64)(i => math.sin(2 * math.Pi * 5 * i / 64.0) + 0.3)
     val fft = FftMagnitude.magnitudes(x)
