@@ -1,16 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window => LWindow}
 
 /** Sweep every registry query (and the builder plans behind memoized
   * queries) for scale anti-patterns in its OPTIMIZED LOGICAL plan —
-  * unpartitioned Window nodes over data-sized frames (the bucket-ledger
-  * windows over `_b` aggregates are exempt: numBuckets rows by
-  * construction), and non-equi/cross joins where NEITHER side is provably
-  * ≤ 1 row (a broadcast scalar-aggregate cross join is the intended
-  * lazy-count pattern, not an all-pairs product). CI gate via
-  * ExplainAuditSpec; interactive: `graft.Run audit <sfDir> [-full]`.
+  * unpartitioned Window nodes over frames the planner cannot bound to
+  * 100k rows, whatever they order by, and non-equi/cross joins where
+  * NEITHER side is provably ≤ 1 row (a broadcast scalar-aggregate cross
+  * join is the intended lazy-count pattern, not an all-pairs product).
+  * CI gate via ExplainAuditSpec; interactive: `graft.Run audit <sfDir>
+  * [-full]`.
   */
 object ExplainAudit {
 
@@ -43,24 +43,16 @@ object ExplainAudit {
       ((l.references.subsetOf(j.left.outputSet) && r.references.subsetOf(j.right.outputSet)) ||
         (l.references.subsetOf(j.right.outputSet) && r.references.subsetOf(j.left.outputSet)))
 
-  private def ledgerWindow(w: LWindow): Boolean =
-    // the offsets ledger: a cumsum ordered by the bucket id over an
-    // aggregate keyed by `_b` — numBuckets rows, not data-sized
-    w.orderSpec.exists(_.child.references.exists(_.name == "_b")) ||
-      w.child.collectFirst {
-        case a: Aggregate if a.groupingExpressions.exists(_.references.exists(_.name == "_b")) => a
-      }.isDefined
-
   /** Plans whose flagged pattern is documented as intentional:
     * `x_cosine_near_dup` is the EXACT all-pairs verification anchor — its
     * non-equi self-join over a bounded id slice is the point of the query
     * (candidate generation at scale is `x_cosine_near_dup_lsh`) —
     * `memo:cluster_pairs` is the same shape feeding `x_dedup_clusters`,
-    * `x_cosine_lsh_recall` is the r11 recall AUDIT row whose truth
+    * `x_cosine_lsh_recall` is the recall AUDIT row whose truth
     * side must be the exact all-pairs set by definition (it measures the
     * LSH pipeline against it; production near-dup runs use the LSH rows),
     * and `x_ivf_recall` / `x_ivf_pq_recall` / `x_ivf_pq_outlier_recall`
-    * are the IVF lane's r14/r15/r16 audits of the same shape — their
+    * are the IVF lane's audits of the same shape — their
     * truth side is `Similarity.exactKnnJoin` over the bounded
     * vec_id < 500 slice (the IVF/PQ side under audit is the production
     * equi-join plan).
@@ -97,8 +89,8 @@ object ExplainAudit {
         val globalWindows = lp.collect {
           // a frame the planner KNOWS is bounded (e.g. under a LIMIT —
           // maxRows is propagated) is not data-sized: a single-task
-          // window over ≤ 100k rows is the ledger situation, fine
-          case w: LWindow if w.partitionSpec.isEmpty && !ledgerWindow(w) &&
+          // window over ≤ 100k rows is fine
+          case w: LWindow if w.partitionSpec.isEmpty &&
             !w.child.maxRows.exists(_ <= 100000L) => w
         }
         val badJoins = lp.collect {

@@ -38,9 +38,10 @@ import graft.core.GraftSession
   *    final (post-AQE) formatted plan to `<name>_<tag>.txt`, and its
   *    optimized logical plan to `<name>_<tag>.logical.txt`, with the
   *    JVM's counters masked: expression ids print as `#x`, lambda
-  *    variables as `x_n`, function objects as `$$Lambda`. The post-AQE
-  *    plan can differ between two runs of the same code; the logical one
-  *    does not, whatever ran before it.
+  *    variables as `x_n`, function objects as `$$Lambda`, and the
+  *    physical plan ids that a cached frame prints as `plan_id=x`. The
+  *    post-AQE plan can differ between two runs of the same code; the
+  *    logical one does not, whatever ran before it.
   *  - `verify <sfDir> <outDir> <a,b,…>` — [[Verify.dump]] for those rows
   *    only, in the layout `tools/check_correctness.py` reads. A row that
   *    throws fails the run and stays out of the oracle slice.
@@ -169,6 +170,7 @@ object Run {
       write(s"${name}_$tag.logical.txt", qe.optimizedPlan.treeString
         .replaceAll("#\\d+", "#x")
         .replaceAll("(lambda \\w+?)_\\d+", "$1_n")
+        .replaceAll("plan_id=\\d+", "plan_id=x")
         .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+", "\\$\\$Lambda"))
     }
   }

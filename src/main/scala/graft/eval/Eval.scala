@@ -104,15 +104,15 @@ object Eval {
     * tie-averaged rank of score s is `(#rows below s) + (count(s)+1)/2`,
     * where the running count comes from the two-phase
     * [[graft.window.Windows.rangeBucketedCumSum]]: per-bucket partial
-    * cumsums in parallel + a numBuckets-row offsets ledger. No
-    * unpartitioned window ever touches a row-sized frame.
+    * cumsums in parallel + one fold over the bucket totals. No
+    * unpartitioned window. A null score has no rank and raises an error.
     */
   def aucRoc(df: DataFrame, scoreCol: Column, labelCol: Column,
              numBuckets: Int = 1024): DataFrame = {
     val byScore = df.select(scoreCol.as("_s"), labelCol.cast("boolean").as("_y"))
       .groupBy("_s")
       .agg(count(lit(1)).as("_c"), sum(when(col("_y"), 1L).otherwise(0L)).as("_pc"))
-    val cum = graft.window.Windows.rangeBucketedCumSum(byScore, "_s", Seq("_c"), numBuckets)
+    val cum = graft.window.Windows.rangeBucketedCumSum(byScore, Seq("_s"), Seq("_c"), numBuckets)
     val ranked = cum.withColumn("_rk",
       col("_c_cum") - col("_c") + (col("_c") + 1) / 2.0)
     ranked.agg(
@@ -173,15 +173,15 @@ object Eval {
       // rolling min, which REQUIRES the dense index — chunk heads of a
       // sparse series would lack halo rows and silently null the min.
       val positioned = graft.window.Windows.rangeBucketedCumSum(
-          mse.withColumn("_one", lit(1L)), periodCol, Seq("_one"))
+          mse.withColumn("_one", lit(1L)), Seq(periodCol), Seq("_one"))
         .withColumn("_pos", (col("_one_cum") - 1).cast("long"))
         .drop("_one", "_one_cum")
       val np = positioned.agg(count(lit(1)).as("_np"))
       val validation = positioned.crossJoin(broadcast(np))
         .filter(col("_pos") < floor(col("_np") * validationFrac))
       val thr = validation.agg((avg(col(mseCol)) + lit(k) * stddev_samp(col(mseCol))).as("_thr"))
-      val smoothed = graft.window.Windows.rollingMinChunked(positioned, "_pos", mseCol,
-        rollingWidth, chunkSize = 100000L, out = "_rmin")
+      val smoothed = graft.window.Windows.rollingMin(positioned, "_pos", mseCol,
+        rollingWidth, out = "_rmin")
       smoothed.crossJoin(broadcast(thr)).agg(first(col("_thr")).as("threshold"), exceeded)
     }
   }

@@ -4,12 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.window.Windows
+
 /** Cleaning / resampling / normalization / restructuring operators
   * (SURVEY.md §2.2 P1–P12, §2.4 A1, §2.6 R1/R2).
   *
   * Every operator here is a narrow transformation or a single keyed
   * aggregation over an explicit `idx` column (see graft.core.Indexing) —
-  * no global single-task windows. Shuffle inventory per op is noted.
+  * no unpartitioned windows, except ungrouped [[timeGaps]] (its
+  * distinct-timestamp idx is sparse, so no chunk decomposition applies).
+  * Shuffle inventory per op is noted.
   */
 object Prep {
 
@@ -106,93 +110,60 @@ object Prep {
 
   /** Deterministic per-stratum token-budget sampling: within each
     * stratum (language, domain, source…), documents are taken in
-    * [[portableHash]] order until the running `weightCol` total (token
-    * count) exceeds `budget` — the "N tokens per language" corpus-mixing
-    * step, reproducible across engines and stable under corpus growth
-    * (a doc's selection changes only if earlier-hashed mass changes).
+    * ([[portableHash]], id) order until the running `weightCol` total
+    * (token count, as a long) exceeds `budget` — the "N tokens per
+    * language" corpus-mixing step, reproducible across engines and stable
+    * under corpus growth (a doc's selection changes only if earlier-hashed
+    * mass changes).
     *
-    * Scale shape: the cumulative sum is two-phase — hashes range into
-    * `numBuckets` equal-width buckets, per-(stratum, bucket) partial
-    * sums run in parallel, and the only unpartitioned-by-hash window
-    * runs over the numBuckets-row per-stratum totals ledger (ordered by
-    * `_b`, the bounded-ledger audit convention). A plain
+    * Scale shape: the running total is [[graft.window.Windows.rangeBucketedCumSum]]
+    * with the stratum as its group (null-safe: a NULL stratum budgets
+    * like any other) — per-(stratum, hash-range bucket) partial sums in
+    * parallel plus one fold over each stratum's bucket totals. A plain
     * `Window.partitionBy(stratum)` would serialize each stratum — the
     * dominant language of a 100 TB corpus in ONE task.
     *
     * Output: the selected rows of `df` plus `_cum` (running token total
-    * inclusive of the row, ≤ budget). Inherits [[portableHash]]'s
-    * |id| < 2^31 precondition — out-of-range ids silently wrap under
-    * non-ANSI arithmetic and the cross-engine re-derivation breaks.
+    * inclusive of the row, ≤ budget). A null id has no hash and raises an
+    * error. Inherits [[portableHash]]'s |id| < 2^31 precondition —
+    * out-of-range ids silently wrap under non-ANSI arithmetic and the
+    * cross-engine re-derivation breaks.
     */
   def tokenBudgetSample(df: DataFrame, idCol: String, stratumCol: String,
-                        weightCol: String, budget: Long,
-                        numBuckets: Int = 256): DataFrame = {
-    require(4294967296L % numBuckets == 0, "numBuckets must divide 2^32")
-    val bucketWidth = 4294967296L / numBuckets
-    val hashed = df.withColumn("_h", portableHash(col(idCol)))
-      .withColumn("_b", (col("_h") / bucketWidth).cast("long"))
-    val totals = hashed.groupBy(col(stratumCol), col("_b"))
-      .agg(sum(col(weightCol)).cast("long").as("_t"))
-    val wOff = Window.partitionBy(col(stratumCol)).orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = totals
-      .withColumn("_off", coalesce(sum(col("_t")).over(wOff), lit(0L)))
-      .drop("_t")
-    val wLocal = Window.partitionBy(col(stratumCol), col("_b"))
-      .orderBy(col("_h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // null-safe on the stratum leg (a NULL stratum budgets like any
-    // other); _b is never null, plain equality is fine there
-    val off = offsets.select(col(stratumCol).as("_rs"), col("_b").as("_ob"), col("_off"))
-    hashed
-      .withColumn("_loc", sum(col(weightCol)).over(wLocal).cast("long"))
-      .join(broadcast(off), col(stratumCol) <=> col("_rs") && col("_b") === col("_ob"))
-      .withColumn("_cum", col("_loc") + col("_off"))
+                        weightCol: String, budget: Long): DataFrame =
+    Windows.rangeBucketedCumSum(
+        df.withColumn("_h", portableHash(col(idCol))).withColumn("_w", col(weightCol).cast("long")),
+        Seq("_h", idCol), Seq("_w"), partCols = Seq(stratumCol))
+      .withColumnRenamed("_w_cum", "_cum")
       .filter(col("_cum") <= budget)
-      .drop("_h", "_b", "_rs", "_ob", "_loc", "_off")
-  }
+      .drop("_h", "_w")
 
   /** Sequence packing ("concat-then-chunk"): documents are laid out in
-    * [[portableHash]] order, conceptually concatenated, and chunked into
-    * fixed `seqLen`-token training sequences. Each document gets the
+    * ([[portableHash]], id) order, conceptually concatenated, and chunked
+    * into fixed `seqLen`-token training sequences. Each document gets the
     * sequence id and in-sequence offset where its tokens start; a
     * document whose `offset + weight > seqLen` straddles a boundary and
     * is split by the downstream tokenizer — the standard LM-pretraining
     * layout (no padding waste, deterministic and re-derivable from ids).
     *
-    * The exclusive running total is the same two-phase bucketed cumsum
-    * as [[tokenBudgetSample]] (global, not per-stratum): per-bucket
-    * partials in parallel, one ledger window over numBuckets rows
-    * ordered by `_b`.
+    * The exclusive running total is the inclusive one of
+    * [[graft.window.Windows.rangeBucketedCumSum]] (global, no groups)
+    * minus the row's own weight; a null weight counts as 0.
     *
     * Output: input rows plus `_start` (exclusive token cumsum), `seq_id`
-    * (`_start div seqLen`) and `seq_offset` (`_start mod seqLen`).
-    * Inherits [[portableHash]]'s |id| < 2^31 precondition (see
-    * [[tokenBudgetSample]]).
+    * (`_start div seqLen`) and `seq_offset` (`_start mod seqLen`). A null
+    * id raises an error. Inherits [[portableHash]]'s |id| < 2^31
+    * precondition (see [[tokenBudgetSample]]).
     */
-  def packSequences(df: DataFrame, idCol: String, weightCol: String, seqLen: Long,
-                    numBuckets: Int = 256): DataFrame = {
-    require(4294967296L % numBuckets == 0, "numBuckets must divide 2^32")
-    val bucketWidth = 4294967296L / numBuckets
-    val hashed = df.withColumn("_h", portableHash(col(idCol)))
-      .withColumn("_b", (col("_h") / bucketWidth).cast("long"))
-    val totals = hashed.groupBy(col("_b"))
-      .agg(sum(col(weightCol)).cast("long").as("_t"))
-    // numBuckets-row ledger: the only unpartitioned window, ordered by _b
-    val wOff = Window.orderBy(col("_b")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = totals
-      .withColumn("_off", coalesce(sum(col("_t")).over(wOff), lit(0L)))
-      .drop("_t")
-    val wLocal = Window.partitionBy(col("_b")).orderBy(col("_h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    hashed
-      .withColumn("_loc", coalesce(sum(col(weightCol)).over(wLocal), lit(0L)).cast("long"))
-      .join(broadcast(offsets), "_b")
-      .withColumn("_start", col("_loc") + col("_off"))
+  def packSequences(df: DataFrame, idCol: String, weightCol: String, seqLen: Long): DataFrame =
+    Windows.rangeBucketedCumSum(
+        df.withColumn("_h", portableHash(col(idCol)))
+          .withColumn("_w", coalesce(col(weightCol).cast("long"), lit(0L))),
+        Seq("_h", idCol), Seq("_w"))
+      .withColumn("_start", col("_w_cum") - col("_w"))
       .withColumn("seq_id", expr(s"_start DIV $seqLen"))
       .withColumn("seq_offset", col("_start") % seqLen)
-      .drop("_h", "_b", "_loc", "_off")
-  }
+      .drop("_h", "_w", "_w_cum")
 
   /** Stratum-balancing mixture sampler: downsample every stratum
     * (language, domain, source…) to the size of the SMALLEST one —

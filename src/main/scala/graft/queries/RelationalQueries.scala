@@ -289,12 +289,12 @@ object RelationalQueries {
         "FROM events GROUP BY event_type ORDER BY event_type")),
 
     // A10 — cumulative over-threshold certainty score (clip → cumsum → /4),
-    // two-phase scalable cumsum (no single-task global window).
+    // two-phase range-bucketed cumsum (no single-task global window).
     Q("a10_certainty",
       (s, d) => {
         val g = ev(s, d).withColumn("_g", greatest(col("value") - 150, lit(0.0)) / 150)
-        graft.window.Windows.scalableCumSum(g, "event_id", "_g", bucketSize = 1000L, out = "_cum")
-          .select(col("event_id"), round(col("_cum") / 4, 6).as("certainty"))
+        graft.window.Windows.rangeBucketedCumSum(g, Seq("event_id"), Seq("_g"))
+          .select(col("event_id"), round(col("_g_cum") / 4, 6).as("certainty"))
           .orderBy("event_id")
       },
       Some("SELECT event_id, round(sum(greatest(value - 150, 0.0) / 150) OVER " +

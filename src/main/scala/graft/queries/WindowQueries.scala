@@ -65,7 +65,7 @@ object WindowQueries {
     // partitioned (no global single-task window; chunk 1000 gives n/1000
     // parallel window partitions).
     Q("w4_temporalize",
-      (s, d) => Windows.temporalizeChunked(evIdx(s, d), "_idx", "value", 20, chunkSize = 1000L)
+      (s, d) => Windows.temporalize(evIdx(s, d), "_idx", "value", 20, chunkSize = 1000L)
         .select(col("event_id"), size(col("history")).cast("long").as("hist_len"),
           round(aggregate(col("history"), lit(0.0), (a, v) => a + v) / 20, 6).as("hist_avg"))
         .orderBy("event_id"),
@@ -139,7 +139,7 @@ object WindowQueries {
     // → [start, end+1) spans, via the anti-join + bucketed-rank
     // formulation (no row-sized window anywhere in the plan).
     Q("w12_islands",
-      (s, d) => Windows.islandsScalable(ev(s, d).filter(col("value") > 170), "event_id")
+      (s, d) => Windows.islands(ev(s, d).filter(col("value") > 170), "event_id")
         .select("span_start", "span_end")
         .orderBy("span_start"),
       Some("WITH f AS (SELECT event_id FROM events WHERE value > 170), " +
@@ -147,10 +147,10 @@ object WindowQueries {
         "SELECT min(event_id) AS span_start, max(event_id) + 1 AS span_end FROM g " +
         "GROUP BY grp ORDER BY span_start")),
 
-    // W13 — global cumulative sum, two-phase bucket pattern.
+    // W13 — global cumulative sum, two-phase range-bucket pattern.
     Q("w13_cumsum",
-      (s, d) => Windows.scalableCumSum(ev(s, d), "event_id", "value", bucketSize = 1000L)
-        .select(col("event_id"), round(col("cum"), 4).as("cum"))
+      (s, d) => Windows.rangeBucketedCumSum(ev(s, d), Seq("event_id"), Seq("value"))
+        .select(col("event_id"), round(col("value_cum"), 4).as("cum"))
         .orderBy("event_id"),
       Some("SELECT event_id, round(sum(value) OVER (ORDER BY event_id ROWS BETWEEN UNBOUNDED " +
         "PRECEDING AND CURRENT ROW), 4) AS cum FROM events ORDER BY event_id")),
@@ -158,7 +158,7 @@ object WindowQueries {
     // W14 — alignment shift: first k kept, remainder lagged by k
     // (chunk+halo — no global single-task window).
     Q("w14_lag_shift",
-      (s, d) => Windows.lagShiftChunked(evIdx(s, d), "_idx", "value", 20, chunkSize = 1000L)
+      (s, d) => Windows.lagShift(evIdx(s, d), "_idx", "value", 20, chunkSize = 1000L)
         .select("event_id", "shifted")
         .orderBy("event_id"),
       Some("SELECT event_id, COALESCE(lag(value, 20) OVER (ORDER BY event_id), value) AS shifted " +
@@ -337,8 +337,8 @@ object WindowQueries {
 
     // As-of join, global (no key): every event gets the latest 'error'
     // value corpus-wide at-or-before its timestamp. Exercises the
-    // range-bucketed decomposition — per-bucket windows + a bounded
-    // carry ledger, no global window over the data. µs axis as above.
+    // range-bucketed decomposition — per-bucket windows + one fold over
+    // the per-bucket last right rows, no global window. µs axis as above.
     Q("x_asof_global",
       (s, d) => {
         val e = ev(s, d)
@@ -464,7 +464,7 @@ object WindowQueries {
     // W5 — flatten window to its last timestep (element_at(history, -1));
     // chunk+halo partitioned like W4.
     Q("w5_last_timestep",
-      (s, d) => Windows.temporalizeChunked(evIdx(s, d), "_idx", "value", 20, chunkSize = 1000L)
+      (s, d) => Windows.temporalize(evIdx(s, d), "_idx", "value", 20, chunkSize = 1000L)
         .select(col("event_id"), element_at(col("history"), -1).as("last_prev"))
         .orderBy("event_id"),
       Some("SELECT event_id, last_prev FROM (SELECT event_id, " +
@@ -525,7 +525,7 @@ object WindowQueries {
           .groupBy(col("value").as("sc"))
           .agg(sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("p"),
             sum(when(col("event_type") =!= "error", 1L).otherwise(0L)).as("np"))
-        val cum = Windows.rangeBucketedCumSum(byScore, "sc", Seq("p"), descending = true)
+        val cum = Windows.rangeBucketedCumSum(byScore, Seq("sc"), Seq("p"), descending = true)
         val totals = byScore.agg(sum(col("p")).as("total_p"), sum(col("np")).as("total_n"))
         cum.crossJoin(broadcast(totals))
           .agg(round(sum((col("np") / col("total_n")) *

@@ -1,7 +1,7 @@
 package graft.window
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
@@ -10,12 +10,20 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   * anomaly-start detection).
   *
   * Scale design: positional windows are computed with SHUFFLE-based
-  * grouping on arithmetically-derived keys (window id = idx div step), not
-  * with a global `Window.orderBy` (single task). Where a frame-based
-  * rolling op is genuinely per-group (per bearing / per sensor), a
-  * partitioned window function is used — that parallelizes by key.
-  * Truly-global running aggregates use the two-phase bucket pattern
-  * ([[scalableCumSum]]): per-bucket partials + a tiny offsets table.
+  * grouping on arithmetically-derived keys (window id = idx div step),
+  * never with an unpartitioned window (one task holding every row). Each
+  * order-dependent operator runs one of two branches, chosen by
+  * `partCols`:
+  *  - grouped (per bearing / sensor / user / document): one window
+  *    partitioned by the keys, parallel by key;
+  *  - ungrouped (one global series): one scale decomposition per job.
+  *    Trailing frames ([[temporalize]], [[lagShift]], [[rollingMin]],
+  *    [[rollingMean]]) use chunk+halo ([[trailing]]) and need the dense
+  *    0-based idx of `Indexing.withOrderedIdx`; running totals use the
+  *    two-phase [[rangeBucketedCumSum]] (per-bucket partials plus one
+  *    fold over the bucket totals); [[islands]] uses anti-joins plus
+  *    that bucketed rank; the global [[asofJoin]] shares its bucket rule
+  *    and fold.
   */
 object Windows {
 
@@ -55,43 +63,73 @@ object Windows {
   def deoverlap(windows: DataFrame, windowIdCol: String, stride: Int): DataFrame =
     windows.filter(col(windowIdCol) % stride === 0)
 
-  /** W4 — temporalize: per row, the trailing `lookback` values (step 1).
-    * Implemented as a partitioned frame when `partCols` given; the
+  /** W4 — temporalize: per row, the trailing `lookback` values (step 1);
+    * rows with fewer than `lookback` predecessors are dropped. The
     * reference gathers rows i+2..i+lookback+1 (documented off-by-one,
     * `src/training/baseline.py:121-129`) — we implement the intended
-    * trailing [i-lookback, i-1] frame.
+    * trailing [i-lookback, i-1] frame. Grouped: a frame partitioned by
+    * `partCols`. Ungrouped: chunk+halo over chunks of `chunkSize` rows
+    * ([[trailing]]), which needs the dense 0-based idx.
     */
-  def temporalize(df: DataFrame, idxCol: String, valueCol: String,
-                  lookback: Int, partCols: Seq[String] = Nil): DataFrame = {
-    val w = (if (partCols.isEmpty) Window.orderBy(col(idxCol))
-             else Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol)))
-      .rowsBetween(-lookback, -1)
-    df.withColumn("history", collect_list(col(valueCol)).over(w))
-      .filter(size(col("history")) === lookback)
-  }
+  def temporalize(df: DataFrame, idxCol: String, valueCol: String, lookback: Int,
+                  partCols: Seq[String] = Nil, chunkSize: Long = 100000L): DataFrame =
+    trailing(df, idxCol, partCols, lookback, chunkSize) { (d, w) =>
+      d.withColumn("history", collect_list(col(valueCol)).over(w.rowsBetween(-lookback, -1)))
+        .filter(size(col("history")) === lookback)
+    }
 
   /** W6 — rolling min, pandas semantics: null until the frame is full
-    * (first w-1 rows of each partition).
+    * (first w-1 rows of each group, or of the series). Grouped or
+    * chunk+halo like [[temporalize]].
     */
   def rollingMin(df: DataFrame, idxCol: String, valueCol: String, width: Int,
-                 partCols: Seq[String] = Nil, out: String = "rolling_min"): DataFrame =
-    rolling(df, idxCol, valueCol, width, partCols, out, min)
+                 partCols: Seq[String] = Nil, out: String = "rolling_min",
+                 chunkSize: Long = 100000L): DataFrame =
+    rolling(df, idxCol, valueCol, width, partCols, out, chunkSize, min)
 
-  /** W7 — rolling mean, same null-head semantics. */
+  /** W7 — rolling mean, same null-head semantics and branches. */
   def rollingMean(df: DataFrame, idxCol: String, valueCol: String, width: Int,
-                  partCols: Seq[String] = Nil, out: String = "rolling_mean"): DataFrame =
-    rolling(df, idxCol, valueCol, width, partCols, out, avg)
+                  partCols: Seq[String] = Nil, out: String = "rolling_mean",
+                  chunkSize: Long = 100000L): DataFrame =
+    rolling(df, idxCol, valueCol, width, partCols, out, chunkSize, avg)
 
   private def rolling(df: DataFrame, idxCol: String, valueCol: String, width: Int,
-                      partCols: Seq[String], out: String,
-                      f: Column => Column): DataFrame = {
-    val base = if (partCols.isEmpty) Window.orderBy(col(idxCol))
-               else Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol))
-    val frame = base.rowsBetween(-(width - 1), 0)
-    df.withColumn("_rn", row_number().over(base))
-      .withColumn(out, when(col("_rn") >= width, f(col(valueCol)).over(frame)))
-      .drop("_rn")
-  }
+                      partCols: Seq[String], out: String, chunkSize: Long,
+                      f: Column => Column): DataFrame =
+    // in a chunk+halo partition the halo rows come first, so an owner
+    // row's row_number reaches `width` exactly when its frame is full
+    trailing(df, idxCol, partCols, width - 1, chunkSize) { (d, w) =>
+      d.withColumn("_rn", row_number().over(w))
+        .withColumn(out, when(col("_rn") >= width,
+          f(col(valueCol)).over(w.rowsBetween(-(width - 1), 0))))
+        .drop("_rn")
+    }
+
+  /** One trailing-frame job over `idxCol` order. Grouped (`partCols`
+    * non-empty): `body` runs over a window partitioned by the keys.
+    * Ungrouped: chunk+halo — rows are assigned to chunk `idx div
+    * chunkSize`, and the last `halo` rows of each chunk are REPLICATED
+    * into the next chunk, so every row's trailing frame is complete
+    * inside its own partition; `body` runs over a window partitioned by
+    * that chunk, and only each chunk's own rows are kept. Parallelism is
+    * n/chunkSize and only boundary rows are duplicated, but the ungrouped
+    * branch requires the dense 0-based idx of `Indexing.withOrderedIdx`:
+    * a gap would leave a chunk head without its halo rows.
+    */
+  private def trailing(df: DataFrame, idxCol: String, partCols: Seq[String], halo: Int,
+                       chunkSize: Long)(body: (DataFrame, WindowSpec) => DataFrame): DataFrame =
+    if (partCols.nonEmpty) {
+      body(df, Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol)))
+    } else {
+      require(chunkSize >= halo, s"chunkSize ($chunkSize) must cover the halo ($halo)")
+      val chunk = expr(s"`$idxCol` DIV $chunkSize")
+      val haloed = df.withColumn("_tgt", explode(
+        when(col(idxCol) % chunkSize >= chunkSize - halo, array(chunk, chunk + 1))
+          .otherwise(array(chunk))))
+      body(haloed, Window.partitionBy(col("_tgt")).orderBy(col(idxCol)))
+        .filter(col("_tgt") === chunk)
+        .drop("_tgt")
+    }
 
   /** W8 — repeat/upsample ×factor: period granularity → sample granularity
     * (`np.repeat`, reference `src/evaluation/visualization.py:85-86`).
@@ -136,139 +174,48 @@ object Windows {
     ).select(coalesce(col("_first"), col("n")).as("first_idx"),
       (coalesce(col("_first"), col("n")) / col("n")).as("fraction"))
 
-  /** W12 — adjacent-index islands → [start, end+1) spans. Gaps-and-islands:
-    * `grp = idx - row_number()` is constant within a run. The row_number
-    * window is partitioned by `partCols` when provided (per-sensor runs);
-    * at 100 TB an unpartitioned run over a *filtered* (sparse) set is
-    * typically small enough — the filter happens before the window.
+  /** W12 — adjacent-index islands → [start, end+1) spans. Input idx must
+    * be unique per group; it may be sparse (the usual input is a filtered
+    * series).
+    *  - Grouped (`partCols`, e.g. per document): gaps-and-islands,
+    *    `grp = idx - row_number()` is constant within a run, over a window
+    *    partitioned by the keys.
+    *  - Ungrouped: no row-sized window. An island START is an idx whose
+    *    predecessor (idx−1) is absent — one hash LEFT ANTI self-join — and
+    *    an island END is an idx whose successor is absent. The k-th start
+    *    pairs with the k-th end, and that rank comes from the two-phase
+    *    [[rangeBucketedCumSum]] over the boundary sets. Spans are longs.
     */
-  def islands(df: DataFrame, idxCol: String, partCols: Seq[String] = Nil): DataFrame = {
-    val w = if (partCols.isEmpty) Window.orderBy(col(idxCol))
-            else Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol))
-    val grouped = df.withColumn("_grp", col(idxCol) - row_number().over(w))
-    val keys = partCols :+ "_grp"
-    grouped.groupBy(keys.map(col): _*)
-      .agg(min(col(idxCol)).as("span_start"), (max(col(idxCol)) + 1).as("span_end"))
-      .drop("_grp")
-  }
-
-  /** W12 at scale — islands without any row-sized window: an island START
-    * is an idx whose predecessor (idx−1) is absent — one hash LEFT ANTI
-    * self-join; an island END is an idx whose successor is absent. The
-    * k-th start pairs with the k-th end, and that rank comes from the
-    * two-phase [[rangeBucketedCumSum]] over the (already island-sized,
-    * post-filter) boundary sets — so every stage is either a hash join or
-    * a bucketed cumsum; nothing sorts the full set in one task. Input idx
-    * must be unique (same contract as [[islands]]).
-    */
-  def islandsScalable(df: DataFrame, idxCol: String): DataFrame = {
-    val ids = df.select(col(idxCol).cast("long").as("_i"))
-    val starts = ids.join(ids.select((col("_i") + 1).as("_i")), Seq("_i"), "left_anti")
-    val ends = ids.join(ids.select((col("_i") - 1).as("_i")), Seq("_i"), "left_anti")
-    def ranked(b: DataFrame) =
-      rangeBucketedCumSum(b.withColumn("_c", lit(1L)), "_i", Seq("_c"))
-    ranked(starts).select(col("_c_cum").as("_rk"), col("_i").as("span_start"))
-      .join(ranked(ends).select(col("_c_cum").as("_rk"), (col("_i") + 1).as("span_end")), "_rk")
-      .drop("_rk")
-  }
-
-  /** W6 at scale — [[rollingMin]] for a single global series via
-    * chunk+halo (halo = width−1 trailing rows): the pandas null-head rule
-    * holds because a frame is only complete when `width` rows are
-    * actually present — chunk 0's head rows see a short frame, every
-    * halo-backed row sees a full one. Requires dense idx, like every
-    * positional operator here.
-    */
-  def rollingMinChunked(df: DataFrame, idxCol: String, valueCol: String, width: Int,
-                        chunkSize: Long = 100000L, out: String = "rolling_min"): DataFrame = {
-    val w = Window.partitionBy(col("_tgt")).orderBy(col(idxCol))
-      .rowsBetween(-(width - 1), 0)
-    withChunkHalo(df, idxCol, width - 1, chunkSize)
-      .withColumn(out, when(count(lit(1)).over(w) === width, min(col(valueCol)).over(w)))
-      .filter(col("_tgt") === expr(s"`$idxCol` DIV $chunkSize"))
-      .drop("_tgt")
-  }
-
-  /** W13 — scalable global cumulative sum: two-phase. Bucket rows by
-    * `idx div bucketSize`, cumsum within buckets (parallel windows), then
-    * add per-bucket offsets (running sum over the tiny bucket-totals
-    * frame, broadcast back). Replaces the single-task global
-    * `Window.orderBy` for 100 TB inputs.
-    */
-  def scalableCumSum(df: DataFrame, idxCol: String, valueCol: String,
-                     bucketSize: Long = 1000000L, out: String = "cum"): DataFrame = {
-    val bucketed = df.withColumn("_b", expr(s"`$idxCol` DIV $bucketSize"))
-    val within = sum(col(valueCol)).over(
-      Window.partitionBy(col("_b")).orderBy(col(idxCol))
-        .rowsBetween(Window.unboundedPreceding, 0))
-    val totals = bucketed.groupBy("_b").agg(sum(col(valueCol)).as("_t"))
-    val offsets = totals.withColumn("_off",
-      coalesce(sum(col("_t")).over(
-        Window.orderBy(col("_b")).rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-      .drop("_t")
-    bucketed
-      .withColumn("_within", within)
-      .join(broadcast(offsets), "_b")
-      .withColumn(out, col("_within") + col("_off"))
-      .drop("_b", "_within", "_off")
-  }
+  def islands(df: DataFrame, idxCol: String, partCols: Seq[String] = Nil): DataFrame =
+    if (partCols.nonEmpty) {
+      val w = Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol))
+      val grouped = df.withColumn("_grp", col(idxCol) - row_number().over(w))
+      val keys = partCols :+ "_grp"
+      grouped.groupBy(keys.map(col): _*)
+        .agg(min(col(idxCol)).as("span_start"), (max(col(idxCol)) + 1).as("span_end"))
+        .drop("_grp")
+    } else {
+      val ids = df.select(col(idxCol).cast("long").as("_i"))
+      val starts = ids.join(ids.select((col("_i") + 1).as("_i")), Seq("_i"), "left_anti")
+      val ends = ids.join(ids.select((col("_i") - 1).as("_i")), Seq("_i"), "left_anti")
+      def ranked(b: DataFrame) =
+        rangeBucketedCumSum(b.withColumn("_c", lit(1L)), Seq("_i"), Seq("_c"))
+      ranked(starts).select(col("_c_cum").as("_rk"), col("_i").as("span_start"))
+        .join(ranked(ends).select(col("_c_cum").as("_rk"), (col("_i") + 1).as("span_end")), "_rk")
+        .drop("_rk")
+    }
 
   /** W14 — lag-based alignment shift: first `k` values kept, remainder
     * shifted by `k` (`concatenate([x[:k], x[:-k]])`,
-    * reference `src/evaluation/visualization.py:67`).
+    * reference `src/evaluation/visualization.py:67`). Grouped or
+    * chunk+halo like [[temporalize]].
     */
   def lagShift(df: DataFrame, idxCol: String, valueCol: String, k: Int,
-               partCols: Seq[String] = Nil, out: String = "shifted"): DataFrame = {
-    val w = if (partCols.isEmpty) Window.orderBy(col(idxCol))
-            else Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol))
-    df.withColumn(out, coalesce(lag(col(valueCol), k).over(w), col(valueCol)))
-  }
-
-  /** The chunk+halo decomposition shared by [[temporalizeChunked]] and
-    * [[lagShiftChunked]]: rows are assigned to chunk `idx div chunkSize`,
-    * and the last `halo` rows of each chunk are REPLICATED into the next
-    * chunk so every row's trailing frame is complete inside its own
-    * partition — positional window semantics with no global single-task
-    * `Window.orderBy`. Requires the reference's dense 0..n-1 positional
-    * idx (which is what every positional operator here assumes anyway).
-    * Returns the frame with `_tgt` (the window partition key) attached;
-    * callers compute their window partitioned by `_tgt`, then keep owner
-    * rows (`_tgt === idx div chunkSize`) and drop `_tgt`.
-    */
-  private def withChunkHalo(df: DataFrame, idxCol: String, halo: Int,
-                            chunkSize: Long): DataFrame = {
-    require(chunkSize >= halo, s"chunkSize ($chunkSize) must cover the halo ($halo)")
-    val chunk = expr(s"`$idxCol` DIV $chunkSize")
-    df.withColumn("_tgt", explode(
-      when(col(idxCol) % chunkSize >= chunkSize - halo, array(chunk, chunk + 1))
-        .otherwise(array(chunk))))
-  }
-
-  /** W4 at scale — [[temporalize]] without the global window: trailing
-    * `lookback` values via chunk+halo ([[withChunkHalo]]). Only the
-    * `lookback` boundary rows per chunk are duplicated; the window is
-    * partitioned by chunk, so parallelism = n/chunkSize.
-    */
-  def temporalizeChunked(df: DataFrame, idxCol: String, valueCol: String,
-                         lookback: Int, chunkSize: Long = 100000L): DataFrame = {
-    val w = Window.partitionBy(col("_tgt")).orderBy(col(idxCol))
-      .rowsBetween(-lookback, -1)
-    withChunkHalo(df, idxCol, lookback, chunkSize)
-      .withColumn("history", collect_list(col(valueCol)).over(w))
-      .filter(col("_tgt") === expr(s"`$idxCol` DIV $chunkSize") &&
-        size(col("history")) === lookback)
-      .drop("_tgt")
-  }
-
-  /** W14 at scale — [[lagShift]] via the same chunk+halo pattern. */
-  def lagShiftChunked(df: DataFrame, idxCol: String, valueCol: String, k: Int,
-                      chunkSize: Long = 100000L, out: String = "shifted"): DataFrame = {
-    val w = Window.partitionBy(col("_tgt")).orderBy(col(idxCol))
-    withChunkHalo(df, idxCol, k, chunkSize)
-      .withColumn(out, coalesce(lag(col(valueCol), k).over(w), col(valueCol)))
-      .filter(col("_tgt") === expr(s"`$idxCol` DIV $chunkSize"))
-      .drop("_tgt")
-  }
+               partCols: Seq[String] = Nil, out: String = "shifted",
+               chunkSize: Long = 100000L): DataFrame =
+    trailing(df, idxCol, partCols, k, chunkSize) { (d, w) =>
+      d.withColumn(out, coalesce(lag(col(valueCol), k).over(w), col(valueCol)))
+    }
 
   /** Ordered conversion funnel over an event stream: for each funnel
     * step, how many keys (users) performed ALL steps so far IN ORDER —
@@ -348,23 +295,24 @@ object Windows {
     * the previous event exceeds `gap` (first event = session 0). The
     * training-data/event-pipeline op for splitting a stream into episodes.
     *
-    * Ungrouped: composes the scale decompositions — chunk+halo lag for
-    * the previous timestamp, two-phase bucketed cumsum for the running
-    * session id; no global single-task window anywhere, requires the
-    * dense positional `idxCol` like every positional operator here.
-    * Grouped (per user/sensor): one partitioned window, parallel by key.
+    * Ungrouped: composes the scale decompositions — the chunk+halo
+    * [[lagShift]] for the previous timestamp and the two-phase
+    * [[rangeBucketedCumSum]] for the running session id; no unpartitioned
+    * window anywhere, and like every chunk+halo operator it needs the
+    * dense 0-based `idxCol`. Grouped (per user/sensor): one partitioned
+    * window, parallel by key.
     */
   def sessionize(df: DataFrame, idxCol: String, tsCol: String, gap: Long,
                  partCols: Seq[String] = Nil, out: String = "session",
                  chunkSize: Long = 100000L): DataFrame =
     if (partCols.isEmpty) {
-      // lagShiftChunked coalesces the head row's prev to its own ts →
+      // lagShift coalesces the head row's prev to its own ts →
       // gap 0 → flag 0 → sessions start at 0
-      val flagged = lagShiftChunked(df, idxCol, tsCol, 1, chunkSize, out = "_prev")
+      val flagged = lagShift(df, idxCol, tsCol, 1, out = "_prev", chunkSize = chunkSize)
         .withColumn("_new", when(col(tsCol) - col("_prev") > gap, 1L).otherwise(0L))
-      scalableCumSum(flagged, idxCol, "_new", bucketSize = chunkSize, out = out)
-        .withColumn(out, col(out).cast("long"))
-        .drop("_prev", "_new")
+      rangeBucketedCumSum(flagged, Seq(idxCol), Seq("_new"))
+        .withColumn(out, col("_new_cum"))
+        .drop("_prev", "_new", "_new_cum")
     } else {
       val w = Window.partitionBy(partCols.map(col): _*).orderBy(col(idxCol))
       df.withColumn("_prev", lag(col(tsCol), 1).over(w))
@@ -392,11 +340,11 @@ object Windows {
     *    first at a tie (inclusive semantics). Parallelism = #groups —
     *    the idiomatic many-key shape.
     *  - Global (`partCols` empty): the same union range-bucketed over
-    *    the broadcast (min, max) time bounds ([[rangeBucketedCumSum]]'s
-    *    decomposition): per-bucket windows run in parallel, and each
-    *    bucket's carry-in — the latest right row of any EARLIER bucket —
-    *    comes from a numBuckets-row ledger whose only unpartitioned
-    *    window is ordered by `_b` (the bounded-ledger audit convention).
+    *    the broadcast (min, max) time bounds (the bucket rule of
+    *    [[rangeBucketedCumSum]]): per-bucket windows run in parallel, and
+    *    each bucket's carry-in — the latest right row of any EARLIER
+    *    bucket — is one fold over the sorted per-bucket last right rows,
+    *    as [[rangeBucketedCumSum]] computes its offsets.
     *
     * The right-row payload travels as ONE struct, so a right row whose
     * VALUE is legitimately null still wins the as-of match (per-column
@@ -443,35 +391,20 @@ object Windows {
       finish(unioned.withColumn("_m", last(rstruct, ignoreNulls = true).over(w)),
         col("_m"))
     } else {
-      val t = col("_t").cast("double")
-      val bounds = broadcast(unioned.agg(min(t).as("_lo"), max(t).as("_hi")))
-      val rawB = floor((t - col("_lo")) / (col("_hi") - col("_lo")) * numBuckets)
-      // null-time left rows route to bucket 0 EXPLICITLY (least() would
-      // skip the null rawB and park them in the LAST bucket, where the
-      // carry ledger fabricates a match); in bucket 0 they sort
-      // nulls-first with no carry-in, so they match nothing
-      val bucketed = unioned.crossJoin(bounds)
-        .withColumn("_b", when(col("_t").isNull || col("_hi") === col("_lo"), lit(0L))
-          .otherwise(least(rawB, lit(numBuckets - 1.0))).cast("long"))
-        .drop("_lo", "_hi")
+      // null-time left rows route to bucket 0, where they sort nulls-first
+      // with no carry-in, so they match nothing
+      val bucketed = withRangeBucket(unioned, col("_t"), numBuckets, ifNull = lit(0L))
       val wLocal = Window.partitionBy(col("_b")).orderBy(col("_t"), col("_tag"))
         .rowsBetween(Window.unboundedPreceding, 0)
       val local = bucketed.withColumn("_m", last(rstruct, ignoreNulls = true).over(wLocal))
-      // ledger: every possible bucket (a free numBuckets-row range — no
-      // distinct pass over the data), left-joined with its last right
-      // row; the carry-in is the latest right row over all EARLIER
-      // buckets (bounded numBuckets-row window, ordered by _b)
-      val perBucket = bucketed.filter(col("_tag") === 0)
-        .groupBy("_b").agg(max_by(rstruct, col("_t")).as("_lastr"))
-      val wCarry = Window.orderBy(col("_b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ledger = left.sparkSession.range(numBuckets.toLong)
-        .select(col("id").as("_b"))
-        .join(perBucket, Seq("_b"), "left")
-        .withColumn("_carry", last(col("_lastr"), ignoreNulls = true).over(wCarry))
-        .select("_b", "_carry")
-      finish(local.join(broadcast(ledger), "_b"),
-        coalesce(col("_m"), col("_carry")))
+      // one row per non-empty bucket with its last right row (null when
+      // it has none: max_by skips the left rows' null ordering)
+      val perBucket = bucketed.groupBy("_b")
+        .agg(max_by(rstruct, when(col("_tag") === 0, col("_t"))).as("_lastr"))
+      val carry = bucketScan(perBucket, Nil, Seq("_lastr"), descending = false, lit(null))(
+        (acc, x) => coalesce(x, acc))
+      finish(local.join(broadcast(carry), "_b"),
+        coalesce(col("_m"), col("_pre__lastr")))
     }
   }
 
@@ -506,60 +439,90 @@ object Windows {
       .drop("_b")
   }
 
-  /** Two-phase cumulative sums over a DOUBLE ordering key (no dense
-    * integer index to `DIV` on — the [[scalableCumSum]] situation for
-    * score-ordered sweeps like ROC). Keys are ranged into `numBuckets`
-    * equal-width buckets between the broadcast (min, max) — a 1-row lazy
-    * aggregate, no driver action; partial cumsums run per-bucket in
-    * parallel; the bucket offsets are one fold over the numBuckets-row
-    * totals ledger, with no unpartitioned window. Input must be
-    * key-distinct (aggregate by key first) so within-bucket ordering is
-    * total. Appends `<c>_cum` (inclusive of the current row) per
-    * requested column.
+  /** Two-phase running totals — the one cumulative sum of this package,
+    * for any numeric order key, dense or not (idx, event id, ROC score,
+    * hash). Rows go to `numBuckets` equal-width range buckets of the first
+    * order column between its broadcast (min, max) — a 1-row lazy
+    * aggregate, no driver action. Per-(group, bucket) partial sums run in
+    * parallel, ordered by all `orderCols` (later columns break ties);
+    * each bucket's offset is one fold over the group's sorted bucket
+    * totals (a per-group aggregate, no unpartitioned window). Appends
+    * `<c>_cum`, inclusive of the current row, per requested column.
+    *
+    * With `partCols`, totals run per group (null-safe: a null key is a
+    * group like any other). `descending` reverses every order column.
+    * The order must be total within a group, or tied rows get an
+    * arbitrary split of their sum. A null in the first order column has
+    * no bucket and raises an error naming the column.
     */
-  def rangeBucketedCumSum(byKey: DataFrame, keyCol: String, sumCols: Seq[String],
-                          numBuckets: Int = 1024, descending: Boolean = false): DataFrame = {
-    val k = col(keyCol).cast("double")
-    val bounds = broadcast(byKey.agg(min(k).as("_lo"), max(k).as("_hi")))
-    val rawB = floor((k - col("_lo")) / (col("_hi") - col("_lo")) * numBuckets)
-    val bucketed = byKey.crossJoin(bounds)
-      .withColumn("_b", when(col("_hi") === col("_lo"), lit(0L))
-        .otherwise(least(rawB, lit(numBuckets - 1L))).cast("long"))
-      .drop("_lo", "_hi")
-    val keyOrd = if (descending) col(keyCol).desc else col(keyCol).asc
-    val wLocal = Window.partitionBy(col("_b")).orderBy(keyOrd)
+  def rangeBucketedCumSum(df: DataFrame, orderCols: Seq[String], sumCols: Seq[String],
+                          numBuckets: Int = 1024, descending: Boolean = false,
+                          partCols: Seq[String] = Nil): DataFrame = {
+    val key = orderCols.head
+    val bucketed = withRangeBucket(df, col(key), numBuckets,
+      ifNull = raise_error(lit(s"rangeBucketedCumSum: null in order column `$key`")))
+    val local = (partCols :+ "_b").map(col)
+    val wLocal = Window.partitionBy(local: _*)
+      .orderBy(orderCols.map(c => if (descending) col(c).desc else col(c).asc): _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     val totalAggs = sumCols.map(c => sum(col(c)).as(s"_t_$c"))
-    val totals = bucketed.groupBy("_b").agg(totalAggs.head, totalAggs.tail: _*)
-    // Offsets ledger: exclusive prefix sums of the ≤ numBuckets totals.
-    // The totals are collected into one array sorted by bucket (a 1-row
-    // aggregate, not an unpartitioned window), folded once, and exploded
-    // back to one row per bucket.
-    val types = sumCols.map(c => totals.schema(s"_t_$c").dataType)
-    val runs = sumCols.map(c => s"_r_$c")
-    val ledger = totals.agg(sort_array(collect_list(
-      struct(col("_b") +: sumCols.map(c => col(s"_t_$c")): _*)), asc = !descending).as("_l"))
-    val entry = StructType(StructField("_b", LongType) +:
-      sumCols.zip(types).map { case (c, t) => StructField(s"_off_$c", t) })
-    val zero = struct(runs.zip(types).map { case (r, t) => lit(0).cast(t).as(r) } :+
-      array().cast(ArrayType(entry)).as("_out"): _*)
-    def step(acc: Column, x: Column): Column = {
-      val sums = sumCols.zip(runs).zip(types).map { case ((c, r), t) =>
-        (acc(r) + coalesce(x(s"_t_$c"), lit(0))).cast(t).as(r)
-      }
-      val out = struct(x("_b").as("_b") +:
-        sumCols.zip(runs).map { case (c, r) => acc(r).as(s"_off_$c") }: _*)
-      struct(sums :+ concat(acc("_out"), array(out)).as("_out"): _*)
+    val totals = bucketed.groupBy(local: _*).agg(totalAggs.head, totalAggs.tail: _*)
+    val offsets = bucketScan(totals, partCols, sumCols.map(c => s"_t_$c"), descending, lit(0))(
+        (acc, x) => acc + coalesce(x, lit(0)))
+      .select(partCols.indices.map(i => col(partCols(i)).as(s"_k$i")) ++
+        (col("_b").as("_ob") +: sumCols.map(c => col(s"_pre__t_$c").as(s"_off_$c"))): _*)
+    val on = partCols.indices.foldLeft(col("_b") === col("_ob")) { (on, i) =>
+      on && (col(partCols(i)) <=> col(s"_k$i"))
     }
-    val offsets = ledger
-      .select(explode(aggregate(col("_l"), zero, step, _("_out"))).as("_e"))
-      .select("_e.*")
     val withLocal = sumCols.foldLeft(bucketed) { (d2, c) =>
       d2.withColumn(s"_loc_$c", sum(col(c)).over(wLocal))
     }
-    val joined = withLocal.join(broadcast(offsets), "_b")
-    sumCols.foldLeft(joined) { (d2, c) =>
+    sumCols.foldLeft(withLocal.join(broadcast(offsets), on)) { (d2, c) =>
       d2.withColumn(s"${c}_cum", col(s"_loc_$c") + col(s"_off_$c"))
-    }.drop("_b" +: sumCols.flatMap(c => Seq(s"_loc_$c", s"_off_$c")): _*)
+    }.drop(Seq("_b", "_ob") ++ partCols.indices.map(i => s"_k$i") ++
+      sumCols.flatMap(c => Seq(s"_loc_$c", s"_off_$c")): _*)
+  }
+
+  /** The range-bucket rule of [[rangeBucketedCumSum]] and [[asofJoin]]:
+    * `_b` in [0, numBuckets) from where `key` falls between its
+    * broadcast (min, max) over `df`; every row in bucket 0 when all keys
+    * are equal. A null key gets `ifNull` (`least` would skip it and
+    * park the row in the last bucket).
+    */
+  private def withRangeBucket(df: DataFrame, key: Column, numBuckets: Int,
+                              ifNull: Column): DataFrame = {
+    val k = key.cast("double")
+    val bounds = broadcast(df.agg(min(k).as("_lo"), max(k).as("_hi")))
+    val rawB = floor((k - col("_lo")) / (col("_hi") - col("_lo")) * numBuckets)
+    df.crossJoin(bounds)
+      .withColumn("_b", when(k.isNull, ifNull).when(col("_hi") === col("_lo"), lit(0L))
+        .otherwise(least(rawB, lit(numBuckets - 1L))).cast("long"))
+      .drop("_lo", "_hi")
+  }
+
+  /** Exclusive scan over per-bucket rows (one per `keys` × `_b`): each
+    * group's rows are collected into one array sorted by `_b`, folded
+    * once with `step` from `zero`, and exploded back to one row per
+    * (keys, `_b`) whose `_pre_<c>` folds every EARLIER bucket's `c`.
+    * Quadratic in the bucket count (each step appends to the output
+    * array), which is bounded by `numBuckets`.
+    */
+  private def bucketScan(perBucket: DataFrame, keys: Seq[String], cols: Seq[String],
+                         descending: Boolean, zero: Column)
+                        (step: (Column, Column) => Column): DataFrame = {
+    val types = cols.map(c => perBucket.schema(c).dataType)
+    val entry = StructType(StructField("_b", LongType) +:
+      cols.zip(types).map { case (c, t) => StructField(s"_pre_$c", t) })
+    val init = struct(cols.zip(types).map { case (c, t) => zero.cast(t).as(c) } :+
+      array().cast(ArrayType(entry)).as("_out"): _*)
+    def fold(acc: Column, x: Column): Column = struct(
+      cols.zip(types).map { case (c, t) => step(acc(c), x(c)).cast(t).as(c) } :+
+        concat(acc("_out"), array(struct(x("_b").as("_b") +:
+          cols.map(c => acc(c).as(s"_pre_$c")): _*))).as("_out"): _*)
+    perBucket.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(col("_b") +: cols.map(col): _*)), asc = !descending)
+        .as("_l"))
+      .select(keys.map(col) :+ explode(aggregate(col("_l"), init, fold, _("_out"))).as("_e"): _*)
+      .select(keys.map(col) :+ col("_e.*"): _*)
   }
 }

@@ -99,6 +99,15 @@ class EvalFunctionsSpec extends SparkSpec {
     assert(math.abs(a1 - a2) < 1e-12)
   }
 
+  test("A8: a null score raises an error instead of returning an AUC") {
+    // a null has no place in the score order; the rank sweep's bucket
+    // rule says so rather than ranking it after every real score
+    val df = Seq((Some(0.1), false), (None, true), (Some(0.9), true)).toDF("s", "y")
+    val e = intercept[Exception](Eval.aucRoc(df, col("s"), col("y")).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("null in order column `_s`"))), e)
+  }
+
   test("A4: threshold is mean + k*sample-stddev (pandas ddof=1)") {
     val df = Seq(("a", 1.0), ("a", 3.0)).toDF("g", "v") // μ=2, s=√2
     val thr = Eval.threshold(df, "v", 4.0, Seq("g")).select("threshold").as[Double].head()

@@ -6,8 +6,10 @@ import scala.sys.process.{Process, ProcessLogger}
 
 /** The DuckDB oracle gate inside the test suite: every oracle-bearing
   * row of the sign-bucket and IVF families (plus the two rows that share
-  * their JL projection), and every row whose oracle is built from a
-  * shared text-dedup or autoencoder stage, is dumped on sf0.001 through
+  * their JL projection), every row whose oracle is built from a shared
+  * text-dedup or autoencoder stage, and every row whose Spark side runs a
+  * trailing frame or bucketed running total of `graft.window`, is dumped
+  * on sf0.001 through
   * [[Verify.dump]] (the path `graft.Verify` takes) and compared by
   * `tools/check_correctness.py`. One test per row, so a failure names the
   * row. Without `duckdb`, `pandas` and `numpy` for `python3` the row
@@ -36,13 +38,25 @@ class OracleGateSpec extends SparkSpec {
     "m1b_lstm_fixed_reconstruction", "m2b_train_epoch", "m5b_epoch_loss",
     "m9b_model_selection")
 
+  /** The rows whose Spark side reaches a trailing-frame operator
+    * (temporalize, lagShift, rollingMin/Mean, islands), the bucketed
+    * running total, sessionize or the as-of join.
+    */
+  private val windowRows = Set(
+    "w4_temporalize", "w5_last_timestep", "w6_rolling_min", "w7_rolling_mean",
+    "w12_islands", "w13_cumsum", "w14_lag_shift", "a8_auc", "a8b_auc_trapezoid",
+    "a10_certainty", "x_sessionize", "x_token_budget_sample", "x_sequence_pack",
+    "x_asof_join", "x_asof_global", "x_event_enrich", "anomaly_pipeline")
+
+  private def annOrStage(n: String): Boolean =
+    Seq("x_semantic_dedup", "x_knn_join", "x_ivf_").exists(n.startsWith) ||
+      n == "x_random_projection" || n == "xs_stream_semantic_pairs" || stageRows(n)
+
   /** The gated rows, read from the registry in its order, so no
     * oracle-bearing row of the two ANN families is left out.
     */
   private val rows = SparkEntry.registry.map(_.name).filter { n =>
-    SparkEntry.oracleSql.contains(n) &&
-      (Seq("x_semantic_dedup", "x_knn_join", "x_ivf_").exists(n.startsWith) ||
-        n == "x_random_projection" || n == "xs_stream_semantic_pairs" || stageRows(n))
+    SparkEntry.oracleSql.contains(n) && (annOrStage(n) || windowRows(n))
   }
 
   /** The checker needs all three modules. */
@@ -82,7 +96,13 @@ class OracleGateSpec extends SparkSpec {
 
   test("the gate covers the 65 oracle rows of the ANN families and shared stages") {
     assert(stageRows.forall(SparkEntry.oracleSql.contains), stageRows.filterNot(SparkEntry.oracleSql.contains))
-    assert(rows.size == 65, rows.mkString(", "))
+    assert(rows.count(annOrStage) == 65, rows.filter(annOrStage).mkString(", "))
+  }
+
+  test("the gate covers the 17 oracle rows of the window decompositions, 82 in all") {
+    assert(windowRows.forall(SparkEntry.oracleSql.contains),
+      windowRows.filterNot(SparkEntry.oracleSql.contains))
+    assert(windowRows.size == 17 && rows.size == 82, rows.mkString(", "))
   }
 
   rows.foreach { row =>

@@ -55,7 +55,7 @@ class PositionalContractSpec extends SparkSpec {
 
   test("temporalize (chunk+halo) is id-layout independent through the contract idx") {
     def temp(df: DataFrame) =
-      Windows.temporalizeChunked(idx(df), "_idx", "value", 5, chunkSize = 32L)
+      Windows.temporalize(idx(df), "_idx", "value", 5, chunkSize = 32L)
         .select(col("_idx"),
           round(aggregate(col("history"), lit(0.0), (a, v) => a + v), 6).as("h"))
     assert(collectSorted(temp(gapped), "_idx", "h") ==
@@ -65,7 +65,7 @@ class PositionalContractSpec extends SparkSpec {
 
   test("lag shift is id-layout independent through the contract idx") {
     def lagd(df: DataFrame) =
-      Windows.lagShiftChunked(idx(df), "_idx", "value", 7, chunkSize = 32L)
+      Windows.lagShift(idx(df), "_idx", "value", 7, chunkSize = 32L)
         .select(col("_idx"), round(col("shifted"), 6).as("sh"))
     assert(collectSorted(lagd(gapped), "_idx", "sh") ==
       collectSorted(lagd(contiguous), "_idx", "sh"))

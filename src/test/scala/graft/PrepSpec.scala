@@ -122,14 +122,26 @@ class PrepSpec extends SparkSpec {
       val cums = ordered.scanLeft(0L)(_ + _._3).tail
       ordered.zip(cums).takeWhile(_._2 <= budget).map { case (r, c) => (r._1, c) }
     }.toMap
-    // small bucket count exercises the cross-bucket offset path
-    val got = Prep.tokenBudgetSample(df, "id", "stratum", "w", budget, numBuckets = 4)
+    // 20 hashes spread over the default buckets: cross-bucket offsets
+    val got = Prep.tokenBudgetSample(df, "id", "stratum", "w", budget)
       .select(col("id"), col("_cum")).as[(Long, Long)].collect().toMap
     assert(got == expected, s"got=$got expected=$expected")
     // larger budget only ever adds rows (append-stable mixing)
-    val wider = Prep.tokenBudgetSample(df, "id", "stratum", "w", budget * 2, numBuckets = 4)
+    val wider = Prep.tokenBudgetSample(df, "id", "stratum", "w", budget * 2)
       .select(col("id")).as[Long].collect().toSet
     assert(expected.keySet.subsetOf(wider))
+  }
+
+  test("packSequences: exclusive hash-order token offsets match a local simulation") {
+    val rows = (0L until 40L).map(i => (i, (i * 7) % 23 + 1))
+    def knuth(id: Long) = java.lang.Math.floorMod(id * 2654435761L, 4294967296L)
+    val ordered = rows.sortBy(r => (knuth(r._1), r._1))
+    val starts = ordered.scanLeft(0L)(_ + _._2)
+    val expected = ordered.zip(starts).map { case ((id, _), st) => (id, st, st / 64, st % 64) }
+    val got = Prep.packSequences(rows.toDF("id", "w"), "id", "w", seqLen = 64L)
+      .select("id", "_start", "seq_id", "seq_offset").as[(Long, Long, Long, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(got == expected.sortBy(_._1))
   }
 
   test("P4: multi-format timestamp parse falls back per row") {

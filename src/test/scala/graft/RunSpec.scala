@@ -6,6 +6,8 @@ import java.nio.file.{Files, Path}
 
 import scala.sys.process.{Process, ProcessLogger}
 
+import org.apache.spark.sql.SparkSession
+
 /** `graft.Run`, driven in-process through [[Run.run]] on the shared test
   * session: the list, run, plans and verify modes, and the exit codes of
   * bad arguments.
@@ -114,5 +116,21 @@ class RunSpec extends SparkSpec {
     assert(bytes("alone").nonEmpty)
     assert(bytes("alone").sameElements(bytes("after")),
       new String(bytes("alone"), UTF_8) + "\n---\n" + new String(bytes("after"), UTF_8))
+  }
+
+  test("a memoized row's logical plan does not depend on the rows run before it") {
+    // each dump runs in a fresh session, so the memoized candidates are
+    // rebuilt after a different predecessor and their cached physical
+    // plan prints other plan ids
+    val row = "x_jaccard_verify"
+    Seq("a" -> "w13_cumsum", "b" -> "x_random_projection").foreach { case (tag, before) =>
+      SparkSession.setActiveSession(spark.newSession())
+      try assert(run("plans", sf, tmp.toString, tag, before, row)._1 == 0)
+      finally SparkSession.setActiveSession(spark)
+    }
+    def bytes(tag: String) = Files.readAllBytes(tmp.resolve(s"${row}_$tag.logical.txt"))
+    assert(new String(bytes("a"), UTF_8).contains("plan_id=x"))
+    assert(bytes("a").sameElements(bytes("b")),
+      new String(bytes("a"), UTF_8) + "\n---\n" + new String(bytes("b"), UTF_8))
   }
 }

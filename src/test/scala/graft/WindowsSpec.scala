@@ -88,10 +88,13 @@ class WindowsSpec extends SparkSpec {
   test("W13: scalable cumsum equals sequential cumsum across bucket edges") {
     val vals = (0 until 250).map(i => (i.toLong, (i % 7).toDouble))
     val df = vals.toDF("idx", "v")
-    val out = Windows.scalableCumSum(df, "idx", "v", bucketSize = 64)
-      .orderBy("idx").select("cum").as[Double].collect()
     val expect = vals.map(_._2).scanLeft(0.0)(_ + _).tail
-    out.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9) }
+    for (buckets <- bucketCounts) {
+      val out = Windows.rangeBucketedCumSum(df, Seq("idx"), Seq("v"), buckets)
+        .orderBy("idx").select("v_cum").as[Double].collect()
+      assert(out.length == expect.length)
+      out.zip(expect).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9, s"buckets=$buckets") }
+    }
   }
 
   test("W14: lag shift keeps first k values then shifts by k") {
@@ -101,38 +104,45 @@ class WindowsSpec extends SparkSpec {
     assert(out.toSeq == Seq(0.0, 1.0, 0.0, 1.0, 2.0, 3.0))
   }
 
-  /** Unpartitioned Window nodes in the executed plan, excluding the
-    * numBuckets-row offsets ledger (ordered by the bucket id `_b`) that the
-    * two-phase cumsum patterns legitimately keep. A WindowExec plan line
-    * has the shape `Window [fns], [partSpec], [orderSpec]` — one top-level
-    * `], [` separator means the partition spec is missing.
+  /** Unpartitioned Window nodes in the executed plan. A WindowExec plan
+    * line has the shape `Window [fns], [partSpec], [orderSpec]` — one
+    * top-level `], [` separator means the partition spec is missing.
     */
   private def globalDataWindows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.executedPlan.toString.linesIterator
       .filter(_.contains("Window ["))
       .filter(l => "\\], \\[".r.findAllIn(l).size < 2)
-      .filterNot(_.contains("_b#"))
       .toSeq
 
-  test("W4-chunked: temporalizeChunked equals the global-window temporalize") {
-    val df = series(100)
-    val expect = Windows.temporalize(df, "idx", "v", 7)
-      .orderBy("idx").select("idx", "history")
-      .as[(Long, Seq[Double])].collect().toSeq
-    for (chunk <- Seq(7L, 20L, 33L, 1000L)) {
-      val got = Windows.temporalizeChunked(df, "idx", "v", 7, chunkSize = chunk)
+  /** A dense 0-based series with unordered values, and its local copy. */
+  private val noisyVals = (0 until 100).map(i => ((i * 37) % 101).toDouble)
+  private def noisy = noisyVals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("idx", "v")
+
+  /** Chunk sizes from the halo itself up to one chunk for the series. */
+  private def chunkSizes(halo: Int) = Seq(halo.toLong, 20L, 33L, 1000L)
+
+  /** Bucket counts down to one bucket, and the default. */
+  private val bucketCounts = Seq(1, 7, 64, 1024)
+
+  test("W4: ungrouped temporalize equals a plain-Scala trailing frame at any chunk size") {
+    val expect = (7 until 100).map(i => (i.toLong, noisyVals.slice(i - 7, i)))
+    for (chunk <- chunkSizes(7)) {
+      val got = Windows.temporalize(noisy, "idx", "v", 7, chunkSize = chunk)
         .orderBy("idx").select("idx", "history")
         .as[(Long, Seq[Double])].collect().toSeq
       assert(got == expect, s"chunkSize=$chunk")
     }
+    // grouped: the same frame within each key, over sparse idx
+    val grouped = Windows.temporalize(noisy.withColumn("g", col("idx") % 2), "idx", "v", 3, Seq("g"))
+      .select("idx", "history").as[(Long, Seq[Double])].collect().toMap
+    val expectG = (6 until 100).map(i => i.toLong -> Seq(6, 4, 2).map(d => noisyVals(i - d))).toMap
+    assert(grouped == expectG)
   }
 
-  test("W14-chunked: lagShiftChunked equals the global-window lagShift") {
-    val df = series(100)
-    val expect = Windows.lagShift(df, "idx", "v", 5)
-      .orderBy("idx").select("shifted").as[Double].collect().toSeq
-    for (chunk <- Seq(5L, 16L, 100L, 999L)) {
-      val got = Windows.lagShiftChunked(df, "idx", "v", 5, chunkSize = chunk)
+  test("W14: ungrouped lagShift equals a plain-Scala shift at any chunk size") {
+    val expect = noisyVals.indices.map(i => noisyVals(if (i < 5) i else i - 5))
+    for (chunk <- chunkSizes(5)) {
+      val got = Windows.lagShift(noisy, "idx", "v", 5, chunkSize = chunk)
         .orderBy("idx").select("shifted").as[Double].collect().toSeq
       assert(got == expect, s"chunkSize=$chunk")
     }
@@ -156,10 +166,21 @@ class WindowsSpec extends SparkSpec {
 
   test("chunked windows: no unpartitioned data window in the plan") {
     val df = series(100)
-    assert(globalDataWindows(Windows.temporalizeChunked(df, "idx", "v", 7, 20L)).isEmpty)
-    assert(globalDataWindows(Windows.lagShiftChunked(df, "idx", "v", 5, 20L)).isEmpty)
-    // the originals DO have one — the helper itself must detect it
-    assert(globalDataWindows(Windows.temporalize(df, "idx", "v", 7)).nonEmpty)
+    val events = df.select(col("idx"), col("idx").as("id"), (col("idx") * 60).as("ts"),
+      (col("idx") % 3).as("stratum"), (col("idx") % 11 + 1).as("w"))
+    val plans = Map(
+      "temporalize" -> Windows.temporalize(df, "idx", "v", 7),
+      "lagShift" -> Windows.lagShift(df, "idx", "v", 5),
+      "rollingMin" -> Windows.rollingMin(df, "idx", "v", 3),
+      "rangeBucketedCumSum" -> Windows.rangeBucketedCumSum(df, Seq("idx"), Seq("v")),
+      "sessionize" -> Windows.sessionize(events, "idx", "ts", gap = 100),
+      "tokenBudgetSample" -> graft.prep.Prep.tokenBudgetSample(events, "id", "stratum", "w", 50),
+      "packSequences" -> graft.prep.Prep.packSequences(events, "id", "w", 64),
+      "asofJoin" -> Windows.asofJoin(events.select("id", "ts"),
+        events.select(col("ts").as("rt"), col("w").as("v")), "ts", "rt", Seq("v")))
+    plans.foreach { case (name, plan) => assert(globalDataWindows(plan).isEmpty, name) }
+    // the one unpartitioned window left (sparse idx) — the helper must see it
+    assert(globalDataWindows(graft.prep.Prep.timeGaps(events, "ts", "idx", 30)).nonEmpty)
   }
 
   test("rangeBucketedCumSum equals a sequential cumsum, asc and desc") {
@@ -168,8 +189,8 @@ class WindowsSpec extends SparkSpec {
       .map(i => (i - 50) * 0.37)
     val df = keys.map(k => (k, 1L, (math.abs(k * 10).toLong % 5)))
       .toDF("k", "c", "p")
-    for (desc <- Seq(false, true); buckets <- Seq(1, 7, 64)) {
-      val got = Windows.rangeBucketedCumSum(df, "k", Seq("c", "p"), buckets, desc)
+    for (desc <- Seq(false, true); buckets <- bucketCounts) {
+      val got = Windows.rangeBucketedCumSum(df, Seq("k"), Seq("c", "p"), buckets, desc)
         .orderBy("k").select("k", "c_cum", "p_cum")
         .as[(Double, Long, Long)].collect().toSeq
       val sorted = keys.sorted(if (desc) Ordering[Double].reverse else Ordering[Double])
@@ -186,35 +207,69 @@ class WindowsSpec extends SparkSpec {
   test("rangeBucketedCumSum: single distinct key (hi == lo) does not divide by zero") {
     val df = Seq((1.5, 2L), (1.5, 3L)).toDF("k", "c").groupBy("k")
       .agg(org.apache.spark.sql.functions.sum("c").as("c"))
-    val out = Windows.rangeBucketedCumSum(df, "k", Seq("c"), 16)
+    val out = Windows.rangeBucketedCumSum(df, Seq("k"), Seq("c"), 16)
       .select("c_cum").as[Long].head()
     assert(out == 5L)
   }
 
+  test("rangeBucketedCumSum: per-group totals, null-safe keys, tie-break column") {
+    // keys repeat within a group (k = i % 9), so only (k, id) orders totally
+    val rows = (0 until 120).map { i =>
+      (Option(i % 3).filter(_ != 2).map(g => s"g$g"), (i % 9) * 1.5, i.toLong, (i % 4 + 1).toLong)
+    }
+    val df = rows.toDF("g", "k", "id", "w")
+    for (desc <- Seq(false, true); buckets <- bucketCounts) {
+      val got = Windows.rangeBucketedCumSum(df, Seq("k", "id"), Seq("w"), buckets, desc,
+          partCols = Seq("g"))
+        .select("id", "w_cum").as[(Long, Long)].collect().toMap
+      val ord = Ordering.Tuple2[Double, Long]
+      val expect = rows.groupBy(_._1).values.flatMap { rs =>
+        val sorted = rs.sortBy(r => (r._2, r._3))(if (desc) ord.reverse else ord)
+        sorted.map(_._3).zip(sorted.map(_._4).scanLeft(0L)(_ + _).tail)
+      }.toMap
+      assert(got == expect, s"desc=$desc buckets=$buckets")
+    }
+  }
+
+  test("rangeBucketedCumSum: a null order key raises an error naming the column") {
+    val df = Seq((Some(1.0), 1L), (None, 2L), (Some(3.0), 3L)).toDF("k", "c")
+    val e = intercept[Exception](Windows.rangeBucketedCumSum(df, Seq("k"), Seq("c")).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("null in order column `k`"))), e)
+  }
+
   test("W12-scalable: anti-join islands equals the window formulation") {
     val idxs = Seq(1L, 2L, 3L, 7L, 8L, 12L, 40L, 41L, 42L, 43L)
+    // plain-Scala runs over the sparse idx
+    val expect = idxs.foldLeft(List.empty[(Long, Long)]) {
+      case ((s, e) :: rest, i) if i == e => (s, i + 1) :: rest
+      case (acc, i) => (i, i + 1) :: acc
+    }.reverse
     val df = idxs.toDF("idx")
-    val a = Windows.islands(df, "idx").orderBy("span_start")
-      .as[(Long, Long)].collect().toSeq
-    val b = Windows.islandsScalable(df, "idx").orderBy("span_start")
+    val ungrouped = Windows.islands(df, "idx").orderBy("span_start")
       .select("span_start", "span_end").as[(Long, Long)].collect().toSeq
-    assert(a == b)
-    assert(globalDataWindows(Windows.islandsScalable(df, "idx")).isEmpty)
+    val windowed = Windows.islands(df.withColumn("g", lit(1)), "idx", Seq("g"))
+      .orderBy("span_start").select("span_start", "span_end").as[(Long, Long)].collect().toSeq
+    assert(ungrouped == expect && windowed == expect)
+    assert(globalDataWindows(Windows.islands(df, "idx")).isEmpty)
     // single island and single element edge cases
-    assert(Windows.islandsScalable(Seq(5L).toDF("idx"), "idx")
+    assert(Windows.islands(Seq(5L).toDF("idx"), "idx")
       .as[(Long, Long)].collect().toSeq == Seq((5L, 6L)))
   }
 
-  test("W6-chunked: rollingMinChunked equals rollingMin incl. null head") {
-    val df = series(100)
-    val expect = Windows.rollingMin(df, "idx", "v", 7).orderBy("idx")
-      .select("rolling_min").collect().map(r => Option(r.get(0))).toSeq
-    for (chunk <- Seq(7L, 25L, 1000L)) {
-      val got = Windows.rollingMinChunked(df, "idx", "v", 7, chunkSize = chunk)
-        .orderBy("idx").select("rolling_min").collect().map(r => Option(r.get(0))).toSeq
-      assert(got == expect, s"chunkSize=$chunk")
-      assert(globalDataWindows(
-        Windows.rollingMinChunked(df, "idx", "v", 7, chunkSize = chunk)).isEmpty)
+  test("W6: ungrouped rollingMin/Mean equal a plain-Scala frame at any chunk size") {
+    def frames(i: Int) = if (i < 6) None else Some(noisyVals.slice(i - 6, i + 1))
+    val expectMin = noisyVals.indices.map(i => frames(i).map(_.min))
+    val expectMean = noisyVals.indices.map(i => frames(i).map(_.sum / 7))
+    for (chunk <- chunkSizes(6)) {
+      val got = Windows.rollingMean(Windows.rollingMin(noisy, "idx", "v", 7, chunkSize = chunk),
+          "idx", "v", 7, chunkSize = chunk)
+        .orderBy("idx").select("rolling_min", "rolling_mean").collect().toSeq
+      assert(got.map(r => Option(r.get(0))) == expectMin, s"chunkSize=$chunk")
+      got.map(r => Option(r.get(1)).map(_.asInstanceOf[Double])).zip(expectMean).foreach {
+        case (a, b) => assert(a.isDefined == b.isDefined &&
+          a.zip(b).forall { case (x, y) => math.abs(x - y) < 1e-9 }, s"chunkSize=$chunk")
+      }
     }
   }
 
